@@ -9,11 +9,14 @@ Spark-side equivalent: a :class:`Layout` compiles to
 
 - a :class:`pyspark.sql.types.StructType` (the DataFrame schema),
 - a fixed ``record_length`` in bytes (FLAT framing),
-- a numpy structured dtype for vectorized pack/unpack of whole partitions.
+- an Arrow codec (:meth:`Layout.decode` / :meth:`Layout.encode`) between
+  whole-record bytes and Arrow record batches, vectorized through a numpy
+  structured dtype and ``pyarrow.compute``.
 
 Type surface (documented ECL types, ``docs/.../HDFS_PipeIn.xml:88-126``):
 
-- ``String(n)``  — STRINGn: fixed-width, space-padded, truncating.
+- ``String(n)``  — STRINGn: fixed-width, space-padded, truncating,
+  single-byte latin-1.
 - ``Unsigned(n)``— UNSIGNEDn, n in 1..8, little-endian.  UNSIGNED8 maps to
   ``DecimalType(20, 0)`` because the full unsigned 64-bit range does not fit
   ``LongType`` (SURVEY.md §4.3.8); smaller widths widen to the next signed
@@ -36,7 +39,10 @@ from typing import Iterable, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 _STD_WIDTHS = {1, 2, 4, 8}
 
@@ -57,13 +63,13 @@ class FieldType:
 
 
 class String(FieldType):
-    """STRINGn — fixed-width, space-padded, right-truncated on overflow."""
+    """STRINGn — fixed-width, space-padded, right-truncated on overflow;
+    one latin-1 byte per character."""
 
-    def __init__(self, nbytes: int, encoding: str = "latin-1"):
+    def __init__(self, nbytes: int):
         if nbytes < 1:
             raise ValueError("String width must be >= 1")
         super().__init__(nbytes=nbytes, kind="string")
-        object.__setattr__(self, "encoding", encoding)
 
     def spark_type(self) -> T.DataType:
         return T.StringType()
@@ -195,6 +201,7 @@ class Layout:
     """An ordered list of ``(name, FieldType)`` — the ECL RECORD analogue.
 
     ``record_length`` ≅ ``sizeof(Layout)`` (``ecl/HDFSConnector.ecl:140``).
+    FLAT records carry no null marker, so a NaN REAL decodes as SQL NULL.
     """
 
     def __init__(self, fields: Iterable[tuple[str, FieldType]]):
@@ -266,7 +273,12 @@ class Layout:
             lay.record_length = int(spec["record_length"])
         return lay
 
-    # ----------------------------------------------------------- numpy codec
+    # ----------------------------------------------------------- Arrow codec
+
+    def arrow_schema(self) -> pa.Schema:
+        """Schema of the batches :meth:`decode` returns — the Arrow form
+        of :meth:`to_struct_type`, so Spark takes them without a cast."""
+        return to_arrow_schema(self.to_struct_type())
 
     def _np_dtype(self) -> np.dtype:
         """Structured dtype with explicit offsets over the full record.
@@ -306,23 +318,13 @@ class Layout:
             }
         )
 
-    @staticmethod
-    def _decode_odd_int(raw: np.ndarray, nbytes: int, signed: bool) -> np.ndarray:
-        """Recompose little-endian ints of width 3/5/6/7 from raw bytes."""
-        b = raw.view((np.uint8, nbytes)).astype(np.uint64)
-        weights = (np.uint64(1) << (np.uint64(8) * np.arange(nbytes, dtype=np.uint64)))
-        vals = (b * weights).sum(axis=1, dtype=np.uint64)
-        if signed:
-            sign_bit = np.uint64(1) << np.uint64(8 * nbytes - 1)
-            full = np.uint64(1) << np.uint64(8 * nbytes)
-            out = vals.astype(np.int64)
-            neg = (vals & sign_bit) != 0
-            out[neg] = (vals[neg].astype(np.int64)) - np.int64(full)
-            return out
-        return vals.astype(np.int64)
+    def decode(self, data: bytes | memoryview) -> pa.RecordBatch:
+        """Vectorized fixed-width decode of whole-record bytes → Arrow.
 
-    def unpack(self, data: bytes | memoryview) -> pd.DataFrame:
-        """Vectorized fixed-width decode of whole-record bytes → pandas.
+        Each column is built from the numpy structured view of ``data``.
+        No value passes through Python except in STRING columns holding a
+        byte >= 0x80 (latin-1 is transcoded value by value), DATA columns
+        and packed decimals wider than 18 digits.
 
         Enforces the reference's hard error on misaligned files
         (``libhdfsconnector.cpp:84-89``): len(data) must be a multiple of
@@ -336,177 +338,40 @@ class Layout:
                 "libhdfsconnector.cpp:84-89)"
             )
         arr = np.frombuffer(data, dtype=self._np_dtype())
-        out: dict[str, object] = {}
-        for name, ft in self.fields:
-            col = arr[name]
-            if ft.kind == "string":
-                s = pd.Series(col).str.decode(getattr(ft, "encoding", "latin-1"))
-                out[name] = s.str.rstrip(" ")  # ECL STRINGn is space-padded
-            elif ft.kind == "data":
-                out[name] = pd.Series([bytes(v) for v in col], dtype=object)
-            elif ft.kind == "decimal":
-                out[name] = self._unpack_bcd(arr[name], ft)
-            elif ft.kind == "boolean":
-                out[name] = col != 0
-            elif ft.kind == "real":
-                out[name] = col.astype(np.float32 if ft.nbytes == 4 else np.float64)
-            elif ft.kind in ("unsigned", "integer"):
-                signed = ft.kind == "integer"
-                if ft.nbytes in _STD_WIDTHS:
-                    vals = col
-                else:
-                    vals = self._decode_odd_int(arr[name], ft.nbytes, signed)
-                if ft.kind == "unsigned" and ft.nbytes == 8:
-                    # u64 → Decimal(20,0); object column of decimal.Decimal
-                    out[name] = pd.Series(
-                        [decimal.Decimal(int(v)) for v in vals], dtype=object
-                    )
-                else:
-                    out[name] = vals.astype(self._pandas_int_dtype(ft))
-            else:  # pragma: no cover
-                raise ValueError(ft.kind)
-        return pd.DataFrame(out, columns=self.names())
-
-    @staticmethod
-    def _unpack_bcd(raw: np.ndarray, ft: FieldType) -> pd.Series:
-        """Packed-BCD decode: nibble matrix → unscaled int → Decimal."""
-        n = len(raw)
-        b = raw.view((np.uint8, ft.nbytes)).reshape(n, ft.nbytes)
-        slots = 2 * ft.nbytes - 1
-        dig = np.empty((n, 2 * ft.nbytes), dtype=np.uint8)
-        dig[:, 0::2] = b >> 4
-        dig[:, 1::2] = b & 0x0F
-        sign_nib = dig[:, -1]
-        digits = dig[:, :-1]
-        if (dig[:, :-1] > 9).any():
-            raise ValueError(f"invalid BCD digit in field {ft.kind}")
-        neg = sign_nib == 0x0D
-        if slots <= 18:
-            powers = 10 ** np.arange(slots - 1, -1, -1, dtype=np.int64)
-            unscaled = (digits.astype(np.int64) * powers).sum(axis=1)
-            unscaled = np.where(neg, -unscaled, unscaled)
-            vals = [int(v) for v in unscaled]
-        else:
-            vals = []
-            for i in range(n):
-                u = int("".join(map(str, digits[i])) or "0")
-                vals.append(-u if neg[i] else u)
-        q = decimal.Decimal(1).scaleb(-ft.scale)
-        return pd.Series(
-            [decimal.Decimal(v).scaleb(-ft.scale).quantize(q) for v in vals],
-            dtype=object,
+        schema = self.arrow_schema()
+        return pa.RecordBatch.from_arrays(
+            [
+                _decode_field(arr[name], ft, schema.field(name).type)
+                for name, ft in self.fields
+            ],
+            schema=schema,
         )
 
-    @staticmethod
-    def _pack_bcd(col: pd.Series, ft: FieldType) -> np.ndarray:
-        """Decimal → packed BCD bytes (sign nibble 0xC/0xD)."""
-        n = len(col)
-        slots = 2 * ft.nbytes - 1
-        limit = 10 ** ft.digits
-        out = np.zeros((n, ft.nbytes), dtype=np.uint8)
-        q = decimal.Decimal(1).scaleb(-ft.scale)
-        for i, v in enumerate(col):
-            d = decimal.Decimal(str(v)) if not isinstance(v, decimal.Decimal) else v
-            unscaled = int(d.quantize(q, rounding=decimal.ROUND_HALF_UP).scaleb(ft.scale))
-            if abs(unscaled) >= limit:
-                raise OverflowError(
-                    f"{v} exceeds DECIMAL{ft.digits}.{ft.scale}"
-                )
-            s = str(abs(unscaled)).rjust(slots, "0")
-            nibbles = [int(c) for c in s] + [0x0D if unscaled < 0 else 0x0C]
-            for j in range(ft.nbytes):
-                out[i, j] = (nibbles[2 * j] << 4) | nibbles[2 * j + 1]
-        return out
+    def encode(self, batch: pa.RecordBatch) -> bytes:
+        """Vectorized fixed-width encode Arrow → record bytes.
 
-    @staticmethod
-    def _pandas_int_dtype(ft: FieldType) -> str:
-        if ft.kind == "integer":
-            return {1: "int8", 2: "int16", 4: "int32"}.get(ft.nbytes, "int64")
-        return {1: "int16", 2: "int32"}.get(ft.nbytes, "int64")
+        Strings are right-truncated and space-padded to their declared
+        width (ECL STRINGn semantics) and written as latin-1; a character
+        outside latin-1 raises ``UnicodeEncodeError``.  A null STRING,
+        DATA, BOOLEAN or REAL writes spaces, zero bytes, false or NaN.
+        Integers must fit their declared width — overflow raises
+        ``OverflowError`` (the reference would silently corrupt; we do
+        not) — and a null integer or decimal raises ``ValueError``.
+        """
+        buf = np.zeros(batch.num_rows, dtype=self._np_dtype_packed())
+        for name, ft in self.fields:
+            buf[name] = _encode_field(batch.column(name), ft)
+        return buf.tobytes()
+
+    def unpack(self, data: bytes | memoryview) -> pd.DataFrame:
+        """:meth:`decode` as a pandas DataFrame."""
+        return self.decode(data).to_pandas()
 
     def pack(self, pdf: pd.DataFrame) -> bytes:
-        """Vectorized fixed-width encode pandas → record bytes.
-
-        Strings are space-padded / right-truncated to their declared width
-        (ECL STRINGn semantics).  Integers must fit their declared width —
-        overflow raises (the reference would silently corrupt; we do not).
-        """
-        n = len(pdf)
-        buf = np.zeros(n, dtype=self._np_dtype_packed())
-        for name, ft in self.fields:
-            col = pdf[name]
-            if ft.kind == "string":
-                enc = getattr(ft, "encoding", "latin-1")
-                # Pad with spaces BEFORE encoding (ECL space-padding; numpy
-                # S-dtype would NUL-pad).  latin-1/ascii are 1 byte/char so
-                # the padded length survives encoding — all pandas C loops,
-                # no per-value python.
-                vals = (
-                    col.fillna("")
-                    .astype(str)
-                    .str.slice(0, ft.nbytes)
-                    .str.ljust(ft.nbytes, " ")
-                    .str.encode(enc)
-                )
-                buf[name] = np.array(vals.tolist(), dtype=f"S{ft.nbytes}")
-            elif ft.kind == "data":
-                padded = b"".join(
-                    (v or b"")[: ft.nbytes].ljust(ft.nbytes, b"\x00") for v in col
-                )
-                buf[name] = np.frombuffer(padded, dtype=f"V{ft.nbytes}")
-            elif ft.kind == "decimal":
-                bcd = self._pack_bcd(col, ft)
-                buf[name] = np.frombuffer(bcd.tobytes(), dtype=f"V{ft.nbytes}")
-            elif ft.kind == "boolean":
-                buf[name] = col.astype(bool).to_numpy().astype(np.uint8)
-            elif ft.kind == "real":
-                buf[name] = col.to_numpy(
-                    dtype=np.float32 if ft.nbytes == 4 else np.float64
-                )
-            elif ft.kind in ("unsigned", "integer"):
-                signed = ft.kind == "integer"
-                lo = -(1 << (8 * ft.nbytes - 1)) if signed else 0
-                hi = (1 << (8 * ft.nbytes - 1)) if signed else (1 << (8 * ft.nbytes))
-                if (
-                    ft.nbytes in _STD_WIDTHS
-                    and pd.api.types.is_integer_dtype(col.dtype)
-                ):
-                    # Fully vectorized fast path (the common case: pandas
-                    # integer column from an Arrow batch).
-                    arr = col.to_numpy()
-                    if arr.size and (
-                        int(arr.min()) < lo or int(arr.max()) >= hi
-                    ):
-                        bad = arr[(arr < lo) | (arr >= hi)][:3].tolist()
-                        raise OverflowError(
-                            f"values {bad} out of range for {ft.kind}{ft.nbytes}"
-                        )
-                    sign = "u" if not signed else "i"
-                    buf[name] = arr.astype(f"<{sign}{ft.nbytes}")
-                    continue
-                ints = np.array([int(v) for v in col], dtype=object)
-                bad = [int(v) for v in ints if not (lo <= int(v) < hi)]
-                if bad:
-                    raise OverflowError(
-                        f"values {bad[:3]} out of range for {ft.kind}{ft.nbytes}"
-                    )
-                if ft.nbytes in _STD_WIDTHS:
-                    sign = "u" if not signed else "i"
-                    buf[name] = ints.astype(f"<{sign}{ft.nbytes}")
-                else:
-                    u = np.array(
-                        [int(v) % (1 << (8 * ft.nbytes)) for v in ints],
-                        dtype=np.uint64,
-                    )
-                    bytes_mat = np.zeros((n, ft.nbytes), dtype=np.uint8)
-                    for k in range(ft.nbytes):
-                        bytes_mat[:, k] = (u >> np.uint64(8 * k)) & np.uint64(0xFF)
-                    buf[name] = np.frombuffer(
-                        bytes_mat.tobytes(), dtype=f"V{ft.nbytes}"
-                    )
-            else:  # pragma: no cover
-                raise ValueError(ft.kind)
-        return buf.tobytes()
+        """:meth:`encode` of a pandas DataFrame (extra columns ignored)."""
+        return self.encode(
+            pa.RecordBatch.from_pandas(pdf, columns=self.names(), preserve_index=False)
+        )
 
     def _np_dtype_packed(self) -> np.dtype:
         """Dtype for packing — identical to the read dtype but must cover the
@@ -518,3 +383,190 @@ class Layout:
     def __repr__(self) -> str:
         inner = ", ".join(f"{n}:{ft.kind}{ft.nbytes}" for n, ft in self.fields)
         return f"Layout({inner}; reclen={self.record_length})"
+
+
+# ------------------------------------------------------------ field codecs
+
+
+def _fixed_binary(col: np.ndarray, width: int) -> pa.Array:
+    """``fixed_size_binary[width]`` over a copy of one S/V field's bytes."""
+    raw = np.ascontiguousarray(col)
+    return pa.Array.from_buffers(pa.binary(width), len(raw), [None, pa.py_buffer(raw)])
+
+
+def _decimal_array(unscaled: np.ndarray, typ: pa.DataType) -> pa.Array:
+    """decimal128 array of 64-bit unscaled integers.  Each value is 16
+    little-endian bytes: the integer, then its sign extension."""
+    words = np.empty((len(unscaled), 2), dtype=np.int64)
+    words[:, 0] = unscaled
+    words[:, 1] = 0 if unscaled.dtype.kind == "u" else unscaled >> 63
+    return pa.Array.from_buffers(typ, len(unscaled), [None, pa.py_buffer(words)])
+
+
+def _decode_field(col: np.ndarray, ft: FieldType, typ: pa.DataType) -> pa.Array:
+    if ft.kind == "string":
+        return _decode_string(col, ft.nbytes)
+    if ft.kind == "data":
+        return _fixed_binary(col, ft.nbytes).cast(pa.binary())
+    if ft.kind == "decimal":
+        return _decode_bcd(col, ft, typ)
+    if ft.kind == "boolean":
+        return pa.array(col != 0)
+    if ft.kind == "real":
+        # FLAT has no null marker; NaN reads as SQL NULL.
+        return pa.array(np.ascontiguousarray(col), from_pandas=True)
+    if ft.nbytes in _STD_WIDTHS:
+        vals = col
+    else:
+        vals = _decode_odd_int(col, ft.nbytes, ft.kind == "integer")
+    if pa.types.is_decimal(typ):  # UNSIGNED8 → Decimal(20,0)
+        return _decimal_array(np.ascontiguousarray(vals), typ)
+    return pa.array(vals.astype(typ.to_pandas_dtype()))
+
+
+def _decode_string(col: np.ndarray, width: int) -> pa.Array:
+    """STRINGn: drop trailing NULs, then trailing spaces (ECL space
+    padding)."""
+    raw = np.ascontiguousarray(col)
+    if raw.view(np.uint8).max(initial=0) < 0x80:
+        s = _fixed_binary(raw, width).cast(pa.string())
+        return pc.ascii_rtrim(pc.ascii_rtrim(s, "\0"), " ")
+    # Non-ASCII latin-1 bytes change length in UTF-8; numpy's S dtype
+    # strips the trailing NULs.
+    return pa.array(
+        [v.decode("latin-1").rstrip(" ") for v in col.tolist()], pa.string()
+    )
+
+
+def _decode_odd_int(raw: np.ndarray, nbytes: int, signed: bool) -> np.ndarray:
+    """Recompose little-endian ints of width 3/5/6/7 from raw bytes."""
+    b = raw.view((np.uint8, nbytes)).astype(np.uint64)
+    weights = (np.uint64(1) << (np.uint64(8) * np.arange(nbytes, dtype=np.uint64)))
+    vals = (b * weights).sum(axis=1, dtype=np.uint64)
+    if signed:
+        sign_bit = np.uint64(1) << np.uint64(8 * nbytes - 1)
+        full = np.uint64(1) << np.uint64(8 * nbytes)
+        out = vals.astype(np.int64)
+        neg = (vals & sign_bit) != 0
+        out[neg] = (vals[neg].astype(np.int64)) - np.int64(full)
+        return out
+    return vals.astype(np.int64)
+
+
+def _decode_bcd(raw: np.ndarray, ft: FieldType, typ: pa.DataType) -> pa.Array:
+    """Packed-BCD decode: nibble matrix → unscaled int → decimal128."""
+    n = len(raw)
+    b = raw.view((np.uint8, ft.nbytes)).reshape(n, ft.nbytes)
+    slots = 2 * ft.nbytes - 1
+    dig = np.empty((n, 2 * ft.nbytes), dtype=np.uint8)
+    dig[:, 0::2] = b >> 4
+    dig[:, 1::2] = b & 0x0F
+    sign_nib = dig[:, -1]
+    digits = dig[:, :-1]
+    if (digits > 9).any():
+        raise ValueError(f"invalid BCD digit in field {ft.kind}")
+    neg = sign_nib == 0x0D
+    if slots <= 18:
+        powers = 10 ** np.arange(slots - 1, -1, -1, dtype=np.int64)
+        unscaled = (digits.astype(np.int64) * powers).sum(axis=1)
+        # An even digit count leaves one spare nibble slot.
+        if (unscaled >= 10**ft.digits).any():
+            raise ValueError(f"BCD value exceeds DECIMAL{ft.digits}.{ft.scale}")
+        return _decimal_array(np.where(neg, -unscaled, unscaled), typ)
+    vals = []
+    for i in range(n):
+        u = int("".join(map(str, digits[i])) or "0")
+        vals.append(-u if neg[i] else u)
+    return pa.array([decimal.Decimal(v).scaleb(-ft.scale) for v in vals], typ)
+
+
+def _encode_field(col: pa.Array, ft: FieldType) -> np.ndarray:
+    """One column as values of the field's packed numpy dtype."""
+    w = ft.nbytes
+    if ft.kind == "string":
+        return _encode_string(col, w)
+    if ft.kind == "data":
+        padded = b"".join(
+            (v or b"")[:w].ljust(w, b"\x00") for v in col.to_pylist()
+        )
+        return np.frombuffer(padded, dtype=f"V{w}")
+    if ft.kind == "boolean":
+        return col.cast(pa.bool_()).fill_null(False).to_numpy(zero_copy_only=False)
+    if ft.kind == "real":
+        real = pa.float32() if w == 4 else pa.float64()
+        return col.cast(real, safe=False).to_numpy(zero_copy_only=False)
+    if col.null_count:
+        raise ValueError(f"null in a {ft.kind}{w} field (FLAT records have no null)")
+    if ft.kind == "decimal":
+        return np.frombuffer(_pack_bcd(col.to_pylist(), ft).tobytes(), dtype=f"V{w}")
+    return _encode_int(col, ft)
+
+
+def _encode_string(col: pa.Array, width: int) -> np.ndarray:
+    if not pa.types.is_string(col.type):
+        col = col.cast(pa.string())
+    col = col.fill_null("")
+    if _is_ascii(col):
+        # One byte per character: byte slicing is character slicing.
+        if (pc.max(pc.binary_length(col)).as_py() or 0) > width:
+            col = pc.binary_slice(col.view(pa.binary()), 0, width).view(pa.string())
+        fixed = pc.ascii_rpad(col, width, " ").cast(pa.binary(width))
+        return np.frombuffer(
+            fixed.buffers()[1], dtype=f"S{width}", count=len(fixed),
+            offset=fixed.offset * width,
+        )
+    return np.array(
+        [v[:width].ljust(width).encode("latin-1") for v in col.to_pylist()],
+        dtype=f"S{width}",
+    )
+
+
+def _is_ascii(s: pa.Array) -> bool:
+    """Whether every value of the string array ``s`` is ASCII."""
+    _, offsets, data = s.buffers()
+    if data is None:
+        return True
+    off = np.frombuffer(offsets, dtype=np.int32)[s.offset : s.offset + len(s) + 1]
+    values = np.frombuffer(data, dtype=np.uint8)[off[0] : off[-1]]
+    return values.max(initial=0) < 0x80
+
+
+def _encode_int(col: pa.Array, ft: FieldType) -> np.ndarray:
+    signed = ft.kind == "integer"
+    bits = 8 * ft.nbytes
+    lo, hi = (-(1 << (bits - 1)), 1 << (bits - 1)) if signed else (0, 1 << bits)
+    if pa.types.is_integer(col.type):
+        vals = col.to_numpy()
+    else:  # decimal, float or boolean input: exact Python ints
+        vals = np.array([int(v) for v in col.to_pylist()], dtype=object)
+    if len(vals) and (int(vals.min()) < lo or int(vals.max()) >= hi):
+        bad = [v for v in vals.tolist() if not lo <= v < hi][:3]
+        raise OverflowError(f"values {bad} out of range for {ft.kind}{ft.nbytes}")
+    if ft.nbytes in _STD_WIDTHS:
+        return vals.astype(f"<{'i' if signed else 'u'}{ft.nbytes}")
+    # Odd width: the low bytes of the little-endian two's complement.
+    u = vals.astype(np.int64 if signed else np.uint64).astype("<u8")
+    return np.frombuffer(
+        u.view(np.uint8).reshape(-1, 8)[:, : ft.nbytes].tobytes(), dtype=f"V{ft.nbytes}"
+    )
+
+
+def _pack_bcd(values: list, ft: FieldType) -> np.ndarray:
+    """Decimal → packed BCD bytes (sign nibble 0xC/0xD)."""
+    n = len(values)
+    slots = 2 * ft.nbytes - 1
+    limit = 10 ** ft.digits
+    out = np.zeros((n, ft.nbytes), dtype=np.uint8)
+    q = decimal.Decimal(1).scaleb(-ft.scale)
+    for i, v in enumerate(values):
+        d = decimal.Decimal(str(v)) if not isinstance(v, decimal.Decimal) else v
+        unscaled = int(d.quantize(q, rounding=decimal.ROUND_HALF_UP).scaleb(ft.scale))
+        if abs(unscaled) >= limit:
+            raise OverflowError(
+                f"{v} exceeds DECIMAL{ft.digits}.{ft.scale}"
+            )
+        s = str(abs(unscaled)).rjust(slots, "0")
+        nibbles = [int(c) for c in s] + [0x0D if unscaled < 0 else 0x0C]
+        for j in range(ft.nbytes):
+            out[i, j] = (nibbles[2 * j] << 4) | nibbles[2 * j + 1]
+    return out

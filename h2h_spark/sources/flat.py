@@ -4,8 +4,11 @@ Read path re-expresses the reference's per-node offset math
 (``streamFileOffset`` / ``getRecordCount``, ``libhdfsconnector.cpp:76-96,
 652-707``) as a Spark Python DataSource: the planner slices each file into
 record-aligned byte ranges (remainder records spread to low-numbered splits,
-exactly the ``getRecordCount`` rule), and each task decodes its slice with a
-numpy structured dtype — vectorized, zero-copy from the read buffer.
+exactly the ``getRecordCount`` rule), and each task decodes its slice
+straight into Arrow record batches with :meth:`Layout.decode` (a numpy
+structured view of the read buffer plus ``pyarrow.compute`` string trims).
+Pushed filters run on those batches.  The sink hands each Arrow batch to
+:meth:`Layout.encode`; neither direction converts through pandas.
 
 Semantics preserved (SURVEY.md §4.3):
 - file size must be an exact multiple of record length → hard error
@@ -23,10 +26,12 @@ decode cost is proportional to the columns actually requested.
 
 from __future__ import annotations
 
+import functools
 import math
 from typing import Iterator, Sequence
 
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.datasource import (
@@ -93,9 +98,11 @@ def plan_flat_splits(
     return parts
 
 
-def _read_split(layout: Layout, part: FlatInputPartition) -> Iterator[pa.RecordBatch]:
-    """Decode one record-aligned byte range into Arrow batches."""
-    arrow_schema = _arrow_schema(layout)
+def _read_split(
+    layout: Layout, part: FlatInputPartition, filters: Sequence[Filter]
+) -> Iterator[pa.RecordBatch]:
+    """Decode one record-aligned byte range into Arrow batches, keeping
+    the rows that pass every pushed filter."""
     with open_input(part.path) as f:
         f.seek(part.offset)
         remaining = part.n_records
@@ -104,41 +111,14 @@ def _read_split(layout: Layout, part: FlatInputPartition) -> Iterator[pa.RecordB
             data = f.read(take * layout.record_length)
             if not data:
                 break
-            pdf = layout.unpack(data)
-            yield pa.RecordBatch.from_pandas(
-                pdf, schema=arrow_schema, preserve_index=False
-            )
+            batch = layout.decode(data)
+            if filters:
+                batch = batch.filter(
+                    functools.reduce(pc.and_, (_filter_mask(batch, f) for f in filters))
+                )
+            if batch.num_rows:
+                yield batch
             remaining -= take
-
-
-def _arrow_schema(layout: Layout) -> pa.Schema:
-    out = []
-    for name, ft in layout.fields:
-        if ft.kind == "string":
-            t = pa.string()
-        elif ft.kind == "data":
-            t = pa.binary()
-        elif ft.kind == "boolean":
-            t = pa.bool_()
-        elif ft.kind == "real":
-            t = pa.float32() if ft.nbytes == 4 else pa.float64()
-        elif ft.kind == "unsigned":
-            if ft.nbytes == 1:
-                t = pa.int16()
-            elif ft.nbytes == 2:
-                t = pa.int32()
-            elif ft.nbytes <= 7:
-                t = pa.int64()
-            else:
-                t = pa.decimal128(20, 0)
-        elif ft.kind == "integer":
-            t = {1: pa.int8(), 2: pa.int16(), 4: pa.int32()}.get(ft.nbytes, pa.int64())
-        elif ft.kind == "decimal":
-            t = pa.decimal128(ft.digits, ft.scale)
-        else:  # pragma: no cover
-            raise ValueError(ft.kind)
-        out.append(pa.field(name, t))
-    return pa.schema(out)
 
 
 _PUSHABLE = (
@@ -153,34 +133,30 @@ _PUSHABLE = (
 )
 
 
-def _apply_filters(pdf, filters: list[Filter]):
+def _filter_mask(batch: pa.RecordBatch, f: Filter) -> pa.Array:
     """Vectorized residual-filter evaluation on the decoded batch.
 
     Pushing these below the Arrow boundary means filtered records never
     cross into the JVM — at scale the python→JVM transfer is the FLAT
-    scan's main tax, so selective scans get proportionally cheaper.
+    scan's main tax, so selective scans get proportionally cheaper.  A
+    null (a NaN REAL) fails every filter, as in SQL.
     """
-    import numpy as np
-
-    mask = np.ones(len(pdf), dtype=bool)
-    for f in filters:
-        col = pdf[f.attribute[0]]
-        if isinstance(f, EqualTo):
-            mask &= (col == f.value).to_numpy(dtype=bool)
-        elif isinstance(f, GreaterThan):
-            mask &= (col > f.value).to_numpy(dtype=bool)
-        elif isinstance(f, GreaterThanOrEqual):
-            mask &= (col >= f.value).to_numpy(dtype=bool)
-        elif isinstance(f, LessThan):
-            mask &= (col < f.value).to_numpy(dtype=bool)
-        elif isinstance(f, LessThanOrEqual):
-            mask &= (col <= f.value).to_numpy(dtype=bool)
-        elif isinstance(f, In):
-            mask &= col.isin(list(f.value)).to_numpy(dtype=bool)
-        elif isinstance(f, StringStartsWith):
-            mask &= col.str.startswith(f.value).fillna(False).to_numpy(dtype=bool)
-        # IsNotNull: fixed-width fields are never null — no-op.
-    return pdf[mask] if not mask.all() else pdf
+    col = batch.column(f.attribute[0])
+    if isinstance(f, EqualTo):
+        return pc.equal(col, f.value)
+    if isinstance(f, GreaterThan):
+        return pc.greater(col, f.value)
+    if isinstance(f, GreaterThanOrEqual):
+        return pc.greater_equal(col, f.value)
+    if isinstance(f, LessThan):
+        return pc.less(col, f.value)
+    if isinstance(f, LessThanOrEqual):
+        return pc.less_equal(col, f.value)
+    if isinstance(f, In):
+        return pc.is_in(col, value_set=pa.array(list(f.value), col.type))
+    if isinstance(f, StringStartsWith):
+        return pc.starts_with(col, f.value)
+    return pc.is_valid(col)  # IsNotNull
 
 
 class FlatDataSourceReader(DataSourceReader):
@@ -195,7 +171,7 @@ class FlatDataSourceReader(DataSourceReader):
 
     def pushFilters(self, filters: list[Filter]):
         """Accept simple comparison predicates on layout fields; evaluate
-        them numpy-side before the Arrow hand-off.  Everything else is
+        them Arrow-side before the hand-off to the JVM.  Everything else is
         yielded back for Spark to apply."""
         names = set(self.layout.names())
         for f in filters:
@@ -222,26 +198,7 @@ class FlatDataSourceReader(DataSourceReader):
     def read(self, partition: FlatInputPartition) -> Iterator[pa.RecordBatch]:
         if partition is None or not partition.path or partition.n_records == 0:
             return
-        if not self.filters:
-            yield from _read_split(self.layout, partition)
-            return
-        arrow_schema = _arrow_schema(self.layout)
-        with open_input(partition.path) as f:
-            f.seek(partition.offset)
-            remaining = partition.n_records
-            while remaining > 0:
-                take = min(remaining, _BATCH_RECORDS)
-                data = f.read(take * self.layout.record_length)
-                if not data:
-                    break
-                pdf = _apply_filters(self.layout.unpack(data), self.filters)
-                if len(pdf):
-                    yield pa.RecordBatch.from_pandas(
-                        pdf.reset_index(drop=True),
-                        schema=arrow_schema,
-                        preserve_index=False,
-                    )
-                remaining -= take
+        yield from _read_split(self.layout, partition, self.filters)
 
 
 class FlatDataSource(DataSource):
@@ -300,7 +257,4 @@ def write_flat(
     names = layout.names()
     df = df.select(*names)  # enforce field order = layout order
 
-    def _serialize(batch: pa.RecordBatch) -> bytes:
-        return layout.pack(batch.to_pandas())
-
-    return _sink.write_partition_files(df, path, _serialize, overwrite=overwrite)
+    return _sink.write_partition_files(df, path, layout.encode, overwrite=overwrite)

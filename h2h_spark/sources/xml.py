@@ -42,7 +42,6 @@ from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from h2h_spark.layout import Layout
 from h2h_spark.sources import sink as _sink
-from h2h_spark.sources.flat import _arrow_schema
 from h2h_spark.sources.util import file_size, list_part_files, open_input
 
 _DEFAULT_MAX_PARTITION_BYTES = 64 * 1024 * 1024
@@ -72,6 +71,36 @@ class XmlInputPartition(InputPartition):
         self.path = path
         self.start = start
         self.end = end
+
+
+def plan_xml_splits(
+    paths: Sequence[str], max_partition_bytes: int
+) -> list[XmlInputPartition]:
+    """Per file: ``ceil(size / max_partition_bytes)`` byte ranges of equal
+    size (the first ``size % n`` one byte longer).  Records are assigned
+    to ranges at scan time by the ownership rule."""
+    parts: list[XmlInputPartition] = []
+    for path in paths:
+        size = file_size(path)
+        if size == 0:
+            continue
+        n = max(1, -(-size // max_partition_bytes))
+        base, rem = divmod(size, n)
+        off = 0
+        for i in range(n):
+            length = base + (1 if i < rem else 0)
+            parts.append(XmlInputPartition(path, off, off + length))
+            off += length
+    return parts
+
+
+def default_split_bytes(total_bytes: int, parallelism: int) -> int:
+    """Split size when the caller sets none — the shape of Spark's own
+    ``maxSplitBytes`` rule: spread the input over ``parallelism`` tasks,
+    but make no split smaller than one read chunk nor larger than the
+    64 MiB cap."""
+    per_task = -(-total_bytes // max(1, parallelism))
+    return min(_DEFAULT_MAX_PARTITION_BYTES, max(_READ_CHUNK, per_task))
 
 
 _GAP_TAG = re.compile(rb"<([!?/]?)([A-Za-z0-9_:.\-]+)")
@@ -114,7 +143,8 @@ def _scan_elements(
     ``[start, end)``, reading past ``end`` to close the last record.
 
     ``strict_allowed`` (a set of wrapper tag names) enables the
-    unexpected-tag check on the gaps between consecutive owned records."""
+    unexpected-tag check on the gaps between consecutive owned records and
+    on the gap from the last owned record to the next record."""
     tag = row_tag.encode("utf-8")
     open_pat = re.compile(b"<" + re.escape(tag) + b"(?=[\\s/>])")
     close_token = b"</" + tag + b">"
@@ -170,6 +200,20 @@ def _scan_elements(
             prev_end = end_pos
             yield data[mstart:end_pos]
 
+        if strict_allowed is None or prev_end is None:
+            return
+        # The gap after the last owned record runs to the next split's
+        # first record.  Checking it here checks every gap between two
+        # records in exactly one split, whatever the split size.
+        nxt = open_pat.search(data, prev_end)
+        while nxt is None and _extend():
+            nxt = open_pat.search(data, prev_end)
+        if nxt is not None:
+            _check_gap(
+                data[prev_end : nxt.start()], strict_allowed, path,
+                start + prev_end, row_tag,
+            )
+
 
 def _element_end(data: bytes, start: int, close_token: bytes) -> int | None:
     """End offset (exclusive) of the element opening at ``start``; None if
@@ -185,7 +229,7 @@ def _element_end(data: bytes, start: int, close_token: bytes) -> int | None:
     return close + len(close_token)
 
 
-def _cast_series(s: pd.Series, ft) -> pd.Series:
+def _cast_series(s: pd.Series, ft, typ: pa.DataType) -> pd.Series:
     import decimal
 
     if ft.kind == "string":
@@ -204,8 +248,7 @@ def _cast_series(s: pd.Series, ft) -> pd.Series:
             lambda v: decimal.Decimal(v).quantize(q) if v is not None else None
         )
     if ft.kind in ("unsigned", "integer"):
-        dtype = Layout._pandas_int_dtype(ft)
-        return pd.to_numeric(s, errors="raise").astype(dtype)
+        return pd.to_numeric(s, errors="raise").astype(typ.to_pandas_dtype())
     raise NotImplementedError(f"XML does not carry {ft.kind} fields")
 
 
@@ -271,11 +314,10 @@ def _parse_batch(
                 for n, v in zip(names, _etree_row(elements[i], names)):
                     cols[n][i] = v
     pdf = pd.DataFrame({n: pd.Series(cols[n], dtype=object) for n in names})
+    schema = layout.arrow_schema()
     for n, ft in layout.fields:
-        pdf[n] = _cast_series(pdf[n], ft)
-    return pa.RecordBatch.from_pandas(
-        pdf, schema=_arrow_schema(layout), preserve_index=False
-    )
+        pdf[n] = _cast_series(pdf[n], ft, schema.field(n).type)
+    return pa.RecordBatch.from_pandas(pdf, schema=schema, preserve_index=False)
 
 
 class XmlDataSourceReader(DataSourceReader):
@@ -293,18 +335,9 @@ class XmlDataSourceReader(DataSourceReader):
         self.strict = options.get("strict", "true").lower() == "true"
 
     def partitions(self) -> list[InputPartition]:
-        parts: list[XmlInputPartition] = []
-        for path in list_part_files(self.path, pattern="*"):
-            size = file_size(path)
-            if size == 0:
-                continue
-            n = max(1, -(-size // self.max_partition_bytes))
-            base, rem = divmod(size, n)
-            off = 0
-            for i in range(n):
-                length = base + (1 if i < rem else 0)
-                parts.append(XmlInputPartition(path, off, off + length))
-                off += length
+        parts = plan_xml_splits(
+            list_part_files(self.path, pattern="*"), self.max_partition_bytes
+        )
         return parts or [XmlInputPartition("", 0, 0)]
 
     def read(self, partition: XmlInputPartition) -> Iterator[pa.RecordBatch]:
@@ -350,7 +383,7 @@ def read_xml(
     path: str,
     layout: Layout,
     row_tag: str = "Row",
-    max_partition_bytes: int = _DEFAULT_MAX_PARTITION_BYTES,
+    max_partition_bytes: int | None = None,
     read_chunk: int = _READ_CHUNK,
     strict: bool = True,
 ) -> DataFrame:
@@ -360,7 +393,18 @@ def read_xml(
     ``hdfsconnector.hpp:210``).  ``row_tag`` may be a path
     (``'Dataset/Area/Row'``) — the wrapper elements are then the only tags
     allowed between records under ``strict`` mode (the reference's
-    unexpected-tag abort, raised instead of silently truncated)."""
+    unexpected-tag abort, raised instead of silently truncated).
+
+    Each file is cut into byte ranges of at most ``max_partition_bytes``.
+    Left unset, it is sized from the input like Spark's ``maxSplitBytes``:
+    ``min(64 MiB, max(1 MiB, ceil(total input bytes / defaultParallelism)))``
+    (:func:`default_split_bytes`), so a small input still fills the cores.
+    """
+    if max_partition_bytes is None:
+        total = sum(file_size(p) for p in list_part_files(path, pattern="*"))
+        max_partition_bytes = default_split_bytes(
+            total, spark.sparkContext.defaultParallelism
+        )
     return (
         spark.read.format("h2h_xml")
         .option("layout", layout.to_json())

@@ -149,6 +149,9 @@ def test_packed_decimal_overflow_and_wide():
 
     with pytest.raises(OverflowError):
         Layout([("x", PackedDecimal(3, 0))]).pack(pd.DataFrame({"x": [1000]}))
+    # an even digit count leaves a spare nibble: 99999 in DECIMAL4 is corrupt
+    with pytest.raises(ValueError, match="exceeds"):
+        Layout([("x", PackedDecimal(4, 0))]).unpack(bytes([0x99, 0x99, 0x9C]))
     # > 18 digits takes the object path
     lay = Layout([("big", PackedDecimal(24, 4))])
     v = decimal.Decimal("12345678901234567890.1234")

@@ -1,14 +1,20 @@
 """Property-based codec tests (hypothesis) + F4-style boundary stress."""
+import decimal
+import math
 import random
 import string as _string
+import struct
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from h2h_spark import (
     Boolean,
+    Data,
     Integer,
     Layout,
     Real,
@@ -29,6 +35,10 @@ _FIELD_TYPES = [
     lambda: Real(random.choice([4, 8])),
     lambda: Boolean(),
 ]
+# ASCII with the NUL/space padding bytes; half the string columns also
+# draw latin-1 characters above 0x7F (the codec's per-value path).
+_ASCII_CHARS = _string.ascii_letters + _string.digits + " \x00"
+_LATIN1_CHARS = _ASCII_CHARS + "\xe9\xff\xa0\x80"
 
 
 @st.composite
@@ -42,11 +52,10 @@ def layouts_with_data(draw):
         name = f"f{i}"
         fields.append((name, ft))
         if ft.kind == "string":
+            # up to 3 characters over the width: encode truncates
+            chars = random.choice([_ASCII_CHARS, _LATIN1_CHARS])
             cols[name] = [
-                "".join(
-                    random.choices(_string.ascii_letters + _string.digits,
-                                   k=random.randint(0, ft.nbytes))
-                )
+                "".join(random.choices(chars, k=random.randint(0, ft.nbytes + 3)))
                 for _ in range(n_rows)
             ]
         elif ft.kind == "unsigned":
@@ -57,11 +66,32 @@ def layouts_with_data(draw):
             cols[name] = [random.randint(-hi - 1, hi) for _ in range(n_rows)]
         elif ft.kind == "real":
             cols[name] = [
-                float(f"{random.uniform(-1e6, 1e6):.6g}") for _ in range(n_rows)
+                random.choice([float("nan"), None])
+                if random.random() < 0.1
+                else float(f"{random.uniform(-1e6, 1e6):.6g}")
+                for _ in range(n_rows)
             ]
         else:
             cols[name] = [random.random() < 0.5 for _ in range(n_rows)]
+        if ft.kind in ("string", "boolean") and random.random() < 0.3:
+            cols[name][random.randrange(n_rows)] = None  # encodes as "" / False
     return Layout(fields), pd.DataFrame(cols)
+
+
+def _expected_value(v, ft):
+    """The codec's contract for one encoded-then-decoded value."""
+    if ft.kind == "string":
+        # STRINGn: truncate, space-pad, latin-1; decode drops trailing NULs,
+        # then trailing spaces.
+        raw = (v or "")[: ft.nbytes].ljust(ft.nbytes).encode("latin-1")
+        return raw.rstrip(b"\x00").decode("latin-1").rstrip(" ")
+    if ft.kind == "real":
+        if v is None or math.isnan(v):
+            return None  # NaN reads as SQL NULL
+        return float(np.float32(v)) if ft.nbytes == 4 else v
+    if ft.kind == "boolean":
+        return bool(v)
+    return int(v)
 
 
 @given(layouts_with_data())
@@ -69,18 +99,82 @@ def layouts_with_data(draw):
           suppress_health_check=[HealthCheck.too_slow])
 def test_pack_unpack_property(lay_pdf):
     lay, pdf = lay_pdf
-    back = lay.unpack(lay.pack(pdf))
+    data = lay.encode(pa.RecordBatch.from_pandas(pdf, preserve_index=False))
+    assert data == lay.pack(pdf)
+    assert len(data) == len(pdf) * lay.record_length
+    batch = lay.decode(data)
+    assert batch.schema == lay.arrow_schema()
+    back = lay.unpack(data)
     for name, ft in lay.fields:
-        if ft.kind == "real" and ft.nbytes == 4:
-            import numpy as np
+        want = [_expected_value(v, ft) for v in pdf[name]]
+        got = batch.column(name).to_pylist()
+        if ft.kind == "unsigned" and ft.nbytes == 8:
+            got = [int(v) for v in got]
+        assert got == want
+        assert [None if pd.isna(v) else v for v in back[name]] == want
 
-            assert back[name].tolist() == [
-                float(np.float32(v)) for v in pdf[name]
-            ]
-        elif ft.kind == "unsigned" and ft.nbytes == 8:
-            assert [int(v) for v in back[name]] == [int(v) for v in pdf[name]]
-        else:
-            assert back[name].tolist() == pdf[name].tolist()
+
+def _reference_decode(raw: bytes, ft):
+    """Per-value decode with ``int.from_bytes``/``struct`` — the reference
+    the vectorized codec must match."""
+    if ft.kind == "string":
+        return raw.rstrip(b"\x00").decode("latin-1").rstrip(" ")
+    if ft.kind == "data":
+        return raw
+    if ft.kind == "boolean":
+        return raw != b"\x00"
+    if ft.kind == "real":
+        v = struct.unpack("<f" if ft.nbytes == 4 else "<d", raw)[0]
+        return None if math.isnan(v) else v
+    return int.from_bytes(raw, "little", signed=ft.kind == "integer")
+
+
+@given(st.data())
+@settings(max_examples=40, deadline=None)
+def test_decode_matches_reference_on_raw_bytes(data):
+    """Decode arbitrary records: strings drawn from a mix of ASCII, latin-1
+    high bytes, NULs and spaces; every other field from random bytes."""
+    rng = random.Random(data.draw(st.integers(0, 2**32 - 1)))
+    random.seed(rng.random())
+    fields = [(f"f{i}", rng.choice(_FIELD_TYPES + [lambda: Data(random.randint(1, 6))])())
+              for i in range(rng.randint(1, 6))]
+    lay = Layout(fields)
+    n_rows = data.draw(st.integers(0, 40))
+    alphabets = [rng.choice([b"aZ \x00", b"aZ \x00\xe9\x80"]) for _ in fields]
+    cells = [
+        [
+            bytes(rng.choice(alpha) for _ in range(ft.nbytes))
+            if ft.kind == "string"
+            else rng.randbytes(ft.nbytes)
+            for (_, ft), alpha in zip(fields, alphabets)
+        ]
+        for _ in range(n_rows)
+    ]
+    batch = lay.decode(b"".join(b"".join(row) for row in cells))
+    for j, (name, ft) in enumerate(fields):
+        got = batch.column(name).to_pylist()
+        if ft.kind == "unsigned" and ft.nbytes == 8:
+            got = [int(v) for v in got]
+        assert got == [_reference_decode(row[j], ft) for row in cells]
+
+
+@given(st.integers(1, 8), st.booleans(), st.booleans())
+@settings(max_examples=40, deadline=None)
+def test_encode_out_of_range_int_raises(nbytes, signed, above):
+    bits = 8 * nbytes
+    lo, hi = (-(1 << (bits - 1)), 1 << (bits - 1)) if signed else (0, 1 << bits)
+    bad = hi if above else lo - 1
+    if -(1 << 63) <= bad < 1 << 63:
+        col = pa.array([0, bad], pa.int64())
+    elif 0 <= bad < 1 << 64:
+        col = pa.array([0, bad], pa.uint64())
+    else:  # beyond 64 bits: the decimal path (UNSIGNED8 read back)
+        col = pa.array([decimal.Decimal(0), decimal.Decimal(bad)], pa.decimal128(38, 0))
+    lay = Layout([("v", Integer(nbytes) if signed else Unsigned(nbytes))])
+    with pytest.raises(OverflowError):
+        lay.encode(pa.RecordBatch.from_arrays([col], ["v"]))
+    with pytest.raises(ValueError, match="null"):
+        lay.encode(pa.RecordBatch.from_arrays([pa.array([1, None])], ["v"]))
 
 
 # ------------------------------------------------------------- F4-ish stress

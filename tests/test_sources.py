@@ -1,4 +1,5 @@
 """Wire-format sources: FLAT/CSV/XML round trips, boundaries, merge."""
+import glob
 import os
 
 import pandas as pd
@@ -216,6 +217,51 @@ def test_xml_malformed_raises(spark, tmp_work):
         read_xml(spark, path, Layout([("a", Integer(4))])).count()
 
 
+def test_xml_strict_gap_at_split_edges(spark, tmp_work):
+    """A stray tag between two records raises whichever split owns the
+    records on either side of it — also when a split starts inside the
+    gap, before its first owned record."""
+    rows = [f"<Row><a>{i}</a></Row>\n" for i in range(1, 11)]
+    text = "<Dataset>\n" + "".join(rows[:4]) + "<Bogus>x</Bogus>\n" + "".join(rows[4:]) + "</Dataset>"
+    assert len(text) == 238
+    path = f"{tmp_work}/gap.xml"
+    with open(path, "w") as f:
+        f.write(text)
+    lay = Layout([("a", Integer(4))])
+    for mpb in (None, 20):
+        with pytest.raises(Exception, match="[Uu]nexpected tag <Bogus>"):
+            read_xml(spark, path, lay, max_partition_bytes=mpb).collect()
+    got = read_xml(spark, path, lay, max_partition_bytes=20, strict=False).collect()
+    assert sorted(r.a for r in got) == list(range(1, 11))
+
+
+def test_xml_split_planning(spark, tmp_work):
+    """Unset, the split size spreads the input over the cores (Spark's
+    maxSplitBytes shape); an explicit size is used as given."""
+    from h2h_spark.sources.xml import default_split_bytes, plan_xml_splits
+
+    row = "<Row><a>1234567</a></Row>\n"
+    big, small = f"{tmp_work}/big.xml", f"{tmp_work}/small.xml"
+    with open(big, "w") as f:
+        f.write("<Dataset>\n" + row * (5_000_000 // len(row)) + "</Dataset>\n")
+    with open(small, "w") as f:
+        f.write("<Dataset>\n" + row * 1000 + "</Dataset>\n")
+    big_size, small_size = os.path.getsize(big), os.path.getsize(small)
+    assert 4_900_000 < big_size < 5_100_000 and small_size < 1 << 20
+    # at local[4]
+    assert len(plan_xml_splits([big], default_split_bytes(big_size, 4))) == 4
+    assert len(plan_xml_splits([small], default_split_bytes(small_size, 4))) == 1
+    assert default_split_bytes(10 << 30, 4) == 64 << 20  # the cap
+    lay = Layout([("a", Integer(4))])
+    cores = spark.sparkContext.defaultParallelism
+    df = read_xml(spark, big, lay)
+    assert df.rdd.getNumPartitions() == min(cores, 5)  # 1 MiB floor: 5 splits
+    assert df.count() == 5_000_000 // len(row)
+    assert read_xml(spark, small, lay).rdd.getNumPartitions() == 1
+    explicit = read_xml(spark, big, lay, max_partition_bytes=3 << 20)
+    assert explicit.rdd.getNumPartitions() == 2
+
+
 def test_merge_preserves_part_order(spark, tmp_work):
     # rows tagged by partition; merged file must be partition order 0..N-1
     df = spark.range(100).repartition(4).withColumn(
@@ -266,6 +312,38 @@ def test_flat_unsigned8_spark_decimal(spark, tmp_work):
     vals = sorted(r["id"] for r in back.collect())
     assert vals == [decimal.Decimal(7), decimal.Decimal(2**63),
                     decimal.Decimal(2**64 - 1)]
+
+
+def test_flat_latin1_roundtrip(spark, tmp_work):
+    """STRINGn is single-byte latin-1: 0xE9 on disk is 'é' in Spark, and
+    back."""
+    lay = Layout([("k", Integer(4)), ("s", String(6))])
+    path = f"{tmp_work}/latin1.dat"
+    with open(path, "wb") as f:
+        f.write((1).to_bytes(4, "little") + b"caf\xe9  ")
+        f.write((2).to_bytes(4, "little") + b"plain\x00")
+    back = read_flat(spark, path, lay)
+    assert sorted(tuple(r) for r in back.collect()) == [(1, "café"), (2, "plain")]
+    write_flat(back.coalesce(1), f"{tmp_work}/latin1_out", lay)
+    with open(glob.glob(f"{tmp_work}/latin1_out/part_*")[0], "rb") as f:
+        assert f.read() == (
+            (1).to_bytes(4, "little") + b"caf\xe9  "
+            + (2).to_bytes(4, "little") + b"plain "
+        )
+
+
+def test_flat_nan_real_reads_as_null(spark, tmp_work):
+    """FLAT has no null marker: a NaN REAL reads as SQL NULL, and a
+    pushed IS NOT NULL drops it."""
+    import struct
+
+    lay = Layout([("k", Integer(4)), ("r", Real(8))])
+    path = f"{tmp_work}/nan.dat"
+    with open(path, "wb") as f:
+        f.write(struct.pack("<id", 1, float("nan")) + struct.pack("<id", 2, 2.5))
+    df = read_flat(spark, path, lay)
+    assert sorted(tuple(r) for r in df.collect()) == [(1, None), (2, 2.5)]
+    assert [r.k for r in df.filter(F.col("r").isNotNull()).collect()] == [2]
 
 
 def test_flat_filter_pushdown(spark, tmp_work):
