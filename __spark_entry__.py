@@ -13210,8 +13210,10 @@ def q_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Community detection: 3 synchronous label-propagation rounds over
     the symmetrized purchase graph, deterministic tie-break (count desc,
     label asc) — exact-count argmax, so the full iteration is
-    bit-identical to the oracle's 3 unrolled SQL rounds.  Per round: one
-    dst-keyed join + one (node,label) count + one per-node argmax."""
+    bit-identical to the oracle's 3 unrolled SQL rounds.  The first round
+    is a closed-form min(dst) per node; each later round broadcasts the
+    checkpointed label table onto the src-partitioned edges and counts
+    and argmaxes with no exchange."""
     from h2h_spark.operators.graph import label_propagation
 
     labels = label_propagation(_pagerank_edges(spark, sf_dir), iterations=3)
@@ -13249,7 +13251,9 @@ def q_label_prop_async(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeing the labels the earlier class just wrote.  Converges where
     synchronous LPA oscillates (bipartite substructures), with a fully
     reproducible schedule: the 2-round x 2-substep schedule unrolls
-    into an exact SQL twin, graded bit-for-bit like q_label_prop."""
+    into an exact SQL twin, graded bit-for-bit like q_label_prop.  Same
+    per-substep shape as q_label_prop (one loop serves both): closed-form
+    first substep, then one label broadcast + one edge pass each."""
     from h2h_spark.operators.graph import label_propagation_semisync
 
     labels = label_propagation_semisync(

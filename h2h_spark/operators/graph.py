@@ -23,6 +23,12 @@ forests in :mod:`operators.hierarchy` (pointer doubling).
   which is what keeps the join alive on skewed degree distributions at
   scale (cf. Suri & Vassilvitskii, "Counting Triangles and the Curse of
   the Last Reducer", WWW'11 — public).
+* :func:`label_propagation_semisync` — deterministic label propagation
+  as one loop of colour-class sub-steps; :func:`label_propagation`
+  (synchronous) is the single-class schedule.  Each sub-step is one
+  broadcast of the |V|-row label table (checkpointed, then cached so the
+  planner sees its real size) plus one pass over the src-partitioned
+  edge cache; the first is a closed-form ``min(dst)`` with no join.
 
 Scale posture: no driver-side state beyond the (tiny) iteration loop;
 ranks/edges shuffle on their keys; out-degrees are joined (AQE broadcasts
@@ -247,75 +253,19 @@ def label_propagation(
     exact SQL twin (float-free, order-free: counts are exact and the
     argmax is a total order).
 
-    Per round: one dst-keyed join (labels onto the symmetrized edge
-    list) + one (node, label) count aggregate + one per-node argmax —
-    bounded shuffles, all keyed; state is the |V|-row label table.  The
+    The synchronous schedule is the semi-synchronous one with a single
+    colour class, so this is :func:`label_propagation_semisync` with
+    ``substeps=1`` (same per-step shape, documented there).  The
     canonical async/random-order LPA converges faster but is
     irreproducible by design; synchronous + bounded rounds is the
     distributed-audit form (GraphX/GraphFrames ship the same choice).
     Known synchronous-LPA property: labels can OSCILLATE on bipartite
     substructures (a 2-node component swaps labels every round) — the
     bounded-round output is still deterministic, which is what the
-    oracle contract grades.  Deep runs would localCheckpoint every ~10
-    rounds like pagerank."""
-    # materialize the symmetrized edge list ONCE: every round (and the
-    # node-set init) re-reads it, and without this the upstream edge
-    # derivation (often a join) replays per round through lineage —
-    # the same fix hierarchy.resolve_tree needed.  persist (not
-    # localCheckpoint) keeps plan stats + partitioning visible to the
-    # planner: a checkpointed RDD scans back as UnknownPartitioning with
-    # no size estimate, which planned every round's label join as a
-    # sort-merge with a full edge re-shuffle (round 13, measured 2x).
-    # src-hash partitioning: the (src, label) count aggregate after the
-    # join is the layout consumer; an interleaved A/B (round 13, 4 reps
-    # per variant) measured src ~= dst+hint and dst-without-hint worst,
-    # so the original layout stands.
-    sym = (
-        edges.select(src, dst)
-        .union(
-            edges.select(
-                F.col(dst).alias(src), F.col(src).alias(dst)
-            )
-        )
-        .distinct()
-        .repartition(F.col(src))
-        .persist()
+    oracle contract grades."""
+    return label_propagation_semisync(
+        edges, rounds=iterations, substeps=1, src=src, dst=dst
     )
-    labels = (
-        sym.select(F.col(src).alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-    )
-    for _ in range(iterations):
-        cnt = (
-            # shuffle-hash on the label side: avoids the per-round SORT
-            # of the 2|E|-row joined side a sort-merge join would add
-            # (the label table is the hash-build side; measured best of
-            # four layout/hint variants in the round-13 interleaved A/B)
-            sym.join(
-                labels.withColumnRenamed("node", "__n").hint("shuffle_hash"),
-                F.col(dst) == F.col("__n"),
-            )
-            .groupBy(F.col(src).alias("node"), "label")
-            .agg(F.count("*").alias("c"))
-        )
-        labels = (
-            cnt.groupBy("node")
-            .agg(
-                F.min(
-                    F.struct(
-                        (-F.col("c")).alias("nc"), F.col("label").alias("l")
-                    )
-                ).alias("b")
-            )
-            .select("node", F.col("b.l").alias("label"))
-        )
-    # materialize before releasing the edge cache (pagerank's cleanup
-    # discipline, round 14): the consumer reads the checkpointed result
-    # and the |2E|-row sym cache does not outlive the operator (§5)
-    labels = labels.localCheckpoint(eager=True)
-    sym.unpersist()
-    return labels
 
 
 def label_propagation_semisync(
@@ -331,88 +281,69 @@ def label_propagation_semisync(
     (oscillates on bipartite substructures) and the classic async LPA
     (random visit order, irreproducible by design).  Nodes are
     partitioned into ``substeps`` deterministic color classes
-    (``node % substeps``); within a full round the classes update
-    SEQUENTIALLY, each seeing the labels already updated by earlier
-    classes of the same round.  A 2-node component therefore converges
-    in one round (the second node sees the first's new label) instead
-    of swapping labels forever — async convergence behavior with a
-    fully reproducible schedule, so a bounded (rounds x substeps)
-    schedule unrolls into an exact SQL twin.
+    (``node % substeps``, Spark's truncated remainder: a negative id
+    never matches a class unless ``substeps == 1``); within a full round
+    the classes update SEQUENTIALLY, each seeing the labels already
+    updated by earlier classes of the same round.  A 2-node component
+    therefore converges in one round (the second node sees the first's
+    new label) instead of swapping labels forever — async convergence
+    behavior with a fully reproducible schedule, so a bounded (rounds x
+    substeps) schedule unrolls into an exact SQL twin.  Edges with a
+    null endpoint are dropped.
 
-    Per sub-step: the same one dst-keyed join + (node,label) count +
-    per-node argmax as the synchronous variant, but only color-class
-    nodes recompute (the WHERE prunes the aggregate); untouched classes
-    pass through a union.  State stays the |V|-row label table;
-    lineage is truncated once per round like pagerank's deep-run
-    guidance."""
-    # same persist shape as label_propagation (round 13): stats +
-    # src-partitioning beat a checkpointed-RDD scan for the per-substep
-    # join + aggregates (layout A/B'd alongside the sync variant).
+    Returns ``(node, label)`` for every endpoint.  Per sub-step: the
+    class nodes vote (count desc, label asc) over their neighbors'
+    labels and the other classes pass through a union.  The first
+    sub-step needs no join: the initial labels are the distinct node
+    ids, so every neighbor counts once and the vote is ``min(dst)``.
+    Every later sub-step broadcasts the |V|-row label table onto the
+    src-partitioned edge cache, so both vote aggregates run without an
+    exchange (above the broadcast threshold the planner picks a shuffle
+    join): one broadcast job plus one pass over the edges."""
+    pairs = edges.select(
+        F.col(src).alias("src"), F.col(dst).alias("dst")
+    ).dropna()
+    # src-hash partitioning already satisfies distinct's (src, dst)
+    # clustering: one exchange builds the cached, deduplicated edges
     sym = (
-        edges.select(src, dst)
-        .union(
-            edges.select(F.col(dst).alias(src), F.col(src).alias(dst))
-        )
+        pairs.union(pairs.select("dst", "src"))
+        .repartition("src")
         .distinct()
-        .repartition(F.col(src))
         .persist()
     )
-    labels = (
-        sym.select(F.col(src).alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-    )
-    cached: list[DataFrame] = []  # superseded substep caches (round 14)
-    for r in range(rounds):
-        for s in range(substeps):
-            cnt = (
-                sym.filter(F.col(src) % substeps == s)
-                .join(
-                    labels.withColumnRenamed("node", "__n"),
-                    F.col(dst) == F.col("__n"),
-                )
-                .groupBy(F.col(src).alias("node"), "label")
-                .agg(F.count("*").alias("c"))
-            )
+    caches = [sym]
+    try:
+        steps = [s for _ in range(rounds) for s in range(substeps)]
+        first = (F.col("src") % substeps == 0) if steps else F.lit(False)
+        labels = (
+            sym.groupBy("src")
+            .agg(F.when(first, F.min("dst")).otherwise(F.col("src")).alias("label"))
+            .withColumnRenamed("src", "node")
+        )
+        for s in steps[1:]:
+            # the checkpoint truncates the plan to one leaf; the cache,
+            # once materialized, reports its real size.  A checkpoint
+            # alone keeps the plan's estimate, which the vote join
+            # multiplies by the edge size every sub-step, so from the
+            # third sub-step on the planner would broadcast the edges
+            # (or, above the threshold, shuffle them).
+            labels = labels.localCheckpoint(eager=False).persist()
+            caches.append(labels)
+            labels.write.format("noop").mode("overwrite").save()
             upd = (
-                cnt.groupBy("node")
-                .agg(
-                    F.min(
-                        F.struct(
-                            (-F.col("c")).alias("nc"), F.col("label").alias("l")
-                        )
-                    ).alias("b")
-                )
-                .select("node", F.col("b.l").alias("label"))
+                sym.filter(F.col("src") % substeps == s)
+                .join(labels.withColumnRenamed("node", "dst"), "dst")
+                .groupBy("src", "label")
+                .agg(F.count("*").alias("c"))
+                .groupBy(F.col("src").alias("node"))
+                .agg(F.min(F.struct((-F.col("c")).alias("nc"), "label")).alias("b"))
+                .select("node", F.col("b.label").alias("label"))
             )
-            # persist per substep (round 13, interleaved A/B: median
-            # 5.97 vs 7.04 s per-round-checkpoint-only): the NEXT
-            # substep references this table TWICE (pass-through filter
-            # + neighbor join), and unmaterialized that re-executes
-            # this substep's join per reference.  The cache is |V|
-            # rows; the per-round checkpoint below still truncates
-            # lineage for deep schedules.  (A shuffle_hash hint on the
-            # label side — the sync variant's win — measured neutral
-            # here and is deliberately absent.)
-            labels = (
-                labels.filter(F.col("node") % substeps != s)
-                .unionByName(upd)
-                .persist()
-            )
-            cached.append(labels)
-        # lazy: lineage still truncates per round, but materialization
-        # rides the consumer's first action instead of a per-round job
-        # (round 13 — the schedule is bounded, so analyzer depth is too)
-        labels = labels.localCheckpoint(eager=False)
-    # one materialization job at the end (not per round — the lazy
-    # checkpoints above still ride it), then release every superseded
-    # substep cache and the sym cache: rounds×substeps |V|-row persists
-    # must not stay pinned for the session lifetime (ADVICE r13; §5)
-    labels = labels.localCheckpoint(eager=True)
-    sym.unpersist()
-    for h in cached:
-        h.unpersist()
-    return labels
+            labels = labels.filter(F.col("node") % substeps != s).unionByName(upd)
+        return labels.localCheckpoint(eager=True)
+    finally:
+        for df in caches:
+            df.unpersist()
 
 
 def sssp_bounded(

@@ -1,4 +1,5 @@
 """Property-based codec tests (hypothesis) + F4-style boundary stress."""
+import collections
 import decimal
 import math
 import random
@@ -594,6 +595,67 @@ def test_top_paths_equals_naive(spark, seed):
             counts[p] = counts.get(p, 0) + 1
     naive = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:50]
     assert got == naive
+
+
+def _lpa_reference(edges, rounds, substeps):
+    """The semi-synchronous LPA schedule in plain Python: class
+    ``node % substeps`` (truncated, like Spark's ``%``) votes in
+    sub-step ``s``; most frequent neighbor label wins, smallest on ties."""
+    nbrs = {}
+    for a, b in edges:
+        nbrs.setdefault(a, set()).add(b)
+        nbrs.setdefault(b, set()).add(a)
+    label = {v: v for v in nbrs}
+    for _ in range(rounds):
+        for s in range(substeps):
+            votes = {}
+            for v, ns in nbrs.items():
+                if (abs(v) % substeps) * (1 if v >= 0 else -1) == s:
+                    c = collections.Counter(label[u] for u in ns)
+                    votes[v] = min(c, key=lambda lb: (-c[lb], lb))
+            label.update(votes)
+    return label
+
+
+@st.composite
+def lpa_graphs(draw):
+    ids = st.integers(-6, 12)
+    kind = draw(st.sampled_from(["random", "star", "chain", "empty"]))
+    if kind == "star":
+        hub = draw(ids)
+        edges = [(hub, v) for v in draw(st.lists(ids, min_size=1, max_size=10))]
+    elif kind == "chain":
+        vs = draw(st.lists(ids, min_size=2, max_size=14, unique=True))
+        edges = list(zip(vs, vs[1:]))
+    elif kind == "empty":
+        edges = []
+    else:
+        edges = draw(st.lists(st.tuples(ids, ids), min_size=1, max_size=20))
+    if edges:  # duplicate and reversed copies, plus self-loops
+        for a, b in draw(st.lists(st.sampled_from(edges), max_size=4)):
+            edges.append((b, a) if draw(st.booleans()) else (a, b))
+        edges += [(v, v) for v in draw(st.lists(ids, max_size=2))]
+    return edges
+
+
+@settings(max_examples=12, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(edges=lpa_graphs(), rounds=st.integers(0, 3), substeps=st.integers(1, 3))
+def test_label_propagation_equals_reference(spark, edges, rounds, substeps):
+    """Both LPA operators equal the Python schedule on hubs, chains,
+    self-loops, duplicate/reversed edges, negative ids and the empty
+    graph — including ``rounds=0`` (node = label) and the closed-form
+    first sub-step."""
+    from h2h_spark.operators.graph import (
+        label_propagation,
+        label_propagation_semisync,
+    )
+
+    e = spark.createDataFrame(edges, "src long, dst long")
+    semi = label_propagation_semisync(e, rounds=rounds, substeps=substeps)
+    assert dict(semi.collect()) == _lpa_reference(edges, rounds, substeps)
+    sync = label_propagation(e, iterations=rounds)
+    assert dict(sync.collect()) == _lpa_reference(edges, rounds, 1)
 
 
 @settings(max_examples=200, deadline=None)

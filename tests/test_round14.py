@@ -94,6 +94,36 @@ def test_no_cache_residue(spark, op):
     assert jcm.isEmpty(), f"{op}: operator left DataFrame cache residue"
 
 
+@pytest.mark.parametrize("op", ["label_propagation", "label_propagation_semisync"])
+def test_lpa_releases_edge_cache_on_failure(spark, monkeypatch, op):
+    """A sub-step that raises still releases every cache it took: the
+    second checkpoint fails while the edge list and one label table are
+    cached, and the CacheManager is empty afterwards."""
+    from h2h_spark.operators import graph as G
+
+    e = _edges(spark)
+    frame = type(e)  # the concrete DataFrame class the session returns
+    real = frame.localCheckpoint
+    calls = []
+
+    def failing(self, *args, **kwargs):
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("sub-step failed")
+        return real(self, *args, **kwargs)
+
+    spark.catalog.clearCache()
+    monkeypatch.setattr(frame, "localCheckpoint", failing)
+    with pytest.raises(RuntimeError, match="sub-step failed"):
+        if op == "label_propagation":
+            G.label_propagation(e, iterations=3)
+        else:
+            G.label_propagation_semisync(e, rounds=2, substeps=2)
+    assert len(calls) == 2
+    jcm = spark._jsparkSession.sharedState().cacheManager()
+    assert jcm.isEmpty(), f"{op}: edge cache leaked on the exception path"
+
+
 def test_pq_inrow_size_guard_fallback(spark):
     """Oversize codebooks take the broadcast-join fallback and produce
     the identical rows as the literal-SQL in-row path."""
