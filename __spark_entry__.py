@@ -59,8 +59,9 @@ WORK_ROOT = os.environ.get("H2H_SPARK_WORK", "/tmp/h2h_spark_work")
 
 def _prepare(spark: SparkSession) -> None:
     """Make an arbitrary (driver-provided) SparkSession able to run every
-    query: register the engine's Python DataSources and set the session
-    confs the queries depend on.  Idempotent and safe to call per query."""
+    query: register the engine's Python DataSource (once per session) and
+    set the session confs the queries depend on.  Idempotent and safe to
+    call per query."""
     from h2h_spark.session import _register_datasources
 
     _register_datasources(spark)
@@ -74,7 +75,6 @@ def _prepare(spark: SparkSession) -> None:
         # value-identical.  _norm_ts() remains as the in-plan fallback for
         # sessions where this conf is not honored.
         ("spark.sql.parquet.inferTimestampNTZ.enabled", "false"),
-        ("spark.sql.python.filterPushdown.enabled", "true"),
         ("spark.sql.adaptive.enabled", "true"),
     ):
         try:
@@ -377,8 +377,8 @@ FROM lineitem GROUP BY l_returnflag
 
 def q_flat_bulk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O2 at volume: lineitem (600k rows at sf0.1) through the fixed-width
-    codec — write, scan with pushdown-eligible filter, aggregate.  The
-    numpy-codec throughput benchmark."""
+    codec — write, scan, filter (in the JVM, after the scan), aggregate.
+    The numpy-codec throughput benchmark."""
     w = _work("q_flat_bulk", sf_dir)
     lay = Layout(
         [

@@ -76,8 +76,6 @@ def get_spark(app_name: str = "h2h_spark", cpus: int | None = None) -> SparkSess
         # reject; under a UTC session tz the plain-TIMESTAMP read is
         # value-identical.
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        # Let the Python DataSources (h2h_flat) accept pushed filters.
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         # Runtime row-level join pruning: build a bloom filter from the
         # filtered dim side and push it into the fact scan — at 100 TB this
         # skips most of a selectively-joined fact table.
@@ -102,18 +100,16 @@ def get_spark(app_name: str = "h2h_spark", cpus: int | None = None) -> SparkSess
 
 
 def _register_datasources(spark: SparkSession) -> None:
-    """Register the engine's Python DataSources (idempotent)."""
+    """Register ``h2h_avro``, the engine's session-wide Python DataSource,
+    unless the session already has it (re-registering logs a WARN)."""
     # Imported lazily to avoid circular imports at package import time.
     from h2h_spark.sources.avro import AvroDataSource
-    from h2h_spark.sources.csv_split import CsvQDataSource
-    from h2h_spark.sources.flat import FlatDataSource
-    from h2h_spark.sources.xml import XmlDataSource
 
-    for ds in (FlatDataSource, XmlDataSource, CsvQDataSource, AvroDataSource):
-        try:
-            spark.dataSource.register(ds)
-        except Exception:
-            # Already registered in this session, or the runtime lacks the
-            # Python DataSource API — the functional read_*/write_* paths
-            # do not depend on registration.
-            pass
+    try:
+        manager = spark._jsparkSession.sessionState().dataSourceManager()
+        if not manager.dataSourceExists(AvroDataSource.name()):
+            spark.dataSource.register(AvroDataSource)
+    except Exception:
+        # The runtime lacks the Python DataSource API — the functional
+        # read_*/write_* paths do not depend on registration.
+        pass

@@ -33,20 +33,25 @@ Unlike the reference's heuristic, a split that starts mid-quoted-field
 cannot misalign: its starting parity is known, not assumed.  Files with
 ZERO quotes short-circuit pass 1 per-range counts to parity 0 everywhere,
 reducing to plain ``LineRecordReader`` semantics.
+
+Scale posture: the driver turns the parities into one
+``(path, start, end, parity)`` descriptor per range and
+:func:`~h2h_spark.sources.util.scan_splits` runs one task per descriptor;
+a task receives only its own.  Ranges default to 64 MiB (~1.6M tasks for
+100 TB), and the scan has no size estimate, so Spark never broadcasts it.
 """
 
 from __future__ import annotations
 
-import json
-from typing import Iterator
+import functools
+from typing import Iterator, NamedTuple
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-from h2h_spark.sources.util import file_size, list_part_files, open_input
+from h2h_spark.sources.util import file_size, list_part_files, open_input, scan_splits
 
 _DEFAULT_MAX_PARTITION_BYTES = 64 * 1024 * 1024
 _READ_CHUNK = 4 * 1024 * 1024
@@ -72,7 +77,7 @@ def check_terminator(terminator: str) -> None:
 
 def byte_ranges(size: int, max_partition_bytes: int) -> list[tuple[int, int]]:
     """Deterministic even byte ranges for a file — shared by the parity
-    pass and the reader's ``partitions()`` so both see identical splits."""
+    pass and the scan so both see identical splits."""
     if size <= 0:
         return []
     n = max(1, -(-size // max_partition_bytes))
@@ -126,12 +131,11 @@ def quote_parities(
     return parities
 
 
-class CsvQInputPartition(InputPartition):
-    def __init__(self, path: str, start: int, end: int, parity: int):
-        self.path = path
-        self.start = start
-        self.end = end
-        self.parity = parity
+class CsvQSplit(NamedTuple):
+    path: str
+    start: int
+    end: int
+    parity: int
 
 
 def _scan_records(
@@ -225,63 +229,22 @@ def _scan_records(
             pos = b + tlen
 
 
-class CsvQDataSourceReader(DataSourceReader):
-    def __init__(self, options: dict):
-        self.path = options["path"]
-        self.terminator = options.get("terminator", "\n").encode("utf-8")
-        self.quote = options.get("quotechar", "'").encode("utf-8")
-        self.max_partition_bytes = int(
-            options.get("maxpartitionbytes", _DEFAULT_MAX_PARTITION_BYTES)
-        )
-        self.read_chunk = int(options.get("readchunk", _READ_CHUNK))
-        # {path: [parity per range, in offset order]} from quote_parities().
-        self.parities: dict[str, list[int]] = json.loads(
-            options.get("parities", "{}")
-        )
-
-    def partitions(self) -> list[InputPartition]:
-        parts: list[CsvQInputPartition] = []
-        for path in list_part_files(self.path, pattern="*"):
-            pars = self.parities.get(path)
-            for i, (s, e) in enumerate(
-                byte_ranges(file_size(path), self.max_partition_bytes)
-            ):
-                parts.append(
-                    CsvQInputPartition(path, s, e, pars[i] if pars else 0)
-                )
-        return parts or [CsvQInputPartition("", 0, 0, 0)]
-
-    def read(self, partition: CsvQInputPartition) -> Iterator[pa.RecordBatch]:
-        if partition is None or not partition.path or partition.end <= partition.start:
-            return
-        batch: list[str] = []
-        for rec in _scan_records(
-            partition.path, partition.start, partition.end, partition.parity,
-            self.terminator, self.quote, self.read_chunk,
-        ):
-            if not rec:
-                continue
-            batch.append(rec.decode("utf-8"))
-            if len(batch) >= _BATCH_RECORDS:
-                yield pa.RecordBatch.from_arrays([pa.array(batch)], ["value"])
-                batch = []
-        if batch:
+def _read_split(
+    terminator: bytes, quote: bytes, part: CsvQSplit
+) -> Iterator[pa.RecordBatch]:
+    """One ``value`` string per record the range owns, in Arrow batches."""
+    batch: list[str] = []
+    for rec in _scan_records(
+        part.path, part.start, part.end, part.parity, terminator, quote
+    ):
+        if not rec:
+            continue
+        batch.append(rec.decode("utf-8"))
+        if len(batch) >= _BATCH_RECORDS:
             yield pa.RecordBatch.from_arrays([pa.array(batch)], ["value"])
-
-
-class CsvQDataSource(DataSource):
-    """``spark.read.format("h2h_csvq")`` — raw quote-parity record scan;
-    one ``value: string`` column per record, fields decoded downstream."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "h2h_csvq"
-
-    def schema(self) -> T.StructType:
-        return T.StructType([T.StructField("value", T.StringType())])
-
-    def reader(self, schema: T.StructType) -> DataSourceReader:
-        return CsvQDataSourceReader(dict(self.options))
+            batch = []
+    if batch:
+        yield pa.RecordBatch.from_arrays([pa.array(batch)], ["value"])
 
 
 def read_csv_quoted_splits(
@@ -304,16 +267,20 @@ def read_csv_quoted_splits(
     check_terminator(terminator)
     files = list_part_files(path, pattern="*")
     parities = quote_parities(spark, files, max_partition_bytes, quote)
-    # Skip the scan-side parity work entirely for quote-free files?  No —
-    # parity 0 everywhere already makes the scan's quote counting a no-op
-    # (bytes.count over ranges with no hits), so one code path suffices.
-    lines = (
-        spark.read.format("h2h_csvq")
-        .option("terminator", terminator)
-        .option("quotechar", quote)
-        .option("maxpartitionbytes", str(max_partition_bytes))
-        .option("parities", json.dumps(parities))
-        .load(path)
+    # Quote-free files need no separate path: parity 0 everywhere already
+    # makes the scan's quote counting a no-op.
+    splits = [
+        CsvQSplit(p, s, e, par)
+        for p in files
+        for (s, e), par in zip(
+            byte_ranges(file_size(p), max_partition_bytes), parities.get(p, ())
+        )
+    ]
+    read = functools.partial(
+        _read_split, terminator.encode("utf-8"), quote.encode("utf-8")
+    )
+    lines = scan_splits(
+        spark, splits, read, T.StructType([T.StructField("value", T.StringType())])
     )
     opts = {
         "sep": sep,

@@ -8,6 +8,8 @@
   on a cluster, mirroring the reference's libhdfs/webhdfs transports
   (``libhdfsconnector.cpp:904-918``, ``webhdfsconnector.cpp:169-238``) with
   the Hadoop/Arrow clients instead of hand-rolled JNI/REST.
+- :func:`scan_splits` — the driver-planned scan shared by the h2h readers:
+  one task per split descriptor, each decoding its own byte range.
 """
 
 from __future__ import annotations
@@ -15,7 +17,11 @@ from __future__ import annotations
 import glob
 import os
 import re
-from typing import BinaryIO
+from typing import BinaryIO, Callable, Iterator, NamedTuple, Sequence
+
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 _ESCAPES = {
     "n": "\n",
@@ -221,3 +227,45 @@ def ensure_dir(path: str) -> None:
 
         filesystem, p = pafs.FileSystem.from_uri(path)
         filesystem.create_dir(p, recursive=True)
+
+
+def scan_splits(
+    spark: SparkSession,
+    splits: Sequence[NamedTuple],
+    read: Callable[[NamedTuple], Iterator[pa.RecordBatch]],
+    schema: T.StructType,
+) -> DataFrame:
+    """Scan planned splits as one ``mapInArrow`` task per split.
+
+    The reference's workers each compute their own byte range with no
+    central planner (``libhdfsconnector.cpp:652-707``); here the driver
+    plans in-process and ships each task only its own descriptor.  The
+    descriptors (``NamedTuple`` of ``str``/``int`` fields) are unpickled
+    on the JVM side into a one-row-per-partition RDD, so the plan is
+    ``MapInArrow <- Scan ExistingRDD`` with no other Python stage.  Like a
+    file scan, that RDD has no size estimate, so a join never broadcasts
+    the scan side.  ``read`` turns one descriptor into Arrow batches of
+    ``schema``; no splits gives an empty DataFrame of ``schema``.
+    """
+    if not splits:
+        return spark.createDataFrame([], schema)
+    kind = type(splits[0])
+    fields = [
+        T.StructField(f, T.StringType() if isinstance(v, str) else T.LongType(), False)
+        for f, v in zip(kind._fields, splits[0])
+    ]
+    sc = spark.sparkContext
+    rows = sc.parallelize([tuple(s) for s in splits], len(splits))
+    # pythonToJava on the parallelized bytes directly: going through
+    # RDD._to_java_object_rdd would re-pickle them in a Python stage.
+    jrdd = sc._jvm.SerDeUtil.toJavaArray(sc._jvm.SerDeUtil.pythonToJava(rows._jrdd, True))
+    jdf = spark._jsparkSession.applySchemaToPythonRDD(
+        jrdd.rdd(), T.StructType(fields).json()
+    )
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for desc in batch.to_pylist():
+                yield from read(kind(**desc))
+
+    return DataFrame(jdf, spark).mapInArrow(run, schema)

@@ -1,7 +1,13 @@
 """XML row-tag wire format — distributed scan with split realignment.
 
 Reproduces the reference's XML read operator (``readXMLOffset``,
-``libhdfsconnector.cpp:211-383``) Spark-first, as a Python DataSource:
+``libhdfsconnector.cpp:211-383``) Spark-first: the driver cuts each file
+into byte ranges and :func:`~h2h_spark.sources.util.scan_splits` runs one
+task per range, so each task receives only its own ``(path, start, end)``
+descriptor and the scan carries no size estimate (Spark never broadcasts
+it).  Ranges are sized from ``defaultParallelism`` with a 64 MiB cap, so a
+100 TB input plans ~1.6M tasks, the shape of Spark's own file scans.
+Each task keeps the reference's record rules:
 
 - each byte-range split scans for ``<rowTag`` occurrences; a record belongs
   to the split containing the *start* of its opening tag (the reference's
@@ -29,20 +35,19 @@ reference, built on the same partition-file sink as FLAT.
 
 from __future__ import annotations
 
+import functools
 import re
-from typing import Iterator, Sequence
+from typing import Iterator, NamedTuple, Sequence
 from xml.etree import ElementTree
 from xml.sax.saxutils import escape as _xml_escape
 
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from h2h_spark.layout import Layout
 from h2h_spark.sources import sink as _sink
-from h2h_spark.sources.util import file_size, list_part_files, open_input
+from h2h_spark.sources.util import file_size, list_part_files, open_input, scan_splits
 
 _DEFAULT_MAX_PARTITION_BYTES = 64 * 1024 * 1024
 _READ_CHUNK = 1 * 1024 * 1024
@@ -66,20 +71,19 @@ def xpath_to_wrappers(wrapper_path: Sequence[str]) -> tuple[str, str]:
     return opens, closes
 
 
-class XmlInputPartition(InputPartition):
-    def __init__(self, path: str, start: int, end: int):
-        self.path = path
-        self.start = start
-        self.end = end
+class XmlSplit(NamedTuple):
+    path: str
+    start: int
+    end: int
 
 
 def plan_xml_splits(
     paths: Sequence[str], max_partition_bytes: int
-) -> list[XmlInputPartition]:
+) -> list[XmlSplit]:
     """Per file: ``ceil(size / max_partition_bytes)`` byte ranges of equal
     size (the first ``size % n`` one byte longer).  Records are assigned
     to ranges at scan time by the ownership rule."""
-    parts: list[XmlInputPartition] = []
+    parts: list[XmlSplit] = []
     for path in paths:
         size = file_size(path)
         if size == 0:
@@ -89,7 +93,7 @@ def plan_xml_splits(
         off = 0
         for i in range(n):
             length = base + (1 if i < rem else 0)
-            parts.append(XmlInputPartition(path, off, off + length))
+            parts.append(XmlSplit(path, off, off + length))
             off += length
     return parts
 
@@ -320,62 +324,25 @@ def _parse_batch(
     return pa.RecordBatch.from_pandas(pdf, schema=schema, preserve_index=False)
 
 
-class XmlDataSourceReader(DataSourceReader):
-    def __init__(self, options: dict, layout: Layout):
-        self.options = options
-        self.layout = layout
-        self.path = options["path"]
-        self.wrappers, self.row_tag = split_row_path(options.get("rowtag", "Row"))
-        self.max_partition_bytes = int(
-            options.get("maxpartitionbytes", _DEFAULT_MAX_PARTITION_BYTES)
-        )
-        self.read_chunk = int(options.get("readchunk", _READ_CHUNK))
-        # Strict by default: a non-wrapper tag between records raises
-        # (reference aborts its stream there, libhdfsconnector.cpp:318-327).
-        self.strict = options.get("strict", "true").lower() == "true"
-
-    def partitions(self) -> list[InputPartition]:
-        parts = plan_xml_splits(
-            list_part_files(self.path, pattern="*"), self.max_partition_bytes
-        )
-        return parts or [XmlInputPartition("", 0, 0)]
-
-    def read(self, partition: XmlInputPartition) -> Iterator[pa.RecordBatch]:
-        if partition is None or not partition.path or partition.end <= partition.start:
-            return
-        allowed = frozenset(self.wrappers) if self.strict else None
-        batch: list[bytes] = []
-        for elem in _scan_elements(
-            partition.path, partition.start, partition.end, self.row_tag,
-            self.read_chunk, strict_allowed=allowed,
-        ):
-            batch.append(elem)
-            if len(batch) >= _PARSE_BATCH:
-                yield _parse_batch(batch, self.layout, self.row_tag)
-                batch = []
-        if batch:
-            yield _parse_batch(batch, self.layout, self.row_tag)
-
-
-class XmlDataSource(DataSource):
-    """``spark.read.format("h2h_xml").option("layout", …).option("rowtag", …)``."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "h2h_xml"
-
-    def _layout(self) -> Layout:
-        if "layout" not in self.options:
-            raise ValueError(
-                "h2h_xml requires .option('layout', Layout(...).to_json())"
-            )
-        return Layout.from_json(self.options["layout"])
-
-    def schema(self) -> T.StructType:
-        return self._layout().to_struct_type()
-
-    def reader(self, schema: T.StructType) -> DataSourceReader:
-        return XmlDataSourceReader(dict(self.options), self._layout())
+def _read_split(
+    layout: Layout,
+    row_tag: str,
+    read_chunk: int,
+    strict_allowed: frozenset[str] | None,
+    part: XmlSplit,
+) -> Iterator[pa.RecordBatch]:
+    """Parse the records one byte range owns into Arrow batches."""
+    batch: list[bytes] = []
+    for elem in _scan_elements(
+        part.path, part.start, part.end, row_tag, read_chunk,
+        strict_allowed=strict_allowed,
+    ):
+        batch.append(elem)
+        if len(batch) >= _PARSE_BATCH:
+            yield _parse_batch(batch, layout, row_tag)
+            batch = []
+    if batch:
+        yield _parse_batch(batch, layout, row_tag)
 
 
 def read_xml(
@@ -400,19 +367,19 @@ def read_xml(
     ``min(64 MiB, max(1 MiB, ceil(total input bytes / defaultParallelism)))``
     (:func:`default_split_bytes`), so a small input still fills the cores.
     """
+    wrappers, tag = split_row_path(row_tag)
+    files = list_part_files(path, pattern="*")
     if max_partition_bytes is None:
-        total = sum(file_size(p) for p in list_part_files(path, pattern="*"))
+        total = sum(file_size(p) for p in files)
         max_partition_bytes = default_split_bytes(
             total, spark.sparkContext.defaultParallelism
         )
-    return (
-        spark.read.format("h2h_xml")
-        .option("layout", layout.to_json())
-        .option("rowtag", row_tag)
-        .option("maxpartitionbytes", str(max_partition_bytes))
-        .option("readchunk", str(read_chunk))
-        .option("strict", "true" if strict else "false")
-        .load(path)
+    read = functools.partial(
+        _read_split, layout, tag, read_chunk, frozenset(wrappers) if strict else None
+    )
+    return scan_splits(
+        spark, plan_xml_splits(files, max_partition_bytes), read,
+        layout.to_struct_type(),
     )
 
 

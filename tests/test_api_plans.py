@@ -1,8 +1,10 @@
 """Reference-parity API surface (PipeIn/PipeOut/PipeOutAndMerge) and
 physical-plan hygiene (pushdown, broadcast) — the 100 TB discipline."""
 import os
+import re
 
 import pytest
+from pyspark.sql import types as T
 
 import __spark_entry__ as entrymod
 from h2h_spark import Integer, Layout, Real, String, pipe_in, pipe_out, pipe_out_and_merge
@@ -436,3 +438,70 @@ def test_parquet_rowgroup_stats_multi_group(spark, tmp_work):
     )
     assert rows == [(0, 100, "0", "99"), (1, 100, "100", "199"),
                     (2, 50, "200", "249")]
+
+
+def _h2h_scan(spark, tmp_work, reader):
+    """One h2h reader over an input cut into several splits, and the
+    number of splits its driver-side planner makes for that input."""
+    from h2h_spark import read_flat, read_xml, write_flat, write_xml
+    from h2h_spark.sources.csv_split import byte_ranges, read_csv_quoted_splits
+    from h2h_spark.sources.flat import plan_flat_splits
+    from h2h_spark.sources.util import list_part_files
+    from h2h_spark.sources.xml import plan_xml_splits
+
+    cust = spark.read.parquet(f"{SF_DIR}/customer.parquet").repartition(3)
+    path = f"{tmp_work}/{reader}"
+    if reader == "flat":
+        write_flat(cust, path, LAY)
+        splits = plan_flat_splits(list_part_files(path), LAY.record_length, 4096)
+        return read_flat(spark, path, LAY, max_partition_bytes=4096), len(splits)
+    if reader == "xml":
+        write_xml(cust, path)
+        splits = plan_xml_splits(list_part_files(path, pattern="*"), 4096)
+        return read_xml(spark, path, LAY, max_partition_bytes=4096), len(splits)
+    text = "".join(f"{i},'line{i}\nnext'\n" for i in range(300))
+    with open(path, "w") as f:
+        f.write(text)
+    schema = T.StructType(
+        [T.StructField("id", T.LongType()), T.StructField("body", T.StringType())]
+    )
+    df = read_csv_quoted_splits(spark, path, schema, max_partition_bytes=1024)
+    return df, len(byte_ranges(len(text), 1024))
+
+
+def _broadcast_subtrees(plan: str) -> list[str]:
+    """The text of every BroadcastExchange subtree of a plan string."""
+    lines = plan.splitlines()
+    out = []
+    for i, line in enumerate(lines):
+        at = line.find("BroadcastExchange")
+        if at < 0:
+            continue
+        sub = [line]
+        for nxt in lines[i + 1:]:
+            if re.match(r"[ :|+\-]*", nxt).end() <= at:
+                break
+            sub.append(nxt)
+        out.append("\n".join(sub))
+    return out
+
+
+@pytest.mark.parametrize("reader", ["flat", "xml", "csv_quoted"])
+def test_h2h_scan_is_one_map_in_arrow_task_per_split(spark, tmp_work, reader):
+    """The h2h readers plan splits on the driver and scan them as
+    MapInArrow over the descriptor RDD: one partition per split, no other
+    Python stage, and no size estimate, so a join against a range smaller
+    than the broadcast threshold broadcasts the range, never the scan."""
+    df, n_splits = _h2h_scan(spark, tmp_work, reader)
+    assert n_splits > 1
+    assert df.rdd.getNumPartitions() == n_splits
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"MapInArrow [^\n]*\n[ :|+\-]*(\*\(\d+\) )?Scan ExistingRDD", plan), plan
+    assert "BatchEvalPython" not in plan
+
+    big = spark.range(5_000_000)
+    joined = df.join(big, df[df.columns[0]] == big.id)
+    plan = joined._jdf.queryExecution().executedPlan().toString()
+    subtrees = _broadcast_subtrees(plan)
+    assert subtrees, plan
+    assert not any("MapInArrow" in t for t in subtrees), plan

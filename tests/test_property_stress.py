@@ -226,14 +226,6 @@ def test_xml_row_larger_than_read_chunk(spark, tmp_work):
     assert got == dict(rows)
 
 
-def test_flat_datasource_requires_layout(spark, tmp_work):
-    path = f"{tmp_work}/x.dat"
-    with open(path, "wb") as f:
-        f.write(b"\x00" * 8)
-    with pytest.raises(Exception, match="layout"):
-        spark.read.format("h2h_flat").load(path).count()
-
-
 def test_write_flat_unsigned8_from_spark_decimal(spark, tmp_work):
     """UNSIGNED8 survives the full Spark round trip (Decimal(20,0) column
     → pack → unpack → Decimal)."""

@@ -1,6 +1,7 @@
 """Wire-format sources: FLAT/CSV/XML round trips, boundaries, merge."""
 import glob
 import os
+import re
 
 import pandas as pd
 import pytest
@@ -359,6 +360,47 @@ def test_flat_filter_pushdown(spark, tmp_work):
     cond2 = F.col("c_nationkey").isin(1, 2, 3) & F.col("c_name").startswith("Customer#0000001")
     got2 = read_flat(spark, f"{tmp_work}/fpd", CUST_LAYOUT).filter(cond2)
     assert _as_set(got2) == _as_set(cust.filter(cond2))
+
+
+def test_empty_parts_read_as_empty_frames(spark, tmp_work):
+    """A 0-row write still creates its part files (empty for FLAT, header
+    and footer only for XML).  Reading them back, or a zero-byte XML or
+    quoted-CSV file, gives an empty DataFrame with the declared schema."""
+    from h2h_spark.sources.csv_split import read_csv_quoted_splits
+
+    lay = Layout([("k", Integer(8)), ("v", String(6))])
+    empty = spark.createDataFrame([], "k long, v string")
+    infos = write_flat(empty, f"{tmp_work}/ef", lay)
+    assert infos and all(i.n_bytes == 0 for i in infos)
+    write_xml(empty, f"{tmp_work}/ex")
+    os.makedirs(f"{tmp_work}/ex0")
+    open(f"{tmp_work}/ex0/part_0_1.xml", "wb").close()
+    open(f"{tmp_work}/e.csv", "wb").close()
+    for df in (
+        read_flat(spark, f"{tmp_work}/ef", lay),
+        read_xml(spark, f"{tmp_work}/ex", lay),
+        read_xml(spark, f"{tmp_work}/ex0", lay),
+    ):
+        assert df.schema == lay.to_struct_type()
+        assert df.collect() == []
+    csv = read_csv_quoted_splits(spark, f"{tmp_work}/e.csv", _csvq_schema())
+    assert csv.schema == _csvq_schema()
+    assert csv.collect() == []
+
+
+def test_flat_misaligned_file_raises_at_read(spark, tmp_work):
+    """A part whose size is not a multiple of the record length is refused
+    when the read is planned, naming the file, before any job runs."""
+    lay = Layout([("k", Integer(8))])
+    d = f"{tmp_work}/mis"
+    os.makedirs(d)
+    with open(f"{d}/part_0_2", "wb") as f:
+        f.write(b"\x00" * 16)
+    with open(f"{d}/part_1_2", "wb") as f:
+        f.write(b"\x00" * 13)
+    bad = re.escape(f"{d}/part_1_2")
+    with pytest.raises(ValueError, match=f"{bad}: file size 13 is not a multiple"):
+        read_flat(spark, d, lay)
 
 
 def test_xml_attribute_fields(spark, tmp_work):
