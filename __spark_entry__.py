@@ -59,12 +59,9 @@ WORK_ROOT = os.environ.get("H2H_SPARK_WORK", "/tmp/h2h_spark_work")
 
 def _prepare(spark: SparkSession) -> None:
     """Make an arbitrary (driver-provided) SparkSession able to run every
-    query: register the engine's Python DataSource (once per session) and
-    set the session confs the queries depend on.  Idempotent and safe to
-    call per query."""
-    from h2h_spark.session import _register_datasources
-
-    _register_datasources(spark)
+    query: set the session confs the queries depend on.  Every reader
+    plans its splits on the driver and scans them with ``mapInArrow``, so
+    nothing needs registering.  Idempotent and safe to call per query."""
     for k, v in (
         ("spark.sql.session.timeZone", "UTC"),
         ("spark.sql.legacy.parquet.nanosAsLong", "true"),
@@ -179,9 +176,9 @@ def _split_bytes(src: str, target_tasks: int = 32, floor: int = 4096) -> int:
     task-count sizing a production scan would use) with a floor that
     keeps every file multi-split at the driver's sf0.01 grading scale —
     so mid-file resync realignment is exercised at EVERY sf while the
-    sf0.1 bench is not dominated by hundreds of tiny Python-datasource
-    tasks (r7 bench: q_tar_members spent its 4.4 s scheduling 633
-    8 KiB-split tasks over 5 MB of tar)."""
+    sf0.1 bench is not dominated by hundreds of tiny Python scan tasks
+    (r7 bench: q_tar_members spent its 4.4 s scheduling 633 8 KiB-split
+    tasks over 5 MB of tar)."""
     total = sum(
         os.path.getsize(os.path.join(src, f))
         for f in os.listdir(src)
@@ -4438,7 +4435,7 @@ def q_safetensors_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed safetensors ROW scan
     (`sources/safetensors.py:SafetensorsReader` — rows of a 2-D tensor
     are a fixed stride, so one tensor splits into byte-range tasks with
-    zero resync; rowsPerSplit=64 forces multi-split reads here).  The
+    zero resync; rows_per_split=64 forces multi-split reads here).  The
     ``emb`` and ``ids`` tensors are read as two scans joined on (file,
     row_idx), mapped back to vec_id, and verified BIT-EXACT against the
     source embeddings — the roundtrip proof that byte-range tensor
@@ -4471,7 +4468,7 @@ FROM embeddings GROUP BY 1
 
 def q_npy_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NumPy ``.npy`` shard row scan (`sources/npy.py:NpyReader` —
-    NEP-1 header plans fixed-stride row byte-ranges; rowsPerSplit=64
+    NEP-1 header plans fixed-stride row byte-ranges; rows_per_split=64
     forces multi-split reads).  The embeddings table is written as 6
     vec_id%6 shards, read back distributed, and verified BIT-EXACT
     against the source by joining on the shard-local row rank.  Oracle
@@ -5174,9 +5171,8 @@ def q_avro_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     nested data_file record, an array, a bounds map, and a binary blob;
     the read-back is flattened and graded field-by-field.  Oracle
     closed-form."""
-    from h2h_spark.sources.avro import AvroDataSource, read_avro, write_avro
+    from h2h_spark.sources.avro import read_avro, write_avro
 
-    spark.dataSource.register(AvroDataSource)
     w = _work("q_avro_nested", sf_dir)
     src = os.path.join(w, "src")
     ready = os.path.join(src, "_READY")
@@ -5241,9 +5237,8 @@ def q_iceberg_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata-sized reads and the saved IO is the whole point.  The
     output accounts what was scanned at each level plus the exact
     result.  Oracle closed-form."""
-    from h2h_spark.sources.avro import AvroDataSource, read_avro, write_avro
+    from h2h_spark.sources.avro import read_avro, write_avro
 
-    spark.dataSource.register(AvroDataSource)
     w = _work("q_iceberg_prune", sf_dir)
     tbl = os.path.join(w, "tbl")
     ready = os.path.join(tbl, "_READY")
@@ -10077,8 +10072,8 @@ def q_arrow_ipc(spark: SparkSession, sf_dir: str) -> DataFrame:
     footer indexes every record batch, so the planner assigns PRECISE
     batch runs per task (no resync needed — contrast WARC/TAR) and each
     task's output IS the stored Arrow batch via a memory-mapped random
-    access read, the cheapest scan the Python DataSource API can
-    express.  Customer roundtrip, 2 batches per split (~12 tasks)."""
+    access read, the cheapest scan ``mapInArrow`` can express.  Customer
+    roundtrip, 2 batches per split (~12 tasks)."""
     import pyarrow.parquet as _pq
 
     from h2h_spark.sources.arrowipc import read_arrow_ipc, write_arrow_ipc

@@ -527,10 +527,15 @@ def minhash_dedup_against_index(
         delta, id_col, text_col, num_hashes=num_hashes, bands=bands,
         shingle_k=shingle_k, seed=seed, base_hash=base_hash,
     )
-    return minhash_pairs_from_tables(
-        d_entries, d_sets, index_entries, index_sets,
-        jaccard_threshold=jaccard_threshold, max_bucket=max_bucket,
-    )
+    try:
+        # materialize the (small) pair list, then release the delta's
+        # shingle cache, which minhash_index hands to its caller (§5)
+        return minhash_pairs_from_tables(
+            d_entries, d_sets, index_entries, index_sets,
+            jaccard_threshold=jaccard_threshold, max_bucket=max_bucket,
+        ).localCheckpoint(eager=True)
+    finally:
+        d_sets.unpersist()
 
 
 def minhash_pairs_from_tables(

@@ -40,8 +40,12 @@ def pack_sequences(
 
     ``_materialize=False`` is a plan-inspection hook (tests): it skips
     the cumsum persist and the final eager localCheckpoint so the full
-    lineage stays visible in ``explain``; values are identical, the
-    offsets pass just recomputes the prefix sums."""
+    lineage stays visible in ``explain``.  It is unsafe on a
+    nondeterministic input: the totals collect and the output pass then
+    each recompute the range partitioning, so partition boundaries can
+    differ between them and the driver's offsets would not match the
+    recomputed prefix sums.  The persist is what keeps the two passes on
+    the same partitions."""
     spark = df.sparkSession
     if n_parts is None:
         n_parts = spark.sparkContext.defaultParallelism

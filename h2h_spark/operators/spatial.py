@@ -185,41 +185,47 @@ def dbscan_2d(
         )
         .persist()
     )
-    deg = sym.groupBy("id").agg(F.count("*").alias("n_nb"))
-    # core ids are consumed 4x (two core-edge joins, core labeling, the
-    # border anti-join); tiny (<= |pts| ids), so cache the filtered set
-    core = deg.filter(F.col("n_nb") + 1 >= min_pts).select("id").persist()
-    core_edges = (
-        sym.join(core.withColumnRenamed("id", "nb"), "nb")
-        .join(core, "id")
-        .select(F.col("id").alias("id_a"), F.col("nb").alias("id_b"))
-    )
-    comp = connected_components_star(core_edges)  # (id, rep); no singletons
-    core_lab = core.join(comp, "id", "left").select(
-        "id", F.coalesce(F.col("rep"), F.col("id")).alias("cluster")
-    )
-    # border: non-core with >= 1 core neighbor -> min neighbor cluster
-    border = (
-        sym.join(core_lab.withColumnRenamed("id", "nb"), "nb")
-        .join(core, "id", "left_anti")
-        .groupBy("id")
-        .agg(F.min("cluster").alias("cluster"))
-    )
-    labeled = core_lab.withColumn("role", F.lit("core")).unionByName(
-        border.withColumn("role", F.lit("border"))
-    )
-    out = (
-        pts.select(F.col(id_col).alias("id"))
-        .join(labeled, "id", "left")
-        .select(
-            "id",
-            "cluster",
-            F.coalesce(F.col("role"), F.lit("noise")).alias("role"),
+    core = None
+    try:
+        deg = sym.groupBy("id").agg(F.count("*").alias("n_nb"))
+        # core ids are consumed 4x (two core-edge joins, core labeling, the
+        # border anti-join); tiny (<= |pts| ids), so cache the filtered set
+        core = deg.filter(F.col("n_nb") + 1 >= min_pts).select("id").persist()
+        core_edges = (
+            sym.join(core.withColumnRenamed("id", "nb"), "nb")
+            .join(core, "id")
+            .select(F.col("id").alias("id_a"), F.col("nb").alias("id_b"))
         )
-        # materialize (|pts| rows), then release the two caches instead
-        # of leaking them into the session (§5)
-        .localCheckpoint(eager=True)
-    )
-    sym.unpersist()
-    core.unpersist()
+        comp = connected_components_star(core_edges)  # (id, rep); no singletons
+        core_lab = core.join(comp, "id", "left").select(
+            "id", F.coalesce(F.col("rep"), F.col("id")).alias("cluster")
+        )
+        # border: non-core with >= 1 core neighbor -> min neighbor cluster
+        border = (
+            sym.join(core_lab.withColumnRenamed("id", "nb"), "nb")
+            .join(core, "id", "left_anti")
+            .groupBy("id")
+            .agg(F.min("cluster").alias("cluster"))
+        )
+        labeled = core_lab.withColumn("role", F.lit("core")).unionByName(
+            border.withColumn("role", F.lit("border"))
+        )
+        out = (
+            pts.select(F.col(id_col).alias("id"))
+            .join(labeled, "id", "left")
+            .select(
+                "id",
+                "cluster",
+                F.coalesce(F.col("role"), F.lit("noise")).alias("role"),
+            )
+            # materialize (|pts| rows), then release the two caches instead
+            # of leaking them into the session (§5)
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        # released on the exception path too (a failing sub-step, e.g.
+        # connected_components_star's max_iter guard, must not leak them)
+        sym.unpersist()
+        if core is not None:
+            core.unpersist()
     return out

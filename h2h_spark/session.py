@@ -95,21 +95,4 @@ def get_spark(app_name: str = "h2h_spark", cpus: int | None = None) -> SparkSess
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    _register_datasources(spark)
     return spark
-
-
-def _register_datasources(spark: SparkSession) -> None:
-    """Register ``h2h_avro``, the engine's session-wide Python DataSource,
-    unless the session already has it (re-registering logs a WARN)."""
-    # Imported lazily to avoid circular imports at package import time.
-    from h2h_spark.sources.avro import AvroDataSource
-
-    try:
-        manager = spark._jsparkSession.sessionState().dataSourceManager()
-        if not manager.dataSourceExists(AvroDataSource.name()):
-            spark.dataSource.register(AvroDataSource)
-    except Exception:
-        # The runtime lacks the Python DataSource API — the functional
-        # read_*/write_* paths do not depend on registration.
-        pass

@@ -7,22 +7,21 @@ does the precise thing instead of the resync dance: one split per run
 of record batches (``batches_per_split``), and each task random-accesses
 exactly its batches through pyarrow's memory-mapped reader.  The task
 output IS the stored Arrow batch — no decode step at all, the cheapest
-possible scan path through the Python DataSource API (which speaks
-Arrow batches natively).
+possible scan: ``mapInArrow`` speaks Arrow batches natively.
 
-Schema is read from the first file's footer at plan time and mapped to
-Spark DDL (the same inference contract as spark.read.parquet).
+The driver reads every footer once: the first file's schema, mapped to
+Spark DDL (the same inference contract as spark.read.parquet), and each
+file's batch count, which the planner cuts into runs.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-from h2h_spark.sources.util import list_part_files, strip_scheme
+from h2h_spark.sources.util import list_part_files, scan_splits, strip_scheme
 
 _ARROW_DDL = {
     pa.int8(): "tinyint", pa.int16(): "smallint",
@@ -50,72 +49,34 @@ def arrow_schema_ddl(schema: pa.Schema) -> str:
     return ", ".join(f"{f.name} {_ddl_type(f.type)}" for f in schema)
 
 
-class ArrowIpcInputPartition(InputPartition):
-    def __init__(self, path: str, first_batch: int, last_batch: int):
-        self.path = path
-        self.first_batch = first_batch
-        self.last_batch = last_batch  # exclusive
+class ArrowIpcSplit(NamedTuple):
+    path: str
+    first_batch: int
+    last_batch: int  # exclusive
 
 
-class ArrowIpcDataSource(DataSource):
-    """``spark.read.format("h2h_arrow").option("path", ...)``"""
-
-    @classmethod
-    def name(cls) -> str:
-        return "h2h_arrow"
-
-    def schema(self) -> str:
-        files = list_part_files(self.options["path"], pattern="*.arrow")
-        if not files:
-            raise FileNotFoundError(
-                f"no .arrow files under {self.options['path']}"
-            )
-        with pa.memory_map(strip_scheme(files[0]), "r") as m:
-            return arrow_schema_ddl(pa.ipc.open_file(m).schema)
-
-    def reader(self, schema) -> "ArrowIpcReader":
-        return ArrowIpcReader(self.options)
-
-
-class ArrowIpcReader(DataSourceReader):
-    def __init__(self, options):
-        self.path = options["path"]
-        self.batches_per_split = int(options.get("batchesPerSplit", 16))
-
-    def partitions(self):
-        parts = []
-        for f in list_part_files(self.path, pattern="*.arrow"):
-            with pa.memory_map(strip_scheme(f), "r") as m:
-                n = pa.ipc.open_file(m).num_record_batches
-            for lo in range(0, max(n, 1), self.batches_per_split):
-                parts.append(
-                    ArrowIpcInputPartition(
-                        f, lo, min(lo + self.batches_per_split, n)
-                    )
-                )
-        return parts
-
-    def read(self, part: ArrowIpcInputPartition) -> Iterator[pa.RecordBatch]:
-        with pa.memory_map(strip_scheme(part.path), "r") as m:
-            rd = pa.ipc.open_file(m)
-            for i in range(part.first_batch, part.last_batch):
-                yield rd.get_batch(i)
-
-
-def register_arrow_ipc(spark: SparkSession) -> None:
-    spark.dataSource.register(ArrowIpcDataSource)
+def _read_split(split: ArrowIpcSplit) -> Iterator[pa.RecordBatch]:
+    with pa.memory_map(strip_scheme(split.path), "r") as m:
+        rd = pa.ipc.open_file(m)
+        for i in range(split.first_batch, split.last_batch):
+            yield rd.get_batch(i)
 
 
 def read_arrow_ipc(
     spark: SparkSession, path: str, batches_per_split: int = 16
 ) -> DataFrame:
-    register_arrow_ipc(spark)
-    return (
-        spark.read.format("h2h_arrow")
-        .option("path", path)
-        .option("batchesPerSplit", str(batches_per_split))
-        .load()
-    )
+    files = list_part_files(path, pattern="*.arrow")
+    if not files:
+        raise FileNotFoundError(f"no .arrow files under {path}")
+    splits, ddl = [], None
+    for f in files:
+        with pa.memory_map(strip_scheme(f), "r") as m:
+            rd = pa.ipc.open_file(m)
+            ddl = ddl or arrow_schema_ddl(rd.schema)
+            n = rd.num_record_batches
+        for lo in range(0, max(n, 1), batches_per_split):
+            splits.append(ArrowIpcSplit(f, lo, min(lo + batches_per_split, n)))
+    return scan_splits(spark, splits, _read_split, ddl)
 
 
 def write_arrow_ipc(table: pa.Table, path: str, chunk_rows: int = 4096) -> None:

@@ -2,9 +2,9 @@
 scanner (engine extension; Apache Avro 1.x spec — public).
 
 The container ships no spark-avro module jar, so the engine implements
-OCF the same way it implements the reference's wire formats: a Python
-DataSource whose planner slices files into byte ranges and whose tasks
-REALIGN to record boundaries — here the 16-byte **sync marker** that
+OCF the same way it implements the reference's wire formats: a driver
+planner that reads every header and slices files into byte ranges, and
+tasks (``util.scan_splits``) that REALIGN to record boundaries — here the 16-byte **sync marker** that
 Avro puts after every block precisely so that splittable readers can do
 this.  The task contract is the same as the CSV scanner's
 (``libhdfsconnector.cpp:476-558`` semantics): skip forward from the
@@ -20,26 +20,32 @@ truncation).  Binary encoding per spec: zigzag varints for long,
 little-endian IEEE for double, length-prefixed UTF-8 for string.
 
 Scale posture: the sync-marker scan reads only the range head; blocks
-decode streaming into Arrow batches; ``maxpartitionbytes`` plans ~128 MiB
-tasks like every other source here.  Writes produce one OCF per
+decode streaming into Arrow batches; ``max_partition_bytes`` plans
+~128 MiB tasks like every other source here.  Writes produce one OCF per
 partition (``part_<i>_<N>``) via the shared commit-by-rename sink.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import struct
 import zlib
 from hashlib import md5
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from h2h_spark.sources import sink as _sink
-from h2h_spark.sources.util import file_size, list_part_files, open_input
+from h2h_spark.sources.util import (
+    byte_ranges,
+    file_size,
+    list_part_files,
+    open_input,
+    scan_splits,
+)
 
 _MAGIC = b"Obj\x01"
 _DEFAULT_MAX_PARTITION_BYTES = 128 * 1024 * 1024
@@ -419,105 +425,74 @@ def _parse_header(buf: bytes) -> tuple[dict, str, bytes, int]:
 # ---------------------------------------------------------------------------
 
 
-class AvroInputPartition(InputPartition):
-    def __init__(self, path: str, start: int, end: int, header_len: int):
-        self.path = path
-        self.start = start
-        self.end = end
-        self.header_len = header_len
+class AvroSplit(NamedTuple):
+    path: str
+    start: int
+    end: int  # exclusive
+    header_len: int
+    codec: str
+    sync: str  # the file's 16-byte sync marker, hex
 
 
-class AvroDataSourceReader(DataSourceReader):
-    def __init__(self, options: dict, plan, codec_by_path, sync_by_path, hdr_by_path):
-        self.options = options
-        self.plan = plan
-        self.codec_by_path = codec_by_path
-        self.sync_by_path = sync_by_path
-        self.hdr_by_path = hdr_by_path
-        self.path = options["path"]
-        self.max_partition_bytes = int(
-            options.get("maxpartitionbytes", _DEFAULT_MAX_PARTITION_BYTES)
-        )
+def _read_split(plan, split: AvroSplit) -> Iterator[pa.RecordBatch]:
+    sync = bytes.fromhex(split.sync)
+    arrow = _arrow_schema(plan)
+    # Ranged read with extension: buffer [start-16, end) plus a
+    # readahead, extending as the straddling block requires — the
+    # task never touches bytes before its range (minus the marker
+    # seek-back) and reads past the end only to FINISH the block that
+    # straddles it (the CSV scanner's stop-at-next-EOL contract).
+    readahead = 1 << 20
+    base = max(split.start - 16, split.header_len)
+    with open_input(split.path) as f:
+        f.seek(base)
+        buf = bytearray(f.read((split.end - base) + readahead))
 
-    def partitions(self) -> list[InputPartition]:
-        parts: list[AvroInputPartition] = []
-        for path in list_part_files(self.path):
-            size = file_size(path)
-            hdr = self.hdr_by_path[path]
-            if size <= hdr:
-                continue
-            span = size - hdr
-            n = max(1, -(-span // self.max_partition_bytes))
-            base, rem = divmod(span, n)
-            off = hdr
-            for i in range(n):
-                ln = base + (1 if i < rem else 0)
-                parts.append(AvroInputPartition(path, off, off + ln, hdr))
-                off += ln
-        return parts or [AvroInputPartition("", 0, 0, 0)]
+        def ensure(upto: int) -> bool:
+            """Grow the buffer to hold `upto` bytes; False at EOF."""
+            while len(buf) < upto:
+                more = f.read(max(upto - len(buf), readahead))
+                if not more:
+                    return False
+                buf.extend(more)
+            return True
 
-    def read(self, partition: AvroInputPartition) -> Iterator[pa.RecordBatch]:
-        if partition is None or not partition.path:
-            return
-        sync = self.sync_by_path[partition.path]
-        codec = self.codec_by_path[partition.path]
-        arrow = _arrow_schema(self.plan)
-        # Ranged read with extension: buffer [start-16, end) plus a
-        # readahead, extending as the straddling block requires — the
-        # task never touches bytes before its range (minus the marker
-        # seek-back) and reads past the end only to FINISH the block that
-        # straddles it (the CSV scanner's stop-at-next-EOL contract).
-        readahead = 1 << 20
-        base = max(partition.start - 16, partition.header_len)
-        with open_input(partition.path) as f:
-            f.seek(base)
-            buf = bytearray(f.read((partition.end - base) + readahead))
-
-            def ensure(upto: int) -> bool:
-                """Grow the buffer to hold `upto` bytes; False at EOF."""
-                while len(buf) < upto:
-                    more = f.read(max(upto - len(buf), readahead))
-                    if not more:
-                        return False
-                    buf.extend(more)
-                return True
-
-            pos = partition.start - base
-            if partition.start > partition.header_len:
-                idx = bytes(buf).find(sync, 0)
-                if idx < 0:
-                    return  # no block starts in this range
-                pos = idx + 16
-            end_rel = partition.end - base
-            while pos < end_rel and pos < len(buf):
-                ensure(pos + 20)  # two varints need at most 20 bytes
-                head = bytes(buf[pos : pos + 20])
-                try:
-                    n_rows, p2 = _zigzag_decode(head, 0)
-                    n_bytes, p3 = _zigzag_decode(head, p2)
-                except IndexError:
-                    raise ValueError(
-                        f"{partition.path}: truncated block header at {base + pos}"
-                    ) from None
-                pos += p3
-                if not ensure(pos + n_bytes + 16):
-                    raise ValueError(
-                        f"{partition.path}: truncated block at {base + pos}"
-                    )
-                blob = bytes(buf[pos : pos + n_bytes])
-                pos += n_bytes
-                if bytes(buf[pos : pos + 16]) != sync:
-                    raise ValueError(
-                        f"{partition.path}: block at {base + pos} missing sync marker"
-                    )
-                pos += 16
-                if codec == "deflate":
-                    blob = zlib.decompress(blob, wbits=-15)
-                cols, _ = _decode_rows(self.plan, blob, n_rows)
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(c, type=fld.type) for c, fld in zip(cols, arrow)],
-                    schema=arrow,
+        pos = split.start - base
+        if split.start > split.header_len:
+            idx = bytes(buf).find(sync, 0)
+            if idx < 0:
+                return  # no block starts in this range
+            pos = idx + 16
+        end_rel = split.end - base
+        while pos < end_rel and pos < len(buf):
+            ensure(pos + 20)  # two varints need at most 20 bytes
+            head = bytes(buf[pos : pos + 20])
+            try:
+                n_rows, p2 = _zigzag_decode(head, 0)
+                n_bytes, p3 = _zigzag_decode(head, p2)
+            except IndexError:
+                raise ValueError(
+                    f"{split.path}: truncated block header at {base + pos}"
+                ) from None
+            pos += p3
+            if not ensure(pos + n_bytes + 16):
+                raise ValueError(
+                    f"{split.path}: truncated block at {base + pos}"
                 )
+            blob = bytes(buf[pos : pos + n_bytes])
+            pos += n_bytes
+            if bytes(buf[pos : pos + 16]) != sync:
+                raise ValueError(
+                    f"{split.path}: block at {base + pos} missing sync marker"
+                )
+            pos += 16
+            if split.codec == "deflate":
+                blob = zlib.decompress(blob, wbits=-15)
+            cols, _ = _decode_rows(plan, blob, n_rows)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, type=fld.type) for c, fld in zip(cols, arrow)],
+                schema=arrow,
+            )
 
 
 def _arrow_type(plan: tuple) -> pa.DataType:
@@ -547,65 +522,35 @@ def _arrow_schema(plan) -> pa.Schema:
     ])
 
 
-class AvroDataSource(DataSource):
-    """``spark.read.format("h2h_avro").load(path)`` — schema comes from
-    the file headers (all parts must agree)."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "h2h_avro"
-
-    def _scan_headers(self):
-        paths = list_part_files(self.options["path"])
-        if not paths:
-            raise ValueError(f"h2h_avro: no input files at {self.options['path']}")
-        schema = None
-        codec_by, sync_by, hdr_by = {}, {}, {}
-        for p in paths:
-            # The metadata/schema block of a wide record (or a writer that
-            # stuffs extra metadata keys) can exceed any fixed probe size —
-            # grow the buffer geometrically until the header parses whole
-            # instead of failing on a truncated varint/value slice.
-            probe = 4096
-            with open_input(p) as f:
-                head = f.read(probe)
-                while True:
-                    try:
-                        s, codec, sync, hlen = _parse_header(head)
-                        break
-                    except KeyError:
-                        # The meta map parsed whole but lacks the mandatory
-                        # schema key — a structural file error, not
-                        # truncation; growing the buffer can't fix it.
-                        raise ValueError(
-                            f"h2h_avro: {p} OCF header has no 'avro.schema' "
-                            "metadata key"
-                        ) from None
-                    except IndexError:  # ran off the buffer: true truncation
-                        more = f.read(probe)
-                        if not more:
-                            raise ValueError(
-                                f"h2h_avro: {p} ends inside the OCF header "
-                                f"({len(head)} bytes read) — truncated file?"
-                            ) from None
-                        head += more
-                        probe *= 2
-            if schema is None:
-                schema = s
-            elif s != schema:
-                raise ValueError(f"h2h_avro: schema mismatch in {p}")
-            codec_by[p], sync_by[p], hdr_by[p] = codec, sync, hlen
-        return _field_plan(schema), codec_by, sync_by, hdr_by
-
-    def schema(self) -> T.StructType:
-        plan, *_ = self._scan_headers()
-        return _spark_schema(plan)
-
-    def reader(self, schema: T.StructType) -> DataSourceReader:
-        plan, codec_by, sync_by, hdr_by = self._scan_headers()
-        return AvroDataSourceReader(
-            dict(self.options), plan, codec_by, sync_by, hdr_by
-        )
+def _read_header(path: str) -> tuple[dict, str, bytes, int]:
+    """One file's ``(schema, codec, sync, header_len)``.  The
+    metadata/schema block of a wide record (or a writer that stuffs extra
+    metadata keys) can exceed any fixed probe size — grow the buffer
+    geometrically until the header parses whole instead of failing on a
+    truncated varint/value slice."""
+    probe = 4096
+    with open_input(path) as f:
+        head = f.read(probe)
+        while True:
+            try:
+                return _parse_header(head)
+            except KeyError:
+                # The meta map parsed whole but lacks the mandatory schema
+                # key — a structural file error, not truncation; growing
+                # the buffer can't fix it.
+                raise ValueError(
+                    f"h2h_avro: {path} OCF header has no 'avro.schema' "
+                    "metadata key"
+                ) from None
+            except IndexError:  # ran off the buffer: true truncation
+                more = f.read(probe)
+                if not more:
+                    raise ValueError(
+                        f"h2h_avro: {path} ends inside the OCF header "
+                        f"({len(head)} bytes read) — truncated file?"
+                    ) from None
+                head += more
+                probe *= 2
 
 
 # ---------------------------------------------------------------------------
@@ -657,8 +602,22 @@ def read_avro(
     path: str,
     max_partition_bytes: int = _DEFAULT_MAX_PARTITION_BYTES,
 ) -> DataFrame:
-    return (
-        spark.read.format("h2h_avro")
-        .option("maxpartitionbytes", str(max_partition_bytes))
-        .load(path)
+    """Schema comes from the file headers (all parts must agree)."""
+    paths = list_part_files(path)
+    if not paths:
+        raise ValueError(f"h2h_avro: no input files at {path}")
+    schema, splits = None, []
+    for p in paths:
+        s, codec, sync, hdr = _read_header(p)
+        if schema is None:
+            schema = s
+        elif s != schema:
+            raise ValueError(f"h2h_avro: schema mismatch in {p}")
+        splits += [
+            AvroSplit(p, hdr + lo, hdr + hi, hdr, codec, sync.hex())
+            for lo, hi in byte_ranges(file_size(p) - hdr, max_partition_bytes)
+        ]
+    plan = _field_plan(schema)
+    return scan_splits(
+        spark, splits, functools.partial(_read_split, plan), _spark_schema(plan)
     )

@@ -18,7 +18,7 @@ This module provides:
 - ``surt_key(url_col)`` — the canonical Sort-friendly URI Reordering
   Transform key as a pure JVM-side column expression (host labels
   reversed and comma-joined, scheme/port/www dropped, lowercased);
-- a splittable datasource ``h2h_cdx`` for ``.cdxj`` (plain text, line
+- ``read_cdx``, a splittable scan of ``.cdxj`` (plain text, line
   realignment at byte-range cuts) and member-gzip ``.cdxj.gz`` shards
   (the shared ``GzMemberScanner`` discipline);
 - ``fetch_warc_by_location(df)`` — the random-access fetch: rows carry
@@ -34,16 +34,22 @@ metadata.
 from __future__ import annotations
 
 import json
-import math
-from typing import Iterator, Sequence
+from typing import Iterator, NamedTuple, Sequence
 
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from h2h_spark.sources.gzscan import GzMemberScanner
-from h2h_spark.sources.util import file_size, list_part_files, open_input
+from h2h_spark.sources.util import (
+    byte_ranges,
+    file_size,
+    list_part_files,
+    open_input,
+    record_batches,
+    scan_splits,
+)
 
 _DEFAULT_MAX_PARTITION_BYTES = 128 * 1024 * 1024
 _CHUNK = 1 << 20
@@ -310,7 +316,7 @@ def write_cdxj(
             f.write("".join(lines).encode())
 
 
-def _parse_cdxj_line(line: str) -> tuple | None:
+def _parse_cdxj_line(line: str) -> tuple:
     parts = line.split(" ", 2)
     if len(parts) != 3:
         raise ValueError(f"malformed CDXJ line: {line[:80]!r}")
@@ -391,102 +397,36 @@ def scan_cdxj_lines(path: str, start: int, end: int) -> Iterator[str]:
             carry += chunk
 
 
-_SCHEMA_DDL = (
-    "surt string, ts string, url string, warc_file string, "
-    "offset bigint, length bigint, status bigint, mime string, "
-    "digest string"
-)
+_SCHEMA = pa.schema([
+    ("surt", pa.string()), ("ts", pa.string()), ("url", pa.string()),
+    ("warc_file", pa.string()), ("offset", pa.int64()),
+    ("length", pa.int64()), ("status", pa.int64()), ("mime", pa.string()),
+    ("digest", pa.string()),
+])
 
 
-class CdxDataSource(DataSource):
-    """``spark.read.format("h2h_cdx")``"""
-
-    @classmethod
-    def name(cls) -> str:
-        return "h2h_cdx"
-
-    def schema(self) -> str:
-        return _SCHEMA_DDL
-
-    def reader(self, schema) -> "CdxReader":
-        return CdxReader(self.options)
+class CdxSplit(NamedTuple):
+    path: str
+    start: int
+    end: int
+    mode: str  # gz | plain
 
 
-class CdxPartition(InputPartition):
-    def __init__(self, path: str, start: int, end: int, mode: str):
-        self.path = path
-        self.start = start
-        self.end = end
-        self.mode = mode
-
-
-class CdxReader(DataSourceReader):
-    _BATCH_LINES = 65536
-
-    def __init__(self, options):
-        self.path = options["path"]
-        self.max_bytes = int(
-            options.get("maxPartitionBytes", _DEFAULT_MAX_PARTITION_BYTES)
+def _read_split(split: CdxSplit) -> Iterator[pa.RecordBatch]:
+    if split.mode == "gz":
+        lines: Iterator[str] = (
+            raw.decode("utf-8", "replace")
+            for _, plain in GzMemberScanner(
+                split.path, split.start, split.end,
+                _validate_cdxj_plain, probe_plain=4096,
+            ).members()
+            for raw in plain.splitlines()
         )
-
-    def partitions(self):
-        parts: list[CdxPartition] = []
-        for mode, pattern in (("gz", "*.cdxj.gz"), ("plain", "*.cdxj")):
-            for path in list_part_files(self.path, pattern=pattern):
-                size = file_size(path)
-                if size == 0:
-                    continue
-                n = max(1, math.ceil(size / self.max_bytes))
-                base, rem = divmod(size, n)
-                off = 0
-                for i in range(n):
-                    ln = base + (1 if i < rem else 0)
-                    parts.append(CdxPartition(path, off, off + ln, mode))
-                    off += ln
-        if not parts:
-            parts.append(CdxPartition("", 0, 0, "plain"))
-        return parts
-
-    def read(self, part: CdxPartition) -> Iterator[pa.RecordBatch]:
-        cols: list[list] = [[] for _ in range(9)]
-        types = [
-            pa.string(), pa.string(), pa.string(), pa.string(),
-            pa.int64(), pa.int64(), pa.int64(), pa.string(), pa.string(),
-        ]
-        names = ["surt", "ts", "url", "warc_file", "offset", "length",
-                 "status", "mime", "digest"]
-
-        def batch() -> pa.RecordBatch:
-            return pa.record_batch(
-                [pa.array(c, t) for c, t in zip(cols, types)], names=names
-            )
-
-        if part.path:
-            if part.mode == "gz":
-                lines: Iterator[str] = (
-                    raw.decode("utf-8", "replace")
-                    for _, plain in GzMemberScanner(
-                        part.path, part.start, part.end,
-                        _validate_cdxj_plain, probe_plain=4096,
-                    ).members()
-                    for raw in plain.splitlines()
-                )
-            else:
-                lines = scan_cdxj_lines(part.path, part.start, part.end)
-            for line in lines:
-                if not line:
-                    continue
-                row = _parse_cdxj_line(line)
-                for c, v in zip(cols, row):
-                    c.append(v)
-                if len(cols[0]) >= self._BATCH_LINES:
-                    yield batch()
-                    cols = [[] for _ in range(9)]
-        yield batch()
-
-
-def register_cdx(spark: SparkSession) -> None:
-    spark.dataSource.register(CdxDataSource)
+    else:
+        lines = scan_cdxj_lines(split.path, split.start, split.end)
+    yield from record_batches(
+        (_parse_cdxj_line(line) for line in lines if line), _SCHEMA
+    )
 
 
 def read_cdx(
@@ -494,13 +434,13 @@ def read_cdx(
     path: str,
     max_partition_bytes: int = _DEFAULT_MAX_PARTITION_BYTES,
 ) -> DataFrame:
-    register_cdx(spark)
-    return (
-        spark.read.format("h2h_cdx")
-        .option("path", path)
-        .option("maxPartitionBytes", str(max_partition_bytes))
-        .load()
-    )
+    splits = [
+        CdxSplit(p, s, e, mode)
+        for mode, pattern in (("gz", "*.cdxj.gz"), ("plain", "*.cdxj"))
+        for p in list_part_files(path, pattern=pattern)
+        for s, e in byte_ranges(file_size(p), max_partition_bytes)
+    ]
+    return scan_splits(spark, splits, _read_split, from_arrow_schema(_SCHEMA))
 
 
 def write_cdx_sharded(

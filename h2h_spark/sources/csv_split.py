@@ -51,7 +51,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from h2h_spark.sources.util import file_size, list_part_files, open_input, scan_splits
+from h2h_spark.sources.util import (
+    byte_ranges,
+    file_size,
+    list_part_files,
+    open_input,
+    scan_splits,
+)
 
 _DEFAULT_MAX_PARTITION_BYTES = 64 * 1024 * 1024
 _READ_CHUNK = 4 * 1024 * 1024
@@ -73,21 +79,6 @@ def check_terminator(terminator: str) -> None:
                 "suffix): split-local record alignment is ambiguous — use "
                 "a non-self-overlapping terminator or the multiLine path"
             )
-
-
-def byte_ranges(size: int, max_partition_bytes: int) -> list[tuple[int, int]]:
-    """Deterministic even byte ranges for a file — shared by the parity
-    pass and the scan so both see identical splits."""
-    if size <= 0:
-        return []
-    n = max(1, -(-size // max_partition_bytes))
-    base, rem = divmod(size, n)
-    out, off = [], 0
-    for i in range(n):
-        length = base + (1 if i < rem else 0)
-        out.append((off, off + length))
-        off += length
-    return out
 
 
 def quote_parities(

@@ -38,13 +38,12 @@ schema and prunes.
 
 from __future__ import annotations
 
+import functools
 import json
-import math
-from typing import Iterator, Sequence
+from typing import Iterator, NamedTuple, Sequence
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from h2h_spark.sources.gzscan import (
     CodecStreamReader,
@@ -55,7 +54,13 @@ from h2h_spark.sources.gzscan import (
     detect_zst_member_layout,
     zst_seek_table,
 )
-from h2h_spark.sources.util import file_size, list_part_files
+from h2h_spark.sources.util import (
+    byte_ranges,
+    file_size,
+    list_part_files,
+    record_batches,
+    scan_splits,
+)
 
 _DEFAULT_MAX_PARTITION_BYTES = 128 * 1024 * 1024
 
@@ -265,185 +270,98 @@ def write_jsonl_shards(
     df.foreachPartition(_write)
 
 
-class _JsonlPartition(InputPartition):
-    def __init__(self, path: str, start: int, end: int, mode: str):
-        self.path = path
-        self.start = start
-        self.end = end
-        self.mode = mode
+class JsonlSplit(NamedTuple):
+    path: str
+    start: int  # byte offset, or first xz block
+    end: int  # exclusive
+    mode: str  # member | stream | bz2blocks | xzblocks
 
 
-class JsonlGzDataSource(DataSource):
-    """``spark.read.format("h2h_jsonl_gz")``"""
+def _plan_file(
+    path: str, codec: str, layout: str, max_bytes: int
+) -> list[JsonlSplit]:
+    size = file_size(path)
+    if size == 0:
+        return []
+    if codec == "bz2" and layout != "stream":
+        # bzip2 splits by byte range over the bit-aligned block magics
+        # (sources/bz2blocks.py) — plain Hadoop byte splits; ownership =
+        # magic bit offset in range
+        return [
+            JsonlSplit(path, s, e, "bz2blocks")
+            for s, e in byte_ranges(size, max_bytes)
+        ]
+    if codec == "xz" and layout != "stream":
+        # xz is block-splittable by DESIGN: the footer index records
+        # every block's compressed/uncompressed size (what `xz -T` exists
+        # for), so splits are exact block runs planned from one tail
+        # read — no resync scan.
+        from h2h_spark.sources.xzblocks import parse_xz_blocks
 
-    @classmethod
-    def name(cls) -> str:
-        return "h2h_jsonl_gz"
-
-    def schema(self) -> str:
-        return "line string"
-
-    def reader(self, schema) -> "JsonlGzReader":
-        return JsonlGzReader(self.options)
-
-
-class JsonlGzReader(DataSourceReader):
-    def __init__(self, options):
-        self.path = options["path"]
-        self.max_bytes = int(
-            options.get("maxPartitionBytes", _DEFAULT_MAX_PARTITION_BYTES)
-        )
-        self.layout = options.get("layout", "auto")
-        if self.layout not in ("auto", "member", "stream"):
-            raise ValueError(
-                f"layout must be auto|member|stream, got {self.layout!r}"
-            )
-        self.codec = options.get("codec", "gz")
-        if self.codec not in ("gz", "bz2", "xz", "zst", "lz4"):
-            raise ValueError(
-                f"codec must be gz|bz2|xz|zst|lz4, got {self.codec!r}"
-            )
-
-    def partitions(self):
-        parts: list[_JsonlPartition] = []
-        pattern = f"*.jsonl.{self.codec}"
+        blks = parse_xz_blocks(path)
+        if not blks:
+            return []
+        out, run_lo, run_bytes = [], 0, 0
+        for bi, blk in enumerate(blks):
+            csize = (blk.unpadded + 3) & ~3
+            if run_bytes and run_bytes + csize > max_bytes:
+                out.append(JsonlSplit(path, run_lo, bi, "xzblocks"))
+                run_lo, run_bytes = bi, 0
+            run_bytes += csize
+        out.append(JsonlSplit(path, run_lo, len(blks), "xzblocks"))
+        return out
+    if layout == "auto":
         from h2h_spark.sources.lz4frame import detect_lz4_member_layout
 
         detect = {
             "gz": detect_member_layout,
             "zst": detect_zst_member_layout,
             "lz4": detect_lz4_member_layout,
-        }.get(self.codec)
-        for path in list_part_files(self.path, pattern=pattern):
-            size = file_size(path)
-            if size == 0:
-                continue
-            if self.codec == "bz2" and self.layout != "stream":
-                # bzip2 splits by byte range over the bit-aligned
-                # block magics (sources/bz2blocks.py) — plain Hadoop
-                # byte splits; ownership = magic bit offset in range
-                n = max(1, math.ceil(size / self.max_bytes))
-                base, rem = divmod(size, n)
-                off = 0
-                for i in range(n):
-                    ln = base + (1 if i < rem else 0)
-                    parts.append(_JsonlPartition(
-                        path, off, off + ln, "bz2blocks"
-                    ))
-                    off += ln
-                continue
-            if self.codec == "xz" and self.layout != "stream":
-                # xz is block-splittable by DESIGN: the footer index
-                # records every block's compressed/uncompressed size
-                # (what `xz -T` exists for), so splits are exact block
-                # runs planned from one tail read — no resync scan.
-                from h2h_spark.sources.xzblocks import parse_xz_blocks
-
-                blks = parse_xz_blocks(path)
-                if not blks:
-                    continue
-                run_lo, run_bytes = 0, 0
-                for bi, blk in enumerate(blks):
-                    csize = (blk.unpadded + 3) & ~3
-                    if run_bytes and run_bytes + csize > self.max_bytes:
-                        parts.append(_JsonlPartition(
-                            path, run_lo, bi, "xzblocks"
-                        ))
-                        run_lo, run_bytes = bi, 0
-                    run_bytes += csize
-                parts.append(_JsonlPartition(
-                    path, run_lo, len(blks), "xzblocks"
-                ))
-                continue
-            layout = (
-                "stream"
-                if detect is None
-                else detect(path)
-                if self.layout == "auto"
-                else self.layout
-            )
-            if layout == "stream":
-                parts.append(_JsonlPartition(path, 0, size, "stream"))
-                continue
-            if self.codec == "zst":
-                tbl = zst_seek_table(path)
-                if tbl:
-                    # seekable fast path: exact frame-aligned splits
-                    # from the seek table — tasks never scan for magics
-                    # and never read past their range
-                    run_start, run_len = tbl[0][0], 0
-                    for off, clen, _dlen in tbl:
-                        if run_len and run_len + clen > self.max_bytes:
-                            parts.append(_JsonlPartition(
-                                path, run_start, run_start + run_len,
-                                "member",
-                            ))
-                            run_start, run_len = off, 0
-                        run_len += clen
-                    parts.append(_JsonlPartition(
-                        path, run_start, run_start + run_len, "member"
-                    ))
-                    continue
-            n = max(1, math.ceil(size / self.max_bytes))
-            base, rem = divmod(size, n)
-            off = 0
-            for i in range(n):
-                ln = base + (1 if i < rem else 0)
-                parts.append(_JsonlPartition(path, off, off + ln, "member"))
-                off += ln
-        if not parts:  # Spark calls read(None) on an empty plan
-            parts.append(_JsonlPartition("", 0, 0, "stream"))
-        return parts
-
-    # flush a RecordBatch roughly this often so a multi-GB single-stream
-    # shard never materializes the whole partition in Python (memory
-    # stays O(batch + one line), honouring the module contract)
-    _BATCH_LINES = 65536
-
-    def read(self, part: _JsonlPartition) -> Iterator[pa.RecordBatch]:
-        def batch(lines: list[str]) -> pa.RecordBatch:
-            return pa.record_batch(
-                [pa.array(lines, pa.string())], names=["line"]
-            )
-
-        lines: list[str] = []
-        if part.path:
-            if part.mode == "xzblocks":
-                from h2h_spark.sources.xzblocks import xz_block_lines
-
-                it = (
-                    raw.decode("utf-8")
-                    for raw in xz_block_lines(
-                        part.path, part.start, part.end
-                    )
-                )
-            elif part.mode == "bz2blocks":
-                from h2h_spark.sources.bz2blocks import bz2_block_lines
-
-                it = (
-                    raw.decode("utf-8")
-                    for raw in bz2_block_lines(
-                        part.path, part.start, part.end
-                    )
-                )
-            elif part.mode == "stream":
-                it = scan_jsonl_stream(part.path, self.codec)
-            else:
-                it = scan_jsonl_members(
-                    part.path, part.start, part.end, self.codec
-                )
-            for ln in it:
-                if not ln:
-                    continue
-                lines.append(ln)
-                if len(lines) >= self._BATCH_LINES:
-                    yield batch(lines)
-                    lines = []
-        yield batch(lines)
+        }.get(codec)
+        layout = "stream" if detect is None else detect(path)
+    if layout == "stream":
+        return [JsonlSplit(path, 0, size, "stream")]
+    tbl = zst_seek_table(path) if codec == "zst" else None
+    if tbl:
+        # seekable fast path: exact frame-aligned splits from the seek
+        # table — tasks never scan for magics and never read past their
+        # range
+        out, run_start, run_len = [], tbl[0][0], 0
+        for off, clen, _dlen in tbl:
+            if run_len and run_len + clen > max_bytes:
+                out.append(JsonlSplit(path, run_start, run_start + run_len, "member"))
+                run_start, run_len = off, 0
+            run_len += clen
+        out.append(JsonlSplit(path, run_start, run_start + run_len, "member"))
+        return out
+    return [JsonlSplit(path, s, e, "member") for s, e in byte_ranges(size, max_bytes)]
 
 
-def register_jsonl_gz(spark: SparkSession) -> None:
-    spark.dataSource.register(JsonlGzDataSource)
+_SCHEMA = pa.schema([("line", pa.string())])
+
+
+def _read_split(codec: str, split: JsonlSplit) -> Iterator[pa.RecordBatch]:
+    if split.mode == "xzblocks":
+        from h2h_spark.sources.xzblocks import xz_block_lines
+
+        lines = (
+            raw.decode("utf-8")
+            for raw in xz_block_lines(split.path, split.start, split.end)
+        )
+    elif split.mode == "bz2blocks":
+        from h2h_spark.sources.bz2blocks import bz2_block_lines
+
+        lines = (
+            raw.decode("utf-8")
+            for raw in bz2_block_lines(split.path, split.start, split.end)
+        )
+    elif split.mode == "stream":
+        lines = scan_jsonl_stream(split.path, codec)
+    else:
+        lines = scan_jsonl_members(split.path, split.start, split.end, codec)
+    # bounded batches: a multi-GB single-stream shard never materializes
+    # its whole partition in Python (O(batch + one line))
+    yield from record_batches(((ln,) for ln in lines if ln), _SCHEMA)
 
 
 def read_jsonl_gz(
@@ -453,14 +371,17 @@ def read_jsonl_gz(
     layout: str = "auto",
     codec: str = "gz",
 ) -> DataFrame:
-    register_jsonl_gz(spark)
-    return (
-        spark.read.format("h2h_jsonl_gz")
-        .option("path", path)
-        .option("maxPartitionBytes", str(max_partition_bytes))
-        .option("layout", layout)
-        .option("codec", codec)
-        .load()
+    if layout not in ("auto", "member", "stream"):
+        raise ValueError(f"layout must be auto|member|stream, got {layout!r}")
+    if codec not in ("gz", "bz2", "xz", "zst", "lz4"):
+        raise ValueError(f"codec must be gz|bz2|xz|zst|lz4, got {codec!r}")
+    splits = [
+        split
+        for p in list_part_files(path, pattern=f"*.jsonl.{codec}")
+        for split in _plan_file(p, codec, layout, max_partition_bytes)
+    ]
+    return scan_splits(
+        spark, splits, functools.partial(_read_split, codec), "line string"
     )
 
 

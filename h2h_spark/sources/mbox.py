@@ -30,15 +30,22 @@ O(chunk + one message).
 from __future__ import annotations
 
 import hashlib
-import math
 import re
 from typing import Iterator, Sequence
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+from pyspark.sql.pandas.types import from_arrow_schema
 
-from h2h_spark.sources.util import file_size, list_part_files, open_input
+from h2h_spark.sources.util import (
+    ByteRange,
+    file_size,
+    list_part_files,
+    open_input,
+    plan_byte_ranges,
+    record_batches,
+    scan_splits,
+)
 
 _SEP = b"\nFrom "
 _CHUNK = 1 << 20
@@ -240,106 +247,26 @@ def scan_mbox_range(
     yield from _MboxScanner(path, start, end).messages()
 
 
-_SCHEMA_DDL = (
-    "offset bigint, envelope string, sender string, subject string, "
-    "msg_date string, msg_id string, in_reply_to string, "
-    "n_headers bigint, body_bytes bigint, body_md5 string"
-)
+_SCHEMA = pa.schema([
+    ("offset", pa.int64()), ("envelope", pa.string()),
+    ("sender", pa.string()), ("subject", pa.string()),
+    ("msg_date", pa.string()), ("msg_id", pa.string()),
+    ("in_reply_to", pa.string()), ("n_headers", pa.int64()),
+    ("body_bytes", pa.int64()), ("body_md5", pa.string()),
+])
 
 
-class MboxDataSource(DataSource):
-    """``spark.read.format("h2h_mbox")``"""
-
-    @classmethod
-    def name(cls) -> str:
-        return "h2h_mbox"
-
-    def schema(self) -> str:
-        return _SCHEMA_DDL
-
-    def reader(self, schema) -> "MboxReader":
-        return MboxReader(self.options)
-
-
-class MboxPartition(InputPartition):
-    def __init__(self, path: str, start: int, end: int):
-        self.path = path
-        self.start = start
-        self.end = end
-
-
-class MboxReader(DataSourceReader):
-    _BATCH_RECORDS = 65536
-
-    def __init__(self, options):
-        self.path = options["path"]
-        self.max_bytes = int(
-            options.get("maxPartitionBytes", _DEFAULT_MAX_PARTITION_BYTES)
-        )
-
-    def partitions(self):
-        parts: list[MboxPartition] = []
-        for path in list_part_files(self.path, pattern="*.mbox"):
-            size = file_size(path)
-            if size == 0:
-                continue
-            n = max(1, math.ceil(size / self.max_bytes))
-            base, rem = divmod(size, n)
-            off = 0
-            for i in range(n):
-                ln = base + (1 if i < rem else 0)
-                parts.append(MboxPartition(path, off, off + ln))
-                off += ln
-        if not parts:
-            parts.append(MboxPartition("", 0, 0))
-        return parts
-
-    def read(self, part: MboxPartition) -> Iterator[pa.RecordBatch]:
-        offs, envs, senders, subjects, dates = [], [], [], [], []
-        mids, irts, nhdrs, blens, bmd5s = [], [], [], [], []
-
-        def batch() -> pa.RecordBatch:
-            return pa.record_batch(
-                [
-                    pa.array(offs, pa.int64()),
-                    pa.array(envs, pa.string()),
-                    pa.array(senders, pa.string()),
-                    pa.array(subjects, pa.string()),
-                    pa.array(dates, pa.string()),
-                    pa.array(mids, pa.string()),
-                    pa.array(irts, pa.string()),
-                    pa.array(nhdrs, pa.int64()),
-                    pa.array(blens, pa.int64()),
-                    pa.array(bmd5s, pa.string()),
-                ],
-                names=["offset", "envelope", "sender", "subject",
-                       "msg_date", "msg_id", "in_reply_to",
-                       "n_headers", "body_bytes", "body_md5"],
-            )
-
-        if part.path:
-            for off, env, headers, body in scan_mbox_range(
-                part.path, part.start, part.end
-            ):
-                offs.append(off)
-                envs.append(env)
-                senders.append(headers.get("from", ""))
-                subjects.append(headers.get("subject", ""))
-                dates.append(headers.get("date", ""))
-                mids.append(headers.get("message-id", ""))
-                irts.append(headers.get("in-reply-to", ""))
-                nhdrs.append(len(headers))
-                blens.append(len(body))
-                bmd5s.append(hashlib.md5(body).hexdigest())
-                if len(offs) >= self._BATCH_RECORDS:
-                    yield batch()
-                    offs, envs, senders, subjects, dates = [], [], [], [], []
-                    mids, irts, nhdrs, blens, bmd5s = [], [], [], [], []
-        yield batch()
-
-
-def register_mbox(spark: SparkSession) -> None:
-    spark.dataSource.register(MboxDataSource)
+def _read_split(split: ByteRange) -> Iterator[pa.RecordBatch]:
+    yield from record_batches(
+        (
+            (off, env, headers.get("from", ""), headers.get("subject", ""),
+             headers.get("date", ""), headers.get("message-id", ""),
+             headers.get("in-reply-to", ""), len(headers), len(body),
+             hashlib.md5(body).hexdigest())
+            for off, env, headers, body in scan_mbox_range(*split)
+        ),
+        _SCHEMA,
+    )
 
 
 def read_mbox(
@@ -347,10 +274,7 @@ def read_mbox(
     path: str,
     max_partition_bytes: int = _DEFAULT_MAX_PARTITION_BYTES,
 ) -> DataFrame:
-    register_mbox(spark)
-    return (
-        spark.read.format("h2h_mbox")
-        .option("path", path)
-        .option("maxPartitionBytes", str(max_partition_bytes))
-        .load()
+    splits = plan_byte_ranges(
+        list_part_files(path, pattern="*.mbox"), max_partition_bytes
     )
+    return scan_splits(spark, splits, _read_split, from_arrow_schema(_SCHEMA))

@@ -22,13 +22,12 @@ from __future__ import annotations
 
 import ast
 import struct
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-from h2h_spark.sources.util import list_part_files, strip_scheme
+from h2h_spark.sources.util import list_part_files, scan_splits, strip_scheme
 
 _MAGIC = b"\x93NUMPY"
 
@@ -129,78 +128,64 @@ def _rows_to_batches(
         })
 
 
-class NpyInputPartition(InputPartition):
-    def __init__(self, path: str, byte_start: int, descr: str, d: int,
-                 row_lo: int, row_hi: int):
-        self.path = path
-        self.byte_start = byte_start
-        self.descr = descr
-        self.d = d
-        self.row_lo = row_lo
-        self.row_hi = row_hi
+def _vec_ddl(descr: str, origin: str) -> str:
+    return f"file string, row_idx bigint, vec array<{_descr_key(descr, origin)[2]}>"
 
 
-class NpyDataSource(DataSource):
-    """``spark.read.format("h2h_npy")`` — rows of every 2-D ``.npy``
-    file under ``path`` as ``(file, row_idx, vec)``.  Options: ``path``,
-    ``rowsPerSplit`` (default 65536)."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "h2h_npy"
-
-    def schema(self) -> str:
-        files = list_part_files(self.options["path"], pattern="*.npy")
-        if not files:
-            raise FileNotFoundError(
-                f"no .npy files under {self.options['path']}"
-            )
-        with open(strip_scheme(files[0]), "rb") as f:
-            descr, _, _, _ = parse_npy_header(f.read(4096), files[0])
-        _, _, ddl = _descr_key(descr, files[0])
-        return f"file string, row_idx bigint, vec array<{ddl}>"
-
-    def reader(self, schema) -> "NpyReader":
-        return NpyReader(self.options)
+def _read_rows(
+    f, offset: int, descr: str, d: int, row_lo: int, row_hi: int, fname: str
+) -> Iterator[pa.RecordBatch]:
+    """Rows ``[row_lo, row_hi)`` of the C-order array whose row 0 sits at
+    ``offset`` of the open file (or bytes buffer) ``f``."""
+    descr, itemsize, _ = _descr_key(descr, fname)
+    row_bytes = d * itemsize
+    n = row_hi - row_lo
+    f.seek(offset + row_lo * row_bytes)
+    raw = f.read(n * row_bytes)
+    if len(raw) < n * row_bytes:
+        raise ValueError(f"{fname}: truncated npy data at row {row_lo}")
+    yield from _rows_to_batches(raw, descr, d, row_lo, n, fname)
 
 
-class NpyReader(DataSourceReader):
-    def __init__(self, options):
-        self.path = options["path"]
-        self.rows_per_split = int(options.get("rowsPerSplit", 65536))
+class NpySplit(NamedTuple):
+    path: str
+    byte_start: int  # absolute offset of row 0
+    descr: str
+    d: int
+    row_lo: int
+    row_hi: int  # exclusive
 
-    def partitions(self):
-        parts = []
-        for fp in sorted(list_part_files(self.path, pattern="*.npy")):
-            with open(strip_scheme(fp), "rb") as f:
-                descr, shape, fortran, data_off = parse_npy_header(
-                    f.read(4096), fp
-                )
-            _descr_key(descr, fp)
-            n, d = _check_2d(shape, fortran, fp)
-            for lo in range(0, max(n, 1), self.rows_per_split):
-                parts.append(NpyInputPartition(
-                    fp, data_off, descr, d, lo,
-                    min(lo + self.rows_per_split, n),
-                ))
-        if not parts:
-            raise FileNotFoundError(f"no .npy files under {self.path}")
-        return parts
 
-    def read(self, part: NpyInputPartition) -> Iterator[pa.RecordBatch]:
-        descr, itemsize, _ = _descr_key(part.descr, part.path)
-        row_bytes = part.d * itemsize
-        n = part.row_hi - part.row_lo
-        with open(strip_scheme(part.path), "rb") as f:
-            f.seek(part.byte_start + part.row_lo * row_bytes)
-            raw = f.read(n * row_bytes)
-        if len(raw) < n * row_bytes:
-            raise ValueError(
-                f"{part.path}: truncated .npy data at row {part.row_lo}"
-            )
-        yield from _rows_to_batches(
-            raw, descr, part.d, part.row_lo, n, part.path
+def _read_npy_split(split: NpySplit) -> Iterator[pa.RecordBatch]:
+    with open(strip_scheme(split.path), "rb") as f:
+        yield from _read_rows(
+            f, split.byte_start, split.descr, split.d, split.row_lo,
+            split.row_hi, split.path,
         )
+
+
+def read_npy(
+    spark: SparkSession, path: str, rows_per_split: int = 65536
+) -> DataFrame:
+    """Rows of every 2-D ``.npy`` file under ``path`` as
+    ``(file, row_idx, vec)``; the first file's dtype sets ``vec``'s."""
+    files = list_part_files(path, pattern="*.npy")
+    if not files:
+        raise FileNotFoundError(f"no .npy files under {path}")
+    splits, descrs = [], {}
+    for fp in sorted(files):
+        with open(strip_scheme(fp), "rb") as f:
+            descr, shape, fortran, data_off = parse_npy_header(f.read(4096), fp)
+        descrs[fp] = descr
+        _descr_key(descr, fp)
+        n, d = _check_2d(shape, fortran, fp)
+        for lo in range(0, max(n, 1), rows_per_split):
+            splits.append(
+                NpySplit(fp, data_off, descr, d, lo, min(lo + rows_per_split, n))
+            )
+    return scan_splits(
+        spark, splits, _read_npy_split, _vec_ddl(descrs[files[0]], files[0])
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -208,20 +193,6 @@ class NpyReader(DataSourceReader):
 # splits through the container; DEFLATED members decode whole (one task
 # per member), loudly documented.
 # ---------------------------------------------------------------------------
-
-
-class NpzInputPartition(InputPartition):
-    def __init__(self, path: str, member: dict, byte_start: int,
-                 descr: str, d: int, row_lo: int, row_hi: int,
-                 stored: bool):
-        self.path = path
-        self.member = member
-        self.byte_start = byte_start  # abs offset of member's npy data
-        self.descr = descr
-        self.d = d
-        self.row_lo = row_lo
-        self.row_hi = row_hi
-        self.stored = stored
 
 
 def _npz_member(path: str, member: str) -> dict:
@@ -245,137 +216,66 @@ def _npz_data_offset(path: str, m: dict) -> int:
     return m["lfh_off"] + 30 + nlen + elen
 
 
-class NpzDataSource(DataSource):
-    """``spark.read.format("h2h_npz")`` — rows of one ``.npy`` member
-    across every ``.npz`` file under ``path``.  Options: ``path``,
-    ``member`` (required; with or without the ``.npy`` suffix),
-    ``rowsPerSplit``."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "h2h_npz"
-
-    def schema(self) -> str:
-        files = list_part_files(self.options["path"], pattern="*.npz")
-        if not files:
-            raise FileNotFoundError(
-                f"no .npz files under {self.options['path']}"
-            )
-        member = self.options.get("member")
-        if not member:
-            raise ValueError("option 'member' is required")
-        m = _npz_member(files[0], member)
-        descr = self._member_descr(files[0], m)
-        _, _, ddl = _descr_key(descr, files[0])
-        return f"file string, row_idx bigint, vec array<{ddl}>"
-
-    @staticmethod
-    def _member_descr(path: str, m: dict) -> str:
-        if m["method"] == 0:
-            off = _npz_data_offset(path, m)
-            with open(strip_scheme(path), "rb") as f:
-                f.seek(off)
-                head = f.read(4096)
-        else:
-            from h2h_spark.sources.zipsrc import read_member
-
-            with open(strip_scheme(path), "rb") as f:
-                head = read_member(f, m)[:4096]
-        descr, _, _, _ = parse_npy_header(head, f"{path}!{m['name']}")
-        return descr
-
-    def reader(self, schema) -> "NpzReader":
-        return NpzReader(self.options)
+class NpzSplit(NamedTuple):
+    path: str
+    # the member's central-directory entry (zipsrc.read_central_directory)
+    name: str
+    method: int
+    crc: int
+    csize: int
+    usize: int
+    lfh_off: int
+    # row 0 of the npy data: absolute for a STORED member, inside the
+    # inflated member for a DEFLATED one
+    byte_start: int
+    descr: str
+    d: int
+    row_lo: int
+    row_hi: int  # exclusive
 
 
-class NpzReader(DataSourceReader):
-    def __init__(self, options):
-        self.path = options["path"]
-        self.member = options["member"]
-        self.rows_per_split = int(options.get("rowsPerSplit", 65536))
+def _plan_npz_file(path: str, member: str, rows_per_split: int) -> list[NpzSplit]:
+    from h2h_spark.sources.zipsrc import read_member
 
-    def partitions(self):
-        from h2h_spark.sources.zipsrc import read_member
+    m = _npz_member(path, member)
+    origin = f"{path}!{m['name']}"
+    if m["method"] == 0:
+        off = _npz_data_offset(path, m)
+        with open(strip_scheme(path), "rb") as f:
+            f.seek(off)
+            head = f.read(4096)
+    elif m["method"] == 8:
+        # whole-member decode: one plan-time inflate for the header, and
+        # the single task for this member inflates it once more
+        off = 0
+        with open(strip_scheme(path), "rb") as f:
+            head = read_member(f, m)[:4096]
+    else:
+        raise ValueError(f"{origin}: unsupported zip method {m['method']}")
+    descr, shape, fortran, data_off = parse_npy_header(head, origin)
+    _descr_key(descr, origin)
+    n, d = _check_2d(shape, fortran, origin)
+    step = rows_per_split if m["method"] == 0 else max(n, 1)
+    return [
+        NpzSplit(path, **m, byte_start=off + data_off, descr=descr, d=d,
+                 row_lo=lo, row_hi=min(lo + step, n))
+        for lo in range(0, max(n, 1), step)
+    ]
 
-        parts = []
-        for fp in sorted(list_part_files(self.path, pattern="*.npz")):
-            m = _npz_member(fp, self.member)
-            origin = f"{fp}!{m['name']}"
-            if m["method"] == 0:
-                off = _npz_data_offset(fp, m)
-                with open(strip_scheme(fp), "rb") as f:
-                    f.seek(off)
-                    head = f.read(4096)
-                descr, shape, fortran, data_off = parse_npy_header(
-                    head, origin
-                )
-                _descr_key(descr, origin)
-                n, d = _check_2d(shape, fortran, origin)
-                for lo in range(0, max(n, 1), self.rows_per_split):
-                    parts.append(NpzInputPartition(
-                        fp, m, off + data_off, descr, d, lo,
-                        min(lo + self.rows_per_split, n), True,
-                    ))
-            elif m["method"] == 8:
-                # whole-member decode: header read costs one inflate at
-                # plan time only for shape; the task re-inflates once
-                with open(strip_scheme(fp), "rb") as f:
-                    head = read_member(f, m)[:4096]
-                descr, shape, fortran, data_off = parse_npy_header(
-                    head, origin
-                )
-                _descr_key(descr, origin)
-                n, d = _check_2d(shape, fortran, origin)
-                parts.append(NpzInputPartition(
-                    fp, m, data_off, descr, d, 0, n, False,
-                ))
-            else:
-                raise ValueError(
-                    f"{origin}: unsupported zip method {m['method']}"
-                )
-        if not parts:
-            raise FileNotFoundError(f"no .npz files under {self.path}")
-        return parts
 
-    def read(self, part: NpzInputPartition) -> Iterator[pa.RecordBatch]:
-        descr, itemsize, _ = _descr_key(part.descr, part.path)
-        row_bytes = part.d * itemsize
-        n = part.row_hi - part.row_lo
-        fname = f"{part.path}!{part.member['name']}"
-        if part.stored:
-            with open(strip_scheme(part.path), "rb") as f:
-                f.seek(part.byte_start + part.row_lo * row_bytes)
-                raw = f.read(n * row_bytes)
-            if len(raw) < n * row_bytes:
-                raise ValueError(f"{fname}: truncated stored npy data")
-        else:
-            from h2h_spark.sources.zipsrc import read_member
+def _read_npz_split(split: NpzSplit) -> Iterator[pa.RecordBatch]:
+    import io
 
-            with open(strip_scheme(part.path), "rb") as f:
-                blob = read_member(f, part.member)
-            raw = blob[part.byte_start:part.byte_start + n * row_bytes]
-            if len(raw) < n * row_bytes:
-                raise ValueError(f"{fname}: truncated deflated npy data")
-        yield from _rows_to_batches(
-            raw, descr, part.d, part.row_lo, n, fname
+    from h2h_spark.sources.zipsrc import read_member
+
+    fname = f"{split.path}!{split.name}"
+    with open(strip_scheme(split.path), "rb") as f:
+        # a DEFLATED member is inflated whole; its rows sit in the blob
+        src = f if split.method == 0 else io.BytesIO(read_member(f, split._asdict()))
+        yield from _read_rows(
+            src, split.byte_start, split.descr, split.d, split.row_lo,
+            split.row_hi, fname,
         )
-
-
-def register_npy(spark: SparkSession) -> None:
-    spark.dataSource.register(NpyDataSource)
-    spark.dataSource.register(NpzDataSource)
-
-
-def read_npy(
-    spark: SparkSession, path: str, rows_per_split: int = 65536
-) -> DataFrame:
-    register_npy(spark)
-    return (
-        spark.read.format("h2h_npy")
-        .option("path", path)
-        .option("rowsPerSplit", str(rows_per_split))
-        .load()
-    )
 
 
 def read_npz(
@@ -384,11 +284,18 @@ def read_npz(
     member: str,
     rows_per_split: int = 65536,
 ) -> DataFrame:
-    register_npy(spark)
-    return (
-        spark.read.format("h2h_npz")
-        .option("path", path)
-        .option("member", member)
-        .option("rowsPerSplit", str(rows_per_split))
-        .load()
+    """Rows of one ``.npy`` member (named with or without the ``.npy``
+    suffix) across every ``.npz`` file under ``path``."""
+    files = list_part_files(path, pattern="*.npz")
+    if not files:
+        raise FileNotFoundError(f"no .npz files under {path}")
+    if not member:
+        raise ValueError("an npz member name is required")
+    per_file = {fp: _plan_npz_file(fp, member, rows_per_split) for fp in sorted(files)}
+    first = per_file[files[0]][0]
+    return scan_splits(
+        spark,
+        [s for fp in sorted(files) for s in per_file[fp]],
+        _read_npz_split,
+        _vec_ddl(first.descr, f"{first.path}!{first.name}"),
     )

@@ -23,13 +23,12 @@ from __future__ import annotations
 import json
 import os
 import struct
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-from h2h_spark.sources.util import list_part_files, strip_scheme
+from h2h_spark.sources.util import list_part_files, scan_splits, strip_scheme
 
 # spec dtype → (numpy dtype string, itemsize, spark element DDL)
 _DTYPES = {
@@ -227,145 +226,52 @@ def safetensors_meta(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-class SafetensorsInputPartition(InputPartition):
-    def __init__(self, path: str, byte_start: int, dtype: str, d: int,
-                 row_lo: int, row_hi: int):
-        self.path = path
-        self.byte_start = byte_start  # absolute offset of tensor row 0
-        self.dtype = dtype
-        self.d = d
-        self.row_lo = row_lo
-        self.row_hi = row_hi  # exclusive
+class SafetensorsSplit(NamedTuple):
+    path: str
+    byte_start: int  # absolute offset of tensor row 0
+    dtype: str
+    d: int
+    row_lo: int
+    row_hi: int  # exclusive
 
 
-class SafetensorsDataSource(DataSource):
-    """``spark.read.format("h2h_safetensors")`` — rows of one 2-D
-    tensor across every ``.safetensors`` file under ``path``.
+def _read_split(split: SafetensorsSplit) -> Iterator[pa.RecordBatch]:
+    import numpy as np
 
-    Options: ``path``, ``tensor`` (name, required), ``rowsPerSplit``
-    (default 65536).  Output: ``(file, row_idx, vec)`` where ``vec``'s
-    element type follows the tensor dtype."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "h2h_safetensors"
-
-    def _first_dtype(self) -> str:
-        files = list_part_files(self.options["path"],
-                                pattern="*.safetensors")
-        if not files:
-            raise FileNotFoundError(
-                f"no .safetensors files under {self.options['path']}"
-            )
-        tensor = self.options.get("tensor")
-        if not tensor:
-            raise ValueError("option 'tensor' is required")
-        skip = str(self.options.get("missingTensor", "error")) == "skip"
-        for f in sorted(files):
-            header, _ = read_header(f)
-            if tensor in header:
-                return header[tensor]["dtype"]
-            if not skip:
+    np_s, itemsize, elem = _DTYPES[split.dtype]
+    row_bytes = split.d * itemsize
+    # bounded batches: <= 32 MiB of vector data per Arrow batch
+    batch_rows = max(1, min(split.row_hi - split.row_lo,
+                            (32 << 20) // max(row_bytes, 1)))
+    with open(strip_scheme(split.path), "rb") as f:
+        for lo in range(split.row_lo, split.row_hi, batch_rows):
+            hi = min(lo + batch_rows, split.row_hi)
+            f.seek(split.byte_start + lo * row_bytes)
+            raw = f.read((hi - lo) * row_bytes)
+            if len(raw) < (hi - lo) * row_bytes:
                 raise ValueError(
-                    f"{f}: no tensor named {tensor!r} (has "
-                    f"{sorted(k for k in header if k != '__metadata__')})"
-                    " — pass missing_tensor='skip' for per-shard tensors"
+                    f"{split.path}: truncated tensor data at row {lo}"
                 )
-        raise ValueError(
-            f"no file under {self.options['path']} holds tensor "
-            f"{tensor!r}"
-        )
-
-    def schema(self) -> str:
-        elem = _DTYPES[self._first_dtype()][2]
-        return f"file string, row_idx bigint, vec array<{elem}>"
-
-    def reader(self, schema) -> "SafetensorsReader":
-        return SafetensorsReader(self.options)
-
-
-class SafetensorsReader(DataSourceReader):
-    def __init__(self, options):
-        self.path = options["path"]
-        self.tensor = options["tensor"]
-        self.rows_per_split = int(options.get("rowsPerSplit", 65536))
-        self.skip_missing = (
-            str(options.get("missingTensor", "error")) == "skip"
-        )
-
-    def partitions(self):
-        parts = []
-        found = False
-        for f in sorted(list_part_files(self.path,
-                                        pattern="*.safetensors")):
-            header, data_start = read_header(f)
-            if self.tensor not in header:
-                if self.skip_missing:
-                    continue
-                raise ValueError(f"{f}: no tensor named {self.tensor!r}")
-            found = True
-            info = header[self.tensor]
-            shape = info["shape"]
-            if len(shape) != 2:
-                raise ValueError(
-                    f"{f}: tensor {self.tensor!r} has shape {shape} — the "
-                    "row reader needs a 2-D [n, d] tensor"
-                )
-            n, d = shape
-            for lo in range(0, max(n, 1), self.rows_per_split):
-                parts.append(SafetensorsInputPartition(
-                    f, data_start + info["data_offsets"][0],
-                    info["dtype"], d, lo, min(lo + self.rows_per_split, n),
-                ))
-        if not parts:
-            if found:
-                return parts  # tensor exists but has zero rows
-            raise FileNotFoundError(
-                f"no .safetensors files under {self.path} hold tensor "
-                f"{self.tensor!r}"
+            arr = np.frombuffer(raw, dtype=np_s).reshape(hi - lo, split.d)
+            if split.dtype == "F16":
+                arr = arr.astype("<f4")
+            elif split.dtype == "BF16":
+                arr = bf16_to_f32(arr)
+            elif split.dtype == "U8":
+                arr = arr.astype("<i2")
+            pa_type = pa.from_numpy_dtype(arr.dtype)
+            if split.dtype == "BOOL":
+                arr = arr.astype(bool)
+                pa_type = pa.bool_()
+            flat = pa.array(arr.reshape(-1), type=pa_type)
+            vecs = pa.FixedSizeListArray.from_arrays(flat, split.d)
+            yield pa.record_batch(
+                {
+                    "file": pa.array([split.path] * (hi - lo)),
+                    "row_idx": pa.array(range(lo, hi), type=pa.int64()),
+                    "vec": vecs.cast(pa.list_(pa_type)),
+                }
             )
-        return parts
-
-    def read(self, part: SafetensorsInputPartition
-             ) -> Iterator[pa.RecordBatch]:
-        import numpy as np
-
-        np_s, itemsize, elem = _DTYPES[part.dtype]
-        row_bytes = part.d * itemsize
-        # bounded batches: <= 32 MiB of vector data per Arrow batch
-        batch_rows = max(1, min(part.row_hi - part.row_lo,
-                                (32 << 20) // max(row_bytes, 1)))
-        with open(strip_scheme(part.path), "rb") as f:
-            for lo in range(part.row_lo, part.row_hi, batch_rows):
-                hi = min(lo + batch_rows, part.row_hi)
-                f.seek(part.byte_start + lo * row_bytes)
-                raw = f.read((hi - lo) * row_bytes)
-                if len(raw) < (hi - lo) * row_bytes:
-                    raise ValueError(
-                        f"{part.path}: truncated tensor data at row {lo}"
-                    )
-                arr = np.frombuffer(raw, dtype=np_s).reshape(hi - lo, part.d)
-                if part.dtype == "F16":
-                    arr = arr.astype("<f4")
-                elif part.dtype == "BF16":
-                    arr = bf16_to_f32(arr)
-                elif part.dtype == "U8":
-                    arr = arr.astype("<i2")
-                pa_type = pa.from_numpy_dtype(arr.dtype)
-                if part.dtype == "BOOL":
-                    arr = arr.astype(bool)
-                    pa_type = pa.bool_()
-                flat = pa.array(arr.reshape(-1), type=pa_type)
-                vecs = pa.FixedSizeListArray.from_arrays(flat, part.d)
-                yield pa.record_batch(
-                    {
-                        "file": pa.array([part.path] * (hi - lo)),
-                        "row_idx": pa.array(
-                            range(lo, hi), type=pa.int64()
-                        ),
-                        "vec": vecs.cast(pa.list_(pa_type)),
-                    }
-                )
 
 
 def safetensors_index_audit(
@@ -417,10 +323,6 @@ def safetensors_index_audit(
     )
 
 
-def register_safetensors(spark: SparkSession) -> None:
-    spark.dataSource.register(SafetensorsDataSource)
-
-
 def read_safetensors(
     spark: SparkSession,
     path: str,
@@ -428,15 +330,44 @@ def read_safetensors(
     rows_per_split: int = 65536,
     missing_tensor: str = "error",
 ) -> DataFrame:
-    """``missing_tensor='skip'`` tolerates shards that don't hold the
+    """Rows of one 2-D tensor across every ``.safetensors`` file under
+    ``path`` as ``(file, row_idx, vec)``; ``vec``'s element type follows
+    the dtype of the first file holding the tensor.
+
+    ``missing_tensor='skip'`` tolerates shards that don't hold the
     tensor (the HF sharded-checkpoint layout: each tensor lives in
     exactly one shard); it is still LOUD if no file holds it."""
-    register_safetensors(spark)
-    return (
-        spark.read.format("h2h_safetensors")
-        .option("path", path)
-        .option("tensor", tensor)
-        .option("rowsPerSplit", str(rows_per_split))
-        .option("missingTensor", missing_tensor)
-        .load()
-    )
+    files = list_part_files(path, pattern="*.safetensors")
+    if not files:
+        raise FileNotFoundError(f"no .safetensors files under {path}")
+    if not tensor:
+        raise ValueError("a tensor name is required")
+    splits, dtype = [], None
+    for f in sorted(files):
+        header, data_start = read_header(f)
+        if tensor not in header:
+            if missing_tensor == "skip":
+                continue
+            raise ValueError(
+                f"{f}: no tensor named {tensor!r} (has "
+                f"{sorted(k for k in header if k != '__metadata__')})"
+                " — pass missing_tensor='skip' for per-shard tensors"
+            )
+        info = header[tensor]
+        dtype = dtype or info["dtype"]
+        shape = info["shape"]
+        if len(shape) != 2:
+            raise ValueError(
+                f"{f}: tensor {tensor!r} has shape {shape} — the "
+                "row reader needs a 2-D [n, d] tensor"
+            )
+        n, d = shape
+        for lo in range(0, max(n, 1), rows_per_split):
+            splits.append(SafetensorsSplit(
+                f, data_start + info["data_offsets"][0],
+                info["dtype"], d, lo, min(lo + rows_per_split, n),
+            ))
+    if dtype is None:
+        raise ValueError(f"no file under {path} holds tensor {tensor!r}")
+    ddl = f"file string, row_idx bigint, vec array<{_DTYPES[dtype][2]}>"
+    return scan_splits(spark, splits, _read_split, ddl)

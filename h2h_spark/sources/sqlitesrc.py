@@ -6,7 +6,7 @@ SQLite files are not byte-range splittable (pages of a B-tree), but the
 ROWID keyspace is: the planner reads each file's ``MIN(rowid) /
 MAX(rowid)`` (a footer-read-sized probe, the same role as the parquet
 footer or the ZIP central directory) and cuts the rowid range into
-``max(1, ceil(n_rows / maxRowsPerTask))`` contiguous slices; every task
+``max(1, ceil(n_rows / max_rows_per_task))`` contiguous slices; every task
 opens the file read-only (``mode=ro`` URI) and scans
 ``rowid >= lo AND rowid < hi`` — an index-range B-tree walk, never a
 full scan per task.  Parallelism within a single big file AND across
@@ -33,15 +33,15 @@ documented double cliff.
 
 from __future__ import annotations
 
+import functools
 import math
 import re
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-from h2h_spark.sources.util import list_part_files, strip_scheme
+from h2h_spark.sources.util import list_part_files, scan_splits, strip_scheme
 
 _DEFAULT_MAX_ROWS_PER_TASK = 1_000_000
 _IDENT_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
@@ -98,16 +98,15 @@ def sqlite_table_schema(path: str, table: str) -> list[tuple[str, str]]:
     return [(c[1], _affinity_to_spark(c[2])[0]) for c in cols]
 
 
-class SqlitePartition(InputPartition):
-    def __init__(self, path: str, lo: int, hi: int):
-        self.path = path
-        self.lo = lo  # rowid >= lo
-        self.hi = hi  # rowid < hi
+class SqliteSplit(NamedTuple):
+    path: str
+    lo: int  # rowid >= lo
+    hi: int  # rowid < hi
 
 
 def plan_sqlite_splits(
     paths, table: str, max_rows_per_task: int, mode: str = "range"
-) -> list[SqlitePartition]:
+) -> list[SqliteSplit]:
     """Cut each file's rowid keyspace into task slices.
 
     ``mode="range"`` (default): MIN/MAX/COUNT probe per file (O(1)
@@ -133,7 +132,7 @@ def plan_sqlite_splits(
 
     if mode not in ("range", "exact"):
         raise ValueError(f"splitMode must be 'range' or 'exact', got {mode!r}")
-    parts: list[SqlitePartition] = []
+    parts: list[SqliteSplit] = []
     for path in paths:
         con = sqlite3.connect(f"file:{strip_scheme(path)}?mode=ro", uri=True)
         try:
@@ -167,7 +166,7 @@ def plan_sqlite_splits(
                     bounds.append(cur + 1)
                 bounds.append(hi + 1)
                 for a, b in zip(bounds, bounds[1:]):
-                    parts.append(SqlitePartition(path, a, b))
+                    parts.append(SqliteSplit(path, a, b))
                 continue
         finally:
             con.close()
@@ -177,87 +176,40 @@ def plan_sqlite_splits(
         off = lo
         for i in range(k):
             ln = base + (1 if i < rem else 0)
-            parts.append(SqlitePartition(path, off, off + ln))
+            parts.append(SqliteSplit(path, off, off + ln))
             off += ln
     return parts
 
 
-class SqliteDataSource(DataSource):
-    """``spark.read.format("h2h_sqlite").option("table", ...)``"""
+_BATCH_ROWS = 65536
 
-    @classmethod
-    def name(cls) -> str:
-        return "h2h_sqlite"
 
-    def schema(self) -> str:
-        table = _check_ident(self.options["table"], "table")
-        paths = list_part_files(self.options["path"], pattern="*.sqlite")
-        if not paths:
-            raise ValueError(f"no .sqlite files under {self.options['path']}")
-        return ", ".join(
-            # Spark DDL backtick-quoting: escape embedded backticks by
-            # doubling so any legal SQLite column name survives
-            "`" + c.replace("`", "``") + f"` {t}"
-            for c, t in sqlite_table_schema(paths[0], table)
+def _read_split(
+    table: str, schema: list[tuple[str, str]], split: SqliteSplit
+) -> Iterator[pa.RecordBatch]:
+    import sqlite3
+
+    names = [c for c, _ in schema]
+    casters = [_make_caster(t, c) for c, t in schema]
+    con = sqlite3.connect(f"file:{strip_scheme(split.path)}?mode=ro", uri=True)
+    try:
+        cur = con.execute(
+            f"SELECT {', '.join(_quote_ident(n) for n in names)} "
+            f"FROM {table} WHERE rowid >= ? AND rowid < ?",
+            (split.lo, split.hi),
         )
-
-    def reader(self, schema) -> "SqliteReader":
-        return SqliteReader(self.options)
-
-
-class SqliteReader(DataSourceReader):
-    _BATCH_ROWS = 65536
-
-    def __init__(self, options):
-        self.path = options["path"]
-        self.table = _check_ident(options["table"], "table")
-        self.max_rows = int(
-            options.get("maxRowsPerTask", _DEFAULT_MAX_ROWS_PER_TASK)
-        )
-        self.split_mode = options.get("splitMode", "range")
-
-    def partitions(self):
-        parts = plan_sqlite_splits(
-            list_part_files(self.path, pattern="*.sqlite"),
-            self.table,
-            self.max_rows,
-            self.split_mode,
-        )
-        if not parts:
-            parts.append(SqlitePartition("", 0, 0))
-        return parts
-
-    def read(self, part: SqlitePartition) -> Iterator[pa.RecordBatch]:
-        import sqlite3
-
-        if not part.path:
-            return
-        schema = sqlite_table_schema(part.path, self.table)
-        names = [c for c, _ in schema]
-        casters = [_make_caster(t, c) for c, t in schema]
-        con = sqlite3.connect(f"file:{part.path}?mode=ro", uri=True)
-        try:
-            cur = con.execute(
-                f"SELECT {', '.join(_quote_ident(n) for n in names)} "
-                f"FROM {self.table} WHERE rowid >= ? AND rowid < ?",
-                (part.lo, part.hi),
-            )
-            while True:
-                rows = cur.fetchmany(self._BATCH_ROWS)
-                if not rows:
-                    break
-                cols = list(zip(*rows))
-                arrays = [
-                    pa.array(
-                        [None if v is None else cast(v) for v in col], typ
-                    )
-                    for col, (cast, typ) in zip(cols, casters)
-                ]
-                yield pa.record_batch(arrays, names=names)
-        finally:
-            con.close()
-        # Spark requires at least one batch only when rows exist; an
-        # empty range yields nothing, which the harness accepts
+        while True:
+            rows = cur.fetchmany(_BATCH_ROWS)
+            if not rows:
+                break
+            cols = list(zip(*rows))
+            arrays = [
+                pa.array([None if v is None else cast(v) for v in col], typ)
+                for col, (cast, typ) in zip(cols, casters)
+            ]
+            yield pa.record_batch(arrays, names=names)
+    finally:
+        con.close()
 
 
 def _make_caster(spark_type: str, col: str):
@@ -317,10 +269,6 @@ def write_sqlite(path: str, table: str, columns, rows) -> None:
         con.close()
 
 
-def register_sqlite(spark: SparkSession) -> None:
-    spark.dataSource.register(SqliteDataSource)
-
-
 def read_sqlite(
     spark: SparkSession,
     path: str,
@@ -328,12 +276,17 @@ def read_sqlite(
     max_rows_per_task: int = _DEFAULT_MAX_ROWS_PER_TASK,
     split_mode: str = "range",
 ) -> DataFrame:
-    register_sqlite(spark)
-    return (
-        spark.read.format("h2h_sqlite")
-        .option("path", path)
-        .option("table", table)
-        .option("maxRowsPerTask", str(max_rows_per_task))
-        .option("splitMode", split_mode)
-        .load()
+    """Rows of ``table`` across every ``.sqlite`` file under ``path``;
+    the first file's ``PRAGMA table_info`` sets the schema."""
+    table = _check_ident(table, "table")
+    paths = list_part_files(path, pattern="*.sqlite")
+    if not paths:
+        raise ValueError(f"no .sqlite files under {path}")
+    schema = sqlite_table_schema(paths[0], table)
+    # Spark DDL backtick-quoting: escape embedded backticks by doubling so
+    # any legal SQLite column name survives
+    ddl = ", ".join("`" + c.replace("`", "``") + f"` {t}" for c, t in schema)
+    splits = plan_sqlite_splits(paths, table, max_rows_per_task, split_mode)
+    return scan_splits(
+        spark, splits, functools.partial(_read_split, table, schema), ddl
     )

@@ -23,34 +23,36 @@ streamed chunks), never O(range).
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import math
-from typing import Iterator, Sequence
+from typing import Iterator, NamedTuple, Sequence
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+from pyspark.sql.pandas.types import from_arrow_schema
 
-from h2h_spark.sources.util import file_size, list_part_files, open_input
+from h2h_spark.sources.util import (
+    ByteRange,
+    byte_ranges,
+    file_size,
+    list_part_files,
+    open_input,
+    record_batches,
+    scan_splits,
+)
 
 _BLOCK = 512
 _DEFAULT_MAX_PARTITION_BYTES = 128 * 1024 * 1024
 
 
-class TarInputPartition(InputPartition):
-    def __init__(self, path: str, start: int, end: int):
-        self.path = path
-        self.start = start
-        self.end = end
-
-
 def plan_tar_splits(
     paths: Sequence[str],
     max_partition_bytes: int = _DEFAULT_MAX_PARTITION_BYTES,
-) -> list[TarInputPartition]:
+) -> list[ByteRange]:
     """Block-aligned byte ranges (ustar structure is 512-byte blocks, so
     ranges snap to block boundaries — a header never straddles a cut)."""
-    parts: list[TarInputPartition] = []
+    parts: list[ByteRange] = []
     for path in paths:
         size = file_size(path)
         if size == 0:
@@ -62,12 +64,10 @@ def plan_tar_splits(
         off = 0
         for i in range(n):
             blocks = base + (1 if i < rem else 0)
-            parts.append(
-                TarInputPartition(path, off, off + blocks * _BLOCK)
-            )
+            parts.append(ByteRange(path, off, off + blocks * _BLOCK))
             off += blocks * _BLOCK
-        if off < size:  # trailing partial block (malformed; let the
-            parts[-1].end = size  # last task surface the error)
+        if off < size:  # trailing partial block: malformed, the last task raises
+            parts[-1] = parts[-1]._replace(end=size)
     return parts
 
 
@@ -134,67 +134,25 @@ def scan_tar_range(
             pos += _BLOCK * (1 + data_blocks)
 
 
-_SCHEMA_DDL = (
-    "name string, size bigint, mtime bigint, typeflag string, "
-    "content_md5 string"
-)
+_SCHEMA = pa.schema([
+    ("name", pa.string()), ("size", pa.int64()), ("mtime", pa.int64()),
+    ("typeflag", pa.string()), ("content_md5", pa.string()),
+])
 
 
-class TarDataSource(DataSource):
-    """``spark.read.format("h2h_tar").option("path", ...)``"""
-
-    @classmethod
-    def name(cls) -> str:
-        return "h2h_tar"
-
-    def schema(self) -> str:
-        return _SCHEMA_DDL
-
-    def reader(self, schema) -> "TarReader":
-        return TarReader(self.options)
-
-
-def _tar_batch(names, sizes, mtimes, flags, md5s) -> pa.RecordBatch:
-    return pa.record_batch(
-        [
-            pa.array(names, pa.string()),
-            pa.array(sizes, pa.int64()),
-            pa.array(mtimes, pa.int64()),
-            pa.array(flags, pa.string()),
-            pa.array(md5s, pa.string()),
-        ],
-        names=["name", "size", "mtime", "typeflag", "content_md5"],
+def _member_batches(members) -> Iterator[pa.RecordBatch]:
+    yield from record_batches(
+        (
+            (hdr["name"], hdr["size"], hdr["mtime"], hdr["typeflag"],
+             hashlib.md5(content).hexdigest())
+            for hdr, content in members
+        ),
+        _SCHEMA,
     )
 
 
-class TarReader(DataSourceReader):
-    def __init__(self, options):
-        self.path = options["path"]
-        self.max_bytes = int(
-            options.get("maxPartitionBytes", _DEFAULT_MAX_PARTITION_BYTES)
-        )
-
-    def partitions(self):
-        return plan_tar_splits(
-            list_part_files(self.path, pattern="*.tar"), self.max_bytes
-        )
-
-    # flush bound: a partition's member-metadata lists never grow past
-    # this, keeping whole-file stream tasks at O(batch + one member)
-    _BATCH_RECORDS = 65536
-
-    def read(self, part: TarInputPartition) -> Iterator[pa.RecordBatch]:
-        names, sizes, mtimes, flags, md5s = [], [], [], [], []
-        for hdr, content in scan_tar_range(part.path, part.start, part.end):
-            names.append(hdr["name"])
-            sizes.append(hdr["size"])
-            mtimes.append(hdr["mtime"])
-            flags.append(hdr["typeflag"])
-            md5s.append(hashlib.md5(content).hexdigest())
-            if len(names) >= self._BATCH_RECORDS:
-                yield _tar_batch(names, sizes, mtimes, flags, md5s)
-                names, sizes, mtimes, flags, md5s = [], [], [], [], []
-        yield _tar_batch(names, sizes, mtimes, flags, md5s)
+def _read_split(split: ByteRange) -> Iterator[pa.RecordBatch]:
+    yield from _member_batches(scan_tar_range(*split))
 
 
 # ---------------------------------------------------------------------------
@@ -341,104 +299,19 @@ def _detect_tar_zst_layout(path: str) -> str:
     return detect_zst_member_layout(path)
 
 
-class TarGzDataSource(DataSource):
-    """``spark.read.format("h2h_tar_gz")`` — compressed tar."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "h2h_tar_gz"
-
-    def schema(self) -> str:
-        return _SCHEMA_DDL
-
-    def reader(self, schema) -> "TarGzReader":
-        return TarGzReader(self.options)
+class TarGzSplit(NamedTuple):
+    path: str
+    start: int
+    end: int
+    mode: str  # member | stream
 
 
-class _TarGzPartition(InputPartition):
-    def __init__(self, path: str, start: int, end: int, mode: str):
-        self.path = path
-        self.start = start
-        self.end = end
-        self.mode = mode  # "member" | "stream"
-
-
-class TarGzReader(DataSourceReader):
-    def __init__(self, options):
-        self.path = options["path"]
-        self.max_bytes = int(
-            options.get("maxPartitionBytes", _DEFAULT_MAX_PARTITION_BYTES)
-        )
-        self.layout = options.get("layout", "auto")
-        if self.layout not in ("auto", "member", "stream"):
-            raise ValueError(
-                f"layout must be auto|member|stream, got {self.layout!r}"
-            )
-        self.codec = options.get("codec", "gz")
-        if self.codec not in ("gz", "bz2", "xz", "zst"):
-            raise ValueError(
-                f"codec must be gz|bz2|xz|zst, got {self.codec!r}"
-            )
-        if self.codec in ("bz2", "xz") and self.layout == "member":
-            raise ValueError(
-                f"layout=member requires codec=gz|zst (no member-resync "
-                f"path for {self.codec})"
-            )
-
-    def partitions(self):
-        parts: list[_TarGzPartition] = []
-        pattern = f"*.tar.{self.codec}"
-        for path in list_part_files(self.path, pattern=pattern):
-            detect = {
-                "gz": detect_tar_gz_layout,
-                "zst": _detect_tar_zst_layout,
-            }.get(self.codec)
-            layout = (
-                "stream"
-                if detect is None
-                else detect(path)
-                if self.layout == "auto"
-                else self.layout
-            )
-            size = file_size(path)
-            if size == 0:
-                continue
-            if layout == "stream":
-                parts.append(_TarGzPartition(path, 0, size, "stream"))
-                continue
-            n = max(1, math.ceil(size / self.max_bytes))
-            base, rem = divmod(size, n)
-            off = 0
-            for i in range(n):
-                ln = base + (1 if i < rem else 0)
-                parts.append(_TarGzPartition(path, off, off + ln, "member"))
-                off += ln
-        if not parts:  # Spark calls read(None) on an empty plan
-            parts.append(_TarGzPartition("", 0, 0, "stream"))
-        return parts
-
-    _BATCH_RECORDS = 65536
-
-    def read(self, part: _TarGzPartition) -> Iterator[pa.RecordBatch]:
-        names, sizes, mtimes, flags, md5s = [], [], [], [], []
-        if part.path:
-            members = (
-                scan_tar_gz_stream(part.path, self.codec)
-                if part.mode == "stream"
-                else scan_tar_gz_members(
-                    part.path, part.start, part.end, self.codec
-                )
-            )
-            for hdr, content in members:
-                names.append(hdr["name"])
-                sizes.append(hdr["size"])
-                mtimes.append(hdr["mtime"])
-                flags.append(hdr["typeflag"])
-                md5s.append(hashlib.md5(content).hexdigest())
-                if len(names) >= self._BATCH_RECORDS:
-                    yield _tar_batch(names, sizes, mtimes, flags, md5s)
-                    names, sizes, mtimes, flags, md5s = [], [], [], [], []
-        yield _tar_batch(names, sizes, mtimes, flags, md5s)
+def _read_gz_split(codec: str, split: TarGzSplit) -> Iterator[pa.RecordBatch]:
+    yield from _member_batches(
+        scan_tar_gz_stream(split.path, codec)
+        if split.mode == "stream"
+        else scan_tar_gz_members(split.path, split.start, split.end, codec)
+    )
 
 
 def ustar_member_bytes(name: str, content: bytes, mtime: int = 0) -> bytes:
@@ -511,11 +384,6 @@ def write_tar_zst_stream(
         f.write(_zst_compress(raw))
 
 
-def register_tar(spark: SparkSession) -> None:
-    spark.dataSource.register(TarDataSource)
-    spark.dataSource.register(TarGzDataSource)
-
-
 def read_tar_gz(
     spark: SparkSession,
     path: str,
@@ -526,14 +394,36 @@ def read_tar_gz(
     """Read compressed tar: ``codec="gz"`` (splittable when
     member-gzipped, see module docs), or ``bz2``/``xz``/``zst`` —
     stream-only codecs, one task per file."""
-    register_tar(spark)
-    return (
-        spark.read.format("h2h_tar_gz")
-        .option("path", path)
-        .option("maxPartitionBytes", str(max_partition_bytes))
-        .option("layout", layout)
-        .option("codec", codec)
-        .load()
+    if layout not in ("auto", "member", "stream"):
+        raise ValueError(f"layout must be auto|member|stream, got {layout!r}")
+    if codec not in ("gz", "bz2", "xz", "zst"):
+        raise ValueError(f"codec must be gz|bz2|xz|zst, got {codec!r}")
+    if codec in ("bz2", "xz") and layout == "member":
+        raise ValueError(
+            f"layout=member requires codec=gz|zst (no member-resync "
+            f"path for {codec})"
+        )
+    detect = {"gz": detect_tar_gz_layout, "zst": _detect_tar_zst_layout}.get(codec)
+    splits = []
+    for p in list_part_files(path, pattern=f"*.tar.{codec}"):
+        mode = layout
+        if detect is None:
+            mode = "stream"
+        elif layout == "auto":
+            mode = detect(p)
+        size = file_size(p)
+        if mode == "stream":
+            splits += [TarGzSplit(p, 0, size, "stream")] if size else []
+        else:
+            splits += [
+                TarGzSplit(p, s, e, "member")
+                for s, e in byte_ranges(size, max_partition_bytes)
+            ]
+    return scan_splits(
+        spark,
+        splits,
+        functools.partial(_read_gz_split, codec),
+        from_arrow_schema(_SCHEMA),
     )
 
 
@@ -542,10 +432,7 @@ def read_tar(
     path: str,
     max_partition_bytes: int = _DEFAULT_MAX_PARTITION_BYTES,
 ) -> DataFrame:
-    register_tar(spark)
-    return (
-        spark.read.format("h2h_tar")
-        .option("path", path)
-        .option("maxPartitionBytes", str(max_partition_bytes))
-        .load()
+    splits = plan_tar_splits(
+        list_part_files(path, pattern="*.tar"), max_partition_bytes
     )
+    return scan_splits(spark, splits, _read_split, from_arrow_schema(_SCHEMA))

@@ -30,7 +30,7 @@ bytes each) are always verified — that is what makes resync safe.  Full
 data-CRC verification defaults ON for integrity parity with the ZIP
 source's hard CRC check, through a numpy-vectorized CRC (GF(2)-linear
 block folding, see ``_crc_update_vec`` — ~14× the scalar slicing-by-8
-kernel per core); set ``verifyDataCrc=false`` to scan checksum-blind
+kernel per core); set ``verify_data_crc=False`` to scan checksum-blind
 at wire speed when an upstream system already guarantees integrity.
 
 Whole-file-gzipped shards (``TFRecordOptions(compression_type="GZIP")``,
@@ -42,16 +42,23 @@ files still applies (``scan_tfrecord_gz``).
 
 from __future__ import annotations
 
+import functools
 import hashlib
-import math
 import struct
-from typing import Iterator, Sequence
+from typing import Iterator, NamedTuple, Sequence
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+from pyspark.sql.pandas.types import from_arrow_schema
 
-from h2h_spark.sources.util import file_size, list_part_files, open_input
+from h2h_spark.sources.util import (
+    byte_ranges,
+    file_size,
+    list_part_files,
+    open_input,
+    record_batches,
+    scan_splits,
+)
 
 _CHUNK = 1 << 20
 _DEFAULT_MAX_PARTITION_BYTES = 128 * 1024 * 1024
@@ -236,31 +243,22 @@ def write_tfrecords_gz(path: str, payloads: Sequence[bytes]) -> None:
         f.write(_gzip.compress(buf.getvalue(), mtime=0))
 
 
-class TfRecordPartition(InputPartition):
-    def __init__(self, path: str, start: int, end: int, gz: bool = False):
-        self.path = path
-        self.start = start
-        self.end = end
-        self.gz = gz
+class TfRecordSplit(NamedTuple):
+    path: str
+    start: int
+    end: int
+    gz: int = 0  # 1: whole-file-gzipped shard, one task per file
 
 
 def plan_tfrecord_splits(
     paths: Sequence[str],
     max_partition_bytes: int = _DEFAULT_MAX_PARTITION_BYTES,
-) -> list[TfRecordPartition]:
-    parts: list[TfRecordPartition] = []
-    for path in paths:
-        size = file_size(path)
-        if size == 0:
-            continue
-        n = max(1, math.ceil(size / max_partition_bytes))
-        base, rem = divmod(size, n)
-        off = 0
-        for i in range(n):
-            ln = base + (1 if i < rem else 0)
-            parts.append(TfRecordPartition(path, off, off + ln))
-            off += ln
-    return parts
+) -> list[TfRecordSplit]:
+    return [
+        TfRecordSplit(path, s, e)
+        for path in paths
+        for s, e in byte_ranges(file_size(path), max_partition_bytes)
+    ]
 
 
 class _TfScanner:
@@ -408,107 +406,32 @@ def scan_tfrecord_gz(
         pos += 12 + ln + 4
 
 
-_SCHEMA_DDL = "offset bigint, length bigint, data_md5 string"
+_SCHEMA = pa.schema([
+    ("offset", pa.int64()), ("length", pa.int64()), ("data_md5", pa.string()),
+])
+_DATA_FIELD = pa.field("data", pa.binary())
 
 
-class TfRecordDataSource(DataSource):
-    """``spark.read.format("h2h_tfrecord")``"""
-
-    @classmethod
-    def name(cls) -> str:
-        return "h2h_tfrecord"
-
-    def schema(self) -> str:
-        if str(self.options.get("includeData", "false")).lower() in (
-            "1", "true", "yes",
-        ):
-            return _SCHEMA_DDL + ", data binary"
-        return _SCHEMA_DDL
-
-    def reader(self, schema) -> "TfRecordReader":
-        return TfRecordReader(self.options)
-
-
-class TfRecordReader(DataSourceReader):
-    def __init__(self, options):
-        self.path = options["path"]
-        self.max_bytes = int(
-            options.get("maxPartitionBytes", _DEFAULT_MAX_PARTITION_BYTES)
-        )
-        self.verify_data = str(
-            options.get("verifyDataCrc", "true")
-        ).lower() in ("1", "true", "yes")
-        self.include_data = str(
-            options.get("includeData", "false")
-        ).lower() in ("1", "true", "yes")
-
-    # flush a batch roughly this often so a multi-GB gz shard (one
-    # whole-file task) never materializes the full partition in Python
-    _BATCH_RECORDS = 8192
-    _BATCH_BYTES = 32 * 1024 * 1024
-
-    def partitions(self):
-        # plain shards split into byte ranges; whole-file-gzipped shards
-        # (TFRecordOptions GZIP) are the documented one-task-per-file
-        # cliff — a gzip stream has no offset to resync to
-        # suffix-filter both listings: list_part_files returns a single-
-        # file path as-is regardless of pattern, and a file must never
-        # be planned under both disciplines
-        plain = [
-            p for p in list_part_files(self.path, pattern="*.tfrecord")
-            if p.endswith(".tfrecord")
-        ]
-        parts = plan_tfrecord_splits(plain, self.max_bytes)
-        for path in list_part_files(self.path, pattern="*.tfrecord.gz"):
-            if not path.endswith(".tfrecord.gz"):
-                continue
-            size = file_size(path)
-            if size:
-                parts.append(TfRecordPartition(path, 0, size, gz=True))
-        if not parts:  # Spark calls read(None) on an empty plan
-            parts.append(TfRecordPartition("", 0, 0))
-        return parts
-
-    def read(self, part: TfRecordPartition) -> Iterator[pa.RecordBatch]:
-        offs, lens, md5s = [], [], []
-        datas: list[bytes] = []
-        pending = 0
-
-        def batch() -> pa.RecordBatch:
-            cols = [
-                pa.array(offs, pa.int64()),
-                pa.array(lens, pa.int64()),
-                pa.array(md5s, pa.string()),
-            ]
-            names = ["offset", "length", "data_md5"]
-            if self.include_data:
-                cols.append(pa.array(datas, pa.binary()))
-                names.append("data")
-            return pa.record_batch(cols, names=names)
-
-        if part.path:
-            it = (
-                scan_tfrecord_gz(part.path, self.verify_data)
-                if getattr(part, "gz", False)
-                else scan_tfrecord_range(
-                    part.path, part.start, part.end, self.verify_data
-                )
-            )
-            for pos, data in it:
-                offs.append(pos)
-                lens.append(len(data))
-                md5s.append(hashlib.md5(data).hexdigest())
-                if self.include_data:
-                    datas.append(data)
-                    pending += len(data)
-                if (
-                    len(offs) >= self._BATCH_RECORDS
-                    or pending >= self._BATCH_BYTES
-                ):
-                    yield batch()
-                    offs, lens, md5s, datas = [], [], [], []
-                    pending = 0
-        yield batch()
+def _read_split(
+    verify_data: bool, schema: pa.Schema, split: TfRecordSplit
+) -> Iterator[pa.RecordBatch]:
+    with_data = "data" in schema.names
+    records = (
+        scan_tfrecord_gz(split.path, verify_data)
+        if split.gz
+        else scan_tfrecord_range(split.path, split.start, split.end, verify_data)
+    )
+    # 8192-record batches keep a multi-GB gz shard (one whole-file task)
+    # from materializing its partition in Python
+    yield from record_batches(
+        (
+            (pos, len(data), hashlib.md5(data).hexdigest())
+            + ((data,) if with_data else ())
+            for pos, data in records
+        ),
+        schema,
+        max_rows=8192,
+    )
 
 
 def write_tf_examples(
@@ -554,10 +477,6 @@ def write_tf_examples(
     sel.foreachPartition(_write)
 
 
-def register_tfrecord(spark: SparkSession) -> None:
-    spark.dataSource.register(TfRecordDataSource)
-
-
 def read_tfrecord(
     spark: SparkSession,
     path: str,
@@ -565,12 +484,25 @@ def read_tfrecord(
     verify_data_crc: bool = True,
     include_data: bool = False,
 ) -> DataFrame:
-    register_tfrecord(spark)
-    return (
-        spark.read.format("h2h_tfrecord")
-        .option("path", path)
-        .option("maxPartitionBytes", str(max_partition_bytes))
-        .option("verifyDataCrc", str(verify_data_crc).lower())
-        .option("includeData", str(include_data).lower())
-        .load()
+    # plain shards split into byte ranges; whole-file-gzipped shards
+    # (TFRecordOptions GZIP) are the documented one-task-per-file cliff —
+    # a gzip stream has no offset to resync to.  Both listings are
+    # suffix-filtered: list_part_files returns a single-file path as-is
+    # regardless of pattern, and a file must never be planned under both
+    # disciplines.
+    splits = plan_tfrecord_splits(
+        [p for p in list_part_files(path, pattern="*.tfrecord")
+         if p.endswith(".tfrecord")],
+        max_partition_bytes,
+    )
+    for p in list_part_files(path, pattern="*.tfrecord.gz"):
+        size = file_size(p) if p.endswith(".tfrecord.gz") else 0
+        if size:
+            splits.append(TfRecordSplit(p, 0, size, gz=1))
+    schema = _SCHEMA.append(_DATA_FIELD) if include_data else _SCHEMA
+    return scan_splits(
+        spark,
+        splits,
+        functools.partial(_read_split, verify_data_crc, schema),
+        from_arrow_schema(schema),
     )

@@ -8,8 +8,11 @@
   on a cluster, mirroring the reference's libhdfs/webhdfs transports
   (``libhdfsconnector.cpp:904-918``, ``webhdfsconnector.cpp:169-238``) with
   the Hadoop/Arrow clients instead of hand-rolled JNI/REST.
-- :func:`scan_splits` — the driver-planned scan shared by the h2h readers:
-  one task per split descriptor, each decoding its own byte range.
+- :func:`scan_splits` — the driver-planned scan shared by every reader:
+  one task per split descriptor, each decoding its own byte range;
+  :func:`byte_ranges` / :func:`plan_byte_ranges` cut files into the
+  plain ranges most planners start from, and :func:`record_batches`
+  turns a task's rows into bounded Arrow batches.
 """
 
 from __future__ import annotations
@@ -17,7 +20,7 @@ from __future__ import annotations
 import glob
 import os
 import re
-from typing import BinaryIO, Callable, Iterator, NamedTuple, Sequence
+from typing import BinaryIO, Callable, Iterable, Iterator, NamedTuple, Sequence
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -229,30 +232,109 @@ def ensure_dir(path: str) -> None:
         filesystem.create_dir(p, recursive=True)
 
 
+class ByteRange(NamedTuple):
+    path: str
+    start: int
+    end: int  # exclusive
+
+
+def byte_ranges(size: int, max_partition_bytes: int) -> list[tuple[int, int]]:
+    """Deterministic even byte ranges for a file: ``ceil(size / max)``
+    ranges, the remainder bytes spread to the low-numbered ones.  An
+    empty file has none."""
+    if size <= 0:
+        return []
+    n = max(1, -(-size // max_partition_bytes))
+    base, rem = divmod(size, n)
+    out, off = [], 0
+    for i in range(n):
+        length = base + (1 if i < rem else 0)
+        out.append((off, off + length))
+        off += length
+    return out
+
+
+def plan_byte_ranges(
+    paths: Sequence[str], max_partition_bytes: int
+) -> list[ByteRange]:
+    """Plain byte-range splits of every file; record alignment is left to
+    the task, which owns the records that start inside its range."""
+    return [
+        ByteRange(path, s, e)
+        for path in paths
+        for s, e in byte_ranges(file_size(path), max_partition_bytes)
+    ]
+
+
+_BATCH_BYTES = 32 << 20
+
+
+def record_batches(
+    rows: Iterable[tuple], schema: pa.Schema, max_rows: int = 65536
+) -> Iterator[pa.RecordBatch]:
+    """Arrow batches of ``schema`` from row tuples, flushed every
+    ``max_rows`` rows or once the ``bytes`` values pending reach 32 MiB,
+    so a task holds one batch, never its whole range."""
+    cols: list[list] = [[] for _ in schema]
+    n = pending = 0
+
+    def flush() -> pa.RecordBatch:
+        return pa.record_batch(
+            [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema
+        )
+
+    for row in rows:
+        for c, v in zip(cols, row):
+            c.append(v)
+            if type(v) is bytes:
+                pending += len(v)
+        n += 1
+        if n >= max_rows or pending >= _BATCH_BYTES:
+            yield flush()
+            cols = [[] for _ in schema]
+            n = pending = 0
+    if n:
+        yield flush()
+
+
+_DESC_TYPES = {str: T.StringType(), int: T.LongType()}
+
+
 def scan_splits(
     spark: SparkSession,
     splits: Sequence[NamedTuple],
     read: Callable[[NamedTuple], Iterator[pa.RecordBatch]],
-    schema: T.StructType,
+    schema: T.StructType | str,
 ) -> DataFrame:
     """Scan planned splits as one ``mapInArrow`` task per split.
 
     The reference's workers each compute their own byte range with no
     central planner (``libhdfsconnector.cpp:652-707``); here the driver
     plans in-process and ships each task only its own descriptor.  The
-    descriptors (``NamedTuple`` of ``str``/``int`` fields) are unpickled
-    on the JVM side into a one-row-per-partition RDD, so the plan is
-    ``MapInArrow <- Scan ExistingRDD`` with no other Python stage.  Like a
-    file scan, that RDD has no size estimate, so a join never broadcasts
-    the scan side.  ``read`` turns one descriptor into Arrow batches of
-    ``schema``; no splits gives an empty DataFrame of ``schema``.
+    descriptors (``NamedTuple`` of exact ``str``/``int`` fields; anything
+    else raises ``TypeError``) are unpickled on the JVM side into a
+    one-row-per-partition RDD, so the plan is ``MapInArrow <- Scan
+    ExistingRDD`` with no other Python stage.  Like a file scan, that RDD
+    has no size estimate, so a join never broadcasts the scan side.
+    ``read`` turns one descriptor into Arrow batches of ``schema`` (a
+    ``StructType`` or DDL string); no splits gives an empty DataFrame of
+    ``schema``.
     """
     if not splits:
         return spark.createDataFrame([], schema)
     kind = type(splits[0])
+    types = [type(v) for v in splits[0]]
+    for split in splits:
+        for f, t, v in zip(kind._fields, types, split):
+            # bool is an int subclass and would read back as a long; a
+            # float or None has no column type here at all
+            if type(v) is not t or t not in _DESC_TYPES:
+                raise TypeError(
+                    f"{kind.__name__}.{f} = {v!r}: split descriptor fields "
+                    "must all be exact str or all exact int"
+                )
     fields = [
-        T.StructField(f, T.StringType() if isinstance(v, str) else T.LongType(), False)
-        for f, v in zip(kind._fields, splits[0])
+        T.StructField(f, _DESC_TYPES[t], False) for f, t in zip(kind._fields, types)
     ]
     sc = spark.sparkContext
     rows = sc.parallelize([tuple(s) for s in splits], len(splits))

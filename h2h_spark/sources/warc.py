@@ -28,17 +28,25 @@ in bounded chunks — memory is O(chunk + one record), not O(range).
 
 from __future__ import annotations
 
+import functools
 import hashlib
-import math
 from typing import Iterator, Sequence
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from h2h_spark.sources.gzscan import GZ_MAGIC as _GZ_MAGIC
 from h2h_spark.sources.gzscan import GzMemberScanner, ZstMemberScanner
-from h2h_spark.sources.util import file_size, list_part_files, open_input
+from h2h_spark.sources.util import (
+    ByteRange,
+    file_size,
+    list_part_files,
+    open_input,
+    plan_byte_ranges,
+    record_batches,
+    scan_splits,
+)
 
 _MAGIC = b"WARC/1.0\r\n"
 _DELIM = b"\r\n\r\n" + _MAGIC  # inter-record gap + next header's first line
@@ -47,33 +55,14 @@ _CHUNK = 1 << 20  # 1 MiB streaming read unit
 _MAX_HEADER = 64 * 1024  # spec-sane bound on one header block
 
 
-class WarcInputPartition(InputPartition):
-    def __init__(self, path: str, start: int, end: int):
-        self.path = path
-        self.start = start
-        self.end = end
-
-
 def plan_warc_splits(
     paths: Sequence[str],
     max_partition_bytes: int = _DEFAULT_MAX_PARTITION_BYTES,
-) -> list[WarcInputPartition]:
+) -> list[ByteRange]:
     """Plain byte-range planning (record alignment happens in the task —
     WARC records are variable-length, so unlike FLAT there is no
     offset arithmetic the planner could do)."""
-    parts: list[WarcInputPartition] = []
-    for path in paths:
-        size = file_size(path)
-        if size == 0:
-            continue
-        n = max(1, math.ceil(size / max_partition_bytes))
-        base, rem = divmod(size, n)
-        off = 0
-        for i in range(n):
-            ln = base + (1 if i < rem else 0)
-            parts.append(WarcInputPartition(path, off, off + ln))
-            off += ln
-    return parts
+    return plan_byte_ranges(paths, max_partition_bytes)
 
 
 def _parse_header_block(buf: bytes) -> tuple[dict[str, str], int] | None:
@@ -199,100 +188,46 @@ class _RangeScanner:
         self.f.close()
 
 
-_SCHEMA_DDL = (
-    "record_id string, warc_type string, target_uri string, "
-    "content_length bigint, payload_md5 string"
-)
+_SCHEMA = pa.schema([
+    ("record_id", pa.string()), ("warc_type", pa.string()),
+    ("target_uri", pa.string()), ("content_length", pa.int64()),
+    ("payload_md5", pa.string()),
+])
+_PAYLOAD_FIELD = pa.field("payload", pa.binary())
 
 
-def _truthy(v) -> bool:
-    return str(v).lower() in ("1", "true", "yes")
+def _read_split(
+    scanner: type, schema: pa.Schema, split: ByteRange
+) -> Iterator[pa.RecordBatch]:
+    """One split's records through ``scanner`` (plain, gzip-member or
+    zstd-frame).  Batches flush on rows and on payload bytes, so memory
+    stays O(batch + one record) even with payloads."""
+    with_payload = "payload" in schema.names
+    yield from record_batches(
+        (
+            (headers.get("warc-record-id", ""), headers["warc-type"],
+             headers.get("warc-target-uri", ""), len(payload),
+             hashlib.md5(payload).hexdigest())
+            + ((payload,) if with_payload else ())
+            for headers, payload in scanner(*split).records()
+        ),
+        schema,
+    )
 
 
-class WarcDataSource(DataSource):
-    """``spark.read.format("h2h_warc").option("path", ...)``
-
-    ``includePayload=true`` adds a ``payload binary`` column — opt-in
-    because a metadata-only scan (the common audit/accounting shape)
-    should not materialize record bodies into Arrow batches."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "h2h_warc"
-
-    def schema(self) -> str:
-        if _truthy(self.options.get("includePayload", "false")):
-            return _SCHEMA_DDL + ", payload binary"
-        return _SCHEMA_DDL
-
-    def reader(self, schema) -> "WarcReader":
-        return WarcReader(self.options)
-
-
-class WarcReader(DataSourceReader):
-    def __init__(self, options):
-        self.path = options["path"]
-        self.max_bytes = int(
-            options.get("maxPartitionBytes", _DEFAULT_MAX_PARTITION_BYTES)
-        )
-        self.include_payload = _truthy(options.get("includePayload", "false"))
-
-    def partitions(self):
-        return plan_warc_splits(
-            list_part_files(self.path, pattern="*.warc"), self.max_bytes
-        )
-
-    # flush bounds so a partition (with payloads especially) never
-    # materializes in full — memory stays O(batch + one record)
-    _BATCH_RECORDS = 65536
-    _BATCH_BYTES = 32 * 1024 * 1024
-
-    def read(self, part: WarcInputPartition) -> Iterator[pa.RecordBatch]:
-        ids, types, uris, lens, md5s = [], [], [], [], []
-        payloads: list[bytes] = []
-        pending = 0
-
-        def batch() -> pa.RecordBatch:
-            cols = [
-                pa.array(ids, pa.string()),
-                pa.array(types, pa.string()),
-                pa.array(uris, pa.string()),
-                pa.array(lens, pa.int64()),
-                pa.array(md5s, pa.string()),
-            ]
-            names = [
-                "record_id", "warc_type", "target_uri",
-                "content_length", "payload_md5",
-            ]
-            if self.include_payload:
-                cols.append(pa.array(payloads, pa.binary()))
-                names.append("payload")
-            return pa.record_batch(cols, names=names)
-
-        for headers, payload in _RangeScanner(
-            part.path, part.start, part.end
-        ).records():
-            ids.append(headers.get("warc-record-id", ""))
-            types.append(headers["warc-type"])
-            uris.append(headers.get("warc-target-uri", ""))
-            lens.append(len(payload))
-            md5s.append(hashlib.md5(payload).hexdigest())
-            if self.include_payload:
-                payloads.append(payload)
-                pending += len(payload)
-            if (
-                len(ids) >= self._BATCH_RECORDS
-                or pending >= self._BATCH_BYTES
-            ):
-                yield batch()
-                ids, types, uris, lens, md5s = [], [], [], [], []
-                payloads = []
-                pending = 0
-        yield batch()
-
-
-def register_warc(spark: SparkSession) -> None:
-    spark.dataSource.register(WarcDataSource)
+def _scan(
+    spark: SparkSession,
+    splits: list[ByteRange],
+    scanner: type,
+    include_payload: bool = False,
+) -> DataFrame:
+    schema = _SCHEMA.append(_PAYLOAD_FIELD) if include_payload else _SCHEMA
+    return scan_splits(
+        spark,
+        splits,
+        functools.partial(_read_split, scanner, schema),
+        from_arrow_schema(schema),
+    )
 
 
 def read_warc(
@@ -301,14 +236,13 @@ def read_warc(
     max_partition_bytes: int = _DEFAULT_MAX_PARTITION_BYTES,
     include_payload: bool = False,
 ) -> DataFrame:
-    register_warc(spark)
-    return (
-        spark.read.format("h2h_warc")
-        .option("path", path)
-        .option("maxPartitionBytes", str(max_partition_bytes))
-        .option("includePayload", str(include_payload).lower())
-        .load()
+    """``include_payload=True`` adds a ``payload binary`` column — opt-in
+    because a metadata-only scan (the common audit/accounting shape)
+    should not materialize record bodies into Arrow batches."""
+    splits = plan_warc_splits(
+        list_part_files(path, pattern="*.warc"), max_partition_bytes
     )
+    return _scan(spark, splits, _RangeScanner, include_payload)
 
 
 def write_warc_records(
@@ -401,72 +335,15 @@ class _GzMemberScanner(GzMemberScanner):
             yield headers, plain[hlen:hlen + clen]
 
 
-class WarcGzDataSource(DataSource):
-    """``spark.read.format("h2h_warc_gz")`` — gzip-member WARC."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "h2h_warc_gz"
-
-    def schema(self) -> str:
-        return _SCHEMA_DDL
-
-    def reader(self, schema) -> "WarcGzReader":
-        return WarcGzReader(self.options)
-
-
-class WarcGzReader(WarcReader):
-    def partitions(self):
-        return plan_warc_splits(
-            list_part_files(self.path, pattern="*.warc.gz"), self.max_bytes
-        )
-
-    def read(self, part: WarcInputPartition) -> Iterator[pa.RecordBatch]:
-        import hashlib as _hashlib
-
-        ids, types, uris, lens, md5s = [], [], [], [], []
-
-        def batch() -> pa.RecordBatch:
-            return pa.record_batch(
-                [
-                    pa.array(ids, pa.string()),
-                    pa.array(types, pa.string()),
-                    pa.array(uris, pa.string()),
-                    pa.array(lens, pa.int64()),
-                    pa.array(md5s, pa.string()),
-                ],
-                names=[
-                    "record_id", "warc_type", "target_uri",
-                    "content_length", "payload_md5",
-                ],
-            )
-
-        for headers, payload in _GzMemberScanner(
-            part.path, part.start, part.end
-        ).records():
-            ids.append(headers.get("warc-record-id", ""))
-            types.append(headers["warc-type"])
-            uris.append(headers.get("warc-target-uri", ""))
-            lens.append(len(payload))
-            md5s.append(_hashlib.md5(payload).hexdigest())
-            if len(ids) >= self._BATCH_RECORDS:
-                yield batch()
-                ids, types, uris, lens, md5s = [], [], [], [], []
-        yield batch()
-
-
 def read_warc_gz(
     spark: SparkSession,
     path: str,
     max_partition_bytes: int = _DEFAULT_MAX_PARTITION_BYTES,
 ) -> DataFrame:
-    spark.dataSource.register(WarcGzDataSource)
-    return (
-        spark.read.format("h2h_warc_gz")
-        .option("path", path)
-        .option("maxPartitionBytes", str(max_partition_bytes))
-        .load()
+    splits = plan_warc_splits(
+        list_part_files(path, pattern="*.warc.gz"), max_partition_bytes
     )
+    return _scan(spark, splits, _GzMemberScanner)
 
 
 # ---------------------------------------------------------------------------
@@ -565,84 +442,28 @@ class _ZstMemberScanner(ZstMemberScanner):
                 off += hlen + clen + 4  # skip the closing \r\n\r\n
 
 
-class WarcZstDataSource(DataSource):
-    """``spark.read.format("h2h_warc_zst")`` — zstd-member WARC."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "h2h_warc_zst"
-
-    def schema(self) -> str:
-        return _SCHEMA_DDL
-
-    def reader(self, schema) -> "WarcZstReader":
-        return WarcZstReader(self.options)
-
-
-class WarcZstReader(WarcReader):
-    def partitions(self):
-        paths = list_part_files(self.path, pattern="*.warc.zst")
-        for p in paths:
-            with open_input(p) as f:
-                if f.read(4) == _ZST_DICT_MAGIC:
-                    # dictionary decode is zstandard-only: surface the
-                    # missing dependency at PLANNING time, not as one
-                    # opaque failure per task
-                    try:
-                        import zstandard  # noqa: F401
-                    except ImportError:
-                        raise ValueError(
-                            f"{p} starts with a zstd dictionary frame; "
-                            f"dictionary-compressed .warc.zst needs the "
-                            f"'zstandard' package (pyarrow's codec takes "
-                            f"no dictionary) — install it or repack "
-                            f"without a dictionary"
-                        ) from None
-        return plan_warc_splits(paths, self.max_bytes)
-
-    def read(self, part: WarcInputPartition) -> Iterator[pa.RecordBatch]:
-        import hashlib as _hashlib
-
-        ids, types, uris, lens, md5s = [], [], [], [], []
-
-        def batch() -> pa.RecordBatch:
-            return pa.record_batch(
-                [
-                    pa.array(ids, pa.string()),
-                    pa.array(types, pa.string()),
-                    pa.array(uris, pa.string()),
-                    pa.array(lens, pa.int64()),
-                    pa.array(md5s, pa.string()),
-                ],
-                names=[
-                    "record_id", "warc_type", "target_uri",
-                    "content_length", "payload_md5",
-                ],
-            )
-
-        for headers, payload in _ZstMemberScanner(
-            part.path, part.start, part.end
-        ).records():
-            ids.append(headers.get("warc-record-id", ""))
-            types.append(headers["warc-type"])
-            uris.append(headers.get("warc-target-uri", ""))
-            lens.append(len(payload))
-            md5s.append(_hashlib.md5(payload).hexdigest())
-            if len(ids) >= self._BATCH_RECORDS:
-                yield batch()
-                ids, types, uris, lens, md5s = [], [], [], [], []
-        yield batch()
-
-
 def read_warc_zst(
     spark: SparkSession,
     path: str,
     max_partition_bytes: int = _DEFAULT_MAX_PARTITION_BYTES,
 ) -> DataFrame:
-    spark.dataSource.register(WarcZstDataSource)
-    return (
-        spark.read.format("h2h_warc_zst")
-        .option("path", path)
-        .option("maxPartitionBytes", str(max_partition_bytes))
-        .load()
+    paths = list_part_files(path, pattern="*.warc.zst")
+    for p in paths:
+        with open_input(p) as f:
+            if f.read(4) == _ZST_DICT_MAGIC:
+                # dictionary decode is zstandard-only: surface the missing
+                # dependency at planning time, not as one opaque failure
+                # per task
+                try:
+                    import zstandard  # noqa: F401
+                except ImportError:
+                    raise ValueError(
+                        f"{p} starts with a zstd dictionary frame; "
+                        f"dictionary-compressed .warc.zst needs the "
+                        f"'zstandard' package (pyarrow's codec takes "
+                        f"no dictionary) — install it or repack "
+                        f"without a dictionary"
+                    ) from None
+    return _scan(
+        spark, plan_warc_splits(paths, max_partition_bytes), _ZstMemberScanner
     )

@@ -22,16 +22,16 @@ fails loudly.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import zlib
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-from h2h_spark.sources.util import strip_scheme
+from h2h_spark.sources.util import scan_splits, strip_scheme
 
 _DDL = {
     "f8": "double", "f4": "float", "f2": "float",
@@ -74,111 +74,71 @@ def read_zarray(store: str) -> dict:
     return z
 
 
-class ZarrInputPartition(InputPartition):
-    def __init__(self, store: str, z: dict, chunk_row_lo: int,
-                 chunk_row_hi: int):
-        self.store = store
-        self.z = z
-        self.chunk_row_lo = chunk_row_lo
-        self.chunk_row_hi = chunk_row_hi
+class ZarrSplit(NamedTuple):
+    chunk_row_lo: int
+    chunk_row_hi: int  # exclusive
 
 
-class ZarrDataSource(DataSource):
-    """``spark.read.format("h2h_zarr")`` — rows of one 2-D zarr store
-    (the ``path`` IS the store directory) as ``(row_idx, vec)``.
-    Options: ``path``, ``chunkRowsPerSplit`` (grid rows per task,
-    default 1)."""
+def _read_split(store: str, z: dict, split: ZarrSplit) -> Iterator[pa.RecordBatch]:
+    import numpy as np
 
-    @classmethod
-    def name(cls) -> str:
-        return "h2h_zarr"
-
-    def schema(self) -> str:
-        z = read_zarray(self.options["path"])
-        return (
-            "row_idx bigint, "
-            f"vec array<{_DDL[z['dtype'].lstrip('<>|=')]}>"
-        )
-
-    def reader(self, schema) -> "ZarrReader":
-        return ZarrReader(self.options)
-
-
-class ZarrReader(DataSourceReader):
-    def __init__(self, options):
-        self.store = options["path"]
-        self.per_split = int(options.get("chunkRowsPerSplit", 1))
-
-    def partitions(self):
-        z = read_zarray(self.store)
-        n_chunk_rows = -(-z["shape"][0] // z["chunks"][0])
-        return [
-            ZarrInputPartition(
-                self.store, z, lo, min(lo + self.per_split, n_chunk_rows)
-            )
-            for lo in range(0, max(n_chunk_rows, 1), self.per_split)
-        ]
-
-    def read(self, part: ZarrInputPartition) -> Iterator[pa.RecordBatch]:
-        import numpy as np
-
-        z = part.z
-        n, d = z["shape"]
-        cn, cd = z["chunks"]
-        n_chunk_cols = -(-d // cd)
-        dtype = np.dtype(z["dtype"])
-        compressed = z.get("compressor") is not None
-        store = strip_scheme(part.store)
-        for ci in range(part.chunk_row_lo, part.chunk_row_hi):
-            row_lo = ci * cn
-            rows_here = min(cn, n - row_lo)
-            if rows_here <= 0:
-                continue
-            cols = []
-            for cj in range(n_chunk_cols):
-                cp = os.path.join(store, f"{ci}.{cj}")
-                if not os.path.exists(cp):
-                    # spec: absent chunk = all fill_value.  A null
-                    # fill_value means UNDEFINED (zarr v2 spec) — there
-                    # is no default, so fabricating zeros would invent
-                    # data the store never wrote.  Fail loud instead.
-                    fill = z.get("fill_value")
-                    if fill is None:
-                        raise ValueError(
-                            f"{cp}: chunk absent and .zarray fill_value "
-                            "is null (undefined) — cannot materialize"
-                        )
-                    block = np.full((cn, cd), fill, dtype=dtype)
-                else:
-                    raw = open(cp, "rb").read()
-                    if compressed:
-                        raw = zlib.decompress(raw)
-                    if len(raw) != cn * cd * dtype.itemsize:
-                        raise ValueError(
-                            f"{cp}: chunk holds {len(raw)} bytes, "
-                            f"expected {cn * cd * dtype.itemsize} "
-                            "(zarr chunks are stored full-size)"
-                        )
-                    block = np.frombuffer(raw, dtype=dtype).reshape(cn, cd)
-                cols.append(block)
-            mat = np.hstack(cols)[:rows_here, :d]
-            if mat.dtype.str.endswith("f2"):
-                mat = mat.astype("<f4")
-            elif mat.dtype.str.endswith("u1") and mat.dtype.kind == "u":
-                mat = mat.astype("<i2")
-            if mat.dtype.kind == "b":
-                pa_type = pa.bool_()
-                mat = mat.astype(bool)
+    n, d = z["shape"]
+    cn, cd = z["chunks"]
+    n_chunk_cols = -(-d // cd)
+    dtype = np.dtype(z["dtype"])
+    compressed = z.get("compressor") is not None
+    store = strip_scheme(store)
+    for ci in range(split.chunk_row_lo, split.chunk_row_hi):
+        row_lo = ci * cn
+        rows_here = min(cn, n - row_lo)
+        if rows_here <= 0:
+            continue
+        cols = []
+        for cj in range(n_chunk_cols):
+            cp = os.path.join(store, f"{ci}.{cj}")
+            if not os.path.exists(cp):
+                # spec: absent chunk = all fill_value.  A null
+                # fill_value means UNDEFINED (zarr v2 spec) — there
+                # is no default, so fabricating zeros would invent
+                # data the store never wrote.  Fail loud instead.
+                fill = z.get("fill_value")
+                if fill is None:
+                    raise ValueError(
+                        f"{cp}: chunk absent and .zarray fill_value "
+                        "is null (undefined) — cannot materialize"
+                    )
+                block = np.full((cn, cd), fill, dtype=dtype)
             else:
-                pa_type = pa.from_numpy_dtype(mat.dtype)
-            flat = pa.array(np.ascontiguousarray(mat).reshape(-1),
-                            type=pa_type)
-            yield pa.record_batch({
-                "row_idx": pa.array(range(row_lo, row_lo + rows_here),
-                                    type=pa.int64()),
-                "vec": pa.FixedSizeListArray.from_arrays(flat, d)
-                .cast(pa.list_(pa_type)),
-            })
+                with open(cp, "rb") as f:
+                    raw = f.read()
+                if compressed:
+                    raw = zlib.decompress(raw)
+                if len(raw) != cn * cd * dtype.itemsize:
+                    raise ValueError(
+                        f"{cp}: chunk holds {len(raw)} bytes, "
+                        f"expected {cn * cd * dtype.itemsize} "
+                        "(zarr chunks are stored full-size)"
+                    )
+                block = np.frombuffer(raw, dtype=dtype).reshape(cn, cd)
+            cols.append(block)
+        mat = np.hstack(cols)[:rows_here, :d]
+        if mat.dtype.str.endswith("f2"):
+            mat = mat.astype("<f4")
+        elif mat.dtype.str.endswith("u1") and mat.dtype.kind == "u":
+            mat = mat.astype("<i2")
+        if mat.dtype.kind == "b":
+            pa_type = pa.bool_()
+            mat = mat.astype(bool)
+        else:
+            pa_type = pa.from_numpy_dtype(mat.dtype)
+        flat = pa.array(np.ascontiguousarray(mat).reshape(-1),
+                        type=pa_type)
+        yield pa.record_batch({
+            "row_idx": pa.array(range(row_lo, row_lo + rows_here),
+                                type=pa.int64()),
+            "vec": pa.FixedSizeListArray.from_arrays(flat, d)
+            .cast(pa.list_(pa_type)),
+        })
 
 
 def write_zarray(store: str, shape, chunks, dtype: str = "<f4",
@@ -215,10 +175,15 @@ def write_zarr_chunk(store: str, ci: int, cj: int, block,
 def read_zarr(
     spark: SparkSession, store: str, chunk_rows_per_split: int = 1
 ) -> DataFrame:
-    spark.dataSource.register(ZarrDataSource)
-    return (
-        spark.read.format("h2h_zarr")
-        .option("path", store)
-        .option("chunkRowsPerSplit", str(chunk_rows_per_split))
-        .load()
+    """Rows of one 2-D zarr store as ``(row_idx, vec)``, one task per
+    ``chunk_rows_per_split`` rows of the chunk grid."""
+    z = read_zarray(store)
+    n_chunk_rows = -(-z["shape"][0] // z["chunks"][0])
+    splits = [
+        ZarrSplit(lo, min(lo + chunk_rows_per_split, n_chunk_rows))
+        for lo in range(0, max(n_chunk_rows, 1), chunk_rows_per_split)
+    ]
+    ddl = f"row_idx bigint, vec array<{_DDL[z['dtype'].lstrip('<>|=')]}>"
+    return scan_splits(
+        spark, splits, functools.partial(_read_split, store, z), ddl
     )

@@ -3,7 +3,9 @@ TAR (no index → checksum resync) and Arrow IPC (footer index): ZIP's
 END-OF-CENTRAL-DIRECTORY record + central directory give EXACT member
 offsets, so the planner reads the directory once (KBs, driver-side, the
 same role as a parquet footer) and assigns member RUNS to tasks — no
-resync scanning at all, and each task random-accesses only its members.
+resync scanning at all.  A split names only its run's byte range of the
+directory and its entry count; the task re-parses just those entries and
+random-accesses only their members.
 
 Reader tasks parse the REAL local headers (PK\\x03\\x04), inflate
 stored/deflated data, and hard-verify CRC-32 and sizes — a corrupt
@@ -16,13 +18,19 @@ from __future__ import annotations
 import hashlib
 import struct
 import zlib
-from typing import Iterator, Sequence
+from typing import Iterator, NamedTuple
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+from pyspark.sql.pandas.types import from_arrow_schema
 
-from h2h_spark.sources.util import file_size, list_part_files, open_input
+from h2h_spark.sources.util import (
+    file_size,
+    list_part_files,
+    open_input,
+    record_batches,
+    scan_splits,
+)
 
 _EOCD_SIG = b"PK\x05\x06"
 _EOCD64_SIG = b"PK\x06\x06"
@@ -105,17 +113,13 @@ def _locate_directory(path: str, f, size: int) -> tuple[int, int, int]:
     return n_entries, cd_size, cd_off
 
 
-def read_central_directory(path: str) -> list[dict]:
-    """Driver-side directory read: locate the EOCD in the file tail
-    (it floats behind an optional comment, max 64 KiB), follow the
-    ZIP64 records when present, then parse every central-directory
-    entry (including per-entry zip64 extra fields)."""
-    size = file_size(path)
-    with open_input(path) as f:
-        n_entries, cd_size, cd_off = _locate_directory(path, f, size)
-        f.seek(cd_off)
-        cd = f.read(cd_size)
-    members, off = [], 0
+def _directory_entries(
+    path: str, cd: bytes, n_entries: int
+) -> Iterator[tuple[int, dict]]:
+    """Parse ``n_entries`` central-directory entries from ``cd``
+    (including per-entry zip64 extra fields); yields each entry's end
+    offset in ``cd`` with its member dict."""
+    off = 0
     for _ in range(n_entries):
         if cd[off:off + 4] != _CDH_SIG:
             raise ValueError(f"{path}: bad central-directory signature")
@@ -138,20 +142,52 @@ def read_central_directory(path: str) -> list[dict]:
             usize = vals.get("usize", usize)
             csize = vals.get("csize", csize)
             lfh_off = vals.get("lfh_off", lfh_off)
-        members.append(
-            {
-                "name": name, "method": method, "crc": crc,
-                "csize": csize, "usize": usize, "lfh_off": lfh_off,
-            }
-        )
         off += 46 + nlen + elen + clen
-    return members
+        yield off, {
+            "name": name, "method": method, "crc": crc,
+            "csize": csize, "usize": usize, "lfh_off": lfh_off,
+        }
 
 
-class ZipInputPartition(InputPartition):
-    def __init__(self, path: str, members: list[dict]):
-        self.path = path
-        self.members = members
+def _read_directory(path: str) -> tuple[int, bytes, int]:
+    """``(cd_off, cd_bytes, n_entries)``: locate the EOCD in the file tail
+    (it floats behind an optional comment, max 64 KiB), follow the ZIP64
+    records when present, and read the directory."""
+    size = file_size(path)
+    with open_input(path) as f:
+        n_entries, cd_size, cd_off = _locate_directory(path, f, size)
+        f.seek(cd_off)
+        return cd_off, f.read(cd_size), n_entries
+
+
+def read_central_directory(path: str) -> list[dict]:
+    """Driver-side directory read: every member's entry."""
+    _, cd, n_entries = _read_directory(path)
+    return [m for _, m in _directory_entries(path, cd, n_entries)]
+
+
+class ZipSplit(NamedTuple):
+    path: str
+    cd_off: int  # file offset of the run's first directory entry
+    cd_len: int  # bytes of the run's directory entries
+    n_entries: int
+
+
+def plan_zip_splits(path: str, members_per_split: int) -> list[ZipSplit]:
+    """Runs of ``members_per_split`` members, each named by its slice of
+    the central directory (parsed whole here, so a malformed entry fails
+    the planner)."""
+    cd_off, cd, n = _read_directory(path)
+    bounds = [0] + [end for end, _ in _directory_entries(path, cd, n)]
+    return [
+        ZipSplit(
+            path,
+            cd_off + bounds[lo],
+            bounds[min(lo + members_per_split, n)] - bounds[lo],
+            min(lo + members_per_split, n) - lo,
+        )
+        for lo in range(0, n, members_per_split)
+    ]
 
 
 def read_member(f, m: dict) -> bytes:
@@ -174,73 +210,30 @@ def read_member(f, m: dict) -> bytes:
     return data
 
 
-_SCHEMA_DDL = (
-    "name string, method int, size bigint, content_md5 string"
-)
+_SCHEMA = pa.schema([
+    ("name", pa.string()), ("method", pa.int32()), ("size", pa.int64()),
+    ("content_md5", pa.string()),
+])
 
 
-class ZipDataSource(DataSource):
-    """``spark.read.format("h2h_zip").option("path", ...)``"""
-
-    @classmethod
-    def name(cls) -> str:
-        return "h2h_zip"
-
-    def schema(self) -> str:
-        return _SCHEMA_DDL
-
-    def reader(self, schema) -> "ZipReader":
-        return ZipReader(self.options)
-
-
-class ZipReader(DataSourceReader):
-    def __init__(self, options):
-        self.path = options["path"]
-        self.members_per_split = int(options.get("membersPerSplit", 1024))
-
-    def partitions(self):
-        parts = []
-        for f in list_part_files(self.path, pattern="*.zip"):
-            members = read_central_directory(f)
-            for lo in range(0, max(len(members), 1), self.members_per_split):
-                parts.append(
-                    ZipInputPartition(
-                        f, members[lo:lo + self.members_per_split]
-                    )
-                )
-        return parts
-
-    def read(self, part: ZipInputPartition) -> Iterator[pa.RecordBatch]:
-        names, methods, sizes, md5s = [], [], [], []
-        with open_input(part.path) as f:
-            for m in part.members:
-                data = read_member(f, m)
-                names.append(m["name"])
-                methods.append(m["method"])
-                sizes.append(len(data))
-                md5s.append(hashlib.md5(data).hexdigest())
-        yield pa.record_batch(
-            [
-                pa.array(names, pa.string()),
-                pa.array(methods, pa.int32()),
-                pa.array(sizes, pa.int64()),
-                pa.array(md5s, pa.string()),
-            ],
-            names=["name", "method", "size", "content_md5"],
-        )
-
-
-def register_zip(spark: SparkSession) -> None:
-    spark.dataSource.register(ZipDataSource)
+def _read_split(split: ZipSplit) -> Iterator[pa.RecordBatch]:
+    with open_input(split.path) as f:
+        f.seek(split.cd_off)
+        cd = f.read(split.cd_len)
+        rows = []
+        for _, m in _directory_entries(split.path, cd, split.n_entries):
+            data = read_member(f, m)
+            rows.append((m["name"], m["method"], len(data),
+                         hashlib.md5(data).hexdigest()))
+    yield from record_batches(rows, _SCHEMA)
 
 
 def read_zip(
     spark: SparkSession, path: str, members_per_split: int = 1024
 ) -> DataFrame:
-    register_zip(spark)
-    return (
-        spark.read.format("h2h_zip")
-        .option("path", path)
-        .option("membersPerSplit", str(members_per_split))
-        .load()
-    )
+    splits = [
+        s
+        for f in list_part_files(path, pattern="*.zip")
+        for s in plan_zip_splits(f, members_per_split)
+    ]
+    return scan_splits(spark, splits, _read_split, from_arrow_schema(_SCHEMA))

@@ -2,7 +2,9 @@
 
 For each query: count Exchanges, flag CartesianProduct/BroadcastNestedLoop
 joins, per-row Python UDFs (BatchEvalPython — the row-at-a-time slow
-path), missing parquet filter pushdown, and report broadcast usage.
+path), Python DataSource scans (``BatchScan <name>[...] (Python)`` — every
+reader plans its splits on the driver and scans them with MapInArrow
+instead), missing parquet filter pushdown, and report broadcast usage.
 Arrow-batched stages (ArrowEvalPython / MapInPandas / MapInArrow) are
 listed informationally — they are the sanctioned vectorized path.
 
@@ -27,6 +29,7 @@ def audit(plan: str) -> dict:
         "cartesian": "CartesianProduct" in plan,
         "bnlj": "BroadcastNestedLoopJoin" in plan,
         "py_row_udf": "BatchEvalPython" in plan,  # row-at-a-time: forbidden
+        "py_datasource": re.search(r"BatchScan [^\n]*\(Python\)", plan) is not None,
         "arrow_stages": len(
             re.findall(r"ArrowEvalPython|MapInPandas|MapInArrow|FlatMapGroupsInPandas", plan)
         ),
@@ -55,6 +58,8 @@ def main() -> int:
         flags = []
         if a["py_row_udf"]:
             flags.append("PY-ROW-UDF")
+        if a["py_datasource"]:
+            flags.append("PY-DATASOURCE")
         if a["cartesian"]:
             flags.append("CARTESIAN")
         rows.append((name, a, flags))

@@ -141,6 +141,10 @@ def test_sequence_pack_single_range_exchange(spark):
 
     for m in _re.finditer(r"Window \[[^\]]*\], \[([^\]]*)\]", plan):
         assert m.group(1).strip(), "global (unpartitioned) window in plan"
+    # the production path materializes: its plan is the checkpointed scan
+    prod = pack_sequences(docs, "doc_id", "n", budget=4096, n_parts=8)
+    plan = prod._jdf.queryExecution().executedPlan().toString()
+    assert re.match(r"(\*\(\d+\) )?Scan ExistingRDD", plan), plan
 
 
 def test_partition_pruning_in_plan(spark):
@@ -444,7 +448,6 @@ def _h2h_scan(spark, tmp_work, reader):
     """One h2h reader over an input cut into several splits, and the
     number of splits its driver-side planner makes for that input."""
     from h2h_spark import read_flat, read_xml, write_flat, write_xml
-    from h2h_spark.sources.csv_split import byte_ranges, read_csv_quoted_splits
     from h2h_spark.sources.flat import plan_flat_splits
     from h2h_spark.sources.util import list_part_files
     from h2h_spark.sources.xml import plan_xml_splits
@@ -459,6 +462,14 @@ def _h2h_scan(spark, tmp_work, reader):
         write_xml(cust, path)
         splits = plan_xml_splits(list_part_files(path, pattern="*"), 4096)
         return read_xml(spark, path, LAY, max_partition_bytes=4096), len(splits)
+    if reader == "csv_quoted":
+        return _csv_quoted_scan(spark, path)
+    return _container_scan(spark, cust, path, reader)
+
+
+def _csv_quoted_scan(spark, path):
+    from h2h_spark.sources.csv_split import byte_ranges, read_csv_quoted_splits
+
     text = "".join(f"{i},'line{i}\nnext'\n" for i in range(300))
     with open(path, "w") as f:
         f.write(text)
@@ -467,6 +478,59 @@ def _h2h_scan(spark, tmp_work, reader):
     )
     df = read_csv_quoted_splits(spark, path, schema, max_partition_bytes=1024)
     return df, len(byte_ranges(len(text), 1024))
+
+
+def _container_scan(spark, cust, path, reader):
+    """The container and Avro readers, one per kind of split descriptor:
+    byte range (warc), batch run (arrow), rowid range (sqlite), directory
+    slice (zip), npz member rows, zarr chunk rows, Avro sync-realigned
+    range."""
+    import zipfile
+
+    import numpy as np
+    import pyarrow as pa
+
+    from h2h_spark.sources import arrowipc, avro, npy, sqlitesrc, warc, zarr, zipsrc
+    from h2h_spark.sources.util import byte_ranges, file_size, list_part_files
+
+    os.makedirs(path)
+    if reader == "warc":
+        warc.write_warc_records(f"{path}/a.warc", [
+            ({"WARC-Type": "response", "WARC-Record-ID": f"<urn:{i}>"}, b"p" * i)
+            for i in range(60)
+        ])
+        splits = warc.plan_warc_splits(list_part_files(path, pattern="*.warc"), 512)
+        return warc.read_warc(spark, path, max_partition_bytes=512), len(splits)
+    if reader == "arrow":
+        arrowipc.write_arrow_ipc(
+            pa.table({"id": pa.array(range(100), pa.int64())}), f"{path}/a.arrow",
+            chunk_rows=10,
+        )
+        return arrowipc.read_arrow_ipc(spark, path, batches_per_split=3), 4
+    if reader == "sqlite":
+        p = f"{path}/a.sqlite"
+        sqlitesrc.write_sqlite(p, "t", [("id", "INTEGER")], [(i,) for i in range(100)])
+        splits = sqlitesrc.plan_sqlite_splits([p], "t", 30)
+        return sqlitesrc.read_sqlite(spark, p, "t", max_rows_per_task=30), len(splits)
+    if reader == "zip":
+        with zipfile.ZipFile(f"{path}/a.zip", "w", zipfile.ZIP_DEFLATED) as z:
+            for i in range(20):
+                z.writestr(f"m{i:03d}", b"x" * (i + 1))
+        return zipsrc.read_zip(spark, path, members_per_split=7), 3
+    if reader == "npz":
+        np.savez(f"{path}/a.npz", emb=np.ones((33, 5), dtype="<f4"))
+        return npy.read_npz(spark, path, "emb", rows_per_split=10), 4
+    if reader == "zarr":
+        zarr.write_zarray(path, (8, 4), (2, 4))
+        for ci in range(4):
+            zarr.write_zarr_chunk(path, ci, 0, np.ones((2, 4), dtype="<f4"))
+        return zarr.read_zarr(spark, path), 4
+    avro.write_avro(cust, f"{path}/t")
+    n_splits = sum(
+        len(byte_ranges(file_size(p) - avro._read_header(p)[3], 2048))
+        for p in list_part_files(f"{path}/t")
+    )
+    return avro.read_avro(spark, f"{path}/t", max_partition_bytes=2048), n_splits
 
 
 def _broadcast_subtrees(plan: str) -> list[str]:
@@ -486,9 +550,13 @@ def _broadcast_subtrees(plan: str) -> list[str]:
     return out
 
 
-@pytest.mark.parametrize("reader", ["flat", "xml", "csv_quoted"])
+@pytest.mark.parametrize(
+    "reader",
+    ["flat", "xml", "csv_quoted", "warc", "arrow", "sqlite", "zip", "npz", "zarr",
+     "avro"],
+)
 def test_h2h_scan_is_one_map_in_arrow_task_per_split(spark, tmp_work, reader):
-    """The h2h readers plan splits on the driver and scan them as
+    """Every reader plans splits on the driver and scans them as
     MapInArrow over the descriptor RDD: one partition per split, no other
     Python stage, and no size estimate, so a join against a range smaller
     than the broadcast threshold broadcasts the range, never the scan."""

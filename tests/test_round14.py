@@ -26,7 +26,7 @@ def _edges(spark):
     "pagerank", "label_propagation", "label_propagation_semisync",
     "bfs_distances", "sssp_bounded", "feature_propagation",
     "connected_components", "simhash_near_duplicates", "jaccard_pairs",
-    "dbscan_2d",
+    "dbscan_2d", "minhash_dedup_against_index",
 ])
 def test_no_cache_residue(spark, op):
     """Every persist() inside the operator is released by the time the
@@ -85,6 +85,12 @@ def test_no_cache_residue(spark, op):
             "pid bigint, x double, y double",
         )
         out = dbscan_2d(pts, "pid", "x", "y", eps=0.02, min_pts=3)
+    elif op == "minhash_dedup_against_index":
+        entries, sets = D.minhash_index(docs.filter("doc_id < 20"), "doc_id", "text")
+        out = D.minhash_dedup_against_index(
+            docs.filter("doc_id >= 20"), entries, sets, "doc_id", "text"
+        )
+        sets.unpersist()  # the index's sets are the caller's to release
     else:
         out = D.jaccard_pairs(docs, "doc_id", "text", threshold=0.1)
     out.write.format("noop").mode("overwrite").save()
@@ -122,6 +128,27 @@ def test_lpa_releases_edge_cache_on_failure(spark, monkeypatch, op):
     assert len(calls) == 2
     jcm = spark._jsparkSession.sharedState().cacheManager()
     assert jcm.isEmpty(), f"{op}: edge cache leaked on the exception path"
+
+
+def test_dbscan_releases_caches_on_failure(spark, monkeypatch):
+    """dbscan_2d releases its neighbor-list and core-id caches when the
+    connected-components step raises."""
+    from h2h_spark.operators import dedup as D
+    from h2h_spark.operators.spatial import dbscan_2d
+
+    def failing(*args, **kwargs):
+        raise RuntimeError("sub-step failed")
+
+    pts = spark.createDataFrame(
+        [(i, (i % 7) * 0.01, (i % 5) * 0.01) for i in range(60)],
+        "pid bigint, x double, y double",
+    )
+    spark.catalog.clearCache()
+    monkeypatch.setattr(D, "connected_components_star", failing)
+    with pytest.raises(RuntimeError, match="sub-step failed"):
+        dbscan_2d(pts, "pid", "x", "y", eps=0.02, min_pts=3)
+    jcm = spark._jsparkSession.sharedState().cacheManager()
+    assert jcm.isEmpty(), "dbscan_2d leaked a cache on the exception path"
 
 
 def test_pq_inrow_size_guard_fallback(spark):

@@ -403,6 +403,28 @@ def test_flat_misaligned_file_raises_at_read(spark, tmp_work):
         read_flat(spark, d, lay)
 
 
+def test_scan_splits_rejects_non_str_int_fields(spark):
+    """A descriptor field the JVM row cannot carry faithfully (a bool
+    reads back as 0, a float or None has no column type) is refused on
+    the driver, before any job runs."""
+    from typing import NamedTuple
+
+    from h2h_spark.sources.util import scan_splits
+
+    class Split(NamedTuple):
+        path: str
+        gz: object
+
+    def read(split):
+        raise AssertionError("no task may run")
+
+    for bad in (True, 1.5, None):
+        with pytest.raises(TypeError, match="gz"):
+            scan_splits(spark, [Split("a", 1), Split("b", bad)], read, "x long")
+    with pytest.raises(TypeError, match="gz"):
+        scan_splits(spark, [Split("a", True), Split("b", False)], read, "x long")
+
+
 def test_xml_attribute_fields(spark, tmp_work):
     """ECL-style XML with fields as attributes on the row tag — the reader
     falls back to attributes when no child element matches."""
@@ -782,9 +804,8 @@ def test_avro_nested_roundtrip(spark, tmp_work):
     OCF roundtrip across multi-block, multi-split deflate reads."""
     from pyspark.sql import functions as F
 
-    from h2h_spark.sources.avro import AvroDataSource, read_avro, write_avro
+    from h2h_spark.sources.avro import read_avro, write_avro
 
-    spark.dataSource.register(AvroDataSource)
     df = spark.range(50).select(
         F.col("id"),
         F.struct(
@@ -815,9 +836,8 @@ def test_avro_nullable_map_values_and_elements(spark, tmp_work):
     as ["null", T] unions and roundtrip with the nulls intact."""
     from pyspark.sql import functions as F
 
-    from h2h_spark.sources.avro import AvroDataSource, read_avro, write_avro
+    from h2h_spark.sources.avro import read_avro, write_avro
 
-    spark.dataSource.register(AvroDataSource)
     df = spark.range(6).select(
         F.col("id"),
         F.create_map(

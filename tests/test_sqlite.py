@@ -248,7 +248,7 @@ def test_sqlite_exact_split_multicluster_skew(spark, tmp_work):
     assert max(hist) <= 100                   # per-task bound holds
     rng = _counts("range")
     assert max(rng) >= 300                    # range mode is lopsided here
-    # end-to-end read through the DataSource agrees
+    # end-to-end read through read_sqlite agrees
     ids = sorted(
         r["id"] for r in read_sqlite(
             spark, p, "t", max_rows_per_task=100, split_mode="exact"
