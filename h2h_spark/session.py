@@ -4,6 +4,14 @@ Local mode is one JVM with N threads; on a real cluster the same confs hold
 (AQE, Arrow, UTC).  ``spark.sql.shuffle.partitions`` should track cluster
 cores — at 100 TB you would set it to a few × total cores and let AQE
 coalesce; locally we match the core count.
+
+Python tasks start through :mod:`h2h_spark.worker_daemon`
+(``spark.python.daemon.module``).  pyspark's stock daemon has every task
+re-read the central directory of each zip on the workers' import path
+(``pyspark.zip``, py4j, the spark-core jar), ~0.25 s of CPU per task
+before its body runs; the engine's daemon re-reads a zip only when it
+changed.  The module must be importable wherever the workers run, as the
+engine's own task functions already must be.
 """
 
 from __future__ import annotations
@@ -68,6 +76,8 @@ def get_spark(app_name: str = "h2h_spark", cpus: int | None = None) -> SparkSess
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.driver.memory", os.environ.get("H2H_SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # see the module docstring: no per-task zip directory re-reads
+        .config("spark.python.daemon.module", "h2h_spark.worker_daemon")
         # Parquet TIMESTAMP(NANOS) (e.g. the events table) has no Spark
         # timestamp type; read as long and convert explicitly.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

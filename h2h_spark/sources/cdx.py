@@ -434,10 +434,14 @@ def read_cdx(
     path: str,
     max_partition_bytes: int = _DEFAULT_MAX_PARTITION_BYTES,
 ) -> DataFrame:
+    # Both listings are suffix-filtered: list_part_files returns a
+    # single-file path as-is regardless of pattern, and a file must never
+    # be planned as both gz and plain text.
     splits = [
         CdxSplit(p, s, e, mode)
-        for mode, pattern in (("gz", "*.cdxj.gz"), ("plain", "*.cdxj"))
-        for p in list_part_files(path, pattern=pattern)
+        for mode, suffix in (("gz", ".cdxj.gz"), ("plain", ".cdxj"))
+        for p in list_part_files(path, pattern="*" + suffix)
+        if p.endswith(suffix)
         for s, e in byte_ranges(file_size(p), max_partition_bytes)
     ]
     return scan_splits(spark, splits, _read_split, from_arrow_schema(_SCHEMA))

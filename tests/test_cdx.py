@@ -60,6 +60,14 @@ def test_cdx_datasource_both_layouts(spark, tmp_work):
     assert df.rdd.getNumPartitions() > 2
     row = df.filter("offset = 700").collect()
     assert {r["length"] for r in row} == {95}
+    # a path naming one file reads it under its own suffix only
+    cols = ["surt", "ts", "offset"]
+    single = [
+        read_cdx(spark, f"{d}/{name}", max_partition_bytes=512).select(cols).collect()
+        for name in ("a.cdxj", "b.cdxj.gz")
+    ]
+    assert [len(rows) for rows in single] == [30, 25]
+    assert sorted(single[0] + single[1]) == sorted(df.select(cols).collect())
 
 
 def test_cdx_malformed_line_raises(spark, tmp_work):
