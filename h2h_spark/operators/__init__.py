@@ -3,8 +3,31 @@ dedup, similarity search, text analysis, multimodal binary columns."""
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+@contextmanager
+def cache_scope() -> Iterator[Callable[[DataFrame], DataFrame]]:
+    """The one way engine code takes a Spark cache: ``persist(df)``
+    caches and records ``df``; the scope unpersists every recorded cache
+    on exit, raise included.  Materialize a result (``localCheckpoint``)
+    before the scope closes; checkpoint, never cache, what a lazily
+    returned frame still reads — its storage then belongs to that frame."""
+    held: list[DataFrame] = []
+
+    def persist(df: DataFrame) -> DataFrame:
+        held.append(df.persist())
+        return df
+
+    try:
+        yield persist
+    finally:
+        for df in held:
+            df.unpersist()
 
 
 def scale_out(

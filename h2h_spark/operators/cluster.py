@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from h2h_spark.operators import cache_scope
+
 
 def _l2_sq(a, b):
     """Squared L2 distance between two float-array columns, JVM-side."""
@@ -148,7 +150,6 @@ def kmeans_fit(
         for row in vectors.select(id_col, vec_col).orderBy(F.col(id_col)).limit(k).collect()
     ]
     cents = {i: v for i, v in enumerate(init)}
-    vectors = vectors.persist()
     if method not in ("expr", "blas"):
         raise ValueError(f"kmeans_fit: unknown method {method!r}")
 
@@ -164,24 +165,25 @@ def kmeans_fit(
         )
         return centroid_assign(vectors, id_col, vec_col, cdf, "label", "cvec")
 
-    n_it = 0
-    for n_it in range(1, max_iter + 1):
-        assigned = _assign(cents)
-        updated = centroid_update(vectors, vec_col, assigned, id_col, dim).collect()
-        new_cents = dict(cents)
-        for row in updated:
-            new_cents[row["assigned"]] = [float(x) for x in row["centroid"]]
-        shift = max(
-            sum((a - b) ** 2 for a, b in zip(cents[i], new_cents[i]))
-            for i in cents
-        )
-        cents = new_cents
-        if shift < tol:
-            break
-    # materialize the final assignment (narrow: id, label, dist), then
-    # release the vector cache instead of leaking it (round 14; §5)
-    final = _assign(cents).localCheckpoint(eager=True)
-    vectors.unpersist()
+    with cache_scope() as persist:
+        vectors = persist(vectors)
+        n_it = 0
+        for n_it in range(1, max_iter + 1):
+            assigned = _assign(cents)
+            updated = centroid_update(vectors, vec_col, assigned, id_col, dim).collect()
+            new_cents = dict(cents)
+            for row in updated:
+                new_cents[row["assigned"]] = [float(x) for x in row["centroid"]]
+            shift = max(
+                sum((a - b) ** 2 for a, b in zip(cents[i], new_cents[i]))
+                for i in cents
+            )
+            cents = new_cents
+            if shift < tol:
+                break
+        # materialize the final assignment (narrow: id, label, dist)
+        # before the scope releases the vector cache
+        final = _assign(cents).localCheckpoint(eager=True)
     return final, [cents[i] for i in sorted(cents)], n_it
 
 

@@ -23,10 +23,11 @@ UDFs.  Scale posture for 100 TB:
 - bucket-size caps (``max_doc_freq`` / ``max_bucket``) bound the pair
   expansion: a degenerate bucket of d docs would otherwise emit d²/2
   candidates;
-- the shingle-set table is ``persist()``-ed inside the near-dup operators:
-  it is consumed 2-3 times (candidates + both sides of verification), and
-  Catalyst otherwise re-inlines the tokenizer expression into every
-  reference (measured 8× slowdown; see ``shingles_from_tokens`` note).
+- the shingle-set table is cached (``cache_scope``) or checkpointed
+  inside the near-dup operators: it is consumed 2-3 times (candidates +
+  both sides of verification), and Catalyst otherwise re-inlines the
+  tokenizer expression into every reference (measured 8× slowdown; see
+  ``shingles_from_tokens`` note).
 """
 
 from __future__ import annotations
@@ -35,6 +36,8 @@ import random
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from h2h_spark.operators import cache_scope
 
 _MERSENNE = 2147483647  # 2^31-1; keeps (a*h+b) products inside long range
 
@@ -85,11 +88,10 @@ def shingle_sets(
     id_col: str,
     text_col: str,
     k: int = 4,
-    persist: bool = False,
     scale: bool = True,
 ) -> DataFrame:
-    """``(id, sh array<string>)``.  ``persist=True`` for multi-consumer
-    pipelines (candidates + verification) — one tokenizer pass total.
+    """``(id, sh array<string>)``.  Multi-consumer pipelines (candidates
+    + verification) cache or checkpoint it — one tokenizer pass total.
 
     Round 14: the input is scale_out-rescaled first — the tokenizer,
     the shingle transform AND every downstream per-row aggregate over
@@ -104,10 +106,9 @@ def shingle_sets(
     src = df.select(F.col(id_col), F.col(text_col))
     if scale:
         src = scale_out(src, id_col)
-    out = src.select(
+    return src.select(
         F.col(id_col).alias("id"), tokens(text_col).alias("__toks")
     ).select("id", shingles_from_tokens(F.col("__toks"), k).alias("sh"))
-    return out.persist() if persist else out
 
 
 def _pair_expansion(ids: Column) -> Column:
@@ -370,14 +371,13 @@ def jaccard_pairs(
     frequency <= ``max_doc_freq``; each candidate pair is scored by exact
     Jaccard over distinct shingle sets.
     """
-    sets = shingle_sets(df, id_col, text_col, shingle_k, persist=True)
-    exploded = sets.select("id", F.explode("sh").alias("shingle"))
-    cand = _bucket_candidates(exploded, ["shingle"], "id", max_doc_freq)
-    # materialize the (tiny) verified pair list, then release the
-    # shingle cache instead of leaking it into the session (round 14; §5)
-    out = _verify_jaccard(cand, sets, threshold).localCheckpoint(eager=True)
-    sets.unpersist()
-    return out
+    with cache_scope() as persist:
+        sets = persist(shingle_sets(df, id_col, text_col, shingle_k))
+        exploded = sets.select("id", F.explode("sh").alias("shingle"))
+        cand = _bucket_candidates(exploded, ["shingle"], "id", max_doc_freq)
+        # the (tiny) verified pair list, materialized before the scope
+        # releases the shingle cache
+        return _verify_jaccard(cand, sets, threshold).localCheckpoint(eager=True)
 
 
 def prefix_filter_pairs(
@@ -415,33 +415,32 @@ def prefix_filter_pairs(
     # (doc-freq groupBy, id-keyed regroup), so the input rescale buys no
     # parallelism and measured SLOWER end-to-end (r14 interleaved A/B:
     # 2.49 -> 3.90 s medians with it on)
-    sets = shingle_sets(
-        df, id_col, text_col, shingle_k, persist=True, scale=False
-    )
-    ex = sets.select("id", F.explode("sh").alias("shingle"))
-    dfreq = ex.groupBy("shingle").agg(F.count("*").alias("df"))
-    ordered = (
-        ex.join(dfreq, "shingle")
-        .groupBy("id")
-        .agg(F.array_sort(F.collect_list(F.struct("df", "shingle"))).alias("arr"))
-        .select(
-            "id",
-            F.size("arr").alias("n"),
-            F.transform("arr", lambda s: s["shingle"]).alias("toks"),
+    with cache_scope() as persist:
+        sets = persist(
+            shingle_sets(df, id_col, text_col, shingle_k, scale=False)
         )
-    )
-    plen = (F.col("n") - F.ceil(F.col("n") * F.lit(threshold)) + 1).cast("int")
-    prefix_entries = ordered.select(
-        "id", F.explode(F.slice("toks", F.lit(1), plen)).alias("shingle")
-    )
-    cand = _bucket_candidates(
-        prefix_entries, ["shingle"], "id", max_bucket=1 << 31
-    )
-    # materialize the (tiny) verified pair list, then release the
-    # shingle cache instead of leaking it into the session (round 14; §5)
-    out = _verify_jaccard(cand, sets, threshold).localCheckpoint(eager=True)
-    sets.unpersist()
-    return out
+        ex = sets.select("id", F.explode("sh").alias("shingle"))
+        dfreq = ex.groupBy("shingle").agg(F.count("*").alias("df"))
+        ordered = (
+            ex.join(dfreq, "shingle")
+            .groupBy("id")
+            .agg(F.array_sort(F.collect_list(F.struct("df", "shingle"))).alias("arr"))
+            .select(
+                "id",
+                F.size("arr").alias("n"),
+                F.transform("arr", lambda s: s["shingle"]).alias("toks"),
+            )
+        )
+        plen = (F.col("n") - F.ceil(F.col("n") * F.lit(threshold)) + 1).cast("int")
+        prefix_entries = ordered.select(
+            "id", F.explode(F.slice("toks", F.lit(1), plen)).alias("shingle")
+        )
+        cand = _bucket_candidates(
+            prefix_entries, ["shingle"], "id", max_bucket=1 << 31
+        )
+        # the (tiny) verified pair list, materialized before the scope
+        # releases the shingle cache
+        return _verify_jaccard(cand, sets, threshold).localCheckpoint(eager=True)
 
 
 def minhash_index(
@@ -461,16 +460,17 @@ def minhash_index(
     once per corpus version; a daily delta then dedups against them
     without re-shingling the 100 TB corpus (:func:`minhash_dedup_against_index`).
 
-    Cache ownership: the returned ``shingle_sets`` table is persisted —
-    it is one of the two index tables the CALLER consumes (and usually
-    writes out); release it with ``unpersist()`` when done.  The other
-    persists in this module are operator-internal and released before
-    return (round 14).
+    The returned ``shingle_sets`` table is a lazy local checkpoint: the
+    signatures and the caller (verification, or the index write) read
+    one tokenizer pass, and its storage belongs to the returned frame —
+    there is nothing to release.
     """
     if num_hashes % bands != 0:
         raise ValueError("num_hashes must be divisible by bands")
     rows = num_hashes // bands
-    sets = shingle_sets(df, id_col, text_col, shingle_k, persist=True)
+    sets = shingle_sets(df, id_col, text_col, shingle_k).localCheckpoint(
+        eager=False
+    )
     sig = minhash_signatures(
         df, "id", text_col, num_hashes, shingle_k, seed, base_hash, _sets=sets
     )
@@ -527,15 +527,10 @@ def minhash_dedup_against_index(
         delta, id_col, text_col, num_hashes=num_hashes, bands=bands,
         shingle_k=shingle_k, seed=seed, base_hash=base_hash,
     )
-    try:
-        # materialize the (small) pair list, then release the delta's
-        # shingle cache, which minhash_index hands to its caller (§5)
-        return minhash_pairs_from_tables(
-            d_entries, d_sets, index_entries, index_sets,
-            jaccard_threshold=jaccard_threshold, max_bucket=max_bucket,
-        ).localCheckpoint(eager=True)
-    finally:
-        d_sets.unpersist()
+    return minhash_pairs_from_tables(
+        d_entries, d_sets, index_entries, index_sets,
+        jaccard_threshold=jaccard_threshold, max_bucket=max_bucket,
+    )
 
 
 def minhash_pairs_from_tables(
@@ -606,70 +601,66 @@ def connected_components(
     recursive-CTE oracle twin in ``__spark_entry__``.
     """
     edges = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-    edges = (
-        edges.unionByName(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        # a-hash layout: every propagation hop joins labels on "a", so
-        # the cached edge list is never re-shuffled across rounds
-        # (round 13, same shape as the graph-operator edge caches)
-        .repartition(F.col("a"))
-        .persist()
-    )
-    labels0 = edges.select(F.col("a").alias("id")).distinct().withColumn(
-        "lab", F.col("id")
-    ).persist()
-    labels = labels0
+    with cache_scope() as persist:
+        edges = persist(
+            edges.unionByName(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
+            .distinct()
+            # a-hash layout: every propagation hop joins labels on "a", so
+            # the cached edge list is never re-shuffled across rounds
+            # (round 13, same shape as the graph-operator edge caches)
+            .repartition(F.col("a"))
+        )
+        # round 1's two hops read the initial labels four times
+        labels = persist(
+            edges.select(F.col("a").alias("id")).distinct().withColumn(
+                "lab", F.col("id")
+            )
+        )
 
-    def _propagate(lab_df: DataFrame) -> DataFrame:
-        neighbor_min = (
-            edges.join(lab_df.withColumnRenamed("id", "a"), "a")
-            .groupBy(F.col("b").alias("id"))
-            .agg(F.min("lab").alias("nmin"))
-        )
-        return lab_df.join(neighbor_min, "id", "left").select(
-            "id",
-            F.least(F.col("lab"), F.coalesce("nmin", F.col("lab"))).alias("lab"),
-            (F.col("nmin") < F.col("lab")).alias("__chg"),
-        )
-    for _ in range(max_iter):
-        # Two propagation hops per materialization: dedup components are
-        # shallow (cliques converge in one hop), so doubling hops halves
-        # the persist/count job overhead that dominates at small diameters
-        # while leaving deep-graph behavior at O(diameter/2) rounds.
-        hop1 = _propagate(labels).drop("__chg")
-        # localCheckpoint TRUNCATES LINEAGE each round — without it the
-        # label plan grows by two joins per round (hundreds of nodes by
-        # convergence), which is the classic iterative-Spark driver hazard:
-        # planning cost and driver memory scale with rounds, not data.
-        # LAZY + full count: the changed-count job computes every
-        # partition (the filter is row-level), materializing the
-        # checkpoint in the same job — eager paid two jobs per round
-        # (round 13).  Tradeoff (documented): local checkpoints don't
-        # survive executor loss; swap for reliable checkpoint(dir) on
-        # long production runs.
-        updated = _propagate(hop1).localCheckpoint(eager=False)
-        changed = updated.filter(F.col("__chg")).count()
-        labels = updated.drop("__chg")
-        if changed == 0:
-            break
-    else:
-        # silent wrong answers are worse than a loud one: labels that
-        # are still moving after max_iter rounds mean the graph diameter
-        # exceeds 2*max_iter — use connected_components_star (O(log n)
-        # rounds) for high-diameter graphs.
-        edges.unpersist()
-        labels0.unpersist()
-        raise ValueError(
-            f"connected_components: labels still changing after "
-            f"{max_iter} rounds (graph diameter > {2 * max_iter}); "
-            "use connected_components_star for high-diameter graphs"
-        )
-    edges.unpersist()
-    # the round-1 label cache is superseded by the checkpointed rounds
-    # (each materialized by its changed-count job) — release it too
-    # (round 14; §5)
-    labels0.unpersist()
-    return labels.select("id", F.col("lab").alias("rep"))
+        def _propagate(lab_df: DataFrame) -> DataFrame:
+            neighbor_min = (
+                edges.join(lab_df.withColumnRenamed("id", "a"), "a")
+                .groupBy(F.col("b").alias("id"))
+                .agg(F.min("lab").alias("nmin"))
+            )
+            return lab_df.join(neighbor_min, "id", "left").select(
+                "id",
+                F.least(F.col("lab"), F.coalesce("nmin", F.col("lab"))).alias("lab"),
+                (F.col("nmin") < F.col("lab")).alias("__chg"),
+            )
+        for _ in range(max_iter):
+            # Two propagation hops per materialization: dedup components are
+            # shallow (cliques converge in one hop), so doubling hops halves
+            # the checkpoint/count job overhead that dominates at small
+            # diameters while leaving deep-graph behavior at O(diameter/2)
+            # rounds.
+            hop1 = _propagate(labels).drop("__chg")
+            # localCheckpoint TRUNCATES LINEAGE each round — without it the
+            # label plan grows by two joins per round (hundreds of nodes by
+            # convergence), which is the classic iterative-Spark driver hazard:
+            # planning cost and driver memory scale with rounds, not data.
+            # LAZY + full count: the changed-count job computes every
+            # partition (the filter is row-level), materializing the
+            # checkpoint in the same job — eager paid two jobs per round
+            # (round 13).  Tradeoff (documented): local checkpoints don't
+            # survive executor loss; swap for reliable checkpoint(dir) on
+            # long production runs.
+            updated = _propagate(hop1).localCheckpoint(eager=False)
+            changed = updated.filter(F.col("__chg")).count()
+            labels = updated.drop("__chg")
+            if changed == 0:
+                # every round's checkpoint is materialized: the result no
+                # longer reads the edge cache the scope releases
+                return labels.select("id", F.col("lab").alias("rep"))
+    # silent wrong answers are worse than a loud one: labels that are
+    # still moving after max_iter rounds mean the graph diameter exceeds
+    # 2*max_iter — use connected_components_star (O(log n) rounds) for
+    # high-diameter graphs.
+    raise ValueError(
+        f"connected_components: labels still changing after "
+        f"{max_iter} rounds (graph diameter > {2 * max_iter}); "
+        "use connected_components_star for high-diameter graphs"
+    )
 
 
 def dedup_corpus(
@@ -766,69 +757,66 @@ def simhash_near_duplicates(
     ``base_hash='md5'`` the fingerprint is the portable 60-bit variant
     (use a ``chunks`` that divides 60, e.g. 6).
     """
-    fps = (
-        simhash64(df, id_col, text_col, base_hash)
-        .withColumnRenamed(id_col, "id")
-        .persist()
-    )
-    width = (60 if base_hash == "md5" else 64) // chunks
-    entries = fps.select(
-        "id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("band"),
-                        F.shiftright(F.col("simhash"), j * width)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("chunk"),
-                    )
-                    for j in range(chunks)
-                ]
+    with cache_scope() as persist:
+        fps = persist(
+            simhash64(df, id_col, text_col, base_hash).withColumnRenamed(id_col, "id")
+        )
+        width = (60 if base_hash == "md5" else 64) // chunks
+        entries = fps.select(
+            "id",
+            "simhash",
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(j).alias("band"),
+                            F.shiftright(F.col("simhash"), j * width)
+                            .bitwiseAND(F.lit((1 << width) - 1))
+                            .alias("chunk"),
+                        )
+                        for j in range(chunks)
+                    ]
+                )
+            ).alias("bb"),
+        ).select("id", "simhash", "bb.band", "bb.chunk")
+        # Hub guard: drop pathological buckets before the self-join — as a
+        # broadcast ANTI-join against the violators only (rare by definition,
+        # so the broadcast stays tiny at any corpus size; broadcasting all
+        # occupied buckets would grow with the corpus).
+        violators = (
+            entries.groupBy("band", "chunk")
+            .count()
+            .filter(F.col("count") > max_bucket)
+            .select("band", "chunk")
+        )
+        pruned = entries.join(F.broadcast(violators), ["band", "chunk"], "left_anti")
+        a = pruned.alias("a")
+        b = pruned.alias("b")
+        cand = (
+            a.join(
+                b,
+                (F.col("a.band") == F.col("b.band"))
+                & (F.col("a.chunk") == F.col("b.chunk"))
+                & (F.col("a.id") < F.col("b.id")),
             )
-        ).alias("bb"),
-    ).select("id", "simhash", "bb.band", "bb.chunk")
-    # Hub guard: drop pathological buckets before the self-join — as a
-    # broadcast ANTI-join against the violators only (rare by definition,
-    # so the broadcast stays tiny at any corpus size; broadcasting all
-    # occupied buckets would grow with the corpus).
-    violators = (
-        entries.groupBy("band", "chunk")
-        .count()
-        .filter(F.col("count") > max_bucket)
-        .select("band", "chunk")
-    )
-    pruned = entries.join(F.broadcast(violators), ["band", "chunk"], "left_anti")
-    a = pruned.alias("a")
-    b = pruned.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.id") < F.col("b.id")),
+            .select(
+                F.col("a.id").alias("id_a"),
+                F.col("b.id").alias("id_b"),
+                F.col("a.simhash").alias("fp_a"),
+                F.col("b.simhash").alias("fp_b"),
+            )
+            .distinct()
         )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.simhash").alias("fp_a"),
-            F.col("b.simhash").alias("fp_b"),
+        dist = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
+        return (
+            cand.withColumn("hamming", dist)
+            .filter(F.col("hamming") <= max_hamming)
+            .select("id_a", "id_b", "hamming")
+            # materialize (the output is the near-dup pair list — tiny next
+            # to the corpus by construction) before the scope releases the
+            # fingerprint cache
+            .localCheckpoint(eager=True)
         )
-        .distinct()
-    )
-    dist = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
-    out = (
-        cand.withColumn("hamming", dist)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-        # materialize (the output is the near-dup pair list — tiny next
-        # to the corpus by construction) so the fingerprint cache can be
-        # released instead of leaking into the session (round 14; §5)
-        .localCheckpoint(eager=True)
-    )
-    fps.unpersist()
-    return out
 
 
 def connected_components_star(

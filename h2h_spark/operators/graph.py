@@ -42,6 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from h2h_spark.operators import cache_scope
+
 #: fixed-point scale: 1 rank unit = 1e-9.  With total mass N·SCALE and
 #: the 85× damping multiply, int64 overflows only past ~1e8 nodes; beyond
 #: that switch the rank column to DECIMAL(38,0) (same semantics).
@@ -69,49 +71,45 @@ def pagerank(
     unrolls the same rounds lands on the identical bits.
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
+    with cache_scope() as persist:
         # every round's dangling-mass left join re-reads the node set;
-        # without the persist the whole upstream edge derivation (often
-        # a join) replays per round through nodes' lineage (round 13)
-        .persist()
-    )
-    deg = e.groupBy("src").agg(F.count("*").alias("d"))
-    # (src, dst, d) computed once; every round re-joins only the rank.
-    ew = e.join(deg, "src").persist()
-    base = (100 - damping_pct) * SCALE // 100
-    ranks = nodes.withColumn("rank", F.lit(SCALE).cast("bigint"))
-    for it in range(iterations):
-        contrib = (
-            ew.join(ranks.withColumnRenamed("node", "src"), "src")
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("rank div d").alias("c"),
+        # without the cache the whole upstream edge derivation (often a
+        # join) replays per round through nodes' lineage (round 13)
+        nodes = persist(
+            e.select(F.col("src").alias("node"))
+            .union(e.select(F.col("dst").alias("node")))
+            .distinct()
+        )
+        deg = e.groupBy("src").agg(F.count("*").alias("d"))
+        # (src, dst, d) computed once; every round re-joins only the rank.
+        ew = persist(e.join(deg, "src"))
+        base = (100 - damping_pct) * SCALE // 100
+        ranks = nodes.withColumn("rank", F.lit(SCALE).cast("bigint"))
+        for it in range(iterations):
+            contrib = (
+                ew.join(ranks.withColumnRenamed("node", "src"), "src")
+                .select(
+                    F.col("dst").alias("node"),
+                    F.expr("rank div d").alias("c"),
+                )
+                .groupBy("node")
+                .agg(F.sum("c").alias("m"))
             )
-            .groupBy("node")
-            .agg(F.sum("c").alias("m"))
-        )
-        ranks = nodes.join(contrib, "node", "left").select(
-            "node",
-            (
-                F.lit(base)
-                + F.expr(f"{damping_pct} * coalesce(m, 0) div 100")
-            ).cast("bigint").alias("rank"),
-        )
-        # deep iteration: truncate lineage so the plan stays one round
-        # deep — bit-identical results (integer arithmetic), bounded
-        # analyzer cost at any depth.
-        if (it + 1) % checkpoint_every == 0 and it + 1 < iterations:
-            ranks = ranks.localCheckpoint(eager=True)
-    # materialize before unpersisting the edge/degree cache so repeated
-    # invocations in a long-lived session don't leak cached blocks (the
-    # checkpoint also detaches the result from the cache lineage).
-    ranks = ranks.localCheckpoint(eager=True)
-    ew.unpersist()
-    nodes.unpersist()
-    return ranks
+            ranks = nodes.join(contrib, "node", "left").select(
+                "node",
+                (
+                    F.lit(base)
+                    + F.expr(f"{damping_pct} * coalesce(m, 0) div 100")
+                ).cast("bigint").alias("rank"),
+            )
+            # deep iteration: truncate lineage so the plan stays one round
+            # deep — bit-identical results (integer arithmetic), bounded
+            # analyzer cost at any depth.
+            if (it + 1) % checkpoint_every == 0 and it + 1 < iterations:
+                ranks = ranks.localCheckpoint(eager=True)
+        # materialized inside the scope: the checkpoint detaches the
+        # result from the edge/degree caches the scope releases
+        return ranks.localCheckpoint(eager=True)
 
 
 def triangle_count(edges: DataFrame, *, a: str = "a", b: str = "b") -> DataFrame:
@@ -155,21 +153,22 @@ def triangle_count(edges: DataFrame, *, a: str = "a", b: str = "b") -> DataFrame
             .alias("e")
         )
         .select("e.s", "e.t")
-    ).persist()
-    e1 = orient.select(F.col("s").alias("x"), F.col("t").alias("y"))
-    e2 = orient.select(F.col("s").alias("y"), F.col("t").alias("z"))
-    e3 = orient.select(F.col("s").alias("x"), F.col("t").alias("z"))
-    tri = e1.join(e2, "y").join(e3, ["x", "z"]).agg(
-        F.count("*").cast("bigint").alias("n_triangles")
     )
-    counts = und.agg(F.count("*").cast("bigint").alias("n_edges")).crossJoin(
-        deg.agg(F.count("*").cast("bigint").alias("n_nodes"))
-    )
-    out = counts.crossJoin(tri).select(
-        "n_nodes", "n_edges", "n_triangles"
-    ).localCheckpoint(eager=True)  # 1 row; detach from the orient cache
-    orient.unpersist()
-    return out
+    with cache_scope() as persist:
+        orient = persist(orient)
+        e1 = orient.select(F.col("s").alias("x"), F.col("t").alias("y"))
+        e2 = orient.select(F.col("s").alias("y"), F.col("t").alias("z"))
+        e3 = orient.select(F.col("s").alias("x"), F.col("t").alias("z"))
+        tri = e1.join(e2, "y").join(e3, ["x", "z"]).agg(
+            F.count("*").cast("bigint").alias("n_triangles")
+        )
+        counts = und.agg(F.count("*").cast("bigint").alias("n_edges")).crossJoin(
+            deg.agg(F.count("*").cast("bigint").alias("n_nodes"))
+        )
+        # 1 row; detach from the orient cache
+        return counts.crossJoin(tri).select(
+            "n_nodes", "n_edges", "n_triangles"
+        ).localCheckpoint(eager=True)
 
 
 def bfs_distances(
@@ -193,49 +192,47 @@ def bfs_distances(
     round deep at any depth.
     """
     # the edge list is re-joined every round — materialize it once, or
-    # each round re-runs the upstream build (scan + distinct).  persist
+    # each round re-runs the upstream build (scan + distinct).  A cache
     # keeps size stats + s-hash partitioning visible (a checkpointed RDD
     # is UnknownPartitioning / unknown size, which forced a sort-merge
     # re-shuffle of the full edge list every round — round 13); the
     # frontier side is the only thing that moves per round.
-    e = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
-        .distinct()
-        .repartition(F.col("s"))
-        .persist()
-    )
-    settled = sources.select(F.col(node).alias("id")).distinct().withColumn(
-        "dist", F.lit(0).cast("bigint")
-    ).localCheckpoint(eager=True)
-    frontier = settled
-    for depth in range(1, max_depth + 1):
-        nxt = (
-            # shuffle-hash: only the frontier moves (e keeps its cached
-            # s-hash layout); without the hint the planner broadcasts
-            # the edge cache per ROUND-JOB — broadcasts don't reuse
-            # across jobs, so that re-ships |E| every round (round 13)
-            frontier.hint("shuffle_hash").join(e, frontier.id == e.s)
-            .select(F.col("t").alias("id"))
+    with cache_scope() as persist:
+        e = persist(
+            edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
             .distinct()
-            .join(settled.select("id"), "id", "left_anti")
-            .withColumn("dist", F.lit(depth).cast("bigint"))
+            .repartition(F.col("s"))
         )
-        # LAZY checkpoint + full count: the count job computes every
-        # partition, materializing the checkpoint as a side effect —
-        # one job per round where eager-checkpoint-then-probe paid
-        # three (round 13).  settled stays an un-checkpointed union of
-        # materialized frontiers: depth <= max_depth, every leaf cached.
-        nxt = nxt.localCheckpoint(eager=False)
-        if nxt.count() == 0:
-            break
-        settled = settled.unionByName(nxt)
-        frontier = nxt
-    # every settled leaf is a materialized checkpoint (the per-round
-    # count computes all partitions), so the edge cache is no longer
-    # referenced — release it instead of leaking an |E|-sized cache
-    # into the session (round 14; §5)
-    e.unpersist()
-    return settled.select(F.col("id").alias(node), "dist")
+        settled = sources.select(F.col(node).alias("id")).distinct().withColumn(
+            "dist", F.lit(0).cast("bigint")
+        ).localCheckpoint(eager=True)
+        frontier = settled
+        for depth in range(1, max_depth + 1):
+            nxt = (
+                # shuffle-hash: only the frontier moves (e keeps its cached
+                # s-hash layout); without the hint the planner broadcasts
+                # the edge cache per ROUND-JOB — broadcasts don't reuse
+                # across jobs, so that re-ships |E| every round (round 13)
+                frontier.hint("shuffle_hash").join(e, frontier.id == e.s)
+                .select(F.col("t").alias("id"))
+                .distinct()
+                .join(settled.select("id"), "id", "left_anti")
+                .withColumn("dist", F.lit(depth).cast("bigint"))
+            )
+            # LAZY checkpoint + full count: the count job computes every
+            # partition, materializing the checkpoint as a side effect —
+            # one job per round where eager-checkpoint-then-probe paid
+            # three (round 13).  settled stays an un-checkpointed union of
+            # materialized frontiers: depth <= max_depth, every leaf cached.
+            nxt = nxt.localCheckpoint(eager=False)
+            if nxt.count() == 0:
+                break
+            settled = settled.unionByName(nxt)
+            frontier = nxt
+        # every settled leaf is a materialized checkpoint (the per-round
+        # count computes all partitions), so the result no longer reads
+        # the edge cache the scope releases
+        return settled.select(F.col("id").alias(node), "dist")
 
 
 def label_propagation(
@@ -305,14 +302,12 @@ def label_propagation_semisync(
     ).dropna()
     # src-hash partitioning already satisfies distinct's (src, dst)
     # clustering: one exchange builds the cached, deduplicated edges
-    sym = (
-        pairs.union(pairs.select("dst", "src"))
-        .repartition("src")
-        .distinct()
-        .persist()
-    )
-    caches = [sym]
-    try:
+    with cache_scope() as persist:
+        sym = persist(
+            pairs.union(pairs.select("dst", "src"))
+            .repartition("src")
+            .distinct()
+        )
         steps = [s for _ in range(rounds) for s in range(substeps)]
         first = (F.col("src") % substeps == 0) if steps else F.lit(False)
         labels = (
@@ -327,8 +322,7 @@ def label_propagation_semisync(
             # multiplies by the edge size every sub-step, so from the
             # third sub-step on the planner would broadcast the edges
             # (or, above the threshold, shuffle them).
-            labels = labels.localCheckpoint(eager=False).persist()
-            caches.append(labels)
+            labels = persist(labels.localCheckpoint(eager=False))
             labels.write.format("noop").mode("overwrite").save()
             upd = (
                 sym.filter(F.col("src") % substeps == s)
@@ -341,9 +335,6 @@ def label_propagation_semisync(
             )
             labels = labels.filter(F.col("node") % substeps != s).unionByName(upd)
         return labels.localCheckpoint(eager=True)
-    finally:
-        for df in caches:
-            df.unpersist()
 
 
 def sssp_bounded(
@@ -373,62 +364,60 @@ def sssp_bounded(
     stays one round deep.  Raises if ``max_iter`` rounds pass without
     convergence (negative or zero weights) rather than returning a
     non-fixpoint."""
-    e = (
-        edges.select(
-            F.col(src).alias("s"),
-            F.col(dst).alias("t"),
-            F.col(weight).cast("double").alias("w"),
+    with cache_scope() as persist:
+        e = persist(
+            edges.select(
+                F.col(src).alias("s"),
+                F.col(dst).alias("t"),
+                F.col(weight).cast("double").alias("w"),
+            )
+            .groupBy("s", "t")
+            .agg(F.min("w").alias("w"))  # parallel edges: keep the cheapest
+            # cache, not checkpoint: stats + s-partitioning let each
+            # round's frontier relaxation join reuse the edge layout
+            # instead of re-shuffling it (round 13, same as bfs_distances)
+            .repartition(F.col("s"))
         )
-        .groupBy("s", "t")
-        .agg(F.min("w").alias("w"))  # parallel edges: keep the cheapest
-        # persist, not checkpoint: stats + s-partitioning let each
-        # round's frontier relaxation join reuse the edge layout
-        # instead of re-shuffling it (round 13, same as bfs_distances)
-        .repartition(F.col("s"))
-        .persist()
-    )
-    settled = (
-        sources.select(F.col(node).alias("id"))
-        .distinct()
-        .withColumn("dist", F.lit(0.0))
-        .localCheckpoint(eager=True)
-    )
-    frontier = settled
-    for _ in range(max_iter):
-        cand = (
-            # shuffle-hash for the same reason as bfs_distances: keep
-            # the cached edge layout in place, move only the frontier
-            frontier.hint("shuffle_hash").join(e, frontier.id == e.s)
-            .select(F.col("t").alias("id"), (F.col("dist") + F.col("w")).alias("nd"))
-            .filter(F.col("nd") < F.lit(float(max_dist)))
-            .groupBy("id")
-            .agg(F.min("nd").alias("nd"))
-        )
-        old = settled.select("id", F.col("dist").alias("od"))
-        # LAZY checkpoints, one job per round (round 13): the full
-        # count materializes `improved`, and the NEXT round's count —
-        # whose cand⋈old side scans settled completely — materializes
-        # the settled checkpoint; eager checkpointing paid three jobs
-        # per round for the same coverage.
-        improved = (
-            cand.join(old, "id", "left")
-            .filter(F.col("od").isNull() | (F.col("nd") < F.col("od")))
-            .select("id", F.col("nd").alias("dist"))
-            .localCheckpoint(eager=False)
-        )
-        if improved.count() == 0:
-            # the count just scanned settled completely (cand⋈old), so
-            # its checkpoint is materialized — the edge cache can go
-            # (round 14; §5)
-            e.unpersist()
-            return settled.select(F.col("id").alias(node), "dist")
         settled = (
-            settled.join(improved.select("id"), "id", "left_anti")
-            .unionByName(improved)
-            .localCheckpoint(eager=False)
+            sources.select(F.col(node).alias("id"))
+            .distinct()
+            .withColumn("dist", F.lit(0.0))
+            .localCheckpoint(eager=True)
         )
-        frontier = improved
-    e.unpersist()
+        frontier = settled
+        for _ in range(max_iter):
+            cand = (
+                # shuffle-hash for the same reason as bfs_distances: keep
+                # the cached edge layout in place, move only the frontier
+                frontier.hint("shuffle_hash").join(e, frontier.id == e.s)
+                .select(F.col("t").alias("id"), (F.col("dist") + F.col("w")).alias("nd"))
+                .filter(F.col("nd") < F.lit(float(max_dist)))
+                .groupBy("id")
+                .agg(F.min("nd").alias("nd"))
+            )
+            old = settled.select("id", F.col("dist").alias("od"))
+            # LAZY checkpoints, one job per round (round 13): the full
+            # count materializes `improved`, and the NEXT round's count —
+            # whose cand⋈old side scans settled completely — materializes
+            # the settled checkpoint; eager checkpointing paid three jobs
+            # per round for the same coverage.
+            improved = (
+                cand.join(old, "id", "left")
+                .filter(F.col("od").isNull() | (F.col("nd") < F.col("od")))
+                .select("id", F.col("nd").alias("dist"))
+                .localCheckpoint(eager=False)
+            )
+            if improved.count() == 0:
+                # the count just scanned settled completely (cand⋈old), so
+                # its checkpoint is materialized and the result no longer
+                # reads the edge cache the scope releases
+                return settled.select(F.col("id").alias(node), "dist")
+            settled = (
+                settled.join(improved.select("id"), "id", "left_anti")
+                .unionByName(improved)
+                .localCheckpoint(eager=False)
+            )
+            frontier = improved
     raise RuntimeError(
         f"sssp_bounded: no fixpoint after {max_iter} rounds — "
         "non-positive edge weights or max_iter too small for the radius"
@@ -512,33 +501,32 @@ def feature_propagation(
     Per round: one src-keyed join + one dst-keyed aggregate — O(|E|),
     two shuffles, the canonical message-passing plan.  Lineage is
     truncated per round."""
-    und = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
-        .unionAll(edges.select(F.col(dst).alias("s"), F.col(src).alias("t")))
-        .distinct()
-        # persist, not checkpoint: stats + s-partitioning for the
-        # per-round message join (round 13, same as bfs_distances)
-        .repartition(F.col("s"))
-        .persist()
-    )
-    cur = features.select(F.col(node).alias("n"), F.col(feat).cast("bigint").alias("f"))
-    for _ in range(rounds):
-        msg = (
-            und.join(cur.withColumnRenamed("n", "s"), "s")
-            .groupBy(F.col("t").alias("n"))
-            .agg(
-                F.expr("sum(f) div count(f)").alias("__nf")
+    with cache_scope() as persist:
+        und = persist(
+            edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
+            .unionAll(edges.select(F.col(dst).alias("s"), F.col(src).alias("t")))
+            .distinct()
+            # cache, not checkpoint: stats + s-partitioning for the
+            # per-round message join (round 13, same as bfs_distances)
+            .repartition(F.col("s"))
+        )
+        cur = features.select(F.col(node).alias("n"), F.col(feat).cast("bigint").alias("f"))
+        for _ in range(rounds):
+            msg = (
+                und.join(cur.withColumnRenamed("n", "s"), "s")
+                .groupBy(F.col("t").alias("n"))
+                .agg(
+                    F.expr("sum(f) div count(f)").alias("__nf")
+                )
             )
-        )
-        cur = (
-            cur.join(msg, "n", "left")
-            .select("n", F.coalesce("__nf", "f").alias("f"))
-            # lazy (round 13): bounded rounds — materialize on the
-            # consumer's action, not one job per round
-            .localCheckpoint(eager=False)
-        )
-    # materialize (one job, riding through the lazy round checkpoints)
-    # so the und cache can be released instead of leaking (round 14; §5)
-    cur = cur.localCheckpoint(eager=True)
-    und.unpersist()
+            cur = (
+                cur.join(msg, "n", "left")
+                .select("n", F.coalesce("__nf", "f").alias("f"))
+                # lazy (round 13): bounded rounds — materialize on the
+                # consumer's action, not one job per round
+                .localCheckpoint(eager=False)
+            )
+        # materialize (one job, riding through the lazy round checkpoints)
+        # before the scope releases the und cache
+        cur = cur.localCheckpoint(eager=True)
     return cur.select(F.col("n").alias(node), F.col("f").alias(feat))

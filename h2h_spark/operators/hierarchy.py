@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from h2h_spark.operators import cache_scope
+
 
 def resolve_tree(
     edges: DataFrame,
@@ -49,69 +51,65 @@ def resolve_tree(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    ptr = (
-        e.select(F.col("c").alias("id"), F.col("p").alias("anc"))
-        .withColumn("d", F.lit(1).cast("long"))
-        .persist()
-    )
-    cached = ptr
-    checked = False
-    for _ in range(max_rounds):
-        hop = ptr.select(
-            F.col("id").alias("__hid"),
-            F.col("anc").alias("__hanc"),
-            F.col("d").alias("__hd"),
+    with cache_scope() as persist:  # round 1 self-joins the pointers
+        ptr = persist(
+            e.select(F.col("c").alias("id"), F.col("p").alias("anc"))
+            .withColumn("d", F.lit(1).cast("long"))
         )
-        # localCheckpoint (not just persist): truncates lineage so the
-        # final plan holds ONE round, not every round nested — a deep
-        # hierarchy would otherwise overwhelm the analyzer long before
-        # the data costs anything.
-        nxt = (
-            ptr.join(hop, ptr.anc == hop.__hid, "left")
-            .select(
-                "id",
-                F.coalesce("__hanc", "anc").alias("anc"),
-                F.when(F.col("__hanc").isNotNull(), F.col("d") + F.col("__hd"))
-                .otherwise(F.col("d"))
-                .alias("d"),
-                F.col("__hanc").isNotNull().alias("__moved"),
+        checked = False
+        for _ in range(max_rounds):
+            hop = ptr.select(
+                F.col("id").alias("__hid"),
+                F.col("anc").alias("__hanc"),
+                F.col("d").alias("__hd"),
             )
-            # lazy (round 13): the convergence aggregate below computes
-            # every partition, materializing the checkpoint in the same
-            # job — eager paid two jobs per doubling round
-            .localCheckpoint(eager=False)
-        )
-        if not checked:
-            # forest assertion rides round 1's convergence aggregate
-            # (same scan, zero extra jobs): after one hop a forest yields
-            # exactly one row per id, while a duplicated id — a child
-            # with two distinct parents, or a multi-parent ancestor —
-            # fans the join out to >1 row.
-            agg = nxt.agg(
-                F.max("__moved").alias("m"),
-                F.count("*").alias("n"),
-                F.countDistinct("id").alias("nd"),
-            ).collect()[0]
-            if agg["n"] != agg["nd"]:
-                cached.unpersist()
-                raise ValueError(
-                    "resolve_tree: some node has multiple distinct parents "
-                    "— input is not a forest"
+            # localCheckpoint (not just persist): truncates lineage so the
+            # final plan holds ONE round, not every round nested — a deep
+            # hierarchy would otherwise overwhelm the analyzer long before
+            # the data costs anything.
+            nxt = (
+                ptr.join(hop, ptr.anc == hop.__hid, "left")
+                .select(
+                    "id",
+                    F.coalesce("__hanc", "anc").alias("anc"),
+                    F.when(F.col("__hanc").isNotNull(), F.col("d") + F.col("__hd"))
+                    .otherwise(F.col("d"))
+                    .alias("d"),
+                    F.col("__hanc").isNotNull().alias("__moved"),
                 )
-            moved = agg["m"]
-            checked = True
+                # lazy (round 13): the convergence aggregate below computes
+                # every partition, materializing the checkpoint in the same
+                # job — eager paid two jobs per doubling round
+                .localCheckpoint(eager=False)
+            )
+            if not checked:
+                # forest assertion rides round 1's convergence aggregate
+                # (same scan, zero extra jobs): after one hop a forest yields
+                # exactly one row per id, while a duplicated id — a child
+                # with two distinct parents, or a multi-parent ancestor —
+                # fans the join out to >1 row.
+                agg = nxt.agg(
+                    F.max("__moved").alias("m"),
+                    F.count("*").alias("n"),
+                    F.countDistinct("id").alias("nd"),
+                ).collect()[0]
+                if agg["n"] != agg["nd"]:
+                    raise ValueError(
+                        "resolve_tree: some node has multiple distinct parents "
+                        "— input is not a forest"
+                    )
+                moved = agg["m"]
+                checked = True
+            else:
+                moved = nxt.agg(F.max("__moved")).collect()[0][0]
+            ptr = nxt.drop("__moved")
+            if not moved:
+                break
         else:
-            moved = nxt.agg(F.max("__moved")).collect()[0][0]
-        cached.unpersist()
-        cached = nxt
-        ptr = nxt.drop("__moved")
-        if not moved:
-            break
-    else:
-        raise ValueError(
-            f"resolve_tree: pointers still advancing after {max_rounds} "
-            "rounds — cycle in the parent edges?"
-        )
+            raise ValueError(
+                f"resolve_tree: pointers still advancing after {max_rounds} "
+                "rounds — cycle in the parent edges?"
+            )
     roots = (
         e.select(F.col("p").alias("id"))
         .distinct()

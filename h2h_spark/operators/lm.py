@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from h2h_spark.operators import cache_scope
 from h2h_spark.operators.dedup import tokens
 
 
@@ -91,37 +92,36 @@ def perplexity(
     # downstream parallelism and the interleaved A/B regressed
     # (q_lm_perplexity 1.41 -> 2.12, q_perplexity_buckets 1.62 -> 2.36
     # medians with it on) — same verdict as prefix_filter_pairs.
-    grams = _doc_bigrams(df, id_col, text_col).persist()
-    big, uni, vocab = bigram_model(grams)
-    if broadcast_model:
-        big, uni = F.broadcast(big), F.broadcast(uni)
-    scored = (
-        grams.join(big, ["w1", "w2"])
-        .join(uni, ["w1"])
-        .crossJoin(F.broadcast(vocab))
-        .select(
-            "id",
-            F.log2(
-                (F.col("c12") + F.lit(k))
-                / (F.col("c1") + F.lit(k) * F.col("v"))
-            ).alias("lp"),
+    with cache_scope() as persist:
+        grams = persist(_doc_bigrams(df, id_col, text_col))
+        big, uni, vocab = bigram_model(grams)
+        if broadcast_model:
+            big, uni = F.broadcast(big), F.broadcast(uni)
+        scored = (
+            grams.join(big, ["w1", "w2"])
+            .join(uni, ["w1"])
+            .crossJoin(F.broadcast(vocab))
+            .select(
+                "id",
+                F.log2(
+                    (F.col("c12") + F.lit(k))
+                    / (F.col("c1") + F.lit(k) * F.col("v"))
+                ).alias("lp"),
+            )
         )
-    )
-    xent = F.round(-F.avg("lp"), 4)
-    out = (
-        scored.groupBy("id")
-        .agg(
-            F.count("*").cast("bigint").alias("n_bigrams"),
-            xent.alias("xent"),
-            F.round(F.pow(F.lit(2.0), xent), 4).alias("ppl"),
+        xent = F.round(-F.avg("lp"), 4)
+        return (
+            scored.groupBy("id")
+            .agg(
+                F.count("*").cast("bigint").alias("n_bigrams"),
+                xent.alias("xent"),
+                F.round(F.pow(F.lit(2.0), xent), 4).alias("ppl"),
+            )
+            .select(F.col("id").alias(id_col), "n_bigrams", "xent", "ppl")
+            # materialize the per-doc scores (|docs| rows) before the
+            # scope releases the gram cache
+            .localCheckpoint(eager=True)
         )
-        .select(F.col("id").alias(id_col), "n_bigrams", "xent", "ppl")
-        # materialize the per-doc scores (|docs| rows), then release the
-        # gram cache instead of leaking it (round 14; §5)
-        .localCheckpoint(eager=True)
-    )
-    grams.unpersist()
-    return out
 
 
 def perplexity_buckets(

@@ -37,6 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import cache_scope
 from .pq import (
     pq_assign_inrow,
     pq_reconstruct_inrow,
@@ -136,47 +137,48 @@ def opq_train(
     src = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("x"))
     err0 = None
     for rnd in range(rounds):
-        # one Arrow GEMM pass, original vector carried through — every
-        # downstream step of the round is a narrow per-row projection
-        # over this cache (round 13: the explode→broadcast-join→groupBy
-        # E-step, the M-step's sub⋈assigned re-join and the
-        # reconstruction's codes⋈books + collect_list regroup were 4
-        # shuffles + 3 joins per round of pure literal math — the
-        # codebooks are k·dim driver floats by construction)
-        rot = rotate_vectors(src, "id", "x", R, carry=True).persist()
-        assigned_full = pq_assign_inrow(
-            rot, "id", "rvec", books, m=m, dim=dim, with_sv=True
-        )
-        if rnd == 0 and return_initial_error:
-            err0 = float(
-                assigned_full.agg(
-                    F.sum(
-                        F.round(F.col("dist_sq"), 6).cast("decimal(30,6)")
-                    ).alias("e")
-                ).collect()[0]["e"]
+        # one cache per round, released when the round ends
+        with cache_scope() as persist:
+            # one Arrow GEMM pass, original vector carried through — every
+            # downstream step of the round is a narrow per-row projection
+            # over this cache (round 13: the explode→broadcast-join→groupBy
+            # E-step, the M-step's sub⋈assigned re-join and the
+            # reconstruction's codes⋈books + collect_list regroup were 4
+            # shuffles + 3 joins per round of pure literal math — the
+            # codebooks are k·dim driver floats by construction)
+            rot = persist(rotate_vectors(src, "id", "x", R, carry=True))
+            assigned_full = pq_assign_inrow(
+                rot, "id", "rvec", books, m=m, dim=dim, with_sv=True
             )
-        # Lloyd M-step: per-(subspace, code) means over the rotated data
-        # — the subvector rides along in-row, so no re-join
-        means = (
-            assigned_full.select(
-                "j", F.col("code").alias("c"), F.posexplode("sv").alias("i", "v")
+            if rnd == 0 and return_initial_error:
+                err0 = float(
+                    assigned_full.agg(
+                        F.sum(
+                            F.round(F.col("dist_sq"), 6).cast("decimal(30,6)")
+                        ).alias("e")
+                    ).collect()[0]["e"]
+                )
+            # Lloyd M-step: per-(subspace, code) means over the rotated data
+            # — the subvector rides along in-row, so no re-join
+            means = (
+                assigned_full.select(
+                    "j", F.col("code").alias("c"), F.posexplode("sv").alias("i", "v")
+                )
+                .groupBy("j", "c", "i")
+                .agg(F.avg(F.col("v").cast("double")).alias("mu"))
+                .collect()
             )
-            .groupBy("j", "c", "i")
-            .agg(F.avg(F.col("v").cast("double")).alias("mu"))
-            .collect()
-        )
-        upd: dict[tuple[int, int], list[float]] = {}
-        for r in means:
-            upd.setdefault((r["j"], r["c"]), [0.0] * sd)[r["i"]] = r["mu"]
-        books = {key: upd.get(key, books[key]) for key in books}
-        # rotation update (Procrustes): re-assign against the NEW books
-        # and reconstruct in the same per-row projection, accumulate
-        # M = Σ x̂·xᵀ, SVD driver-side
-        pairs = pq_reconstruct_inrow(
-            rot, "id", "rvec", books, m=m, dim=dim, keep=("x",)
-        ).select("x", "xhat")
-        M = _scatter_matrix(pairs, dim)
-        rot.unpersist()
+            upd: dict[tuple[int, int], list[float]] = {}
+            for r in means:
+                upd.setdefault((r["j"], r["c"]), [0.0] * sd)[r["i"]] = r["mu"]
+            books = {key: upd.get(key, books[key]) for key in books}
+            # rotation update (Procrustes): re-assign against the NEW books
+            # and reconstruct in the same per-row projection, accumulate
+            # M = Σ x̂·xᵀ, SVD driver-side
+            pairs = pq_reconstruct_inrow(
+                rot, "id", "rvec", books, m=m, dim=dim, keep=("x",)
+            ).select("x", "xhat")
+            M = _scatter_matrix(pairs, dim)
         U, _s, Vt = np.linalg.svd(M)
         R = U @ Vt
     if return_initial_error:

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from h2h_spark.operators import cache_scope
+
 
 def pack_sequences(
     df: DataFrame,
@@ -56,34 +58,34 @@ def pack_sequences(
     )
     w = Window.partitionBy("__p").orderBy("id")
     local = ranged.withColumn("__cum", F.sum("n_tokens").over(w))
-    if _materialize:
-        local = local.persist()
-    totals = sorted(
-        local.groupBy("__p").agg(F.max("__cum").alias("t")).collect(),
-        key=lambda r: r["__p"],
-    )
-    offsets, acc = [], 0
-    for r in totals:
-        offsets.append((r["__p"], acc))
-        acc += r["t"]
-    off_df = spark.createDataFrame(offsets, "__p int, __off long")
-    before = F.col("__off") + F.col("__cum") - F.col("n_tokens")
-    out = (
-        local.join(F.broadcast(off_df), "__p")
-        .select(
-            F.col("id").alias(id_col),
-            F.col("n_tokens"),
-            F.floor(before / budget).cast("bigint").alias("bin"),
-            (before - F.floor(before / budget) * budget).cast("bigint").alias(
-                "bin_offset"
-            ),
+    with cache_scope() as persist:
+        if _materialize:
+            local = persist(local)
+        totals = sorted(
+            local.groupBy("__p").agg(F.max("__cum").alias("t")).collect(),
+            key=lambda r: r["__p"],
         )
-    )
-    if _materialize:
-        # materialize (same row count as the cache it replaces), then
-        # release the cumsum cache instead of leaking it (round 14; §5)
-        out = out.localCheckpoint(eager=True)
-        local.unpersist()
+        offsets, acc = [], 0
+        for r in totals:
+            offsets.append((r["__p"], acc))
+            acc += r["t"]
+        off_df = spark.createDataFrame(offsets, "__p int, __off long")
+        before = F.col("__off") + F.col("__cum") - F.col("n_tokens")
+        out = (
+            local.join(F.broadcast(off_df), "__p")
+            .select(
+                F.col("id").alias(id_col),
+                F.col("n_tokens"),
+                F.floor(before / budget).cast("bigint").alias("bin"),
+                (before - F.floor(before / budget) * budget).cast("bigint").alias(
+                    "bin_offset"
+                ),
+            )
+        )
+        if _materialize:
+            # materialize (same row count as the cache it replaces)
+            # before the scope releases the cumsum cache
+            out = out.localCheckpoint(eager=True)
     return out
 
 

@@ -36,6 +36,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import cache_scope
 from .cluster import _l2_sq
 
 
@@ -99,23 +100,23 @@ def pq_train(
     codebook dict {(subspace, code): centroid}.  Empty cells keep their
     previous centroid (same convention as ``kmeans_fit``)."""
     sd = dim // m
-    sub = _subvectors(df, id_col, vec_col, m, dim).persist()
     books = seed_codebooks(df, id_col, vec_col, m=m, k=k, dim=dim)
     spark = df.sparkSession
-    for _ in range(iters):
-        assigned = _assign(sub, _codebook_df(spark, books))
-        means = (
-            sub.join(assigned.select("id", "j", "code"), ["id", "j"])
-            .select("j", "code", F.posexplode("sv").alias("i", "x"))
-            .groupBy("j", "code", "i")
-            .agg(F.avg(F.col("x").cast("double")).alias("mu"))
-            .collect()
-        )
-        upd: dict[tuple[int, int], list[float]] = {}
-        for r in means:
-            upd.setdefault((r["j"], r["code"]), [0.0] * sd)[r["i"]] = r["mu"]
-        books = {key: upd.get(key, books[key]) for key in books}
-    sub.unpersist()
+    with cache_scope() as persist:
+        sub = persist(_subvectors(df, id_col, vec_col, m, dim))
+        for _ in range(iters):
+            assigned = _assign(sub, _codebook_df(spark, books))
+            means = (
+                sub.join(assigned.select("id", "j", "code"), ["id", "j"])
+                .select("j", "code", F.posexplode("sv").alias("i", "x"))
+                .groupBy("j", "code", "i")
+                .agg(F.avg(F.col("x").cast("double")).alias("mu"))
+                .collect()
+            )
+            upd: dict[tuple[int, int], list[float]] = {}
+            for r in means:
+                upd.setdefault((r["j"], r["code"]), [0.0] * sd)[r["i"]] = r["mu"]
+            books = {key: upd.get(key, books[key]) for key in books}
     return books
 
 

@@ -28,6 +28,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from h2h_spark.operators import cache_scope
+
 
 def global_rank(
     df: DataFrame,
@@ -54,22 +56,21 @@ def global_rank(
         "__p", F.spark_partition_id()
     )
     w = Window.partitionBy("__p").orderBy(*sort_cols)
-    local = ranged.withColumn("__rn", F.row_number().over(w)).persist()
-    counts = sorted(
-        local.groupBy("__p").count().collect(), key=lambda r: r["__p"]
-    )
-    offsets, acc = [], 0
-    for r in counts:
-        offsets.append((r["__p"], acc))
-        acc += r["count"]
-    off_df = spark.createDataFrame(offsets, "__p int, __off long")
-    out = (
-        local.join(F.broadcast(off_df), "__p")
-        .withColumn(rank_col, (F.col("__off") + F.col("__rn")).cast("bigint"))
-        .drop("__p", "__rn", "__off")
-        # materialize (same row count as the cache it replaces), then
-        # release the row-number cache instead of leaking it (r14; §5)
-        .localCheckpoint(eager=True)
-    )
-    local.unpersist()
-    return out
+    with cache_scope() as persist:
+        local = persist(ranged.withColumn("__rn", F.row_number().over(w)))
+        counts = sorted(
+            local.groupBy("__p").count().collect(), key=lambda r: r["__p"]
+        )
+        offsets, acc = [], 0
+        for r in counts:
+            offsets.append((r["__p"], acc))
+            acc += r["count"]
+        off_df = spark.createDataFrame(offsets, "__p int, __off long")
+        return (
+            local.join(F.broadcast(off_df), "__p")
+            .withColumn(rank_col, (F.col("__off") + F.col("__rn")).cast("bigint"))
+            .drop("__p", "__rn", "__off")
+            # materialize (same row count as the cache it replaces)
+            # before the scope releases the row-number cache
+            .localCheckpoint(eager=True)
+        )

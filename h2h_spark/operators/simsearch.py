@@ -29,6 +29,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from h2h_spark.operators import cache_scope
+
 
 def _dot_with_literal(vec_col: Column, q: Sequence[float]) -> Column:
     lit = F.array(*[F.lit(float(x)) for x in q])
@@ -249,7 +251,7 @@ def _near_pairs_blocked(
 
 
 class IVFIndex:
-    """Built IVF index: centroid matrix + the corpus with a persisted
+    """Built IVF index: centroid matrix + the corpus with a checkpointed
     ``__cell`` assignment column.  Build once, probe many — the build is
     the expensive part (one KMeans fit on a SAMPLE + one assignment pass);
     a probe is a cell filter.  At 100 TB, write ``assigned`` out
@@ -267,9 +269,6 @@ class IVFIndex:
         d = np.linalg.norm(self.centers - qv, axis=1)
         return [int(i) for i in np.argsort(d)[:n_probe]]
 
-    def unpersist(self) -> None:
-        self.assigned.unpersist()
-
 
 def ivf_build(
     df: DataFrame,
@@ -282,8 +281,8 @@ def ivf_build(
     """Fit k-means centroids on a bounded SAMPLE (never the full corpus —
     an iterative ML fit over all data in a query path is the 100 TB
     anti-pattern), then assign every corpus row to its cell in one
-    deterministic pass and persist the assignment for reuse across
-    probes."""
+    deterministic pass, checkpointed for reuse across probes (its storage
+    belongs to the index's ``assigned`` frame; nothing to release)."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
@@ -300,7 +299,9 @@ def ivf_build(
     model = KMeans(
         k=n_centroids, seed=seed, featuresCol="__features", predictionCol="__cell"
     ).fit(sample)
-    assigned = model.transform(feat).drop("__features").persist()
+    assigned = model.transform(feat).drop("__features").localCheckpoint(
+        eager=False
+    )
     return IVFIndex(np.array(model.clusterCenters()), assigned, id_col, vec_col)
 
 
@@ -474,43 +475,40 @@ def embedding_near_duplicates(
 
     dim = len(df.select(vec_col).head()[0])
     planes = hyperplanes(dim, nbits * bands, seed)
-    vecs = df.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("__v")
-    ).persist()
-    entries = band_signatures(vecs, "id", "__v", planes, nbits, bands)
-    # Few-bit bands mean uniformly mid-sized buckets: raise the in-array
-    # expansion cap so every bucket stays on the join-free path.
-    cand = _bucket_candidates(
-        entries, ["band", "bucket"], "id", max_bucket, expand_max=2048
-    )
-    if probe_max_id is not None:
-        cand = cand.filter(F.col("id_a") < probe_max_id)
-        out = _verify_pairs_probe_blocked(
-            cand, vecs, probe_max_id, threshold, round_digits
-        ).localCheckpoint(eager=True)  # pair list; release vecs (§5, r14)
-        vecs.unpersist()
-        return out
-    b = vecs.select(F.col("id").alias("id_b"), F.col("__v").alias("__vb"))
-    a = vecs.select(F.col("id").alias("id_a"), F.col("__v").alias("__va"))
-    na = _norm(F.col("__va"))
-    nb = _norm(F.col("__vb"))
-    dot = F.aggregate(
-        F.zip_with("__va", "__vb", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    score = F.round(dot / (na * nb), round_digits)
-    out = (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .select("id_a", "id_b", score.alias("score"))
-        .filter(F.col("score") >= threshold)
-        # materialize the (tiny) verified pair list, then release the
-        # vector cache instead of leaking it (round 14; §5)
-        .localCheckpoint(eager=True)
-    )
-    vecs.unpersist()
-    return out
+    with cache_scope() as persist:
+        vecs = persist(
+            df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("__v"))
+        )
+        entries = band_signatures(vecs, "id", "__v", planes, nbits, bands)
+        # Few-bit bands mean uniformly mid-sized buckets: raise the in-array
+        # expansion cap so every bucket stays on the join-free path.
+        cand = _bucket_candidates(
+            entries, ["band", "bucket"], "id", max_bucket, expand_max=2048
+        )
+        if probe_max_id is not None:
+            cand = cand.filter(F.col("id_a") < probe_max_id)
+            # the (tiny) pair list is materialized before the scope
+            # releases the vector cache
+            return _verify_pairs_probe_blocked(
+                cand, vecs, probe_max_id, threshold, round_digits
+            ).localCheckpoint(eager=True)
+        b = vecs.select(F.col("id").alias("id_b"), F.col("__v").alias("__vb"))
+        a = vecs.select(F.col("id").alias("id_a"), F.col("__v").alias("__va"))
+        na = _norm(F.col("__va"))
+        nb = _norm(F.col("__vb"))
+        dot = F.aggregate(
+            F.zip_with("__va", "__vb", lambda x, y: x.cast("double") * y.cast("double")),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+        score = F.round(dot / (na * nb), round_digits)
+        return (
+            cand.join(a, "id_a")
+            .join(b, "id_b")
+            .select("id_a", "id_b", score.alias("score"))
+            .filter(F.col("score") >= threshold)
+            .localCheckpoint(eager=True)  # the (tiny) verified pair list
+        )
 
 
 def band_signatures(
@@ -837,54 +835,52 @@ def semantic_dedup(
         lambda acc, x: acc + x,
     )
     sim = F.round(dot / (F.col("__n") * _norm(F.col("__cvec"))), round_digits)
-    assign = (
-        vecs.crossJoin(cents)
-        .select(
-            "id", "__v", "__n",
-            F.struct((-sim).alias("ns"), F.col("cidx")).alias("__s"),
+    # three consumers below (both self-join sides + the final keep
+    # join): cache so the scan × centroids argmax runs once, not three
+    # times.
+    with cache_scope() as persist:
+        assign = persist(
+            vecs.crossJoin(cents)
+            .select(
+                "id", "__v", "__n",
+                F.struct((-sim).alias("ns"), F.col("cidx")).alias("__s"),
+            )
+            .groupBy("id")
+            .agg(
+                F.min("__s").getField("cidx").alias("cluster"),
+                F.first("__v").alias("__v"),
+                F.first("__n").alias("__n"),
+            )
         )
-        .groupBy("id")
-        .agg(
-            F.min("__s").getField("cidx").alias("cluster"),
-            F.first("__v").alias("__v"),
-            F.first("__n").alias("__n"),
+        a = assign.select(
+            F.col("id").alias("id_a"), F.col("cluster").alias("__ca"),
+            F.col("__v").alias("__va"), F.col("__n").alias("__na"),
         )
-        # three consumers below (both self-join sides + the final keep
-        # join): persist so the scan × centroids argmax runs once, not
-        # three times.
-        .persist()
-    )
-    a = assign.select(
-        F.col("id").alias("id_a"), F.col("cluster").alias("__ca"),
-        F.col("__v").alias("__va"), F.col("__n").alias("__na"),
-    )
-    b = assign.select(
-        F.col("id").alias("id_b"), F.col("cluster").alias("__cb"),
-        F.col("__v").alias("__vb"), F.col("__n").alias("__nb"),
-    )
-    pdot = F.aggregate(
-        F.zip_with("__va", "__vb", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    pscore = F.round(pdot / (F.col("__na") * F.col("__nb")), round_digits)
-    dropped = (
-        a.join(b, (F.col("__ca") == F.col("__cb")) & (F.col("id_a") < F.col("id_b")))
-        .filter(pscore >= threshold)
-        .select(F.col("id_b").alias("id"))
-        .distinct()
-        .withColumn("__dropped", F.lit(True))
-    )
-    out = (
-        assign.join(dropped, "id", "left")
-        .select(
-            F.col("id").alias(id_col),
-            "cluster",
-            F.coalesce(~F.col("__dropped"), F.lit(True)).alias("keep"),
+        b = assign.select(
+            F.col("id").alias("id_b"), F.col("cluster").alias("__cb"),
+            F.col("__v").alias("__vb"), F.col("__n").alias("__nb"),
         )
-        # materialize the per-id verdicts (narrow), then release the
-        # assignment cache instead of leaking it (round 14; §5)
-        .localCheckpoint(eager=True)
-    )
-    assign.unpersist()
-    return out
+        pdot = F.aggregate(
+            F.zip_with("__va", "__vb", lambda x, y: x.cast("double") * y.cast("double")),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+        pscore = F.round(pdot / (F.col("__na") * F.col("__nb")), round_digits)
+        dropped = (
+            a.join(b, (F.col("__ca") == F.col("__cb")) & (F.col("id_a") < F.col("id_b")))
+            .filter(pscore >= threshold)
+            .select(F.col("id_b").alias("id"))
+            .distinct()
+            .withColumn("__dropped", F.lit(True))
+        )
+        return (
+            assign.join(dropped, "id", "left")
+            .select(
+                F.col("id").alias(id_col),
+                "cluster",
+                F.coalesce(~F.col("__dropped"), F.lit(True)).alias("keep"),
+            )
+            # materialize the per-id verdicts (narrow) before the scope
+            # releases the assignment cache
+            .localCheckpoint(eager=True)
+        )

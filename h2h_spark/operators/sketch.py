@@ -21,6 +21,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from h2h_spark.operators import cache_scope
 from h2h_spark.operators.dedup import portable_hash60
 
 
@@ -590,54 +591,53 @@ def kmv_jaccard_pairs(
     runs against the store instead of re-hashing the corpus.  When given,
     ``df``/``text_col``/``k``/``shingle_k`` must match what built it (the
     estimator's contract is bottom-k of the same hash family)."""
-    sk = sketches
-    if sk is None:
-        sk = kmv_doc_sketches(df, id_col, text_col, k, shingle_k)
-        sk.persist()
-    # inverted index with stop-hash cap: buckets wider than the cap are
-    # dropped WHOLESALE (both sides), mirroring the SQL twin
-    ok_h = (
-        sk.groupBy("__h")
-        .agg(F.count("*").alias("__df"))
-        .filter(F.col("__df") <= max_hash_freq)
-        .select("__h")
-    )
-    r = sk.join(ok_h, "__h")
-    cand = (
-        r.alias("a")
-        .join(r.alias("b"), "__h")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    # per-pair union sketch, all JVM array built-ins: each pair carries
-    # its two retained sets as sorted arrays (<= k values), the union's
-    # bottom-k is a sort+slice, and n_both counts kept hashes present in
-    # both — identical integers (and therefore a bit-identical IEEE
-    # division) to the explode/group/window formulation this replaces,
-    # but moving 2 arrays per pair through 2 hash joins instead of
-    # ~2k rows per pair through a grouping shuffle plus a window sort.
-    arr = sk.groupBy("id").agg(F.array_sort(F.collect_list("__h")).alias("hs"))
-    paired = cand.join(
-        arr.select(F.col("id").alias("id_a"), F.col("hs").alias("__ha")),
-        "id_a",
-    ).join(
-        arr.select(F.col("id").alias("id_b"), F.col("hs").alias("__hb")),
-        "id_b",
-    )
-    kept = F.slice(F.array_sort(F.array_union("__ha", "__hb")), 1, k)
-    n_kept = F.size(kept)
-    n_both = F.size(F.array_intersect(kept, F.array_intersect("__ha", "__hb")))
-    est = n_both.cast("double") / n_kept.cast("double")
-    out = paired.select(
-        "id_a", "id_b", est.alias("est_jaccard")
-    ).filter(F.col("est_jaccard") >= threshold)
-    if sketches is None:
-        # we own the sketch cache: materialize the (tiny) pair list and
-        # release it instead of leaking (round 14; §5).  A caller-passed
-        # sketch table is a maintained artifact — its cache is theirs.
-        out = out.localCheckpoint(eager=True)
-        sk.unpersist()
+    with cache_scope() as persist:
+        sk = sketches
+        if sk is None:
+            sk = persist(kmv_doc_sketches(df, id_col, text_col, k, shingle_k))
+        # inverted index with stop-hash cap: buckets wider than the cap are
+        # dropped WHOLESALE (both sides), mirroring the SQL twin
+        ok_h = (
+            sk.groupBy("__h")
+            .agg(F.count("*").alias("__df"))
+            .filter(F.col("__df") <= max_hash_freq)
+            .select("__h")
+        )
+        r = sk.join(ok_h, "__h")
+        cand = (
+            r.alias("a")
+            .join(r.alias("b"), "__h")
+            .filter(F.col("a.id") < F.col("b.id"))
+            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+            .distinct()
+        )
+        # per-pair union sketch, all JVM array built-ins: each pair carries
+        # its two retained sets as sorted arrays (<= k values), the union's
+        # bottom-k is a sort+slice, and n_both counts kept hashes present in
+        # both — identical integers (and therefore a bit-identical IEEE
+        # division) to the explode/group/window formulation this replaces,
+        # but moving 2 arrays per pair through 2 hash joins instead of
+        # ~2k rows per pair through a grouping shuffle plus a window sort.
+        arr = sk.groupBy("id").agg(F.array_sort(F.collect_list("__h")).alias("hs"))
+        paired = cand.join(
+            arr.select(F.col("id").alias("id_a"), F.col("hs").alias("__ha")),
+            "id_a",
+        ).join(
+            arr.select(F.col("id").alias("id_b"), F.col("hs").alias("__hb")),
+            "id_b",
+        )
+        kept = F.slice(F.array_sort(F.array_union("__ha", "__hb")), 1, k)
+        n_kept = F.size(kept)
+        n_both = F.size(F.array_intersect(kept, F.array_intersect("__ha", "__hb")))
+        est = n_both.cast("double") / n_kept.cast("double")
+        out = paired.select(
+            "id_a", "id_b", est.alias("est_jaccard")
+        ).filter(F.col("est_jaccard") >= threshold)
+        if sketches is None:
+            # we own the sketch cache: materialize the (tiny) pair list
+            # before the scope releases it.  A caller-passed sketch table
+            # is a maintained artifact, read lazily.
+            out = out.localCheckpoint(eager=True)
     return out
 
 

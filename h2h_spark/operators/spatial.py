@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from h2h_spark.operators import cache_scope
+
 
 def _cell(c: Column, eps: float) -> Column:
     return F.floor(c / F.lit(float(eps))).cast("long")
@@ -175,22 +177,21 @@ def dbscan_2d(
 
     pairs = grid_self_join(pts, id_col, x_col, y_col, eps)
     # the symmetrized neighbor list feeds THREE consumers (degree
-    # aggregate, core-core edge build, border attach); unpersisted, each
-    # re-runs the 9x-replicated grid join — persist once, release after
-    # the labeled result materializes (§2.2/§5, round 14)
-    sym = (
-        pairs.select(F.col("a_id").alias("id"), F.col("b_id").alias("nb"))
-        .unionByName(
-            pairs.select(F.col("b_id").alias("id"), F.col("a_id").alias("nb"))
+    # aggregate, core-core edge build, border attach); uncached, each
+    # re-runs the 9x-replicated grid join — cache once, released by the
+    # scope on every path (a failing sub-step, e.g.
+    # connected_components_star's max_iter guard, included)
+    with cache_scope() as persist:
+        sym = persist(
+            pairs.select(F.col("a_id").alias("id"), F.col("b_id").alias("nb"))
+            .unionByName(
+                pairs.select(F.col("b_id").alias("id"), F.col("a_id").alias("nb"))
+            )
         )
-        .persist()
-    )
-    core = None
-    try:
         deg = sym.groupBy("id").agg(F.count("*").alias("n_nb"))
         # core ids are consumed 4x (two core-edge joins, core labeling, the
         # border anti-join); tiny (<= |pts| ids), so cache the filtered set
-        core = deg.filter(F.col("n_nb") + 1 >= min_pts).select("id").persist()
+        core = persist(deg.filter(F.col("n_nb") + 1 >= min_pts).select("id"))
         core_edges = (
             sym.join(core.withColumnRenamed("id", "nb"), "nb")
             .join(core, "id")
@@ -210,7 +211,7 @@ def dbscan_2d(
         labeled = core_lab.withColumn("role", F.lit("core")).unionByName(
             border.withColumn("role", F.lit("border"))
         )
-        out = (
+        return (
             pts.select(F.col(id_col).alias("id"))
             .join(labeled, "id", "left")
             .select(
@@ -218,14 +219,7 @@ def dbscan_2d(
                 "cluster",
                 F.coalesce(F.col("role"), F.lit("noise")).alias("role"),
             )
-            # materialize (|pts| rows), then release the two caches instead
-            # of leaking them into the session (§5)
+            # materialize (|pts| rows) before the scope releases the
+            # two caches
             .localCheckpoint(eager=True)
         )
-    finally:
-        # released on the exception path too (a failing sub-step, e.g.
-        # connected_components_star's max_iter guard, must not leak them)
-        sym.unpersist()
-        if core is not None:
-            core.unpersist()
-    return out

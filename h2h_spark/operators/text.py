@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from h2h_spark.operators import cache_scope
 from h2h_spark.operators.dedup import tokens
 
 # Small per-language marker lexicons for the n-gram/stopword language-ID
@@ -101,23 +102,21 @@ def decontaminate(
     of training text is one filter-after-projection with NO shuffle of the
     corpus — the groupBy aggregates only the matching (doc, shingle) pairs.
     """
-    from h2h_spark.operators.dedup import shingles_from_tokens
-
     from h2h_spark.operators.dedup import shingle_sets
 
-    # shingle_sets persists the (id, shingles) table: the persist is ALSO
-    # the evaluation barrier that keeps the shingle expression out of the
+    # each (id, shingles) table is checkpointed: the checkpoint is the
+    # evaluation barrier that keeps the shingle expression out of the
     # explode generator — a generator child this complex evaluates
     # interpreted (outside whole-stage codegen), measured ~4× slower than
-    # the codegen'd projection the barrier preserves.
-    ev = (
-        shingle_sets(eval_set, id_col, text_col, ngram, persist=True)
-        .select(F.explode("sh").alias("shingle"))
-        .distinct()
-    )
-    tr = shingle_sets(train, id_col, text_col, ngram, persist=True).select(
-        "id", F.explode("sh").alias("shingle")
-    )
+    # the codegen'd projection the barrier preserves.  A checkpoint, not
+    # a cache: its storage belongs to the lazily returned frame.
+    def _sets(df: DataFrame) -> DataFrame:
+        return shingle_sets(df, id_col, text_col, ngram).localCheckpoint(
+            eager=False
+        )
+
+    ev = _sets(eval_set).select(F.explode("sh").alias("shingle")).distinct()
+    tr = _sets(train).select("id", F.explode("sh").alias("shingle"))
     hits = tr.join(F.broadcast(ev), "shingle")
     return (
         hits.groupBy("id")
@@ -576,40 +575,39 @@ def tfidf_keywords(
         .select("id", F.explode("__t").alias("term"))
         .groupBy("id", "term")
         .agg(F.count("*").alias("tf"))
-        .persist()
     )
-    # terms is already one row per (id, term) after the aggregate, so
-    # document frequency is a plain count — count_distinct would add a
-    # needless dedup Expand over the same rows.
-    docfreq = terms.groupBy("term").agg(F.count("*").alias("df"))
-    ndocs = df.agg(F.count("*").alias("n"))
-    scored = (
-        terms.join(docfreq, "term")
-        .crossJoin(F.broadcast(ndocs))
-        .select(
-            "id",
-            "term",
-            F.round(
-                F.col("tf")
-                * (F.log((F.col("n") + 1) / (F.col("df") + 1)) + 1),
-                4,
-            ).alias("tfidf"),
+    with cache_scope() as persist:
+        terms = persist(terms)
+        # terms is already one row per (id, term) after the aggregate, so
+        # document frequency is a plain count — count_distinct would add a
+        # needless dedup Expand over the same rows.
+        docfreq = terms.groupBy("term").agg(F.count("*").alias("df"))
+        ndocs = df.agg(F.count("*").alias("n"))
+        scored = (
+            terms.join(docfreq, "term")
+            .crossJoin(F.broadcast(ndocs))
+            .select(
+                "id",
+                "term",
+                F.round(
+                    F.col("tf")
+                    * (F.log((F.col("n") + 1) / (F.col("df") + 1)) + 1),
+                    4,
+                ).alias("tfidf"),
+            )
         )
-    )
-    w = Window.partitionBy("id").orderBy(F.col("tfidf").desc(), F.col("term"))
-    out = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_k)
-        .select(
-            F.col("id").alias(id_col), "term", "tfidf",
-            F.col("rank").cast("int").alias("rank"),
+        w = Window.partitionBy("id").orderBy(F.col("tfidf").desc(), F.col("term"))
+        return (
+            scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= top_k)
+            .select(
+                F.col("id").alias(id_col), "term", "tfidf",
+                F.col("rank").cast("int").alias("rank"),
+            )
+            # materialize the per-doc top-k before the scope releases
+            # the term cache
+            .localCheckpoint(eager=True)
         )
-        # materialize the per-doc top-k, then release the term cache
-        # instead of leaking it (round 14; §5)
-        .localCheckpoint(eager=True)
-    )
-    terms.unpersist()
-    return out
 
 
 def vocab_coverage(

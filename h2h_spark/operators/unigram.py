@@ -44,6 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import cache_scope
 from .dedup import tokens
 
 
@@ -94,73 +95,71 @@ def unigram_train(
     # so sizing its partition count off max_words — not the corpus — is
     # principled at any scale; ~64 words/task keeps the per-round Viterbi
     # stage from paying 32 near-empty task launches per EM round.
-    words = (
-        df.select(F.explode(tokens(text_col)).alias("w"))
-        .filter(F.length("w") <= max_len)
-        .groupBy("w")
-        .agg(F.count("*").alias("freq"))
-        .orderBy(F.col("freq").desc(), "w")
-        .limit(max_words)
-        .repartition(max(1, max_words // 64))
-    ).persist()
-    # seed: every substring (start s, length l <= max_piece), weighted by
-    # word frequency — one |words|-bounded explode, not a corpus pass
-    subs = (
-        words.select(
-            "freq",
-            F.explode(
-                F.expr(
-                    f"""flatten(transform(sequence(1, length(w)), s ->
-                        transform(sequence(1, least({int(max_piece)}, length(w) - s + 1)),
-                                  l -> substring(w, s, l))))"""
-                )
-            ).alias("piece"),
+    with cache_scope() as persist:
+        words = persist(
+            df.select(F.explode(tokens(text_col)).alias("w"))
+            .filter(F.length("w") <= max_len)
+            .groupBy("w")
+            .agg(F.count("*").alias("freq"))
+            .orderBy(F.col("freq").desc(), "w")
+            .limit(max_words)
+            .repartition(max(1, max_words // 64))
         )
-        .groupBy("piece")
-        .agg(F.sum("freq").alias("cnt"))
-    ).persist()
-    alphabet = subs.filter(F.length("piece") == 1).select("piece")
-    top = subs.orderBy(F.col("cnt").desc(), "piece").limit(vocab_size)
-    vocab_df = top.unionByName(
-        subs.join(alphabet, "piece").select("piece", "cnt")
-    ).distinct()
-    # the vocab is bounded at vocab_size + |alphabet| rows (the
-    # k-centroids analogue) — a documented bounded driver collect
-    vocab = {r["piece"]: int(r["cnt"]) for r in vocab_df.collect()}
-
-    for _ in range(rounds):
-        vocab_b = spark.sparkContext.broadcast(vocab)
-        mp = int(max_piece)
-
-        def _estep(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            vd = vocab_b.value
-            for pdf in batches:
-                yield pd.DataFrame(
-                    {
-                        "freq": pdf["freq"],
-                        "seg": [
-                            _viterbi_segment(str(w), vd, mp) for w in pdf["w"]
-                        ],
-                    }
-                )
-
-        counts = (
-            words.select("w", "freq")
-            .mapInPandas(_estep, "freq long, seg string")
-            .select("freq", F.explode(F.split("seg", " ")).alias("piece"))
+        # seed: every substring (start s, length l <= max_piece), weighted by
+        # word frequency — one |words|-bounded explode, not a corpus pass
+        subs = persist(
+            words.select(
+                "freq",
+                F.explode(
+                    F.expr(
+                        f"""flatten(transform(sequence(1, length(w)), s ->
+                            transform(sequence(1, least({int(max_piece)}, length(w) - s + 1)),
+                                      l -> substring(w, s, l))))"""
+                    )
+                ).alias("piece"),
+            )
             .groupBy("piece")
             .agg(F.sum("freq").alias("cnt"))
         )
-        pruned = counts.orderBy(F.col("cnt").desc(), "piece").limit(vocab_size)
-        kept = pruned.unionByName(
-            alphabet.join(counts, "piece", "left").select(
-                "piece", F.coalesce("cnt", F.lit(0)).cast("long").alias("cnt")
-            )
+        alphabet = subs.filter(F.length("piece") == 1).select("piece")
+        top = subs.orderBy(F.col("cnt").desc(), "piece").limit(vocab_size)
+        vocab_df = top.unionByName(
+            subs.join(alphabet, "piece").select("piece", "cnt")
         ).distinct()
-        vocab = {r["piece"]: int(r["cnt"]) for r in kept.collect()}
+        # the vocab is bounded at vocab_size + |alphabet| rows (the
+        # k-centroids analogue) — a documented bounded driver collect
+        vocab = {r["piece"]: int(r["cnt"]) for r in vocab_df.collect()}
 
-    words.unpersist()
-    subs.unpersist()
+        for _ in range(rounds):
+            vocab_b = spark.sparkContext.broadcast(vocab)
+            mp = int(max_piece)
+
+            def _estep(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+                vd = vocab_b.value
+                for pdf in batches:
+                    yield pd.DataFrame(
+                        {
+                            "freq": pdf["freq"],
+                            "seg": [
+                                _viterbi_segment(str(w), vd, mp) for w in pdf["w"]
+                            ],
+                        }
+                    )
+
+            counts = (
+                words.select("w", "freq")
+                .mapInPandas(_estep, "freq long, seg string")
+                .select("freq", F.explode(F.split("seg", " ")).alias("piece"))
+                .groupBy("piece")
+                .agg(F.sum("freq").alias("cnt"))
+            )
+            pruned = counts.orderBy(F.col("cnt").desc(), "piece").limit(vocab_size)
+            kept = pruned.unionByName(
+                alphabet.join(counts, "piece", "left").select(
+                    "piece", F.coalesce("cnt", F.lit(0)).cast("long").alias("cnt")
+                )
+            ).distinct()
+            vocab = {r["piece"]: int(r["cnt"]) for r in kept.collect()}
     return spark.createDataFrame(
         sorted(vocab.items()), "piece string, cnt bigint"
     )

@@ -1,6 +1,9 @@
 """Mimic the driver's t2 correctness gate: run every queries()[name] at
 sf0.01 and diff against oracle_sql()[name] via DuckDB — row count, schema
 (column names), and an order-insensitive multiset of normalized values.
+A query that leaves a cache in the session's CacheManager after its
+rows are collected fails as a leak (the cache is then cleared so the
+next query starts clean).
 
 Usage: python scripts/oracle_check.py [--json=PATH] [sf_dir] [query ...]
 
@@ -72,6 +75,7 @@ def main() -> int:
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -84,7 +88,11 @@ def main() -> int:
             print(f"FAIL  {name}: spark error: {type(e).__name__}: {str(e)[:300]}")
             failures.append(name)
             results[name] = {"ok": False, "err": f"spark: {type(e).__name__}: {str(e)[:300]}"}
+            spark.catalog.clearCache()
             continue
+        leaked = not cache_manager.isEmpty()
+        if leaked:
+            spark.catalog.clearCache()
         if name not in oracles:
             print(f"rows  {name}: {len(srows)} rows (rows-only check) "
                   f"[{time.time()-t0:.1f}s]")
@@ -129,6 +137,8 @@ def main() -> int:
                 diff_s = [r for r in ns if r not in set_no][:3]
                 diff_o = [r for r in no if r not in set_ns][:3]
                 problems.append(f"values spark-only={diff_s} oracle-only={diff_o}")
+        if leaked:
+            problems.append("cache leak: CacheManager not empty after the query")
         if problems:
             print(f"FAIL  {name}: " + "; ".join(problems))
             failures.append(name)

@@ -310,7 +310,6 @@ def test_ann_and_ivf_knn_join_recall(spark):
     got_i = {}
     for r in ivf.collect():
         got_i.setdefault(r.probe_id, set()).add(r.neighbor_id)
-    idx.unpersist()
     assert set(got_i) == set(exact)
     assert all(len(got_i[p] & exact[p]) >= 1 for p in exact)
 

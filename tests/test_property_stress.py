@@ -42,40 +42,45 @@ _ASCII_CHARS = _string.ascii_letters + _string.digits + " \x00"
 _LATIN1_CHARS = _ASCII_CHARS + "\xe9\xff\xa0\x80"
 
 
+_FIELD_TYPE_STRATEGY = st.one_of(
+    st.integers(1, 20).map(String),
+    st.integers(1, 8).map(Unsigned),
+    st.integers(1, 8).map(Integer),
+    st.sampled_from([4, 8]).map(Real),
+    st.builds(Boolean),
+)
+
+
+def _value_strategy(draw, ft):
+    """Cell values for one field; every draw is Hypothesis's, so a
+    failing example shrinks to its smallest layout and rows."""
+    if ft.kind == "string":
+        # up to 3 characters over the width: encode truncates
+        chars = draw(st.sampled_from([_ASCII_CHARS, _LATIN1_CHARS]))
+        return st.text(chars, max_size=ft.nbytes + 3) | st.none()
+    if ft.kind == "unsigned":
+        return st.integers(0, (1 << (8 * ft.nbytes)) - 1)
+    if ft.kind == "integer":
+        hi = (1 << (8 * ft.nbytes - 1)) - 1
+        return st.integers(-hi - 1, hi)
+    if ft.kind == "real":
+        return st.floats(-1e6, 1e6).map(lambda v: float(f"{v:.6g}")) | (
+            st.sampled_from([float("nan"), None])
+        )
+    return st.booleans() | st.none()  # None encodes as "" / False
+
+
 @st.composite
 def layouts_with_data(draw):
-    random.seed(draw(st.integers(0, 2**32 - 1)))
-    n_fields = random.randint(1, 6)
+    kinds = draw(st.lists(_FIELD_TYPE_STRATEGY, min_size=1, max_size=6))
+    fields = [(f"f{i}", ft) for i, ft in enumerate(kinds)]
     n_rows = draw(st.integers(1, 50))
-    fields, cols = [], {}
-    for i in range(n_fields):
-        ft = random.choice(_FIELD_TYPES)()
-        name = f"f{i}"
-        fields.append((name, ft))
-        if ft.kind == "string":
-            # up to 3 characters over the width: encode truncates
-            chars = random.choice([_ASCII_CHARS, _LATIN1_CHARS])
-            cols[name] = [
-                "".join(random.choices(chars, k=random.randint(0, ft.nbytes + 3)))
-                for _ in range(n_rows)
-            ]
-        elif ft.kind == "unsigned":
-            hi = (1 << (8 * ft.nbytes)) - 1
-            cols[name] = [random.randint(0, hi) for _ in range(n_rows)]
-        elif ft.kind == "integer":
-            hi = (1 << (8 * ft.nbytes - 1)) - 1
-            cols[name] = [random.randint(-hi - 1, hi) for _ in range(n_rows)]
-        elif ft.kind == "real":
-            cols[name] = [
-                random.choice([float("nan"), None])
-                if random.random() < 0.1
-                else float(f"{random.uniform(-1e6, 1e6):.6g}")
-                for _ in range(n_rows)
-            ]
-        else:
-            cols[name] = [random.random() < 0.5 for _ in range(n_rows)]
-        if ft.kind in ("string", "boolean") and random.random() < 0.3:
-            cols[name][random.randrange(n_rows)] = None  # encodes as "" / False
+    cols = {
+        name: draw(
+            st.lists(_value_strategy(draw, ft), min_size=n_rows, max_size=n_rows)
+        )
+        for name, ft in fields
+    }
     return Layout(fields), pd.DataFrame(cols)
 
 

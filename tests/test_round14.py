@@ -1,18 +1,10 @@
-"""Round-14 focused tests: cache-residue pairing for the iterative
-operators (VERDICT r13 item 5), the PQ literal-SQL size-cap fallback
-(item 8), and the scale_out rescue guard."""
+"""Round-14 focused tests: no cache residue from any engine operator,
+on the normal and the exception path (``cache_scope``), the PQ
+literal-SQL size-cap fallback, and the scale_out rescue guard."""
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def _persistent_rdd_ids(spark) -> set:
-    jmap = spark.sparkContext._jsc.sc().getPersistentRDDs()
-    it = jmap.iterator()
-    ids = set()
-    while it.hasNext():
-        ids.add(it.next()._1())
-    return ids
 
 
 def _edges(spark):
@@ -22,112 +14,249 @@ def _edges(spark):
     )
 
 
-@pytest.mark.parametrize("op", [
-    "pagerank", "label_propagation", "label_propagation_semisync",
-    "bfs_distances", "sssp_bounded", "feature_propagation",
-    "connected_components", "simhash_near_duplicates", "jaccard_pairs",
-    "dbscan_2d", "minhash_dedup_against_index",
-])
-def test_no_cache_residue(spark, op):
-    """Every persist() inside the operator is released by the time the
-    result is materialized: the only persistent RDDs left NEW after the
-    run are localCheckpoint storage of the RESULT lineage (bounded, and
-    owned by the returned DataFrame) — never the operator-internal edge
-    /label/fingerprint caches.  Detection: internal caches are DataFrame
-    persist() entries, which live in the CacheManager — assert the
-    CacheManager is empty after the action (checkpoint RDD storage does
-    not register there)."""
-    from h2h_spark.operators import dedup as D
-    from h2h_spark.operators import graph as G
-
-    e = _edges(spark)
-    docs = spark.createDataFrame(
+def _docs(spark):
+    return spark.createDataFrame(
         [(i, ("alpha beta gamma delta epsilon zeta " * 4) + f"w{i % 3}")
          for i in range(30)],
         "doc_id bigint, text string",
     )
-    spark.catalog.clearCache()
+
+
+def _vecs(spark):
+    return spark.createDataFrame(
+        [(i, [float((i * (j + 1)) % 5) + 1.0 for j in range(4)])
+         for i in range(30)],
+        "id bigint, vec array<double>",
+    )
+
+
+def _run_op(spark, op):
+    """Run one engine operator on tiny inputs; returns what it returns."""
+    from h2h_spark.operators import dedup as D
+    from h2h_spark.operators import graph as G
+    from h2h_spark.operators import simsearch as S
+
+    e = _edges(spark)
+    docs = _docs(spark)
+    seeds = e.select(F.col("src").alias("node")).limit(3)
     if op == "pagerank":
-        out = G.pagerank(e, iterations=2)
-    elif op == "label_propagation":
-        out = G.label_propagation(e, iterations=2)
-    elif op == "label_propagation_semisync":
-        out = G.label_propagation_semisync(e, rounds=2, substeps=2)
-    elif op == "bfs_distances":
-        out = G.bfs_distances(
-            e, e.select(F.col("src").alias("node")).limit(3), max_depth=6
+        return G.pagerank(e, iterations=2)
+    if op == "triangle_count":
+        return G.triangle_count(e.toDF("a", "b"))
+    if op == "label_propagation":
+        return G.label_propagation(e, iterations=2)
+    if op == "label_propagation_semisync":
+        return G.label_propagation_semisync(e, rounds=2, substeps=2)
+    if op == "bfs_distances":
+        return G.bfs_distances(e, seeds, max_depth=6)
+    if op == "sssp_bounded":
+        return G.sssp_bounded(
+            e.withColumn("w", F.lit(1.0)), seeds, max_dist=3.5
         )
-    elif op == "sssp_bounded":
-        out = G.sssp_bounded(
-            e.withColumn("w", F.lit(1.0)),
-            e.select(F.col("src").alias("node")).limit(3),
-            max_dist=3.5,
-        )
-    elif op == "feature_propagation":
-        out = G.feature_propagation(
+    if op == "feature_propagation":
+        return G.feature_propagation(
             e,
             e.select(F.col("src").alias("node")).distinct().withColumn(
                 "feat", (F.col("node") % 9).cast("bigint")
             ),
             rounds=2,
         )
-    elif op == "connected_components":
-        out = D.connected_components(
-            e.select(F.col("src").alias("id_a"), F.col("dst").alias("id_b"))
+    if op == "resolve_tree":
+        from h2h_spark.operators.hierarchy import resolve_tree
+
+        tree = spark.createDataFrame(
+            [(i, i // 2) for i in range(1, 20)], "child bigint, parent bigint"
         )
-    elif op == "simhash_near_duplicates":
-        out = D.simhash_near_duplicates(docs, "doc_id", "text", max_hamming=30)
-    elif op == "dbscan_2d":
+        return resolve_tree(tree)
+    if op == "connected_components":
+        return D.connected_components(e.toDF("id_a", "id_b"))
+    if op == "simhash_near_duplicates":
+        return D.simhash_near_duplicates(docs, "doc_id", "text", max_hamming=30)
+    if op == "jaccard_pairs":
+        return D.jaccard_pairs(docs, "doc_id", "text", threshold=0.1)
+    if op == "prefix_filter_pairs":
+        return D.prefix_filter_pairs(docs, "doc_id", "text", threshold=0.5)
+    if op == "minhash_near_duplicates":
+        return D.minhash_near_duplicates(docs, "doc_id", "text")
+    if op == "minhash_dedup_against_index":
+        entries, sets = D.minhash_index(
+            docs.filter("doc_id < 20"), "doc_id", "text"
+        )
+        return D.minhash_dedup_against_index(
+            docs.filter("doc_id >= 20"), entries, sets, "doc_id", "text"
+        )
+    if op == "dbscan_2d":
         from h2h_spark.operators.spatial import dbscan_2d
 
         pts = spark.createDataFrame(
             [(i, (i % 7) * 0.01, (i % 5) * 0.01) for i in range(60)],
             "pid bigint, x double, y double",
         )
-        out = dbscan_2d(pts, "pid", "x", "y", eps=0.02, min_pts=3)
-    elif op == "minhash_dedup_against_index":
-        entries, sets = D.minhash_index(docs.filter("doc_id < 20"), "doc_id", "text")
-        out = D.minhash_dedup_against_index(
-            docs.filter("doc_id >= 20"), entries, sets, "doc_id", "text"
+        return dbscan_2d(pts, "pid", "x", "y", eps=0.02, min_pts=3)
+    if op == "kmeans_fit":
+        from h2h_spark.operators.cluster import kmeans_fit
+
+        return kmeans_fit(_vecs(spark), "id", "vec", k=2, max_iter=2)
+    if op == "pq_train":
+        from h2h_spark.operators.pq import pq_train
+
+        return pq_train(_vecs(spark), "id", "vec", m=2, k=2, dim=4, iters=1)
+    if op == "opq_train":
+        from h2h_spark.operators.opq import opq_train
+
+        return opq_train(_vecs(spark), "id", "vec", m=2, k=2, dim=4, rounds=1)
+    if op == "ivf_topk":
+        return S.ivf_topk(
+            _vecs(spark), "id", "vec", [1.0, 2.0, 3.0, 4.0], k=3, n_centroids=2
         )
-        sets.unpersist()  # the index's sets are the caller's to release
-    else:
-        out = D.jaccard_pairs(docs, "doc_id", "text", threshold=0.1)
-    out.write.format("noop").mode("overwrite").save()
-    # DataFrame persist() caches register in the CacheManager; a leaked
-    # operator-internal cache would still be listed here.
+    if op == "embedding_near_duplicates":
+        return S.embedding_near_duplicates(
+            _vecs(spark), "id", "vec", threshold=0.9, nbits=2, bands=2
+        )
+    if op == "semantic_dedup":
+        return S.semantic_dedup(_vecs(spark), "id", "vec", n_clusters=2)
+    if op == "kmv_jaccard_pairs":
+        from h2h_spark.operators.sketch import kmv_jaccard_pairs
+
+        return kmv_jaccard_pairs(docs, "doc_id", "text", k=16, threshold=0.1)
+    if op == "perplexity":
+        from h2h_spark.operators.lm import perplexity
+
+        return perplexity(docs, "doc_id", "text")
+    if op == "decontaminate":
+        from h2h_spark.operators.text import decontaminate
+
+        return decontaminate(
+            docs.filter("doc_id >= 5"), docs.filter("doc_id < 5"),
+            "doc_id", "text", ngram=3,
+        )
+    if op == "tfidf_keywords":
+        from h2h_spark.operators.text import tfidf_keywords
+
+        return tfidf_keywords(docs, "doc_id", "text")
+    if op == "unigram_train":
+        from h2h_spark.operators.unigram import unigram_train
+
+        return unigram_train(docs, "text", rounds=1)
+    if op == "pack_sequences":
+        from h2h_spark.operators.packing import pack_sequences
+
+        lens = spark.createDataFrame(
+            [(i, 1 + i % 7) for i in range(40)], "id bigint, n_tokens bigint"
+        )
+        return pack_sequences(lens, "id", "n_tokens", budget=10)
+    if op == "global_rank":
+        from h2h_spark.operators.rank import global_rank
+
+        return global_rank(docs, [("doc_id", True)])
+    raise AssertionError(op)
+
+
+#: operators that take a cache (through ``cache_scope``)
+_CACHING_OPS = [
+    "pagerank", "triangle_count", "label_propagation",
+    "label_propagation_semisync", "bfs_distances", "sssp_bounded",
+    "feature_propagation", "connected_components",
+    "simhash_near_duplicates", "jaccard_pairs", "prefix_filter_pairs",
+    "dbscan_2d", "resolve_tree", "kmeans_fit", "pq_train", "opq_train",
+    "embedding_near_duplicates", "semantic_dedup", "kmv_jaccard_pairs",
+    "perplexity", "tfidf_keywords", "unigram_train", "pack_sequences",
+    "global_rank",
+]
+
+
+@pytest.mark.parametrize("op", _CACHING_OPS + [
+    "minhash_near_duplicates", "minhash_dedup_against_index", "ivf_topk",
+    "decontaminate",
+])
+def test_no_cache_residue(spark, op):
+    """No operator leaves a cache behind once its result is consumed.
+    Internal caches are DataFrame persist() entries, which live in the
+    CacheManager; checkpoint storage (what a lazily returned result may
+    still read) does not register there — so the CacheManager is empty
+    after the result's action."""
+    spark.catalog.clearCache()
+    out = _run_op(spark, op)
+    for df in out if isinstance(out, tuple) else (out,):
+        if isinstance(df, DataFrame):
+            df.write.format("noop").mode("overwrite").save()
     jcm = spark._jsparkSession.sharedState().cacheManager()
     assert jcm.isEmpty(), f"{op}: operator left DataFrame cache residue"
 
 
-@pytest.mark.parametrize("op", ["label_propagation", "label_propagation_semisync"])
-def test_lpa_releases_edge_cache_on_failure(spark, monkeypatch, op):
-    """A sub-step that raises still releases every cache it took: the
-    second checkpoint fails while the edge list and one label table are
-    cached, and the CacheManager is empty afterwards."""
-    from h2h_spark.operators import graph as G
+@pytest.mark.parametrize("op", _CACHING_OPS)
+def test_operator_releases_caches_on_failure(spark, monkeypatch, op):
+    """A sub-step that raises still releases every cache the operator
+    took: once a cache is held, the next localCheckpoint, collect or
+    count raises, and the CacheManager is empty afterwards."""
+    frame = type(_edges(spark))  # the concrete DataFrame class
+    held = []
+    real_persist = frame.persist
 
-    e = _edges(spark)
-    frame = type(e)  # the concrete DataFrame class the session returns
-    real = frame.localCheckpoint
-    calls = []
+    def persist(self, *args, **kwargs):
+        held.append(self)
+        return real_persist(self, *args, **kwargs)
 
-    def failing(self, *args, **kwargs):
-        calls.append(1)
-        if len(calls) == 2:
-            raise RuntimeError("sub-step failed")
-        return real(self, *args, **kwargs)
+    def failing(name):
+        real = getattr(frame, name)
+
+        def call(self, *args, **kwargs):
+            if held:
+                raise RuntimeError("sub-step failed")
+            return real(self, *args, **kwargs)
+
+        return call
 
     spark.catalog.clearCache()
-    monkeypatch.setattr(frame, "localCheckpoint", failing)
+    monkeypatch.setattr(frame, "persist", persist)
+    for name in ("localCheckpoint", "collect", "count"):
+        monkeypatch.setattr(frame, name, failing(name))
     with pytest.raises(RuntimeError, match="sub-step failed"):
-        if op == "label_propagation":
-            G.label_propagation(e, iterations=3)
-        else:
-            G.label_propagation_semisync(e, rounds=2, substeps=2)
-    assert len(calls) == 2
+        _run_op(spark, op)
+    monkeypatch.undo()
+    assert held, f"{op}: took no cache"
     jcm = spark._jsparkSession.sharedState().cacheManager()
-    assert jcm.isEmpty(), f"{op}: edge cache leaked on the exception path"
+    assert jcm.isEmpty(), f"{op}: cache leaked on the exception path"
+
+
+@pytest.mark.parametrize("name", [
+    "q_stream_dedup_index", "q_recursive_cte", "q_mbox_threads",
+    "q_top_supplier", "q_json_corrupt", "q_ivf_topk", "q_decontaminate",
+    "q_dedup_near_minhash",
+])
+def test_query_leaves_no_cache(spark, name):
+    """Queries whose result reads an intermediate lazily checkpoint it
+    instead of caching it, so once the result is collected the
+    CacheManager is empty (scripts/oracle_check.py checks all queries)."""
+    import __spark_entry__ as entrymod
+
+    from tests.conftest import SF_DIR
+
+    spark.catalog.clearCache()
+    entrymod.queries()[name](spark, SF_DIR).collect()
+    jcm = spark._jsparkSession.sharedState().cacheManager()
+    assert jcm.isEmpty(), f"{name} left a cache behind"
+
+
+def test_cache_scope_releases_on_exit_and_on_raise(spark):
+    """The scope unpersists everything it cached when the body returns
+    and when the body raises."""
+    from h2h_spark.operators import cache_scope
+
+    jcm = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    with cache_scope() as persist:
+        a = persist(spark.range(10).selectExpr("id * 2 AS x"))
+        b = persist(a.filter("x > 4"))
+        assert a.count() == 10 and b.count() == 7
+        assert a.storageLevel.useMemory and not jcm.isEmpty()
+    assert jcm.isEmpty()
+    with pytest.raises(RuntimeError, match="body failed"):
+        with cache_scope() as persist:
+            persist(spark.range(5).selectExpr("id + 1 AS y")).count()
+            assert not jcm.isEmpty()
+            raise RuntimeError("body failed")
+    assert jcm.isEmpty()
 
 
 def test_dbscan_releases_caches_on_failure(spark, monkeypatch):

@@ -146,10 +146,12 @@ def test_order_count_distribution_keeps_zero_order_customers(spark, tmp_work):
 
 
 def test_top_supplier_single_fact_scan_no_global_window(spark):
-    """Q15's scalar MAX must come from the persisted supplier-cardinality
-    aggregate (both join branches read the cache — one lineitem scan),
-    never from a single-partition global window over the fact."""
+    """Q15's scalar MAX must come from the checkpointed supplier-
+    cardinality aggregate (both join branches read the checkpoint, so the
+    lineitem scan runs once and is not in the query plan), never from a
+    single-partition global window over the fact."""
     df = entrymod.q_top_supplier(spark, SF_DIR)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" in plan
+    assert plan.count("Scan ExistingRDD") == 2
+    assert "lineitem" not in plan
     assert "Window" not in plan
