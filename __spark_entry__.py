@@ -44,7 +44,7 @@ from h2h_spark import (  # noqa: E402
     write_xml,
 )
 from h2h_spark.operators import asof as AS  # noqa: E402
-from h2h_spark.operators import cache_scope  # noqa: E402
+from h2h_spark.operators import cache_scope, per_row  # noqa: E402
 from h2h_spark.operators import dedup as D  # noqa: E402
 from h2h_spark.operators import lm as LM  # noqa: E402
 from h2h_spark.operators import multimodal as MM  # noqa: E402
@@ -129,19 +129,13 @@ def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.schema(s).parquet(p)
 
 
-def _doc_ids_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``doc_id`` column of documents, rescaled to the session's cores
-    (round 14).  The callers feed per-row Python synth+parse work
-    (mapInPandas); a small corpus arrives as ONE scan split, so without
-    the rescale all of that Python ran on a single task while the rest
-    of the box idled.  ``scale_out`` is a no-op whenever the scan
-    already carries >= defaultParallelism partitions (any real scale) —
-    data-adaptive, not core-count-tuned."""
-    from h2h_spark.operators import scale_out
-
-    return scale_out(
-        _read_table(spark, sf_dir, "documents").select("doc_id"),
-        "doc_id",
+def _doc_blobs(spark: SparkSession, sf_dir: str, blob) -> DataFrame:
+    """``(doc_id, data)`` with ``data = blob(doc_id)`` for every document:
+    the synthesized fixture a metadata query parses back, built in one
+    ``per_row`` stage so no blob leaves its task."""
+    return per_row(
+        _read_table(spark, sf_dir, "documents"), ["doc_id"],
+        lambda d: [(d, blob(d))], "doc_id bigint, data binary",
     )
 
 
@@ -2485,7 +2479,7 @@ FROM documents
 
 
 def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary payload column → Arrow-batched decode stage (mapInPandas);
+    """Binary payload column → one ``per_row`` decode stage;
     deterministic features (n_bytes, md5) oracle-checked, stub decode
     fields dropped for the compare."""
     docs = _read_table(spark, sf_dir, "documents")
@@ -3702,35 +3696,24 @@ def q_exif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     for even ids, big-endian for odd — both wire layouts graded), the
     engine walks the actual bytes.  Pure metadata walk, no pixel
     decode; Arrow-batched; oracle closed-form."""
-    from h2h_spark.operators.multimodal import exif_stats
+    from h2h_spark.operators.multimodal import (
+        encode_exif_app1, exif_stats, insert_exif, synthesize_jpeg,
+    )
 
-    docs = _doc_ids_scaled(spark, sf_dir)
-
-    def _synth(batches):
-        import pandas as pd
-
-        from h2h_spark.operators.multimodal import (
-            encode_exif_app1, insert_exif, synthesize_jpeg,
+    def _blob(d):
+        app1 = encode_exif_app1(
+            make=f"Cam{d % 5}",
+            model=f"M{d % 7}",
+            orientation=d % 8 + 1,
+            datetime_str="2024:01:%02d 12:00:00" % (d % 28 + 1),
+            width=640 + (d % 13) * 16,
+            height=480 + (d % 9) * 16,
+            iso=100 * (d % 4 + 1),
+            byteorder="II" if d % 2 == 0 else "MM",
         )
+        return insert_exif(synthesize_jpeg(d % 11), app1)
 
-        for pdf in batches:
-            out = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                app1 = encode_exif_app1(
-                    make=f"Cam{d % 5}",
-                    model=f"M{d % 7}",
-                    orientation=d % 8 + 1,
-                    datetime_str="2024:01:%02d 12:00:00" % (d % 28 + 1),
-                    width=640 + (d % 13) * 16,
-                    height=480 + (d % 9) * 16,
-                    iso=100 * (d % 4 + 1),
-                    byteorder="II" if d % 2 == 0 else "MM",
-                )
-                out.append(insert_exif(synthesize_jpeg(d % 11), app1))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": out})
-
-    binary = docs.mapInPandas(_synth, "doc_id bigint, data binary")
+    binary = _doc_blobs(spark, sf_dir, _blob)
     return exif_stats(binary, "doc_id").select(
         "doc_id", "make", "model", "orientation",
         F.col("datetime").alias("dt"), "width", "height", "iso",
@@ -3759,29 +3742,18 @@ def q_mp3_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     resync, and reports frame count / audio bytes / integer-exact
     duration / CBR rate detection.  No decode; Arrow-batched; oracle
     closed-form."""
-    from h2h_spark.operators.multimodal import mp3_stats
+    from h2h_spark.operators.multimodal import encode_mp3_frames, mp3_stats
 
-    docs = _doc_ids_scaled(spark, sf_dir)
+    def _blob(d):
+        n = d % 6 + 3
+        bri = d % 14 + 1
+        sri = d % 3
+        return encode_mp3_frames(
+            [(bri, sri, i % 2) for i in range(n)],
+            id3_bytes=d % 50,
+        )
 
-    def _synth(batches):
-        import pandas as pd
-
-        from h2h_spark.operators.multimodal import encode_mp3_frames
-
-        for pdf in batches:
-            out = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                n = d % 6 + 3
-                bri = d % 14 + 1
-                sri = d % 3
-                out.append(encode_mp3_frames(
-                    [(bri, sri, i % 2) for i in range(n)],
-                    id3_bytes=d % 50,
-                ))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": out})
-
-    binary = docs.mapInPandas(_synth, "doc_id bigint, data binary")
+    binary = _doc_blobs(spark, sf_dir, _blob)
     return mp3_stats(binary, "doc_id")
 
 
@@ -3856,30 +3828,19 @@ def q_flac_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags): each doc id synthesizes a FLAC header with arithmetic-derived
     stream parameters and tags plus filler frames the walker must not
     read; integer-exact duration.  Arrow-batched; oracle closed-form."""
-    from h2h_spark.operators.multimodal import flac_stats
+    from h2h_spark.operators.multimodal import encode_flac_meta, flac_stats
 
-    docs = _doc_ids_scaled(spark, sf_dir)
+    def _blob(d):
+        return encode_flac_meta(
+            sample_rate=(44100, 48000, 32000, 22050)[d % 4],
+            channels=d % 2 + 1,
+            bits_per_sample=(16, 24)[d % 2],
+            total_samples=100000 + d * 7,
+            tags={"TITLE": f"T{d % 9}", "ARTIST": f"A{d % 6}"},
+            audio_bytes=d % 300,
+        )
 
-    def _synth(batches):
-        import pandas as pd
-
-        from h2h_spark.operators.multimodal import encode_flac_meta
-
-        for pdf in batches:
-            out = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                out.append(encode_flac_meta(
-                    sample_rate=(44100, 48000, 32000, 22050)[d % 4],
-                    channels=d % 2 + 1,
-                    bits_per_sample=(16, 24)[d % 2],
-                    total_samples=100000 + d * 7,
-                    tags={"TITLE": f"T{d % 9}", "ARTIST": f"A{d % 6}"},
-                    audio_bytes=d % 300,
-                ))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": out})
-
-    binary = docs.mapInPandas(_synth, "doc_id bigint, data binary")
+    binary = _doc_blobs(spark, sf_dir, _blob)
     return flac_stats(binary, "doc_id")
 
 
@@ -3910,29 +3871,18 @@ def q_ogg_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     OGG polynomial): each doc id synthesizes a 2-stream OGG file with
     arithmetic-derived page/packet shapes.  Oracle closed-form (packet
     sizes chosen so lacing arithmetic is exact in SQL)."""
-    from h2h_spark.operators.multimodal import ogg_stats
+    from h2h_spark.operators.multimodal import encode_ogg_pages, ogg_stats
 
-    docs = _doc_ids_scaled(spark, sf_dir)
+    def _blob(d):
+        # stream 1: (d%3+1) pages of two packets (sizes d%200+1,
+        # 300); stream 2: one page, one packet (d%100+5)
+        pages = [
+            (1, 1000 * (p + 1) + d % 7, [d % 200 + 1, 300])
+            for p in range(d % 3 + 1)
+        ] + [(2, d % 11, [d % 100 + 5])]
+        return encode_ogg_pages(pages)
 
-    def _synth(batches):
-        import pandas as pd
-
-        from h2h_spark.operators.multimodal import encode_ogg_pages
-
-        for pdf in batches:
-            out = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                # stream 1: (d%3+1) pages of two packets (sizes d%200+1,
-                # 300); stream 2: one page, one packet (d%100+5)
-                pages = [
-                    (1, 1000 * (p + 1) + d % 7, [d % 200 + 1, 300])
-                    for p in range(d % 3 + 1)
-                ] + [(2, d % 11, [d % 100 + 5])]
-                out.append(encode_ogg_pages(pages))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": out})
-
-    binary = docs.mapInPandas(_synth, "doc_id bigint, data binary")
+    binary = _doc_blobs(spark, sf_dir, _blob)
     return ogg_stats(binary, "doc_id")
 
 
@@ -4023,30 +3973,19 @@ def q_tiff_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     parse_tiff_meta` — the raw-.tif twin of the EXIF IFD walk, baseline
     image tags, both byte orders alternating by id).  Oracle
     closed-form."""
-    from h2h_spark.operators.multimodal import tiff_stats
+    from h2h_spark.operators.multimodal import encode_tiff_meta, tiff_stats
 
-    docs = _doc_ids_scaled(spark, sf_dir)
+    def _blob(d):
+        return encode_tiff_meta(
+            width=320 + (d % 17) * 8,
+            height=240 + (d % 11) * 8,
+            bits=(1, 8, 16)[d % 3],
+            compression=(1, 5, 7)[d % 3],
+            description=f"scan of page {d % 23}",
+            byteorder="II" if d % 2 == 0 else "MM",
+        )
 
-    def _synth(batches):
-        import pandas as pd
-
-        from h2h_spark.operators.multimodal import encode_tiff_meta
-
-        for pdf in batches:
-            out = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                out.append(encode_tiff_meta(
-                    width=320 + (d % 17) * 8,
-                    height=240 + (d % 11) * 8,
-                    bits=(1, 8, 16)[d % 3],
-                    compression=(1, 5, 7)[d % 3],
-                    description=f"scan of page {d % 23}",
-                    byteorder="II" if d % 2 == 0 else "MM",
-                ))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": out})
-
-    binary = docs.mapInPandas(_synth, "doc_id bigint, data binary")
+    binary = _doc_blobs(spark, sf_dir, _blob)
     return tiff_stats(binary, "doc_id")
 
 
@@ -4068,30 +4007,19 @@ def q_webp_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature bits + VP8X extended features incl. ANIM/ANMF animation
     frames; Google WebP Container Specification).  No pixel decode;
     fixture flavors rotate by id.  Oracle closed-form."""
-    from h2h_spark.operators.multimodal import webp_stats
+    from h2h_spark.operators.multimodal import encode_webp, webp_stats
 
-    docs = _doc_ids_scaled(spark, sf_dir)
+    def _blob(d):
+        flavor = ("lossy", "lossless", "extended")[d % 3]
+        return encode_webp(
+            width=16 + (d % 50) * 4,
+            height=16 + (d % 30) * 4,
+            flavor=flavor,
+            n_anim_frames=(d % 4) if flavor == "extended" else 0,
+            has_exif=(flavor == "extended" and d % 2 == 0),
+        )
 
-    def _synth(batches):
-        import pandas as pd
-
-        from h2h_spark.operators.multimodal import encode_webp
-
-        for pdf in batches:
-            out = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                flavor = ("lossy", "lossless", "extended")[d % 3]
-                out.append(encode_webp(
-                    width=16 + (d % 50) * 4,
-                    height=16 + (d % 30) * 4,
-                    flavor=flavor,
-                    n_anim_frames=(d % 4) if flavor == "extended" else 0,
-                    has_exif=(flavor == "extended" and d % 2 == 0),
-                ))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": out})
-
-    binary = docs.mapInPandas(_synth, "doc_id bigint, data binary")
+    binary = _doc_blobs(spark, sf_dir, _blob)
     return webp_stats(binary, "doc_id")
 
 
@@ -4117,27 +4045,16 @@ def q_adts_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     CRC-header width handling).  The streaming-audio twin of
     `q_mp3_meta`.  Oracle closed-form incl. the 14496-3 sampling-
     frequency table."""
-    from h2h_spark.operators.multimodal import adts_stats
+    from h2h_spark.operators.multimodal import adts_stats, encode_adts_frames
 
-    docs = _doc_ids_scaled(spark, sf_dir)
+    def _blob(d):
+        k = d % 5 + 1
+        return encode_adts_frames(
+            [(d % 4, d % 13, 50 + (d % 11) * 7)] * k,
+            with_crc=(d % 2 == 1),
+        )
 
-    def _synth(batches):
-        import pandas as pd
-
-        from h2h_spark.operators.multimodal import encode_adts_frames
-
-        for pdf in batches:
-            out = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                k = d % 5 + 1
-                out.append(encode_adts_frames(
-                    [(d % 4, d % 13, 50 + (d % 11) * 7)] * k,
-                    with_crc=(d % 2 == 1),
-                ))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": out})
-
-    binary = docs.mapInPandas(_synth, "doc_id bigint, data binary")
+    binary = _doc_blobs(spark, sf_dir, _blob)
     return adts_stats(binary, "doc_id")
 
 
@@ -4273,27 +4190,16 @@ def q_pdf_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-OCR gate of a document-ingest pipeline: drop encrypted /
     malformed files before spending decode compute.  Oracle
     closed-form."""
-    from h2h_spark.operators.office import pdf_stats
+    from h2h_spark.operators.office import build_pdf, pdf_stats
 
-    docs = _doc_ids_scaled(spark, sf_dir)
+    def _blob(d):
+        return build_pdf(
+            d % 9 + 1,
+            version="1.7" if d % 2 else "1.4",
+            encrypted=(d % 11 == 0),
+        )
 
-    def _synth(batches):
-        import pandas as pd
-
-        from h2h_spark.operators.office import build_pdf
-
-        for pdf in batches:
-            out = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                out.append(build_pdf(
-                    d % 9 + 1,
-                    version="1.7" if d % 2 else "1.4",
-                    encrypted=(d % 11 == 0),
-                ))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": out})
-
-    binary = docs.mapInPandas(_synth, "doc_id bigint, data binary")
+    binary = _doc_blobs(spark, sf_dir, _blob)
     return pdf_stats(binary, "doc_id")
 
 
@@ -4319,28 +4225,17 @@ def q_pdf_xrefstream(spark: SparkSession, sf_dir: str) -> DataFrame:
     writer emits; the fixtures pack catalog/pages/page objects into an
     object stream and alternate predictor-wrapped vs raw xref rows.
     Oracle closed-form on the same seed arithmetic."""
-    from h2h_spark.operators.office import pdf_stats
+    from h2h_spark.operators.office import build_pdf_xrefstream, pdf_stats
 
-    docs = _doc_ids_scaled(spark, sf_dir)
+    def _blob(d):
+        return build_pdf_xrefstream(
+            d % 7 + 1,
+            version=("1.5", "1.6", "1.7")[d % 3],
+            predictor=12 if d % 2 == 0 else 1,
+            encrypted=(d % 13 == 0),
+        )
 
-    def _synth(batches):
-        import pandas as pd
-
-        from h2h_spark.operators.office import build_pdf_xrefstream
-
-        for pdf in batches:
-            out = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                out.append(build_pdf_xrefstream(
-                    d % 7 + 1,
-                    version=("1.5", "1.6", "1.7")[d % 3],
-                    predictor=12 if d % 2 == 0 else 1,
-                    encrypted=(d % 13 == 0),
-                ))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": out})
-
-    binary = docs.mapInPandas(_synth, "doc_id bigint, data binary")
+    binary = _doc_blobs(spark, sf_dir, _blob)
     return pdf_stats(binary, "doc_id")
 
 
@@ -6215,29 +6110,18 @@ def q_avif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     meta(iinf/infe item types, iprp/ipco ispe dims, pixi bit depth),
     reusing the MP4 box walker; no AV1 decode).  The modern crawl
     image format next to WebP.  Oracle closed-form."""
-    from h2h_spark.operators.multimodal import avif_stats
+    from h2h_spark.operators.multimodal import avif_stats, encode_avif_meta
 
-    docs = _doc_ids_scaled(spark, sf_dir)
+    def _blob(d):
+        return encode_avif_meta(
+            width=256 + (d % 31) * 8,
+            height=144 + (d % 17) * 8,
+            bit_depth=(8, 10, 12)[d % 3],
+            has_exif=(d % 4 == 0),
+            animated=(d % 5 == 0),
+        )
 
-    def _synth(batches):
-        import pandas as pd
-
-        from h2h_spark.operators.multimodal import encode_avif_meta
-
-        for pdf in batches:
-            out = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                out.append(encode_avif_meta(
-                    width=256 + (d % 31) * 8,
-                    height=144 + (d % 17) * 8,
-                    bit_depth=(8, 10, 12)[d % 3],
-                    has_exif=(d % 4 == 0),
-                    animated=(d % 5 == 0),
-                ))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": out})
-
-    binary = docs.mapInPandas(_synth, "doc_id bigint, data binary")
+    binary = _doc_blobs(spark, sf_dir, _blob)
     return avif_stats(binary, "doc_id")
 
 
@@ -6262,35 +6146,24 @@ def q_id3_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     sizes, $00/$03 text encodings, padding stop), layered in front of
     real MP3 frames so the tag walk must hand off cleanly where the
     audio walk begins.  Oracle closed-form."""
-    from h2h_spark.operators.multimodal import id3_stats
+    from h2h_spark.operators.multimodal import (
+        encode_id3v2, encode_mp3_frames, id3_stats,
+    )
 
-    docs = _doc_ids_scaled(spark, sf_dir)
-
-    def _synth(batches):
-        import pandas as pd
-
-        from h2h_spark.operators.multimodal import (
-            encode_id3v2, encode_mp3_frames,
+    def _blob(d):
+        tags = {
+            "TIT2": f"track {d % 97}",
+            "TPE1": f"artist {d % 13}",
+            "TALB": f"album {d % 7}",
+        }
+        if d % 3 == 0:
+            tags["TCON"] = f"genre {d % 5}"
+        return (
+            encode_id3v2(tags, version=3 if d % 2 else 4)
+            + encode_mp3_frames([(5, 1, 0)])
         )
 
-        for pdf in batches:
-            out = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                tags = {
-                    "TIT2": f"track {d % 97}",
-                    "TPE1": f"artist {d % 13}",
-                    "TALB": f"album {d % 7}",
-                }
-                if d % 3 == 0:
-                    tags["TCON"] = f"genre {d % 5}"
-                out.append(
-                    encode_id3v2(tags, version=3 if d % 2 else 4)
-                    + encode_mp3_frames([(5, 1, 0)])
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": out})
-
-    binary = docs.mapInPandas(_synth, "doc_id bigint, data binary")
+    binary = _doc_blobs(spark, sf_dir, _blob)
     return id3_stats(binary, "doc_id")
 
 
@@ -7036,40 +6909,29 @@ def q_webm_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     skipped by declared size so cost is O(metadata), the video twin of
     the MP4 box walk).  Fixture track mixes rotate by id (video-only /
     audio-only / muxed).  Oracle closed-form."""
-    from h2h_spark.operators.multimodal import webm_stats
+    from h2h_spark.operators.multimodal import encode_webm, webm_stats
 
-    docs = _doc_ids_scaled(spark, sf_dir)
+    def _blob(d):
+        video = {
+            "type": "video",
+            "codec": "V_VP9" if d % 2 == 0 else "V_VP8",
+            "width": 640 + (d % 13) * 16,
+            "height": 360 + (d % 9) * 16,
+        }
+        audio = {
+            "type": "audio",
+            "codec": "A_OPUS" if d % 2 == 0 else "A_VORBIS",
+            "rate": 48000 if d % 2 == 0 else 44100,
+            "channels": d % 2 + 1,
+        }
+        tracks = ([video], [audio], [video, audio])[d % 3]
+        return encode_webm(
+            duration_ms=1000 + (d % 120) * 250,
+            tracks=tracks,
+            n_clusters=d % 4 + 1,
+        )
 
-    def _synth(batches):
-        import pandas as pd
-
-        from h2h_spark.operators.multimodal import encode_webm
-
-        for pdf in batches:
-            out = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                video = {
-                    "type": "video",
-                    "codec": "V_VP9" if d % 2 == 0 else "V_VP8",
-                    "width": 640 + (d % 13) * 16,
-                    "height": 360 + (d % 9) * 16,
-                }
-                audio = {
-                    "type": "audio",
-                    "codec": "A_OPUS" if d % 2 == 0 else "A_VORBIS",
-                    "rate": 48000 if d % 2 == 0 else 44100,
-                    "channels": d % 2 + 1,
-                }
-                tracks = ([video], [audio], [video, audio])[d % 3]
-                out.append(encode_webm(
-                    duration_ms=1000 + (d % 120) * 250,
-                    tracks=tracks,
-                    n_clusters=d % 4 + 1,
-                ))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "data": out})
-
-    binary = docs.mapInPandas(_synth, "doc_id bigint, data binary")
+    binary = _doc_blobs(spark, sf_dir, _blob)
     return webm_stats(binary, "doc_id")
 
 
@@ -7905,7 +7767,7 @@ GROUP BY a.assigned, dim
 
 def q_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal 'audio' path: payload bytes as u8 PCM → vectorized
-    numpy waveform stats through mapInPandas.  Fixed-point (integer)
+    numpy waveform stats, one ``per_row`` stage.  Fixed-point (integer)
     duration/mean keep the compare exact; the ASCII corpus lets DuckDB
     re-derive every stat character-wise."""
     docs = _read_table(spark, sf_dir, "documents")
@@ -12840,7 +12702,7 @@ def q_bmp_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbor resized to 16×16, and summed.  The source gradient is
     closed-form, so the SQL oracle recomputes the post-resize pixel sum
     from scratch — a wrong byte in the codec or resampler mismatches.
-    Arrow-batched mapInPandas; a per-row encode→decode round-trip
+    One ``per_row`` stage; a per-row encode→decode round-trip
     assertion makes codec regressions loud."""
     from h2h_spark.operators.multimodal import bmp_resize_stats
 

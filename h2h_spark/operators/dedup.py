@@ -37,7 +37,7 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from h2h_spark.operators import cache_scope
+from h2h_spark.operators import cache_scope, per_row
 
 _MERSENNE = 2147483647  # 2^31-1; keeps (a*h+b) products inside long range
 
@@ -1051,9 +1051,10 @@ def content_defined_chunks(
     recompute every hash with a 32-offset self-join.  Boundary where
     ``h_i mod 2^mask_bits == 0`` (expected chunk ≈ 2^mask_bits bytes).
 
-    Per doc: one vectorized numpy pass (sliding-window dot mod 2^32),
-    Arrow-batched; output ``(id, chunk_idx, start, chunk_len,
-    chunk_md5)`` — the chunk table that feeds hash-based dedup.
+    Per doc: one vectorized numpy pass (sliding-window dot mod 2^32) in
+    one :func:`~h2h_spark.operators.per_row` stage; output ``(id,
+    chunk_idx, start, chunk_len, chunk_md5)`` — the chunk table that
+    feeds hash-based dedup.
 
     ``start``/``chunk_len`` are 1-based BYTE offsets/lengths into the
     UTF-8 encoding and ``chunk_md5`` hashes the raw byte slice: the
@@ -1065,58 +1066,37 @@ def content_defined_chunks(
     import hashlib as _hashlib
 
     import numpy as np
-    import pandas as pd
 
     table = np.array(_gear_table(), dtype=np.uint64)
     mask = (1 << mask_bits) - 1
     weights = (np.uint64(1) << np.arange(32, dtype=np.uint64))  # k = 0..31
 
-    def _run(batches):
-        for pdf in batches:
-            ids, idxs, starts, lens, md5s = [], [], [], [], []
-            for rid, text in zip(pdf["__id"], pdf["__text"]):
-                enc = text.encode("utf-8")
-                bs = np.frombuffer(enc, dtype=np.uint8).astype(np.int64)
-                n = len(bs)
-                if n == 0:
-                    continue
-                t = table[bs]  # uint64, < 2^32
-                # h_i = sum_{k=0..31} (t[i-k] << k)  (mod 2^32); for a
-                # doc shorter than the 32-byte window only the first n
-                # offsets exist (k >= n would slice t negatively and
-                # crash on shape mismatch)
-                h = np.zeros(n, dtype=np.uint64)
-                for k in range(min(32, n)):
-                    term = (t[: n - k] * weights[k]) & np.uint64(0xFFFFFFFF)
-                    h[k:] += term
-                h &= np.uint64(0xFFFFFFFF)
-                bounds = np.nonzero((h & np.uint64(mask)) == 0)[0]
-                prev = 0
-                ci = 0
-                for b in list(bounds) + ([n - 1] if (len(bounds) == 0 or bounds[-1] != n - 1) else []):
-                    seg = enc[prev:int(b) + 1]  # byte slice — see docstring
-                    ids.append(rid)
-                    idxs.append(ci)
-                    starts.append(prev + 1)  # 1-based byte offset
-                    lens.append(len(seg))
-                    md5s.append(_hashlib.md5(seg).hexdigest())
-                    ci += 1
-                    prev = int(b) + 1
-            yield pd.DataFrame(
-                {
-                    "__id": pd.Series(ids, dtype="int64"),
-                    "chunk_idx": pd.Series(idxs, dtype="int64"),
-                    "start": pd.Series(starts, dtype="int64"),
-                    "chunk_len": pd.Series(lens, dtype="int64"),
-                    "chunk_md5": pd.Series(md5s, dtype="object"),
-                }
-            )
+    def row(rid, text):
+        enc = text.encode("utf-8")
+        bs = np.frombuffer(enc, dtype=np.uint8).astype(np.int64)
+        n = len(bs)
+        if n == 0:
+            return
+        t = table[bs]  # uint64, < 2^32
+        # h_i = sum_{k=0..31} (t[i-k] << k)  (mod 2^32); for a doc shorter
+        # than the 32-byte window only the first n offsets exist (k >= n
+        # would slice t negatively and crash on shape mismatch)
+        h = np.zeros(n, dtype=np.uint64)
+        for k in range(min(32, n)):
+            h[k:] += (t[: n - k] * weights[k]) & np.uint64(0xFFFFFFFF)
+        h &= np.uint64(0xFFFFFFFF)
+        bounds = np.nonzero((h & np.uint64(mask)) == 0)[0].tolist()
+        if not bounds or bounds[-1] != n - 1:
+            bounds.append(n - 1)
+        prev = 0
+        for ci, b in enumerate(bounds):
+            seg = enc[prev:b + 1]  # byte slice — see docstring
+            # start is a 1-based byte offset
+            yield (rid, ci, prev + 1, len(seg), _hashlib.md5(seg).hexdigest())
+            prev = b + 1
 
-    base = df.select(
-        F.col(id_col).alias("__id"), F.col(text_col).alias("__text")
-    ).repartition(df.sparkSession.sparkContext.defaultParallelism)
-    return base.mapInPandas(
-        _run,
-        "__id long, chunk_idx long, start long, chunk_len long, "
+    return per_row(
+        df, [id_col, text_col], row,
+        f"`{id_col}` long, chunk_idx long, start long, chunk_len long, "
         "chunk_md5 string",
-    ).withColumnRenamed("__id", id_col)
+    )

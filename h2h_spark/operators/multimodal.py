@@ -1,10 +1,14 @@
 """Multimodal (binary) columns (engine extension, SURVEY.md §2.3 E3).
 
-Images / audio / video are opaque ``binary`` payload columns with a typed
-metadata struct.  The Spark-side plumbing — schema, Arrow batch shape,
-``mapInPandas`` decode stage — is real and tested; the actual media decode
-is stubbed behind an import-try (PIL / soundfile are not in this
-container) with a deterministic fallback, as mandated by the build brief.
+Images / audio / video are opaque ``binary`` payload columns.  Every
+operator here is per-row Python — a pixel codec, a container walk, a
+header parse — run as one :func:`h2h_spark.operators.per_row` stage: an
+input with fewer partitions than the executor pool is spread across it,
+then one ``mapInArrow`` calls a row function per input row.  The BMP /
+PNG / GIF / JPEG / WAV codecs and the container walkers are real (pure
+Python + numpy + zlib); only a decode of arbitrary images needs PIL /
+soundfile, and falls back to a deterministic stub where they are not
+installed.
 
 Scale notes: payloads stay OUT of shuffle paths — derive features first,
 then drop or pass-through the blob; for >2 GB objects store a pointer
@@ -16,11 +20,11 @@ from __future__ import annotations
 import hashlib
 import struct
 import zlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from h2h_spark.operators import per_row
 
 DECODE_SCHEMA = (
     "doc_id long, n_bytes long, payload_md5 string, width int, height int, decoder string"
@@ -155,28 +159,20 @@ def media_meta(df: DataFrame, id_col: str, seed_col: str | None = None) -> DataF
     """Synthesize-then-decode media metadata stage: build real container
     bytes per row (from ``seed_col``, default the id), parse the headers
     back with :func:`parse_media_header`, emit typed metadata.  One
-    Arrow-batched ``mapInPandas`` — blobs are born and die inside the
-    task, never shuffled; only the small typed features leave."""
-    seed = seed_col or id_col
+    :func:`~h2h_spark.operators.per_row` stage — blobs are born and die
+    inside the task, never shuffled; only the small typed features leave."""
+    fields = (
+        "kind", "width", "height", "n_channels", "sample_rate", "n_samples",
+        "duration_ms",
+    )
 
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [
-                parse_media_header(synthesize_media(int(s)))
-                for s in pdf[seed].to_numpy()
-            ]
-            out = {"doc_id": pdf[id_col]}
-            out["kind"] = [m["kind"] if m else None for m in metas]
-            for f, dt in (
-                ("width", "Int32"), ("height", "Int32"), ("n_channels", "Int32"),
-                ("sample_rate", "Int32"), ("n_samples", "Int64"),
-                ("duration_ms", "Int64"),
-            ):
-                out[f] = pd.Series([m[f] if m else None for m in metas], dtype=dt)
-            yield pd.DataFrame(out)
+    def row(rid, *seed):
+        m = parse_media_header(synthesize_media(int(seed[0] if seed else rid)))
+        yield (rid, *(m[f] if m else None for f in fields))
 
-    return df.mapInPandas(
-        _gen,
+    cols = [id_col] + ([seed_col] if seed_col and seed_col != id_col else [])
+    return per_row(
+        df, cols, row,
         "doc_id long, kind string, width int, height int, n_channels int, "
         "sample_rate int, n_samples long, duration_ms long",
     )
@@ -217,35 +213,16 @@ def _try_real_decode(payload: bytes) -> tuple[int, int, str]:
 
 
 def decode_features(binary_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Arrow-batched feature extraction over the payload column.
-
-    ``mapInPandas`` keeps the blob local to its partition (no shuffle); the
-    output is small typed features only.
+    """Feature extraction over the payload column as one
+    :func:`~h2h_spark.operators.per_row` stage: the blob stays in its
+    task; the output is small typed features only.
     """
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf["payload"]
-            widths, heights, decoders = [], [], []
-            for p in payloads:
-                w, h, d = _try_real_decode(bytes(p))
-                widths.append(w)
-                heights.append(h)
-                decoders.append(d)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "n_bytes": payloads.map(len),
-                    "payload_md5": payloads.map(
-                        lambda p: hashlib.md5(bytes(p)).hexdigest()
-                    ),
-                    "width": pd.Series(widths, dtype="int32"),
-                    "height": pd.Series(heights, dtype="int32"),
-                    "decoder": decoders,
-                }
-            )
+    def row(rid, payload):
+        w, h, decoder = _try_real_decode(payload)
+        yield (rid, len(payload), hashlib.md5(payload).hexdigest(), w, h, decoder)
 
-    return binary_df.mapInPandas(_decode, DECODE_SCHEMA)
+    return per_row(binary_df, [id_col, "payload"], row, DECODE_SCHEMA)
 
 
 def resize_images(
@@ -254,14 +231,14 @@ def resize_images(
     width: int,
     height: int,
 ) -> DataFrame:
-    """'Image resize' stage: binary in → binary out through an
-    Arrow-batched ``mapInPandas`` — the schema/batch plumbing a real
-    resize needs (PIL absent in this container, so the pixel transform is
-    STUBBED as a deterministic byte truncation to the target budget; swap
-    ``_stub_resize`` for a real decoder+resampler in production).  The
-    payload column round-trips python→Arrow→JVM as ``binary``, which is
-    the property under test: derived blobs stay columnar, never shuffled
-    as strings."""
+    """'Image resize' stage: binary in → binary out through one
+    :func:`~h2h_spark.operators.per_row` stage — the schema/batch
+    plumbing a real resize needs (without PIL installed the
+    pixel transform is STUBBED as a deterministic byte truncation to the
+    target budget; swap ``_stub_resize`` for a real decoder+resampler in
+    production).  The payload column round-trips python→Arrow→JVM as
+    ``binary``, which is the property under test: derived blobs stay
+    columnar, never shuffled as strings."""
     budget = width * height
 
     def _stub_resize(payload: bytes) -> bytes:
@@ -277,19 +254,10 @@ def resize_images(
         except Exception:
             return payload[:budget]
 
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "width": pd.Series([width] * len(pdf), dtype="int32"),
-                    "height": pd.Series([height] * len(pdf), dtype="int32"),
-                    "resized": [_stub_resize(bytes(p)) for p in pdf["payload"]],
-                }
-            )
-
-    return binary_df.mapInPandas(
-        _resize, "doc_id long, width int, height int, resized binary"
+    return per_row(
+        binary_df, [id_col, "payload"],
+        lambda rid, payload: [(rid, width, height, _stub_resize(payload))],
+        "doc_id long, width int, height int, resized binary",
     )
 
 
@@ -307,48 +275,29 @@ def audio_stats(
     container); the Arrow batch shape, numpy vectorization, and
     features-only output schema are the production plumbing.
 
-    Everything is numpy over the whole batch — no per-row Python.
-    Duration and mean amplitude are FIXED-POINT integers (milliseconds /
-    milli-units, floor division): fractional features as integers are
-    bit-stable across platforms and engines, which keeps distributed
-    equality compares (and the DuckDB oracle) exact instead of
-    float-rounding-dependent.
+    Each payload is one numpy pass.  Duration and mean amplitude are
+    FIXED-POINT integers (milliseconds / milli-units, floor division):
+    fractional features as integers are bit-stable across platforms and
+    engines, which keeps distributed equality compares (and the DuckDB
+    oracle) exact instead of float-rounding-dependent.
     """
     import numpy as np
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, n_samples, peaks, means, clips = [], [], [], [], []
-            for doc_id, payload in zip(pdf[id_col].to_numpy(), pdf["payload"]):
-                samples = np.frombuffer(bytes(payload), dtype=np.uint8)
-                ids.append(doc_id)
-                n_samples.append(samples.size)
-                if samples.size:
-                    amp = np.abs(samples.astype(np.int64) - 128)
-                    peaks.append(int(samples.max()))
-                    means.append(int(amp.sum()) * 1000 // samples.size)
-                    clips.append(
-                        int(((samples >= 256 - clip_margin) | (samples < clip_margin)).sum())
-                    )
-                else:
-                    peaks.append(0)
-                    means.append(0)
-                    clips.append(0)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_samples": pd.Series(n_samples, dtype="int64"),
-                    "duration_ms": pd.Series(
-                        [n * 1000 // sample_rate for n in n_samples], dtype="int64"
-                    ),
-                    "peak": pd.Series(peaks, dtype="int32"),
-                    "mean_amp_milli": pd.Series(means, dtype="int64"),
-                    "n_clipped": pd.Series(clips, dtype="int64"),
-                }
+    def row(rid, payload):
+        samples = np.frombuffer(payload, dtype=np.uint8)
+        n = samples.size
+        peak = mean = clipped = 0
+        if n:
+            amp = np.abs(samples.astype(np.int64) - 128)
+            peak = int(samples.max())
+            mean = int(amp.sum()) * 1000 // n
+            clipped = int(
+                ((samples >= 256 - clip_margin) | (samples < clip_margin)).sum()
             )
+        yield (rid, n, n * 1000 // sample_rate, peak, mean, clipped)
 
-    return binary_df.mapInPandas(
-        _stats,
+    return per_row(
+        binary_df, [id_col, "payload"], row,
         "doc_id long, n_samples long, duration_ms long, peak int, mean_amp_milli long, n_clipped long",
     )
 
@@ -360,26 +309,15 @@ def frame_sample(
     emit every ``stride``-th frame index + its md5.  Exercises the
     explode-to-frames schema a real video pipeline needs."""
 
-    def _frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, md5s = [], [], []
-            # zip over numpy/ndarray columns — not iterrows (which builds a
-            # Series per row); md5 itself is per-chunk C code.
-            for doc_id, payload in zip(pdf[id_col].to_numpy(), pdf["payload"]):
-                data = bytes(payload)
-                n = max(1, len(data) // frame_bytes)
-                frame_idx = range(0, n, stride)
-                ids.extend([doc_id] * len(frame_idx))
-                idxs.extend(frame_idx)
-                md5s.extend(
-                    hashlib.md5(data[i * frame_bytes : (i + 1) * frame_bytes]).hexdigest()
-                    for i in frame_idx
-                )
-            yield pd.DataFrame(
-                {"doc_id": ids, "frame_idx": pd.Series(idxs, dtype="int32"), "frame_md5": md5s}
-            )
+    def row(rid, data):
+        for i in range(0, max(1, len(data) // frame_bytes), stride):
+            chunk = data[i * frame_bytes : (i + 1) * frame_bytes]
+            yield (rid, i, hashlib.md5(chunk).hexdigest())
 
-    return binary_df.mapInPandas(_frames, "doc_id long, frame_idx int, frame_md5 string")
+    return per_row(
+        binary_df, [id_col, "payload"], row,
+        "doc_id long, frame_idx int, frame_md5 string",
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -457,6 +395,47 @@ def synthesize_bmp(seed: int) -> bytes:
     return encode_bmp(np.repeat(chan[:, :, None], 3, axis=2))
 
 
+def _resize_stats(df, id_col, out_w, out_h, codec, synth, decode, encode,
+                  audit_every, channels):
+    """``(doc_id, src_w, src_h, pix_sum)`` per id: decode the REAL bytes of
+    ``synth(id)``, nearest-resize to ``out_w`` × ``out_h`` and sum every
+    pixel (times ``channels`` for a gray image standing in for that many
+    identical channels).  Every ``audit_every``-th id also asserts an
+    encode→decode round trip — a silent codec regression fails the stage
+    loudly."""
+    import numpy as np
+
+    def row(seed):
+        img = decode(synth(int(seed)))
+        if int(seed) % audit_every == 0 and not np.array_equal(
+            decode(encode(img)), img
+        ):
+            raise ValueError(f"{codec} codec round-trip mismatch")
+        out = resize_nearest(img, out_w, out_h)
+        yield (seed, img.shape[1], img.shape[0],
+               channels * int(out.astype(np.int64).sum()))
+
+    return per_row(
+        df, [id_col], row, "doc_id long, src_w int, src_h int, pix_sum long"
+    )
+
+
+def _rgb_stats(df: DataFrame, id_col: str, decode_id) -> DataFrame:
+    """``(doc_id, src_w, src_h, r_sum, g_sum, b_sum)`` of the image
+    ``decode_id(id)`` decodes from the bytes it synthesizes for ``id``."""
+    import numpy as np
+
+    def row(seed):
+        rgb = decode_id(int(seed))
+        s = rgb.astype(np.int64).sum(axis=(0, 1))
+        yield (seed, rgb.shape[1], rgb.shape[0], int(s[0]), int(s[1]), int(s[2]))
+
+    return per_row(
+        df, [id_col], row,
+        "doc_id long, src_w int, src_h int, r_sum long, g_sum long, b_sum long",
+    )
+
+
 def bmp_resize_stats(
     df: DataFrame,
     id_col: str,
@@ -467,41 +446,11 @@ def bmp_resize_stats(
     """REAL pixel pipeline per row: synthesize a BMP from the id, decode
     its actual bytes to pixels, nearest-neighbor resize, re-encode, and
     report ``(id, src_w, src_h, pix_sum)`` where ``pix_sum`` sums every
-    channel of the resized image.  Arrow-batched ``mapInPandas``; blobs
-    never shuffle.  An encode→decode byte-exactness assertion runs on
-    every row — a silent codec regression fails the stage loudly."""
-    import numpy as np
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            src_w, src_h, sums = [], [], []
-            for seed in pdf[id_col]:
-                payload = synthesize_bmp(int(seed))
-                img = decode_bmp(payload)
-                if not np.array_equal(decode_bmp(encode_bmp(img)), img):
-                    raise ValueError("BMP codec round-trip mismatch")
-                out = resize_nearest(img, out_w, out_h)
-                src_h.append(img.shape[0])
-                src_w.append(img.shape[1])
-                sums.append(int(out.astype(np.int64).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "src_w": pd.Series(src_w, dtype="int32"),
-                    "src_h": pd.Series(src_h, dtype="int32"),
-                    "pix_sum": pd.Series(sums, dtype="int64"),
-                }
-            )
-
-    # Spread ids across the executor pool first: the id column often
-    # arrives in 1-4 scan partitions, and per-row codec work (not bytes)
-    # is the cost — without this the decode runs nearly serial.
-    spread = df.select(id_col).repartition(
-        df.sparkSession.sparkContext.defaultParallelism
-    )
-    return spread.mapInPandas(
-        _run, "doc_id long, src_w int, src_h int, pix_sum long"
-    )
+    channel of the resized image.  One
+    :func:`~h2h_spark.operators.per_row` stage; blobs never shuffle.  An
+    encode→decode byte-exactness assertion runs on every row."""
+    return _resize_stats(df, id_col, out_w, out_h, "BMP", synthesize_bmp,
+                         decode_bmp, encode_bmp, 1, 1)
 
 
 # ---------------------------------------------------------------------------
@@ -751,39 +700,16 @@ def synthesize_png_16bit(seed: int) -> bytes:
 def png_16bit_stats(df: DataFrame, id_col: str) -> DataFrame:
     """REAL 16-bit PNG pipeline per row: synthesize, inflate + unfilter
     the actual bytes over byte lanes, recombine big-endian samples, and
-    report channel sums.  Arrow-batched ``mapInPandas``."""
+    report channel sums."""
     import numpy as np
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            src_w, src_h, rs, gs, bs = [], [], [], [], []
-            for seed in pdf[id_col]:
-                img = decode_png(synthesize_png_16bit(int(seed)))
-                if img.dtype != np.uint16:
-                    raise ValueError("16-bit decode returned wrong dtype")
-                src_h.append(img.shape[0])
-                src_w.append(img.shape[1])
-                s = img.astype(np.int64).sum(axis=(0, 1))
-                rs.append(int(s[0]))
-                gs.append(int(s[1]))
-                bs.append(int(s[2]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "src_w": pd.Series(src_w, dtype="int32"),
-                    "src_h": pd.Series(src_h, dtype="int32"),
-                    "r_sum": pd.Series(rs, dtype="int64"),
-                    "g_sum": pd.Series(gs, dtype="int64"),
-                    "b_sum": pd.Series(bs, dtype="int64"),
-                }
-            )
+    def decode_id(seed):
+        img = decode_png(synthesize_png_16bit(seed))
+        if img.dtype != np.uint16:
+            raise ValueError("16-bit decode returned wrong dtype")
+        return img
 
-    spread = df.select(id_col).repartition(
-        df.sparkSession.sparkContext.defaultParallelism
-    )
-    return spread.mapInPandas(
-        _run, "doc_id long, src_w int, src_h int, r_sum long, g_sum long, b_sum long"
-    )
+    return _rgb_stats(df, id_col, decode_id)
 
 
 def synthesize_png_palette(seed: int) -> bytes:
@@ -831,52 +757,19 @@ def synthesize_png_rgba(seed: int) -> bytes:
 def png_flavor_stats(df: DataFrame, id_col: str) -> DataFrame:
     """REAL indexed-color + RGBA PNG pipeline per row: synthesize both
     flavors from the id, decode the actual bytes (PLTE resolution for
-    type 3, 4-channel unfiltering for type 6), and report channel sums.
-    Arrow-batched ``mapInPandas`` with ids spread across the pool."""
+    type 3, 4-channel unfiltering for type 6), and report channel sums."""
     import numpy as np
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list[int]] = {
-                k: [] for k in (
-                    "src_w", "src_h", "pal_r_sum", "pal_g_sum", "pal_b_sum",
-                    "rgba_r_sum", "rgba_g_sum", "rgba_b_sum", "a_sum",
-                )
-            }
-            for seed in pdf[id_col]:
-                pal_rgb = decode_png(synthesize_png_palette(int(seed)))
-                rgba = decode_png(synthesize_png_rgba(int(seed)))
-                cols["src_h"].append(pal_rgb.shape[0])
-                cols["src_w"].append(pal_rgb.shape[1])
-                ps = pal_rgb.astype(np.int64).sum(axis=(0, 1))
-                qs = rgba.astype(np.int64).sum(axis=(0, 1))
-                cols["pal_r_sum"].append(int(ps[0]))
-                cols["pal_g_sum"].append(int(ps[1]))
-                cols["pal_b_sum"].append(int(ps[2]))
-                cols["rgba_r_sum"].append(int(qs[0]))
-                cols["rgba_g_sum"].append(int(qs[1]))
-                cols["rgba_b_sum"].append(int(qs[2]))
-                cols["a_sum"].append(int(qs[3]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "src_w": pd.Series(cols["src_w"], dtype="int32"),
-                    "src_h": pd.Series(cols["src_h"], dtype="int32"),
-                    **{
-                        k: pd.Series(cols[k], dtype="int64")
-                        for k in (
-                            "pal_r_sum", "pal_g_sum", "pal_b_sum",
-                            "rgba_r_sum", "rgba_g_sum", "rgba_b_sum", "a_sum",
-                        )
-                    },
-                }
-            )
+    def row(seed):
+        pal_rgb = decode_png(synthesize_png_palette(int(seed)))
+        rgba = decode_png(synthesize_png_rgba(int(seed)))
+        ps = pal_rgb.astype(np.int64).sum(axis=(0, 1))
+        qs = rgba.astype(np.int64).sum(axis=(0, 1))
+        yield (seed, pal_rgb.shape[1], pal_rgb.shape[0],
+               *map(int, ps[:3]), *map(int, qs[:4]))
 
-    spread = df.select(id_col).repartition(
-        df.sparkSession.sparkContext.defaultParallelism
-    )
-    return spread.mapInPandas(
-        _run,
+    return per_row(
+        df, [id_col], row,
         "doc_id long, src_w int, src_h int, pal_r_sum long, pal_g_sum long, "
         "pal_b_sum long, rgba_r_sum long, rgba_g_sum long, rgba_b_sum long, "
         "a_sum long",
@@ -893,37 +786,8 @@ def png_resize_stats(
     """PNG twin of :func:`bmp_resize_stats`: synthesize → full real decode
     (inflate + unfilter) → nearest resize → channel sum, with a per-row
     encode→decode round-trip assertion."""
-    import numpy as np
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            src_w, src_h, sums = [], [], []
-            for seed in pdf[id_col]:
-                img = decode_png(synthesize_png(int(seed)))
-                if not np.array_equal(decode_png(encode_png(img)), img):
-                    raise ValueError("PNG codec round-trip mismatch")
-                out = resize_nearest(img, out_w, out_h)
-                src_h.append(img.shape[0])
-                src_w.append(img.shape[1])
-                sums.append(int(out.astype(np.int64).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "src_w": pd.Series(src_w, dtype="int32"),
-                    "src_h": pd.Series(src_h, dtype="int32"),
-                    "pix_sum": pd.Series(sums, dtype="int64"),
-                }
-            )
-
-    # Spread ids across the executor pool first: the id column often
-    # arrives in 1-4 scan partitions, and per-row codec work (not bytes)
-    # is the cost — without this the decode runs nearly serial.
-    spread = df.select(id_col).repartition(
-        df.sparkSession.sparkContext.defaultParallelism
-    )
-    return spread.mapInPandas(
-        _run, "doc_id long, src_w int, src_h int, pix_sum long"
-    )
+    return _resize_stats(df, id_col, out_w, out_h, "PNG", synthesize_png,
+                         decode_png, encode_png, 1, 1)
 
 
 # ---------------------------------------------------------------------------
@@ -1133,37 +997,8 @@ def synthesize_gif_color(seed: int) -> bytes:
 def gif_color_stats(df: DataFrame, id_col: str) -> DataFrame:
     """REAL color-GIF pipeline per row: synthesize, full variable-width
     LZW decode of the actual bytes, global-color-table resolution, and
-    per-channel sums.  Arrow-batched ``mapInPandas``."""
-    import numpy as np
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            src_w, src_h, rs, gs, bs = [], [], [], [], []
-            for seed in pdf[id_col]:
-                rgb = decode_gif(synthesize_gif_color(int(seed)))
-                src_h.append(rgb.shape[0])
-                src_w.append(rgb.shape[1])
-                s = rgb.astype(np.int64).sum(axis=(0, 1))
-                rs.append(int(s[0]))
-                gs.append(int(s[1]))
-                bs.append(int(s[2]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "src_w": pd.Series(src_w, dtype="int32"),
-                    "src_h": pd.Series(src_h, dtype="int32"),
-                    "r_sum": pd.Series(rs, dtype="int64"),
-                    "g_sum": pd.Series(gs, dtype="int64"),
-                    "b_sum": pd.Series(bs, dtype="int64"),
-                }
-            )
-
-    spread = df.select(id_col).repartition(
-        df.sparkSession.sparkContext.defaultParallelism
-    )
-    return spread.mapInPandas(
-        _run, "doc_id long, src_w int, src_h int, r_sum long, g_sum long, b_sum long"
-    )
+    per-channel sums."""
+    return _rgb_stats(df, id_col, lambda s: decode_gif(synthesize_gif_color(s)))
 
 
 def synthesize_gif(seed: int) -> bytes:
@@ -1189,37 +1024,8 @@ def gif_resize_stats(
     """GIF twin of :func:`bmp_resize_stats`: synthesize → full LZW decode
     → nearest resize → sum over the 3 (identical grayscale) channels, so
     all three pixel pipelines share one closed-form oracle."""
-    import numpy as np
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            src_w, src_h, sums = [], [], []
-            for seed in pdf[id_col]:
-                img = decode_gif_gray(synthesize_gif(int(seed)))
-                if not np.array_equal(decode_gif_gray(encode_gif_gray(img)), img):
-                    raise ValueError("GIF codec round-trip mismatch")
-                out = resize_nearest(img, out_w, out_h)
-                src_h.append(img.shape[0])
-                src_w.append(img.shape[1])
-                sums.append(3 * int(out.astype(np.int64).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "src_w": pd.Series(src_w, dtype="int32"),
-                    "src_h": pd.Series(src_h, dtype="int32"),
-                    "pix_sum": pd.Series(sums, dtype="int64"),
-                }
-            )
-
-    # Spread ids across the executor pool first: the id column often
-    # arrives in 1-4 scan partitions, and per-row codec work (not bytes)
-    # is the cost — without this the decode runs nearly serial.
-    spread = df.select(id_col).repartition(
-        df.sparkSession.sparkContext.defaultParallelism
-    )
-    return spread.mapInPandas(
-        _run, "doc_id long, src_w int, src_h int, pix_sum long"
-    )
+    return _resize_stats(df, id_col, out_w, out_h, "GIF", synthesize_gif,
+                         decode_gif_gray, encode_gif_gray, 1, 3)
 
 
 # ---------------------------------------------------------------------------
@@ -1808,43 +1614,11 @@ def jpeg_color_stats(
     """REAL color-JPEG pixel pipeline per row: synthesize a 4:2:0 YCbCr
     baseline JPEG from the id, MCU-interleave-decode its actual bytes
     (per-component Huffman/quant, IDCT, chroma upsample, YCbCr->RGB),
-    and report per-channel pixel sums.  Arrow-batched ``mapInPandas``
-    with ids spread across the pool (codec work, not bytes, is the
+    and report per-channel pixel sums (codec work, not bytes, is the
     cost)."""
-    import numpy as np
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            src_w, src_h, rs, gs, bs = [], [], [], [], []
-            for seed in pdf[id_col]:
-                rgb = decode_jpeg_color(
-                    synthesize_jpeg_color(
-                        int(seed), restart_interval=restart_interval
-                    )
-                )
-                src_h.append(rgb.shape[0])
-                src_w.append(rgb.shape[1])
-                s = rgb.astype(np.int64).sum(axis=(0, 1))
-                rs.append(int(s[0]))
-                gs.append(int(s[1]))
-                bs.append(int(s[2]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "src_w": pd.Series(src_w, dtype="int32"),
-                    "src_h": pd.Series(src_h, dtype="int32"),
-                    "r_sum": pd.Series(rs, dtype="int64"),
-                    "g_sum": pd.Series(gs, dtype="int64"),
-                    "b_sum": pd.Series(bs, dtype="int64"),
-                }
-            )
-
-    spread = df.select(id_col).repartition(
-        df.sparkSession.sparkContext.defaultParallelism
-    )
-    return spread.mapInPandas(
-        _run, "doc_id long, src_w int, src_h int, r_sum long, g_sum long, b_sum long"
-    )
+    return _rgb_stats(df, id_col, lambda s: decode_jpeg_color(
+        synthesize_jpeg_color(s, restart_interval=restart_interval)
+    ))
 
 
 def synthesize_jpeg(seed: int) -> bytes:
@@ -1871,47 +1645,12 @@ def jpeg_resize_stats(
 ) -> DataFrame:
     """REAL JPEG pixel pipeline per row: synthesize a baseline JPEG from
     the id, Huffman-decode + IDCT its actual bytes, nearest-neighbor
-    resize, and report ``(doc_id, src_w, src_h, pix_sum)``.  Arrow-batched
-    ``mapInPandas``; an encode→decode round-trip assertion per row makes
-    codec regressions loud."""
-    import numpy as np
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            src_w, src_h, sums = [], [], []
-            for seed in pdf[id_col]:
-                payload = synthesize_jpeg(int(seed))
-                img = decode_jpeg_gray(payload)
-                # Sampled round-trip assertion: re-encode+re-decode costs
-                # ~2x the decode itself, so audit 1 row in 16 — still
-                # loud on any codec regression, without tripling the
-                # stage's per-row work.
-                if int(seed) % 16 == 0 and not np.array_equal(
-                    decode_jpeg_gray(encode_jpeg_gray(img)), img
-                ):
-                    raise ValueError("JPEG codec round-trip mismatch")
-                out = resize_nearest(img, out_w, out_h)
-                src_h.append(img.shape[0])
-                src_w.append(img.shape[1])
-                sums.append(int(out.astype(np.int64).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "src_w": pd.Series(src_w, dtype="int32"),
-                    "src_h": pd.Series(src_h, dtype="int32"),
-                    "pix_sum": pd.Series(sums, dtype="int64"),
-                }
-            )
-
-    # Spread ids across the executor pool first: the id column often
-    # arrives in 1-4 scan partitions, and per-row codec work (not bytes)
-    # is the cost — without this the decode runs nearly serial.
-    spread = df.select(id_col).repartition(
-        df.sparkSession.sparkContext.defaultParallelism
-    )
-    return spread.mapInPandas(
-        _run, "doc_id long, src_w int, src_h int, pix_sum long"
-    )
+    resize, and report ``(doc_id, src_w, src_h, pix_sum)``.  The
+    round-trip assertion is sampled: re-encode+re-decode costs ~2x the
+    decode itself, so it audits 1 id in 16 — still loud on any codec
+    regression, without tripling the stage's per-row work."""
+    return _resize_stats(df, id_col, out_w, out_h, "JPEG", synthesize_jpeg,
+                         decode_jpeg_gray, encode_jpeg_gray, 16, 1)
 
 
 # --------------------------------------------------------------------------
@@ -2308,42 +2047,26 @@ def jpeg_progressive_stats(df: DataFrame, id_col: str) -> DataFrame:
     actual bytes back to coefficients, and report exact integer summaries
     (count, sum, abs-sum, position-weighted sum) of the RECOVERED
     coefficients.  A wrong bit anywhere in the scan script — EOB-run
-    lengths, refinement interleave, point transforms — shifts a sum.
-    Arrow-batched ``mapInPandas``; ids spread across the pool."""
+    lengths, refinement interleave, point transforms — shifts a sum."""
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            nb, csum, asum, wsum = [], [], [], []
-            for seed in pdf[id_col]:
-                blocks, bh, bw_ = synthesize_progressive_coeffs(int(seed))
-                payload = encode_jpeg_progressive_coeffs(blocks, bh, bw_)
-                got, gh, gw = decode_jpeg_progressive_coeffs(payload)
-                if (gh, gw) != (bh, bw_):
-                    raise ValueError("progressive round trip: shape")
-                nb.append(len(got))
-                csum.append(sum(v for blk in got for v in blk))
-                asum.append(sum(abs(v) for blk in got for v in blk))
-                wsum.append(
-                    sum(
-                        v * (t * 64 + k + 1)
-                        for t, blk in enumerate(got)
-                        for k, v in enumerate(blk)
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "n_blocks": pd.Series(nb, dtype="int32"),
-                    "coef_sum": pd.Series(csum, dtype="int64"),
-                    "abs_sum": pd.Series(asum, dtype="int64"),
-                    "weighted_sum": pd.Series(wsum, dtype="int64"),
-                }
-            )
+    def row(seed):
+        blocks, bh, bw_ = synthesize_progressive_coeffs(int(seed))
+        payload = encode_jpeg_progressive_coeffs(blocks, bh, bw_)
+        got, gh, gw = decode_jpeg_progressive_coeffs(payload)
+        if (gh, gw) != (bh, bw_):
+            raise ValueError("progressive round trip: shape")
+        yield (
+            seed,
+            len(got),
+            sum(v for blk in got for v in blk),
+            sum(abs(v) for blk in got for v in blk),
+            sum(v * (t * 64 + k + 1) for t, blk in enumerate(got)
+                for k, v in enumerate(blk)),
+        )
 
-    ids = df.select(id_col).repartition(df.sparkSession.sparkContext.defaultParallelism)
-    return ids.mapInPandas(
-        _run,
-        f"{id_col} long, n_blocks int, coef_sum long, abs_sum long, "
+    return per_row(
+        df, [id_col], row,
+        f"`{id_col}` long, n_blocks int, coef_sum long, abs_sum long, "
         "weighted_sum long",
     )
 
@@ -2444,41 +2167,19 @@ def synthesize_wav_stereo(seed: int) -> bytes:
 def wav_pcm_stats(df: DataFrame, id_col: str) -> DataFrame:
     """REAL audio decode pipeline per row: synthesize a stereo PCM16 WAV
     from the id, chunk-walk + de-interleave its actual bytes, and report
-    exact integer per-channel sums and absolute sums.  Arrow-batched
-    ``mapInPandas`` with ids spread across the pool; blobs never leave
+    exact integer per-channel sums and absolute sums; blobs never leave
     the task."""
     import numpy as np
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ns_c, rate_c, ls, rs, la, ra = [], [], [], [], [], []
-            for seed in pdf[id_col]:
-                frames, rate = decode_wav_pcm16(synthesize_wav_stereo(int(seed)))
-                s = frames.astype(np.int64)
-                ns_c.append(frames.shape[0])
-                rate_c.append(rate)
-                ls.append(int(s[:, 0].sum()))
-                rs.append(int(s[:, 1].sum()))
-                la.append(int(np.abs(s[:, 0]).sum()))
-                ra.append(int(np.abs(s[:, 1]).sum()))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "n_samples": pd.Series(ns_c, dtype="int32"),
-                    "sample_rate": pd.Series(rate_c, dtype="int32"),
-                    "l_sum": pd.Series(ls, dtype="int64"),
-                    "r_sum": pd.Series(rs, dtype="int64"),
-                    "l_abs": pd.Series(la, dtype="int64"),
-                    "r_abs": pd.Series(ra, dtype="int64"),
-                }
-            )
+    def row(seed):
+        frames, rate = decode_wav_pcm16(synthesize_wav_stereo(int(seed)))
+        s = frames.astype(np.int64)
+        yield (seed, frames.shape[0], rate, int(s[:, 0].sum()), int(s[:, 1].sum()),
+               int(np.abs(s[:, 0]).sum()), int(np.abs(s[:, 1]).sum()))
 
-    ids = df.select(id_col).repartition(
-        df.sparkSession.sparkContext.defaultParallelism
-    )
-    return ids.mapInPandas(
-        _run,
-        f"{id_col} long, n_samples int, sample_rate int, l_sum long, "
+    return per_row(
+        df, [id_col], row,
+        f"`{id_col}` long, n_samples int, sample_rate int, l_sum long, "
         "r_sum long, l_abs long, r_abs long",
     )
 
@@ -2617,35 +2318,22 @@ def parse_mp4_meta(data: bytes) -> dict | None:
 def mp4_meta(df: DataFrame, id_col: str, seed_col: str | None = None) -> DataFrame:
     """Synthesize-then-decode MP4 metadata stage (the video twin of
     :func:`media_meta`): per row build a valid MP4 from the seed, parse
-    the real box tree back, emit typed metadata.  One Arrow-batched
-    ``mapInPandas`` — blobs are born and die inside the task."""
-    seed = seed_col or id_col
-    schema = (
-        f"{id_col} long, timescale int, duration bigint, duration_ms bigint, "
-        "n_tracks int, width int, height int, mdat_bytes bigint"
+    the real box tree back, emit typed metadata — blobs are born and die
+    inside the task."""
+    fields = (
+        "timescale", "duration", "duration_ms", "n_tracks", "width", "height",
+        "mdat_bytes",
     )
 
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [
-                parse_mp4_meta(synthesize_mp4(int(s)))
-                for s in pdf[seed].to_numpy()
-            ]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "timescale": [m["timescale"] for m in metas],
-                    "duration": [m["duration"] for m in metas],
-                    "duration_ms": [m["duration_ms"] for m in metas],
-                    "n_tracks": [m["n_tracks"] for m in metas],
-                    "width": [m["width"] for m in metas],
-                    "height": [m["height"] for m in metas],
-                    "mdat_bytes": [m["mdat_bytes"] for m in metas],
-                }
-            )
+    def row(rid, *seed):
+        m = parse_mp4_meta(synthesize_mp4(int(seed[0] if seed else rid)))
+        yield (rid, *(m[f] for f in fields))
 
-    return df.select(id_col, *([seed] if seed != id_col else [])).mapInPandas(
-        _gen, schema
+    cols = [id_col] + ([seed_col] if seed_col and seed_col != id_col else [])
+    return per_row(
+        df, cols, row,
+        f"`{id_col}` long, timescale int, duration bigint, duration_ms bigint, "
+        "n_tracks int, width int, height int, mdat_bytes bigint",
     )
 
 
@@ -2658,39 +2346,21 @@ def image_dhash(df: DataFrame, id_col: str) -> DataFrame:
 
     Output ``(id, dhash_hi, dhash_lo, n_ones)`` — the 64-bit key split
     into two unsigned 32-bit halves so no engine touches the BIGINT
-    sign bit.  Arrow-batched ``mapInPandas``; blobs never shuffle."""
+    sign bit.  Blobs never shuffle."""
     import numpy as np
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            his, los, ones = [], [], []
-            for seed in pdf[id_col]:
-                img = decode_bmp(synthesize_bmp(int(seed)))
-                gray = img[:, :, 0].astype(np.int64)  # channels identical
-                grid = resize_nearest(gray[:, :, None], 9, 8)[:, :, 0]
-                bits = (grid[:, :-1] < grid[:, 1:]).astype(np.int64)  # 8x8
-                flat = bits.flatten()  # idx = r*8 + c
-                val = 0
-                for i, b in enumerate(flat):
-                    val |= int(b) << i
-                his.append((val >> 32) & 0xFFFFFFFF)
-                los.append(val & 0xFFFFFFFF)
-                ones.append(int(flat.sum()))
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "dhash_hi": pd.Series(his, dtype="int64"),
-                    "dhash_lo": pd.Series(los, dtype="int64"),
-                    "n_ones": pd.Series(ones, dtype="int64"),
-                }
-            )
+    def row(seed):
+        img = decode_bmp(synthesize_bmp(int(seed)))
+        gray = img[:, :, 0].astype(np.int64)  # channels identical
+        grid = resize_nearest(gray[:, :, None], 9, 8)[:, :, 0]
+        flat = (grid[:, :-1] < grid[:, 1:]).flatten()  # 8x8, idx = r*8 + c
+        val = sum(1 << i for i, b in enumerate(flat) if b)
+        yield (seed, val >> 32, val & 0xFFFFFFFF, int(flat.sum()))
 
-    spread = df.select(id_col).repartition(
-        df.sparkSession.sparkContext.defaultParallelism
+    return per_row(
+        df, [id_col], row,
+        f"`{id_col}` long, dhash_hi long, dhash_lo long, n_ones long",
     )
-    return spread.mapInPandas(
-        _run, "id long, dhash_hi long, dhash_lo long, n_ones long"
-    ).withColumnRenamed("id", id_col)
 
 
 def wav_energy_blocks(
@@ -2704,36 +2374,18 @@ def wav_energy_blocks(
     """
     import numpy as np
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blks, ns, energies = [], [], [], []
-            for seed in pdf[id_col]:
-                frames, _rate = decode_wav_pcm16(
-                    synthesize_wav_stereo(int(seed))
-                )
-                left = frames[:, 0].astype(np.int64)
-                for b in range(0, len(left), block):
-                    seg = left[b:b + block]
-                    ids.append(seed)
-                    blks.append(b // block)
-                    ns.append(len(seg))
-                    energies.append(int((seg * seg).sum()))
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(ids, dtype="int64"),
-                    "block": pd.Series(blks, dtype="int64"),
-                    "n": pd.Series(ns, dtype="int64"),
-                    "energy": pd.Series(energies, dtype="int64"),
-                }
-            )
+    def row(seed):
+        frames, _rate = decode_wav_pcm16(synthesize_wav_stereo(int(seed)))
+        left = frames[:, 0].astype(np.int64)
+        for b in range(0, len(left), block):
+            seg = left[b:b + block]
+            energy = int((seg * seg).sum())
+            yield (seed, b // block, len(seg), energy, energy < 20_000_000_000)
 
-    spread = df.select(id_col).repartition(
-        df.sparkSession.sparkContext.defaultParallelism
+    return per_row(
+        df, [id_col], row,
+        f"`{id_col}` long, block long, n long, energy long, is_silence boolean",
     )
-    out = spread.mapInPandas(
-        _run, "id long, block long, n long, energy long"
-    ).withColumnRenamed("id", id_col)
-    return out.withColumn("is_silence", F.col("energy") < 20_000_000_000)
 
 
 def synthesize_mp4_samples(seed: int) -> bytes:
@@ -2858,43 +2510,20 @@ def mp4_sample_stats(df: DataFrame, id_col: str) -> DataFrame:
     """VIDEO sample-table path: synthesize an MP4 whose tracks carry
     real stts/stsz tables, walk them back, and report per-track frame
     counts / durations / byte totals — the metadata a frame-sampling
-    pipeline needs before it touches any codec.  Arrow-batched; blobs
-    partition-local."""
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, trk, ts_c, ns, dur, ms, tb = [], [], [], [], [], [], []
-            for seed in pdf[id_col]:
-                tracks = parse_mp4_sample_tables(
-                    synthesize_mp4_samples(int(seed))
-                )
-                for i, t in enumerate(tracks):
-                    ids.append(seed)
-                    trk.append(i)
-                    ts_c.append(t["timescale"])
-                    ns.append(t["n_samples"])
-                    dur.append(t["duration"])
-                    ms.append(t["duration_ms"])
-                    tb.append(t["total_bytes"])
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(ids, dtype="int64"),
-                    "track": pd.Series(trk, dtype="int32"),
-                    "timescale": pd.Series(ts_c, dtype="int32"),
-                    "n_samples": pd.Series(ns, dtype="int64"),
-                    "duration": pd.Series(dur, dtype="int64"),
-                    "duration_ms": pd.Series(ms, dtype="int64"),
-                    "total_bytes": pd.Series(tb, dtype="int64"),
-                }
-            )
+    pipeline needs before it touches any codec.  Blobs stay in their
+    task."""
+    fields = ("timescale", "n_samples", "duration", "duration_ms", "total_bytes")
 
-    spread = df.select(id_col).repartition(
-        df.sparkSession.sparkContext.defaultParallelism
+    def row(seed):
+        tracks = parse_mp4_sample_tables(synthesize_mp4_samples(int(seed)))
+        for i, t in enumerate(tracks):
+            yield (seed, i, *(t[f] for f in fields))
+
+    return per_row(
+        df, [id_col], row,
+        f"`{id_col}` long, track int, timescale int, n_samples long, "
+        "duration long, duration_ms long, total_bytes long",
     )
-    return spread.mapInPandas(
-        _run,
-        "id long, track int, timescale int, n_samples long, duration long, "
-        "duration_ms long, total_bytes long",
-    ).withColumnRenamed("id", id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -3091,34 +2720,29 @@ def parse_exif(payload: bytes) -> dict:
     return out
 
 
+def header_stats(
+    df: DataFrame, id_col: str, data_col: str, parse, columns: str
+) -> DataFrame:
+    """One row per blob of ``data_col``: the id, then ``parse(blob)[name]``
+    for every ``name type`` of the DDL ``columns``.  A metadata walk —
+    no decode — as one :func:`~h2h_spark.operators.per_row` stage."""
+    names = [c.split()[0] for c in columns.split(",")]
+
+    def row(rid, raw):
+        m = parse(raw)
+        yield (rid, *(m[n] for n in names))
+
+    return per_row(df, [id_col, data_col], row, f"`{id_col}` bigint, {columns}")
+
+
 def exif_stats(df: DataFrame, id_col: str, data_col: str = "data") -> DataFrame:
-    """EXIF metadata columns for a binary JPEG column — Arrow-batched
-    per-row parse (pure metadata walk, no pixel decode), ids spread,
-    blobs never shuffle."""
-    import pandas as pd
-
-    schema = (
-        f"`{id_col}` bigint, make string, model string, "
-        "orientation bigint, datetime string, width bigint, "
-        "height bigint, iso bigint"
+    """EXIF metadata columns for a binary JPEG column (pure metadata
+    walk, no pixel decode)."""
+    return header_stats(
+        df, id_col, data_col, parse_exif,
+        "make string, model string, orientation bigint, datetime string, "
+        "width bigint, height bigint, iso bigint",
     )
-
-    def _run(batches):
-        for pdf in batches:
-            rows = []
-            for rid, raw in zip(pdf[id_col], pdf[data_col]):
-                m = parse_exif(bytes(raw))
-                rows.append((
-                    rid, m["make"], m["model"], m["orientation"],
-                    m["datetime"], m["width"], m["height"], m["iso"],
-                ))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "make", "model", "orientation",
-                         "datetime", "width", "height", "iso"],
-            )
-
-    return df.select(id_col, data_col).mapInPandas(_run, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -3214,31 +2838,12 @@ def parse_mp3(payload: bytes) -> dict:
 
 
 def mp3_stats(df: DataFrame, id_col: str, data_col: str = "data") -> DataFrame:
-    """MP3 header-walk metadata columns for a binary column —
-    Arrow-batched, no decode, blobs never shuffle."""
-    import pandas as pd
-
-    schema = (
-        f"`{id_col}` bigint, n_frames bigint, audio_bytes bigint, "
-        "duration_ms bigint, sample_rate bigint, bitrate_kbps bigint, "
-        "is_vbr boolean"
+    """MP3 header-walk metadata columns for a binary column, no decode."""
+    return header_stats(
+        df, id_col, data_col, parse_mp3,
+        "n_frames bigint, audio_bytes bigint, duration_ms bigint, "
+        "sample_rate bigint, bitrate_kbps bigint, is_vbr boolean",
     )
-
-    def _run(batches):
-        for pdf in batches:
-            rows = []
-            for rid, raw in zip(pdf[id_col], pdf[data_col]):
-                m = parse_mp3(bytes(raw))
-                rows.append((rid, m["n_frames"], m["audio_bytes"],
-                             m["duration_ms"], m["sample_rate"],
-                             m["bitrate_kbps"], m["is_vbr"]))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "n_frames", "audio_bytes", "duration_ms",
-                         "sample_rate", "bitrate_kbps", "is_vbr"],
-            )
-
-    return df.select(id_col, data_col).mapInPandas(_run, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -3355,33 +2960,13 @@ def parse_flac_meta(payload: bytes) -> dict:
 
 
 def flac_stats(df: DataFrame, id_col: str, data_col: str = "data") -> DataFrame:
-    """FLAC metadata columns for a binary column — Arrow-batched walk,
-    no decode, blobs never shuffle."""
-    import pandas as pd
-
-    schema = (
-        f"`{id_col}` bigint, sample_rate bigint, channels bigint, "
-        "bits_per_sample bigint, total_samples bigint, duration_ms bigint, "
-        "n_tags bigint, title string, artist string"
+    """FLAC metadata columns for a binary column, no decode."""
+    return header_stats(
+        df, id_col, data_col, parse_flac_meta,
+        "sample_rate bigint, channels bigint, bits_per_sample bigint, "
+        "total_samples bigint, duration_ms bigint, n_tags bigint, "
+        "title string, artist string",
     )
-
-    def _run(batches):
-        for pdf in batches:
-            rows = []
-            for rid, raw in zip(pdf[id_col], pdf[data_col]):
-                m = parse_flac_meta(bytes(raw))
-                rows.append((rid, m["sample_rate"], m["channels"],
-                             m["bits_per_sample"], m["total_samples"],
-                             m["duration_ms"], m["n_tags"], m["title"],
-                             m["artist"]))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "sample_rate", "channels",
-                         "bits_per_sample", "total_samples", "duration_ms",
-                         "n_tags", "title", "artist"],
-            )
-
-    return df.select(id_col, data_col).mapInPandas(_run, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -3501,29 +3086,18 @@ def parse_ogg(payload: bytes) -> "list[dict]":
 
 
 def ogg_stats(df: DataFrame, id_col: str, data_col: str = "data") -> DataFrame:
-    """Per-(id, stream) OGG page accounting — Arrow-batched walk."""
-    import pandas as pd
+    """Per-(id, stream) OGG page accounting."""
+    fields = ("serial", "n_pages", "n_packets", "body_bytes", "last_granule")
 
-    schema = (
+    def row(rid, raw):
+        for st in parse_ogg(raw):
+            yield (rid, *(st[f] for f in fields))
+
+    return per_row(
+        df, [id_col, data_col], row,
         f"`{id_col}` bigint, serial bigint, n_pages bigint, "
-        "n_packets bigint, body_bytes bigint, last_granule bigint"
+        "n_packets bigint, body_bytes bigint, last_granule bigint",
     )
-
-    def _run(batches):
-        for pdf in batches:
-            rows = []
-            for rid, raw in zip(pdf[id_col], pdf[data_col]):
-                for st in parse_ogg(bytes(raw)):
-                    rows.append((rid, st["serial"], st["n_pages"],
-                                 st["n_packets"], st["body_bytes"],
-                                 st["last_granule"]))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "serial", "n_pages", "n_packets",
-                         "body_bytes", "last_granule"],
-            )
-
-    return df.select(id_col, data_col).mapInPandas(_run, schema)
 
 
 # --------------------------------------------------------------------------
@@ -3642,28 +3216,12 @@ def parse_tiff_meta(payload: bytes) -> dict:
 
 
 def tiff_stats(df: DataFrame, id_col: str, data_col: str = "data") -> DataFrame:
-    """TIFF metadata columns for a binary column — Arrow-batched."""
-    import pandas as pd
-
-    schema = (
-        f"`{id_col}` bigint, width bigint, height bigint, bits bigint, "
-        "compression bigint, description string"
+    """TIFF metadata columns for a binary column."""
+    return header_stats(
+        df, id_col, data_col, parse_tiff_meta,
+        "width bigint, height bigint, bits bigint, compression bigint, "
+        "description string",
     )
-
-    def _run(batches):
-        for pdf in batches:
-            rows = []
-            for rid, raw in zip(pdf[id_col], pdf[data_col]):
-                m = parse_tiff_meta(bytes(raw))
-                rows.append((rid, m["width"], m["height"], m["bits"],
-                             m["compression"], m["description"]))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "width", "height", "bits",
-                         "compression", "description"],
-            )
-
-    return df.select(id_col, data_col).mapInPandas(_run, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -3826,30 +3384,12 @@ def parse_webp(payload: bytes) -> dict:
 def webp_stats(
     df: DataFrame, id_col: str, data_col: str = "data"
 ) -> DataFrame:
-    """WebP metadata columns for a binary column — Arrow-batched, no
-    pixel decode, blobs never shuffle."""
-    import pandas as pd
-
-    schema = (
-        f"`{id_col}` bigint, format string, width bigint, height bigint, "
-        "has_exif boolean, is_animated boolean, n_frames bigint"
+    """WebP metadata columns for a binary column, no pixel decode."""
+    return header_stats(
+        df, id_col, data_col, parse_webp,
+        "format string, width bigint, height bigint, has_exif boolean, "
+        "is_animated boolean, n_frames bigint",
     )
-
-    def _run(batches):
-        for pdf in batches:
-            rows = []
-            for rid, raw in zip(pdf[id_col], pdf[data_col]):
-                m = parse_webp(bytes(raw))
-                rows.append((rid, m["format"], m["width"], m["height"],
-                             m["has_exif"], m["is_animated"],
-                             m["n_frames"]))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "format", "width", "height",
-                         "has_exif", "is_animated", "n_frames"],
-            )
-
-    return df.select(id_col, data_col).mapInPandas(_run, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -3952,31 +3492,13 @@ def parse_adts(payload: bytes) -> dict:
 def adts_stats(
     df: DataFrame, id_col: str, data_col: str = "data"
 ) -> DataFrame:
-    """ADTS/AAC header-walk metadata columns for a binary column —
-    Arrow-batched, no decode, blobs never shuffle."""
-    import pandas as pd
-
-    schema = (
-        f"`{id_col}` bigint, n_frames bigint, audio_bytes bigint, "
-        "duration_ms bigint, sample_rate bigint, profile bigint, "
-        "channels bigint, has_crc boolean"
+    """ADTS/AAC header-walk metadata columns for a binary column, no
+    decode."""
+    return header_stats(
+        df, id_col, data_col, parse_adts,
+        "n_frames bigint, audio_bytes bigint, duration_ms bigint, "
+        "sample_rate bigint, profile bigint, channels bigint, has_crc boolean",
     )
-
-    def _run(batches):
-        for pdf in batches:
-            rows = []
-            for rid, raw in zip(pdf[id_col], pdf[data_col]):
-                m = parse_adts(bytes(raw))
-                rows.append((rid, m["n_frames"], m["audio_bytes"],
-                             m["duration_ms"], m["sample_rate"],
-                             m["profile"], m["channels"], m["has_crc"]))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "n_frames", "audio_bytes", "duration_ms",
-                         "sample_rate", "profile", "channels", "has_crc"],
-            )
-
-    return df.select(id_col, data_col).mapInPandas(_run, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -4216,34 +3738,14 @@ def parse_webm(payload: bytes) -> dict:
 def webm_stats(
     df: DataFrame, id_col: str, data_col: str = "data"
 ) -> DataFrame:
-    """WebM/Matroska metadata columns for a binary column —
-    Arrow-batched EBML walk, Clusters skipped, blobs never shuffle."""
-    import pandas as pd
-
-    schema = (
-        f"`{id_col}` bigint, doctype string, duration_ms bigint, "
-        "n_tracks bigint, n_video bigint, n_audio bigint, "
-        "width bigint, height bigint, sample_rate bigint, "
-        "channels bigint, codecs string"
+    """WebM/Matroska metadata columns for a binary column — EBML walk,
+    Clusters skipped."""
+    return header_stats(
+        df, id_col, data_col, parse_webm,
+        "doctype string, duration_ms bigint, n_tracks bigint, n_video bigint, "
+        "n_audio bigint, width bigint, height bigint, sample_rate bigint, "
+        "channels bigint, codecs string",
     )
-
-    def _run(batches):
-        for pdf in batches:
-            rows = []
-            for rid, raw in zip(pdf[id_col], pdf[data_col]):
-                m = parse_webm(bytes(raw))
-                rows.append((rid, m["doctype"], m["duration_ms"],
-                             m["n_tracks"], m["n_video"], m["n_audio"],
-                             m["width"], m["height"], m["sample_rate"],
-                             m["channels"], m["codecs"]))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "doctype", "duration_ms", "n_tracks",
-                         "n_video", "n_audio", "width", "height",
-                         "sample_rate", "channels", "codecs"],
-            )
-
-    return df.select(id_col, data_col).mapInPandas(_run, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -4363,31 +3865,13 @@ def parse_avif(data: bytes) -> dict:
 def avif_stats(
     df: DataFrame, id_col: str, data_col: str = "data"
 ) -> DataFrame:
-    """AVIF/HEIF metadata columns for a binary column — Arrow-batched
-    box walk, no AV1 decode, blobs never shuffle."""
-    import pandas as pd
-
-    schema = (
-        f"`{id_col}` bigint, brand string, width bigint, height bigint, "
-        "bit_depth bigint, n_items bigint, has_exif boolean, "
-        "is_animated boolean"
+    """AVIF/HEIF metadata columns for a binary column — box walk, no AV1
+    decode."""
+    return header_stats(
+        df, id_col, data_col, parse_avif,
+        "brand string, width bigint, height bigint, bit_depth bigint, "
+        "n_items bigint, has_exif boolean, is_animated boolean",
     )
-
-    def _run(batches):
-        for pdf in batches:
-            rows = []
-            for rid, raw in zip(pdf[id_col], pdf[data_col]):
-                m = parse_avif(bytes(raw))
-                rows.append((rid, m["brand"], m["width"], m["height"],
-                             m["bit_depth"], m["n_items"], m["has_exif"],
-                             m["is_animated"]))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "brand", "width", "height", "bit_depth",
-                         "n_items", "has_exif", "is_animated"],
-            )
-
-    return df.select(id_col, data_col).mapInPandas(_run, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -4468,25 +3952,15 @@ def parse_id3_tags(payload: bytes) -> dict:
 def id3_stats(
     df: DataFrame, id_col: str, data_col: str = "data"
 ) -> DataFrame:
-    """ID3v2 text-frame columns for a binary column — Arrow-batched."""
-    import pandas as pd
+    """ID3v2 text-frame columns for a binary column."""
 
-    schema = (
+    def row(rid, raw):
+        m = parse_id3_tags(raw)
+        yield (rid, m["version"], m["title"], m["artist"], m["album"],
+               m["n_frames"])
+
+    return per_row(
+        df, [id_col, data_col], row,
         f"`{id_col}` bigint, id3_version bigint, title string, "
-        "artist string, album string, n_frames bigint"
+        "artist string, album string, n_frames bigint",
     )
-
-    def _run(batches):
-        for pdf in batches:
-            rows = []
-            for rid, raw in zip(pdf[id_col], pdf[data_col]):
-                m = parse_id3_tags(bytes(raw))
-                rows.append((rid, m["version"], m["title"], m["artist"],
-                             m["album"], m["n_frames"]))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "id3_version", "title", "artist",
-                         "album", "n_frames"],
-            )
-
-    return df.select(id_col, data_col).mapInPandas(_run, schema)

@@ -651,24 +651,11 @@ def parse_pdf_meta(data: bytes) -> dict:
 
 
 def pdf_stats(df: "DataFrame", id_col: str, data_col: str = "data"):
-    """PDF metadata columns for a binary column — Arrow-batched."""
-    import pandas as pd
+    """PDF metadata columns for a binary column."""
+    from h2h_spark.operators.multimodal import header_stats
 
-    schema = (
-        f"`{id_col}` bigint, version string, n_objects bigint, "
-        "n_pages bigint, encrypted boolean, xref_type string"
+    return header_stats(
+        df, id_col, data_col, parse_pdf_meta,
+        "version string, n_objects bigint, n_pages bigint, "
+        "encrypted boolean, xref_type string",
     )
-
-    def _run(batches):
-        for pdf in batches:
-            rows = []
-            for rid, raw in zip(pdf[id_col], pdf[data_col]):
-                m = parse_pdf_meta(bytes(raw))
-                rows.append((rid, m["version"], m["n_objects"],
-                             m["n_pages"], m["encrypted"], m["xref_type"]))
-            yield pd.DataFrame(
-                rows, columns=[id_col, "version", "n_objects", "n_pages",
-                               "encrypted", "xref_type"],
-            )
-
-    return df.select(id_col, data_col).mapInPandas(_run, schema)

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from h2h_spark.operators import scale_out
+
 from .dedup import portable_hash60
 
 #: cumulative Poisson(1) CDF thresholds for k = 0..5 (weights clamp at 6;
@@ -68,11 +70,12 @@ def poisson_bootstrap_means(
         ).cast("double")
         / 1.0e12
     )
-    spread = df.select(
-        F.col(id_col), F.col(val_col).cast("decimal(18,6)").alias("v")
-    ).repartition(df.sparkSession.sparkContext.defaultParallelism)
     # spread first: the input often arrives in 1-4 scan partitions and
     # the B-way explode + per-(row, replica) hash would run near-serial.
+    spread = scale_out(
+        df.select(F.col(id_col), F.col(val_col).cast("decimal(18,6)").alias("v")),
+        id_col,
+    )
     rows = (
         spread.select("*", b)
         .withColumn("w", _poisson_weight(ub))

@@ -19,8 +19,9 @@ conformant protobuf readers must.
 
 DataFrame surface: :func:`parse_tf_examples` turns a binary column of
 serialized Examples into typed columns per a feature spec, Arrow-batched
-via ``mapInPandas`` (a codec is per-row compute — the sanctioned
-vectorized-Python path, like the image decoders)."""
+via ``mapInPandas``: a codec is per-row compute, but unlike the image
+decoders' :func:`h2h_spark.operators.per_row` stage every input column
+passes through."""
 
 from __future__ import annotations
 

@@ -3,7 +3,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from h2h_spark import (
     Layout, String, Unsigned, Integer, Real, get_spark,

@@ -21,7 +21,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from h2h_spark import get_spark
 from pyspark.sql import functions as F
@@ -108,7 +109,7 @@ def main() -> None:
         }
         print(name, out[name], flush=True)
 
-    path = "/root/repo/plans/r14/job_counts.json"
+    path = os.path.join(REPO, "plans", "r14", "job_counts.json")
     os.makedirs(os.path.dirname(path), exist_ok=True)
     with open(path, "w") as f:
         json.dump(out, f, indent=1)

@@ -14,9 +14,11 @@ Usage: python scripts/plan_audit.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod
 from h2h_spark import get_spark

@@ -3385,3 +3385,403 @@ def test_bloom_index_prunes_and_is_exact(spark, tmp_path):
     # absent key: everything prunes, result empty with the data schema
     empty = read_point_lookup(spark, idx, "k", [99999])
     assert empty.count() == 0 and set(empty.columns) == {"k", "v"}
+
+
+# ---------------------------------------------------------------------------
+# operators.per_row: the one per-row Python stage of the codec operators.
+# ---------------------------------------------------------------------------
+
+def test_per_row_empty_input_gives_empty_frame_of_schema(spark):
+    from h2h_spark.operators import per_row
+
+    empty = spark.createDataFrame([], "id bigint, data binary")
+    out = per_row(empty, ["id", "data"], lambda i, d: [(i, d, 1)],
+                  "id bigint, data binary, n int")
+    assert out.collect() == []
+    assert out.schema.simpleString() == "struct<id:bigint,data:binary,n:int>"
+
+
+def test_per_row_yields_zero_one_or_many_rows(spark):
+    from h2h_spark.operators import per_row
+
+    df = spark.createDataFrame([(0,), (1,), (3,)], "n bigint")
+    out = per_row(df, ["n"], lambda n: ((n, i) for i in range(n)),
+                  "n bigint, i int")
+    assert sorted(map(tuple, out.collect())) == [(1, 0), (3, 0), (3, 1), (3, 2)]
+
+
+def test_per_row_nulls_and_bytes_round_trip(spark):
+    from h2h_spark.operators import per_row
+
+    blobs = [(1, b"\x00\xffab"), (2, None), (3, b"")]
+    df = spark.createDataFrame(blobs, "id bigint, data binary")
+    seen = per_row(
+        df, ["id", "data"],
+        lambda i, d: [(i, d, None if d is None else len(d), type(d).__name__)],
+        "id bigint, data binary, n int, t string",
+    ).collect()
+    assert sorted(map(tuple, seen)) == [
+        (1, bytearray(b"\x00\xffab"), 4, "bytes"),
+        (2, None, None, "NoneType"),
+        (3, bytearray(b""), 0, "bytes"),
+    ]
+
+
+def test_per_row_error_in_row_function_fails_the_action(spark):
+    from h2h_spark.operators import per_row
+
+    def row(n):
+        if n == 2:
+            raise ValueError("codec round-trip mismatch")
+        yield (n,)
+
+    df = spark.createDataFrame([(1,), (2,)], "n bigint")
+    with pytest.raises(Exception, match="codec round-trip mismatch"):
+        per_row(df, ["n"], row, "n bigint").collect()
+
+
+def test_per_row_plan_is_one_map_in_arrow(spark):
+    from h2h_spark.operators import per_row
+
+    df = spark.range(10).coalesce(1)
+    out = per_row(df, ["id"], lambda i: [(i,)], "id bigint")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan
+    # a one-partition input is spread across the pool first
+    assert "Exchange" in plan
+
+
+def test_per_row_wide_input_is_not_shuffled(spark):
+    from h2h_spark.operators import per_row
+
+    par = spark.sparkContext.defaultParallelism
+    wide = spark.range(0, 100, 1, par)
+    out = per_row(wide, ["id"], lambda i: [(i,)], "id bigint")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
+    assert out.count() == 100
+
+
+def test_scale_out_counts_a_repartitioned_input_without_a_job(spark):
+    """A per_row stage's output (its plan ends in a fixed-count shuffle)
+    is counted from the plan: chaining per_row stages runs no extra job."""
+    from h2h_spark.operators import per_row, scale_out
+
+    sc = spark.sparkContext
+    chained = per_row(spark.range(100).coalesce(1), ["id"],
+                      lambda i: [(i,)], "id bigint")
+    before = set(sc.statusTracker().getJobIdsForGroup(None))
+    assert scale_out(chained, None) is chained
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) == before
+    assert chained.count() == 100
+
+
+def test_no_map_in_pandas_or_unconditional_spread_in_operators():
+    """The per-row codec operators run through ``per_row``; no operator
+    spreads its input with a count-only ``repartition(defaultParallelism)``
+    (``scale_out`` is the guarded spread).  A keyed repartition to
+    ``defaultParallelism`` after a grouping (``dedup._bucket_candidates``)
+    is not a spread of the input: the grouping's coalesced partition count
+    is known only after it runs, so no guard could skip it."""
+    import inspect
+    import pathlib
+    import re
+
+    from h2h_spark.operators import office
+
+    ops = pathlib.Path(MM.__file__).parent
+    assert "mapInPandas" not in pathlib.Path(MM.__file__).read_text()
+    assert "mapInPandas" not in inspect.getsource(office.pdf_stats)
+    spread = re.compile(r"repartition\(\s*[\w.]*defaultParallelism\s*\)")
+    hits = [
+        f"{f.name}: {m.group(0)}"
+        for f in sorted(ops.glob("*.py"))
+        for m in spread.finditer(f.read_text())
+    ]
+    assert hits == []
+
+
+# ---------------------------------------------------------------------------
+# Per-row operators pinned: each runs on a fixed small id / blob input and
+# its schema plus a sha256 of its sorted rows must equal the values
+# recorded before these operators moved onto ``operators.per_row``.
+# ---------------------------------------------------------------------------
+
+_PIN_IDS = range(17)
+
+
+def _pin_blobs(op: str, d: int) -> bytes:
+    from h2h_spark.operators import office as OF
+
+    if op == "exif_stats":
+        app1 = MM.encode_exif_app1(
+            make=f"Cam{d % 5}", model=f"M{d % 7}", orientation=d % 8 + 1,
+            datetime_str="2024:01:%02d 12:00:00" % (d % 28 + 1),
+            width=640 + d * 16, height=480 + d * 16, iso=100 * (d % 4 + 1),
+            byteorder="II" if d % 2 == 0 else "MM",
+        )
+        return MM.insert_exif(MM.synthesize_jpeg(d % 11), app1)
+    if op == "mp3_stats":
+        return MM.encode_mp3_frames(
+            [(d % 14 + 1, d % 3, i % 2) for i in range(d % 6 + 3)],
+            id3_bytes=d % 50,
+        )
+    if op == "flac_stats":
+        return MM.encode_flac_meta(
+            sample_rate=(44100, 48000, 32000, 22050)[d % 4],
+            channels=d % 2 + 1, bits_per_sample=(16, 24)[d % 2],
+            total_samples=100000 + d * 7,
+            tags={"TITLE": f"T{d % 9}"} if d % 3 else None,
+            audio_bytes=d % 300,
+        )
+    if op == "ogg_stats":
+        return MM.encode_ogg_pages(
+            [(1, 1000 * (p + 1) + d % 7, [d * 40 + 1, 300]) for p in range(d % 3 + 1)]
+            + [(2, d % 11, [d % 100 + 5])]
+        )
+    if op == "tiff_stats":
+        return MM.encode_tiff_meta(
+            width=320 + d * 8, height=240 + d * 8, bits=(1, 8, 16)[d % 3],
+            compression=(1, 5, 7)[d % 3], description=f"page {d}" if d % 2 else "",
+            byteorder="II" if d % 2 == 0 else "MM",
+        )
+    if op == "webp_stats":
+        flavor = ("lossy", "lossless", "extended")[d % 3]
+        return MM.encode_webp(
+            width=16 + d * 4, height=16 + d * 4, flavor=flavor,
+            n_anim_frames=(d % 4) if flavor == "extended" else 0,
+            has_exif=(flavor == "extended" and d % 2 == 0),
+        )
+    if op == "adts_stats":
+        return MM.encode_adts_frames(
+            [(d % 4, d % 13, 50 + d * 7)] * (d % 5 + 1), with_crc=(d % 2 == 1)
+        )
+    if op == "webm_stats":
+        video = {"type": "video", "codec": "V_VP9", "width": 640 + d * 16,
+                 "height": 360 + d * 16}
+        audio = {"type": "audio", "codec": "A_OPUS", "rate": 48000,
+                 "channels": d % 2 + 1}
+        return MM.encode_webm(
+            duration_ms=1000 + d * 250,
+            tracks=([video], [audio], [video, audio])[d % 3],
+            n_clusters=d % 4 + 1,
+        )
+    if op == "avif_stats":
+        return MM.encode_avif_meta(
+            width=256 + d * 8, height=144 + d * 8, bit_depth=(8, 10, 12)[d % 3],
+            has_exif=(d % 4 == 0), animated=(d % 5 == 0),
+        )
+    if op == "id3_stats":
+        tags = {"TIT2": f"track {d}", "TPE1": f"artist {d % 13}"}
+        if d % 3 == 0:
+            tags["TALB"] = f"album {d % 7}"
+        return MM.encode_id3v2(tags, version=3 if d % 2 else 4) + MM.encode_mp3_frames(
+            [(5, 1, 0)]
+        )
+    if op == "pdf_stats":
+        if d % 2:
+            return OF.build_pdf_xrefstream(
+                d % 7 + 1, version=("1.5", "1.6", "1.7")[d % 3],
+                predictor=12 if d % 4 == 1 else 1, encrypted=(d % 13 == 0),
+            )
+        return OF.build_pdf(d % 9 + 1, version="1.4", encrypted=(d % 11 == 0))
+    raise KeyError(op)
+
+
+_BLOB_OPS = (
+    "exif_stats", "mp3_stats", "flac_stats", "ogg_stats", "tiff_stats",
+    "webp_stats", "adts_stats", "webm_stats", "avif_stats", "id3_stats",
+    "pdf_stats",
+)
+_ID_OPS = (
+    "bmp_resize_stats", "png_16bit_stats", "png_flavor_stats",
+    "png_resize_stats", "gif_color_stats", "gif_resize_stats",
+    "jpeg_color_stats", "jpeg_resize_stats", "jpeg_progressive_stats",
+    "wav_pcm_stats", "image_dhash", "wav_energy_blocks", "mp4_sample_stats",
+)
+_PAYLOAD_OPS = ("decode_features", "resize_images", "audio_stats", "frame_sample")
+
+
+def _pinned_frame(spark, op: str):
+    from h2h_spark.operators import office as OF
+    from h2h_spark.operators.dedup import content_defined_chunks
+    from h2h_spark.operators.stats import poisson_bootstrap_means
+
+    ids = spark.createDataFrame([(d,) for d in _PIN_IDS], "doc_id bigint")
+    if op in _BLOB_OPS:
+        fn = OF.pdf_stats if op == "pdf_stats" else getattr(MM, op)
+        blobs = spark.createDataFrame(
+            [(d, _pin_blobs(op, d)) for d in _PIN_IDS], "doc_id bigint, data binary"
+        )
+        return fn(blobs, "doc_id")
+    if op in _ID_OPS:
+        return getattr(MM, op)(ids, "doc_id")
+    if op in ("media_meta", "mp4_meta"):
+        return getattr(MM, op)(ids, "doc_id")
+    texts = spark.createDataFrame(
+        [(d, "" if d == 0 else ("héllo wörld %d " % d) * (d * 37 % 300))
+         for d in _PIN_IDS],
+        "doc_id bigint, text string",
+    )
+    if op in _PAYLOAD_OPS:
+        payload = MM.with_binary_payload(texts, "doc_id", "text")
+        if op == "resize_images":
+            return MM.resize_images(payload, "doc_id", 8, 4)
+        return getattr(MM, op)(payload, "doc_id")
+    if op == "content_defined_chunks":
+        return content_defined_chunks(texts, "doc_id", "text")
+    if op == "poisson_bootstrap_means":
+        vals = spark.createDataFrame(
+            [(d, d * 1.25 - 3.0) for d in range(200)], "doc_id bigint, v double"
+        )
+        return poisson_bootstrap_means(vals, "doc_id", "v", replicas=8)
+    raise KeyError(op)
+
+
+_PINNED_OPS = (
+    ("media_meta", "mp4_meta") + _PAYLOAD_OPS + _ID_OPS + _BLOB_OPS
+    + ("content_defined_chunks", "poisson_bootstrap_means")
+)
+
+_PINNED: dict[str, tuple[str, str]] = {
+    "media_meta": (
+        "struct<doc_id:bigint,kind:string,width:int,height:int,n_channels:int,sample_rate:int,n_samples:bigint,duration_ms:bigint>",
+        "ecb6641ecfd9840fd4489075e3b312522b562b8820e7346a4d60d3a0baf6e975",
+    ),
+    "mp4_meta": (
+        "struct<doc_id:bigint,timescale:int,duration:bigint,duration_ms:bigint,n_tracks:int,width:int,height:int,mdat_bytes:bigint>",
+        "6a4f126190ba8b2aa4ab4a8f6007e76aedfec7903804213a11735c5b5ffbf430",
+    ),
+    "decode_features": (
+        "struct<doc_id:bigint,n_bytes:bigint,payload_md5:string,width:int,height:int,decoder:string>",
+        "dca4c42959bcb27dfa8d469f217f7f86fc8218309412d9b8ed541b462aadfd6f",
+    ),
+    "resize_images": (
+        "struct<doc_id:bigint,width:int,height:int,resized:binary>",
+        "d82deafa470bd27401877a4655786ac775229bbad370da8fe7daaf2f7f0fb09f",
+    ),
+    "audio_stats": (
+        "struct<doc_id:bigint,n_samples:bigint,duration_ms:bigint,peak:int,mean_amp_milli:bigint,n_clipped:bigint>",
+        "a27ab10f80c75f845474e79a45a47febd8e1a158cb510a4a8a2a78122b56d161",
+    ),
+    "frame_sample": (
+        "struct<doc_id:bigint,frame_idx:int,frame_md5:string>",
+        "6d006a95b9d40ba2d7f721a0e59851901e4eec88a1f5455636508a7cc69697e0",
+    ),
+    "bmp_resize_stats": (
+        "struct<doc_id:bigint,src_w:int,src_h:int,pix_sum:bigint>",
+        "bc76ecd9564080520f9159d12b6e9eb068f6983eea148812fc891d4a2ca6cd94",
+    ),
+    "png_16bit_stats": (
+        "struct<doc_id:bigint,src_w:int,src_h:int,r_sum:bigint,g_sum:bigint,b_sum:bigint>",
+        "f416150050580f18f7885d44edccd696d647a3351815fcdfaa413df3d9fd09d1",
+    ),
+    "png_flavor_stats": (
+        "struct<doc_id:bigint,src_w:int,src_h:int,pal_r_sum:bigint,pal_g_sum:bigint,pal_b_sum:bigint,rgba_r_sum:bigint,rgba_g_sum:bigint,rgba_b_sum:bigint,a_sum:bigint>",
+        "693db846cad3a634d0aadec0c6069502846616de742deee5a9bb66d5df074ffd",
+    ),
+    "png_resize_stats": (
+        "struct<doc_id:bigint,src_w:int,src_h:int,pix_sum:bigint>",
+        "bc76ecd9564080520f9159d12b6e9eb068f6983eea148812fc891d4a2ca6cd94",
+    ),
+    "gif_color_stats": (
+        "struct<doc_id:bigint,src_w:int,src_h:int,r_sum:bigint,g_sum:bigint,b_sum:bigint>",
+        "89bf3fa5a896fe208ffaca9b1c09924d74d6f432ac0f4a80d8744386b2135eb3",
+    ),
+    "gif_resize_stats": (
+        "struct<doc_id:bigint,src_w:int,src_h:int,pix_sum:bigint>",
+        "bc76ecd9564080520f9159d12b6e9eb068f6983eea148812fc891d4a2ca6cd94",
+    ),
+    "jpeg_color_stats": (
+        "struct<doc_id:bigint,src_w:int,src_h:int,r_sum:bigint,g_sum:bigint,b_sum:bigint>",
+        "d11b3fc63ecd5a6c2393c11f532f391ae34a4a6fec1a9afeae359cee372074a0",
+    ),
+    "jpeg_resize_stats": (
+        "struct<doc_id:bigint,src_w:int,src_h:int,pix_sum:bigint>",
+        "127bc53be2d4bae3d2b1d5330661db7cf1ffc499edbd465b242c9eb59b7c08e3",
+    ),
+    "jpeg_progressive_stats": (
+        "struct<doc_id:bigint,n_blocks:int,coef_sum:bigint,abs_sum:bigint,weighted_sum:bigint>",
+        "6f361643dc3b7b28951b3c4d24118c42c83fcd445155017e0f3d52151a58fda2",
+    ),
+    "wav_pcm_stats": (
+        "struct<doc_id:bigint,n_samples:int,sample_rate:int,l_sum:bigint,r_sum:bigint,l_abs:bigint,r_abs:bigint>",
+        "1cd71cd85f9660ec65837af69f2d25eadb3d013f245c15aaa3b0b539368b18d4",
+    ),
+    "image_dhash": (
+        "struct<doc_id:bigint,dhash_hi:bigint,dhash_lo:bigint,n_ones:bigint>",
+        "c452cd900dc63c86134e93de4c8c54bf6d5462f18e4e25b8919c3eb1223e7836",
+    ),
+    "wav_energy_blocks": (
+        "struct<doc_id:bigint,block:bigint,n:bigint,energy:bigint,is_silence:boolean>",
+        "745425897bb406b613317124546fd4557a001124610431f91e84fdde9023fc2e",
+    ),
+    "mp4_sample_stats": (
+        "struct<doc_id:bigint,track:int,timescale:int,n_samples:bigint,duration:bigint,duration_ms:bigint,total_bytes:bigint>",
+        "78b99d4c167f6abf054388188f5eda4566b7652649641e63e57e95de81fe7202",
+    ),
+    "exif_stats": (
+        "struct<doc_id:bigint,make:string,model:string,orientation:bigint,datetime:string,width:bigint,height:bigint,iso:bigint>",
+        "8508bdfe6f0f5d7e40b590c24140026a5f8aa293a0a1f74cc1f9343c39435f98",
+    ),
+    "mp3_stats": (
+        "struct<doc_id:bigint,n_frames:bigint,audio_bytes:bigint,duration_ms:bigint,sample_rate:bigint,bitrate_kbps:bigint,is_vbr:boolean>",
+        "dcf853d5b8f029031a1484ff64079af32ed2a0fcfc6b2c6ab4318fe7b872d7c6",
+    ),
+    "flac_stats": (
+        "struct<doc_id:bigint,sample_rate:bigint,channels:bigint,bits_per_sample:bigint,total_samples:bigint,duration_ms:bigint,n_tags:bigint,title:string,artist:string>",
+        "2488260acc493c15591e4b125c765408abb507fdfa8966580b85c556b6317ae3",
+    ),
+    "ogg_stats": (
+        "struct<doc_id:bigint,serial:bigint,n_pages:bigint,n_packets:bigint,body_bytes:bigint,last_granule:bigint>",
+        "82e1dcadd3009ee4f395bda80d3042083dc704a85cb240c8109499022e440eee",
+    ),
+    "tiff_stats": (
+        "struct<doc_id:bigint,width:bigint,height:bigint,bits:bigint,compression:bigint,description:string>",
+        "243835d7c5f9dbddb8fc59d7f8e6b3fb4b78586b1085feb4465e0aeb1f71c9ec",
+    ),
+    "webp_stats": (
+        "struct<doc_id:bigint,format:string,width:bigint,height:bigint,has_exif:boolean,is_animated:boolean,n_frames:bigint>",
+        "8dda22eb305820f1add7f5378059fcf374c437c2f50c1eaec8eb4685c08d3a81",
+    ),
+    "adts_stats": (
+        "struct<doc_id:bigint,n_frames:bigint,audio_bytes:bigint,duration_ms:bigint,sample_rate:bigint,profile:bigint,channels:bigint,has_crc:boolean>",
+        "5e8cdd1cda902803a232b7c3d7cb9415b430fbd0068a3aadc260257c55f3c467",
+    ),
+    "webm_stats": (
+        "struct<doc_id:bigint,doctype:string,duration_ms:bigint,n_tracks:bigint,n_video:bigint,n_audio:bigint,width:bigint,height:bigint,sample_rate:bigint,channels:bigint,codecs:string>",
+        "9c022983f3ffb3c3ca6dd374cab24c5d8879a6099115aa2d5a597588910c2093",
+    ),
+    "avif_stats": (
+        "struct<doc_id:bigint,brand:string,width:bigint,height:bigint,bit_depth:bigint,n_items:bigint,has_exif:boolean,is_animated:boolean>",
+        "e1aa99ec29665dc64b1d014a6c9fe49e29ac1e9a22044925ed7e1eda0466aa65",
+    ),
+    "id3_stats": (
+        "struct<doc_id:bigint,id3_version:bigint,title:string,artist:string,album:string,n_frames:bigint>",
+        "cec3794a581bede4feeaba0b946687b073d551dc7174f7da6306a2a3da0745a7",
+    ),
+    "pdf_stats": (
+        "struct<doc_id:bigint,version:string,n_objects:bigint,n_pages:bigint,encrypted:boolean,xref_type:string>",
+        "cafdadd1246e0f1954d9fb7d7489364d0cea496d1bfe658ad4e49dad21e159c4",
+    ),
+    "content_defined_chunks": (
+        "struct<doc_id:bigint,chunk_idx:bigint,start:bigint,chunk_len:bigint,chunk_md5:string>",
+        "b9aba854698c1beb9cdebf462f7e1fc0100862f2de45afb3e26370efabd82917",
+    ),
+    "poisson_bootstrap_means": (
+        "struct<b:int,n_eff:bigint,replica_mean:double>",
+        "560b758dccdd388a7544d99993784395b3e05d4981f9284f0b0a404460558cc5",
+    ),
+}
+
+
+def _pin_digest(df) -> tuple[str, str]:
+    import hashlib
+
+    rows = sorted(repr(tuple(r)) for r in df.collect())
+    return df.schema.simpleString(), hashlib.sha256("\n".join(rows).encode()).hexdigest()
+
+
+@pytest.mark.parametrize("op", _PINNED_OPS)
+def test_per_row_operator_pinned(spark, op):
+    assert _pin_digest(_pinned_frame(spark, op)) == _PINNED[op]
